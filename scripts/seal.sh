@@ -30,8 +30,11 @@ step "oracle compare" compare.log \
   python3 scripts/compare.py target/seal/verify_out /root/testdata/sf0.01
 step "bench sf0.1" bench.log \
   env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench"
+# Bench keys its full dump by (sf, cores) and logs the path it wrote;
+# the ratchet must read THAT file, not whichever dump is committed.
+bench_dump=$(sed -n 's/.*\[bench\] full dump: //p' target/seal/bench.log | tail -1)
 step "RAW bench ratchet" bench_check.log \
-  python3 scripts/bench_check.py BENCH_FULL.json
+  python3 scripts/bench_check.py "${bench_dump:-missing-full-dump.json}"
 step "SCALE.md placeholder guard + 4x floor ratchet (skipped without a 4x receipt)" scale_check.log \
   bash -c 'test ! -f target/scale/results/4x.json || python3 scripts/scale_check.py'
 

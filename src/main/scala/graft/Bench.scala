@@ -117,16 +117,17 @@ object Bench {
     // by the entry's OWN baseline (2x history) instead of an absolute
     // cutoff that misses short entries and wastes revisits on
     // legitimately-slow ones (VERDICT r8 item 5).
-    // History and the full dump are PER SCALE FACTOR: the driver's
-    // sf0.1 history lives in BENCH_FULL.json, any other sf in
-    // BENCH_FULL_<sf>.json — a local full run at sf0.01 must not
-    // overwrite the sf0.1 thresholds (same poisoning mode as the
-    // subset guard below, via the sf dimension instead of the entry
-    // subset).
+    // History and the full dump are PER (SCALE FACTOR, CORES), in the
+    // working directory: the sf0.1 run on 32 cores keeps
+    // BENCH_FULL.json, any other pair BENCH_FULL_<sf>_c<cores>.json —
+    // a local sf0.01 run or an 8-core probe must not min-merge into
+    // the 32-core sf0.1 floors (same poisoning mode as the subset
+    // guard below, via the sf and core dimensions instead of the
+    // entry subset).
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", {
       val sfName = new java.io.File(sfDir).getName
-      if (sfName == "sf0.1") "/root/repo/BENCH_FULL.json"
-      else s"/root/repo/BENCH_FULL_$sfName.json"
+      if (sfName == "sf0.1" && cpus == "32") "BENCH_FULL.json"
+      else s"BENCH_FULL_${sfName}_c$cpus.json"
     })
     val (history: Map[String, Double], coldHistory: Map[String, Double]) = {
       val path = fullPath
@@ -293,15 +294,19 @@ object Bench {
         s""""floor_total":$allFloorTotal,"floor_queries":$fullFloorQs,""" +
         s""""first_total":$firstTotal,"first_queries":$firstQs,""" +
         s""""cold_floor_total":$coldFloorTotal,"cold_floor_queries":$coldFloorQs,""" +
-        s""""errs":$errs,"sf":"$sfDir"}"""
+        s""""errs":$errs,"sf":"$sfDir","cpus":"$cpus"}"""
     val fullOut = fullPath
     // subset runs (SPARK_GRAFT_ONLY) are local iteration, not
     // representative history — writing them would poison the revisit
-    // thresholds of the next full run
+    // thresholds of the next full run. The path written goes to stderr
+    // so a caller (scripts/seal.sh) checks the dump of THIS run, not
+    // the one a different (sf, cores) pair left behind.
     if (only.isEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get(fullOut),
-        (fullLine + "\n").getBytes("UTF-8"))
-      catch { case e: Exception => System.err.println(s"[bench] full dump failed: $e") }
+      try {
+        val out = java.nio.file.Paths.get(fullOut).toAbsolutePath
+        java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
+        System.err.println(s"[bench] full dump: $out")
+      } catch { case e: Exception => System.err.println(s"[bench] full dump failed: $e") }
     val byTime = results.sortBy { case (_, v, _) => -v }
     val budget = 1850
     def render(kept: Vector[(String, Double, Int)]): String = {

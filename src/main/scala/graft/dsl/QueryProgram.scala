@@ -38,12 +38,14 @@ import graft.analysis.Analyzers
   *     Should / pure filter), so candidates must come from a full
   *     corpus pass, the honest cost of a match-all query.
   *
-  * Semantics mirror the scan path (`SearchIndex.compileWith`)
-  * node-for-node, including its gating discipline: ONLY leaves gate
-  * their own score on their own match; combinators always sum.
+  * The same program serves the scan path: `SearchIndex.compile`
+  * serializes each search and evaluates it over every document with
+  * the program arrays as plan literals, so every search plans to one
+  * generated class. Gating discipline: ONLY leaves gate their own
+  * score on their own match; combinators always sum.
   *
   * KEYWORD-field leaves (MatchTerm/All/Any/Min on an un-analyzed
-  * field — tf 1, dl 1, avgdl 1, per the scan compiler's termScore)
+  * field — tf 1, dl 1, avgdl 1: the term either is the value or not)
   * and string-valued Eq/InSet filters serialize to `KW*`/`STR*` ops
   * verified against a doc-side STRING attribute map; they never
   * probe (soundness demands probe terms live in the probed text
@@ -55,7 +57,7 @@ import graft.analysis.Analyzers
   * each distinct (kind, field, pattern, maxEdits) against the term
   * dictionary IN-PLAN and [[substitute]]s the expanded lists in —
   * the Lucene multi-term rewrite (constant-score, maxClauseCount
-  * cap in dictionary order, the scan path's expandDict discipline)
+  * cap in dictionary order, SearchIndex.expandDict's discipline)
   * with the per-query driver action replaced by one dictionary join
   * per batch. Their probe alts carry NUL-prefixed [[marker]]s that
   * substitute to the expanded terms.
@@ -63,14 +65,14 @@ import graft.analysis.Analyzers
   * Cross-field TEXT leaves (a scored leaf on an indexed text field
   * other than the probe field) serialize to `X*` ops verified
   * against a doc-side per-field TOKENS map with that field's dl and
-  * avgdl — the scan compiler's secondary-field scoring exactly; like
+  * avgdl, scored exactly as a leaf on the probe field would be; like
   * keyword leaves they never probe.
   *
   * Filter values encode per [[numVal]]: numerics, booleans (0/1),
   * dates (epoch days) and timestamps (epoch micros) all become
   * order-preserving doubles in the consts table; strings go through
-  * the `STR*` ops. Anything else is unsupported (use `queryJoinDsl`,
-  * which compiles per query on the driver).
+  * the `STR*` ops (equality, set membership and binary-ordered
+  * comparisons and ranges). Anything else is rejected at compile.
   */
 final case class QueryProgram(
     ops: Seq[Int],
@@ -90,7 +92,9 @@ object QueryProgram {
     *   BOOST c (1 child); TERM t; ALL n t*n; ANY n t*n;
     *   MIN m n t*n; PHRASE slop n t*n; NEAR dist t t;
     *   CMP op t c (op 0 eq,1 gt,2 ge,3 lt,4 le); RANGE t c c;
-    *   INSET t n c*n; EXISTS t; MISSING t; NOMATCH; TRUEZERO. */
+    *   INSET t n c*n; EXISTS t; MISSING t; NOMATCH; TRUEZERO.
+    * Attribute operands (`t` of CMP/RANGE/INSET/EXISTS/MISSING) are
+    * slots holding the COLUMN name. */
   object Op {
     val ALLDOCS = 0; val AND = 1; val OR = 2; val NOT = 3; val SHOULD = 4
     val BOOST = 5; val TERM = 6; val ALL = 7; val ANY = 8; val MIN = 9
@@ -109,7 +113,7 @@ object QueryProgram {
     // constant-score any-of-terms — the REWRITTEN form of a
     // dictionary-expansion leaf (Lucene CONSTANT_SCORE multi-term
     // rewrite: matching docs score 1.0 regardless of tf/idf, the
-    // scan compiler's constScoreAny). CANY n t*n verifies against
+    // same for any expansion). CANY n t*n verifies against
     // the probe-field token array; KWCANY f n t*n against the
     // doc-side string attr map (keyword-field expansion).
     val CANY = 25; val KWCANY = 26
@@ -125,7 +129,7 @@ object QueryProgram {
     // field OTHER than the probe field. tf/dl come from that field's
     // token array in the doc-side tokens map, avgdl from the
     // per-field avgdl map, idf from the slot table as usual (slots
-    // key per (field, term)); semantics mirror the scan compiler on
+    // key per (field, term)); semantics equal the probe-field ops on
     // a secondary field exactly. Layouts parallel the probe-field
     // twins with a leading FIELD-name slot:
     // XTERM f t; XALL/XANY/XCANY f n t*n; XMIN f m n t*n;
@@ -151,6 +155,11 @@ object QueryProgram {
     // positive's; score scaled by the const factor when the negative
     // child also matches (Elasticsearch `boosting` query).
     val DEMOTE = 41
+    // string-ordered filters against the doc-side STRING attr map
+    // (binary UTF-8 order, Spark's string comparison):
+    // STRCMP op f t (op as CMP; t = slot holding the value under f);
+    // STRRANGE f lo hi (both ends inclusive, lo/hi value slots).
+    val STRCMP = 42; val STRRANGE = 43
   }
 
   /** Bound on probe alternatives kept per node — alternatives beyond
@@ -248,9 +257,10 @@ object QueryProgram {
     def nameIdx(n: String): Int = slotOf("", n)
     def cIdx(v: Double): Int = { consts += v; consts.size - 1 }
     def unsupported(what: String): Nothing = throw new IllegalArgumentException(
-      s"queryJoinAst cannot distribute $what — route this query through queryJoinDsl")
+      s"the serialized query program cannot encode $what")
 
-    // mirrors SearchIndex.compileWith's noMatch short-circuits
+    // text leaves on a field the index never built match nothing
+    // (Lucene QueryParser behavior for a nonexistent field)
     def badField(f: String): Boolean = !indexedFields.contains(f)
     def kwField(f: String): Boolean = indexedFields.contains(f) && !textFields.contains(f)
     // cross-field: an indexed TEXT field other than the probe field —
@@ -365,7 +375,7 @@ object QueryProgram {
       // placeholders; the caller expands each distinct (kind, field,
       // pattern, extra) against the term dictionary IN-PLAN and
       // rewrites them to CANY/KWCANY via [[substitute]] — so the
-      // Lucene multi-term rewrite distributes too (the scan path's
+      // Lucene multi-term rewrite distributes too (the search path's
       // expandDict is a per-query driver action; here it is one
       // dictionary join per batch)
       case MatchWildcard(f, pat) =>
@@ -380,10 +390,13 @@ object QueryProgram {
           ops += Op.STREQ; ops += nameIdx(f); ops += slotOf(f, s)
         case other => emitCmp(0, f, numOnly(other, "EqFilter"))
       }
-      case GtFilter(f, v) => emitCmp(1, f, numOnly(v, "GtFilter"))
-      case GeFilter(f, v) => emitCmp(2, f, numOnly(v, "GeFilter"))
-      case LtFilter(f, v) => emitCmp(3, f, numOnly(v, "LtFilter"))
-      case LeFilter(f, v) => emitCmp(4, f, numOnly(v, "LeFilter"))
+      case GtFilter(f, v) => emitOrdered(1, f, v, "GtFilter")
+      case GeFilter(f, v) => emitOrdered(2, f, v, "GeFilter")
+      case LtFilter(f, v) => emitOrdered(3, f, v, "LtFilter")
+      case LeFilter(f, v) => emitOrdered(4, f, v, "LeFilter")
+      case RangeFilter(f, lo: String, hi: String) =>
+        strAttrs += f
+        ops += Op.STRRANGE; ops += nameIdx(f); ops += slotOf(f, lo); ops += slotOf(f, hi)
       case RangeFilter(f, lo, hi) =>
         numAttrs += f
         ops += Op.RANGE; ops += nameIdx(f)
@@ -407,6 +420,12 @@ object QueryProgram {
     def emitCmp(op: Int, f: String, v: Double): Unit = {
       numAttrs += f
       ops += Op.CMP; ops += op; ops += nameIdx(f); ops += cIdx(v)
+    }
+    def emitOrdered(op: Int, f: String, v: Any, node: String): Unit = v match {
+      case s: String =>
+        strAttrs += f
+        ops += Op.STRCMP; ops += op; ops += nameIdx(f); ops += slotOf(f, s)
+      case other => emitCmp(op, f, numOnly(other, node))
     }
     def emitExpand(kind: Int, f: String, pat: String, extra: Int): Unit = {
       if (xField(f)) xAttrs += f // secondary text: rewrites to XCANY
@@ -551,15 +570,34 @@ object QueryProgram {
     (parts(0).toInt, parts(2), parts(3), parts(1).toInt)
   }
 
+  /** 2^53 - 1: the largest magnitude below which every integer is a
+    * double and no two longs collapse onto the same double. */
+  val MaxExactInteger: Double = 9007199254740991.0
+
   /** Filter-value encoding for the serialized consts table: every
     * orderable non-string value maps to a Double whose ordering and
-    * equality agree with the native column comparison the scan path
-    * compiles — booleans as 0/1 (false < true), dates as epoch DAYS
+    * equality agree with Spark's native comparison of the column
+    * with the value — booleans as 0/1 (false < true), dates as epoch DAYS
     * (`unix_date` on the doc side), timestamps/instants as epoch
     * MICROS (`unix_micros`; exact in a double out to +/-285 years).
-    * None = not encodable (route to queryJoinDsl). */
+    * None = not encodable. Integral values beyond +/-(2^53 - 1) and
+    * decimals a double cannot hold exactly are REJECTED with an
+    * error: their double image would compare inexactly. */
   private[graft] def numVal(v: Any): Option[Double] = v match {
-    case n: Number => Some(n.doubleValue())
+    case n @ (_: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte |
+        _: java.lang.Float | _: java.lang.Double) =>
+      Some(n.asInstanceOf[Number].doubleValue())
+    case n: Number =>
+      // longs and big numbers: only values a double holds exactly AND
+      // within +/-(2^53 - 1), where every long doc value still orders
+      // exactly against them after its own cast to double
+      val d = n.doubleValue()
+      val exact = new java.math.BigDecimal(n.toString)
+      if (math.abs(d) > MaxExactInteger ||
+          exact.compareTo(new java.math.BigDecimal(d)) != 0)
+        throw new IllegalArgumentException(s"filter value $n cannot be compared exactly: " +
+          "numeric filter values must be exact doubles within +/-(2^53 - 1)")
+      Some(d)
     case b: Boolean => Some(if (b) 1.0 else 0.0)
     case d: java.sql.Date => Some(d.toLocalDate.toEpochDay.toDouble)
     case d: java.time.LocalDate => Some(d.toEpochDay.toDouble)
@@ -598,8 +636,8 @@ object QueryProgram {
     * slots' terms and an all-of unit iff it contains ALL of them.
     * Soundness leans on the engine's additive combinator discipline
     * (And/Or/Should/DisMax sum or max child scores; ONLY leaves gate
-    * their own score on their own match — SearchIndex.compileWith /
-    * DslQueryScore), so each leaf's contribution is bounded
+    * their own score on their own match — DslQueryScore), so each
+    * leaf's contribution is bounded
     * independently:
     *   - probe-field TERM/ALL/ANY/MIN members: the term's measured
     *     max impact `mis(slot)` (max over its postings of the
@@ -649,7 +687,7 @@ object QueryProgram {
       case Op.TERM => pc += 1
       case Op.ALL | Op.ANY | Op.SYN | Op.CANY => skipN()
       case Op.MIN | Op.PHRASE | Op.INSET => pc += 1; skipN()
-      case Op.NEAR | Op.CMP | Op.RANGE => pc += 3
+      case Op.NEAR | Op.CMP | Op.RANGE | Op.STRCMP | Op.STRRANGE => pc += 3
       case Op.EXISTS | Op.MISSING => pc += 1
       case Op.KWTERM | Op.STREQ | Op.XTERM => pc += 2
       case Op.KWALL | Op.KWANY | Op.KWSYN | Op.KWCANY | Op.STRIN => pc += 1; skipN()
@@ -753,8 +791,7 @@ object QueryProgram {
         if (kind == 1) fail()
         singleValue(ss, sat(ss.map(idf).sum), requiresAll = true)
       case Op.CANY => singleValue(slots(next()), 1.0, requiresAll = false)
-      case Op.CMP => pc += 3; zero
-      case Op.RANGE => pc += 3; zero
+      case Op.CMP | Op.RANGE | Op.STRCMP | Op.STRRANGE => pc += 3; zero
       case Op.INSET => pc += 1; skipN(); zero
       case Op.EXISTS | Op.MISSING => pc += 1; zero
       case Op.STREQ => pc += 2; zero
@@ -957,7 +994,7 @@ object QueryProgram {
     case Op.ALL | Op.ANY | Op.CANY | Op.SYN => 2 + ops(pos + 1)
     case Op.MIN | Op.PHRASE | Op.INSET | Op.STRIN | Op.KWALL | Op.KWANY |
          Op.KWCANY | Op.KWSYN => 3 + ops(pos + 2)
-    case Op.NEAR | Op.CMP | Op.RANGE => 4
+    case Op.NEAR | Op.CMP | Op.RANGE | Op.STRCMP | Op.STRRANGE => 4
     case Op.KWTERM | Op.STREQ | Op.XTERM => 3
     case Op.KWMIN | Op.XMIN | Op.XPHRASE => 4 + ops(pos + 3)
     case Op.XALL | Op.XANY | Op.XCANY | Op.XSYN => 3 + ops(pos + 2)

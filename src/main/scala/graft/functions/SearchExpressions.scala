@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Nondeterministic, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -1156,7 +1156,7 @@ object BoolQueryScore {
 
   /** Static so generated code can call it directly. Operation order
     * inside each term's similarity matches the Column formulation of
-    * the postings scorer (SearchIndex termScore) exactly; the final
+    * the postings scorer (SearchIndex.sim) exactly; the final
     * sum runs in the aligned-array order, which is deterministic
     * (the arrays are sort_array'd at build), so results are
     * partitioning-independent. */
@@ -1203,6 +1203,72 @@ object BoolQueryScore {
   }
 }
 
+/** `eval_once(expr)` — `expr` itself, marked nondeterministic so the
+  * optimizer never duplicates it: a filter on a field of the result
+  * stays above the projection that computes it instead of being
+  * pushed below with the whole expression copied in. Projecting a
+  * costly struct (the search scorer's `struct(ok, score)`) through it
+  * and filtering on one field evaluates it once per row, not once in
+  * the filter and again in the projection. */
+case class EvalOnce(child: Expression) extends UnaryExpression with Nondeterministic {
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+  override def prettyName: String = "eval_once"
+  override protected def initializeInternal(partitionIndex: Int): Unit = ()
+  override protected def evalInternal(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    child.eval(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    child.genCode(ctx)
+  override protected def withNewChildInternal(newChild: Expression): EvalOnce =
+    copy(child = newChild)
+}
+
+/** `name_map(names, value1, ..., valueN)` — a map from the constant
+  * distinct `names` (a string-array literal) to the row's values,
+  * for the doc-side attribute maps of [[DslQueryScore]]. Built per
+  * row without `map_from_arrays`'s duplicate-key hashing and deep
+  * copy of every value: the keys are one shared array and the values
+  * are referenced, not copied. Safe because a map value is either
+  * read while its row is current or written into an UnsafeRow, which
+  * copies it. */
+case class NameMap(names: Seq[String], children: Seq[Expression]) extends Expression {
+  require(names.distinct.length == names.length && names.length == children.length,
+    "name_map needs one value per distinct name")
+  private val valueType: DataType =
+    children.headOption.map(_.dataType).getOrElse(NullType)
+  require(children.forall(_.dataType == valueType), "name_map values must share one type")
+  @transient private lazy val keys =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(names.map(UTF8String.fromString).toArray[Any])
+
+  override def nullable: Boolean = false
+  override def dataType: DataType = MapType(StringType, valueType, valueContainsNull = true)
+  override def prettyName: String = "name_map"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(keys,
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(children.map(_.eval(input)).toArray[Any]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val keysRef = ctx.addReferenceObj("nameMapKeys", keys)
+    val values = ctx.freshName("values")
+    val fill = children.zipWithIndex.map { case (c, i) =>
+      val g = c.genCode(ctx)
+      s"""${g.code}
+         |$values[$i] = ${g.isNull} ? null : (Object) ${g.value};""".stripMargin
+    }.mkString("\n")
+    ev.copy(code = code"""
+      Object[] $values = new Object[${children.length}];
+      $fill
+      org.apache.spark.sql.catalyst.util.MapData ${ev.value} =
+        new org.apache.spark.sql.catalyst.util.ArrayBasedMapData($keysRef,
+          new org.apache.spark.sql.catalyst.util.GenericArrayData($values));""",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): NameMap = copy(children = newChildren)
+}
+
 /** `dsl_query_score(tokens, ops, terms, doubles, attrs, kind, k1, b,
   * avgdl)` — evaluates a SERIALIZED nested query AST
   * ([[graft.dsl.QueryProgram]]'s pre-order bytecode) against one
@@ -1224,12 +1290,16 @@ object BoolQueryScore {
   * maps may be null when the batch uses none. Returns
   * struct(ok, score).
   *
-  * Scoring is node-for-node identical to the scan-path compiler
-  * (SearchIndex.compileWith): only leaves gate their own score on
-  * their own match; And/Or always sum both sides' (already-gated)
-  * scores; Not scores 0; Should passes the inner score ungated;
-  * phrase/near tf reuse [[PhraseCount]]/[[NearCount]] statics, so
-  * positional semantics cannot drift between the paths. */
+  * It is the engine's one scorer for nested queries: the scan path
+  * (`SearchIndex.compile`: search, searchAfter, collapseSearch,
+  * facetCounts, highlight, explainTerms, the SQL `graft_search`) and
+  * the distributed `queryJoinAst` both evaluate through it. The scan
+  * path passes the program arrays as plan LITERALS, which codegen
+  * emits as reference objects, so every search shares one generated
+  * class. Only leaves gate their own score on their own match;
+  * And/Or always sum both sides' (already-gated) scores; Not scores
+  * 0; Should passes the inner score ungated; phrase/near tf reuse
+  * [[PhraseCount]]/[[NearCount]] statics. */
 case class DslQueryScore(tokens: Expression, ops: Expression, terms: Expression,
     doubles: Expression, attrs: Expression, attrsStr: Expression,
     xtokens: Expression, xavgdl: Expression,
@@ -1259,7 +1329,7 @@ case class DslQueryScore(tokens: Expression, ops: Expression, terms: Expression,
         if (ast == null) null else ast.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData],
         if (xt == null) null else xt.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData],
         if (xa == null) null else xa.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData],
-        kind, k1, b, avgdl)
+        kind, k1, b, avgdl, new DslQueryScore.TermTable(false))
     }
   }
 
@@ -1273,6 +1343,8 @@ case class DslQueryScore(tokens: Expression, ops: Expression, terms: Expression,
     val xtG = xtokens.genCode(ctx)
     val xaG = xavgdl.genCode(ctx)
     val row = "org.apache.spark.sql.catalyst.InternalRow"
+    val table = ctx.addMutableState(classOf[DslQueryScore.TermTable].getName, "termTable",
+      v => s"$v = new ${classOf[DslQueryScore.TermTable].getName}(${terms.foldable});")
     ev.copy(code = code"""
       ${tokG.code}
       ${opsG.code}
@@ -1292,7 +1364,7 @@ case class DslQueryScore(tokens: Expression, ops: Expression, terms: Expression,
           ${astG.isNull} ? null : ${astG.value},
           ${xtG.isNull} ? null : ${xtG.value},
           ${xaG.isNull} ? null : ${xaG.value},
-          $kind, ${k1}D, ${b}D, ${avgdl}D);
+          $kind, ${k1}D, ${b}D, ${avgdl}D, $table);
       }""")
   }
 
@@ -1310,48 +1382,62 @@ object DslQueryScore {
     StructField("ok", BooleanType, nullable = false),
     StructField("score", DoubleType, nullable = false)))
 
-  /** Static so generated code can call it directly. One pass builds
-    * the per-row tf table (O(dl x |terms|), same as
-    * [[BoolQueryScore]]), then the interpreter walks the pre-order
-    * program once; score summation follows program order, which is
-    * deterministic per shape, so results are
-    * partitioning-independent. */
-  def compute(tokens: ArrayData, ops: ArrayData, terms: ArrayData,
-      doubles: ArrayData, attrs: org.apache.spark.sql.catalyst.util.MapData,
-      attrsStr: org.apache.spark.sql.catalyst.util.MapData,
-      xtokens: org.apache.spark.sql.catalyst.util.MapData,
-      xavgdl: org.apache.spark.sql.catalyst.util.MapData,
-      kind: Int, k1: Double, b: Double, avgdl: Double)
-      : org.apache.spark.sql.catalyst.InternalRow = {
-    val m = terms.numElements()
-    val n = tokens.numElements()
-    // tf per term slot, built LAZILY (a pair rejected by a filter on
-    // the cheap AND spine never scans the token array at all) via a
-    // small open-addressed hash of the term table: O(dl) token
-    // lookups instead of the O(dl x m) nested equals loop. Slots
-    // holding filter attr names or keyword-field terms just stay 0
-    // (never read as text tf). The slot table is unique per (field,
-    // term) but the STRINGS can repeat across fields, so equal
-    // strings chain (`dup`) and a token hit increments the whole
-    // chain — each chained slot's tf is then correct regardless of
-    // which purpose the slot serves.
-    var tfs: Array[Int] = null
-    var termStrs: Array[UTF8String] = null
-    def ensureTfs(): Unit = if (tfs == null) {
-      tfs = new Array[Int](m)
-      termStrs = new Array[UTF8String](m)
-      var cap = 4
-      while (cap < m * 2 + 1) cap <<= 1
-      val slots = new Array[Int](cap)
+  /** Per-evaluator working state of [[compute]]: an open-addressed hash of
+    * the program's term table plus the per-row tf counts. With
+    * `stable` (the terms are a plan literal — every scan-path search)
+    * the hash is built once, for the first row, and kept while the
+    * terms object stays the same; otherwise (a query join, whose rows
+    * carry their own programs) it is rebuilt for every row, reusing
+    * its arrays when the term count repeats. Not thread-safe: one per
+    * generated evaluator (one per task). */
+  final class TermTable(stable: Boolean) {
+    private var loaded: ArrayData = null
+    private var m = -1
+    private var cap = 0
+    private[functions] var termStrs: Array[UTF8String] = new Array[UTF8String](0)
+    private var slots: Array[Int] = new Array[Int](0)
+    private var hashes: Array[Int] = new Array[Int](0)
+    private var dup: Array[Int] = new Array[Int](0)
+    // bit `sig` set for every term: a token whose signature bit is
+    // clear cannot equal any term and skips the hash probe — a few
+    // term bits of 64, so most non-matching tokens cost two byte
+    // reads instead of a murmur hash
+    private var sigMask = 0L
+    private[functions] var tfs: Array[Int] = new Array[Int](0)
+
+    /** 6-bit signature of a string's length, first and last byte. */
+    private def sig(u: UTF8String): Int = {
+      val n = u.numBytes()
+      if (n == 0) 0 else (n * 7 + u.getByte(0) * 13 + u.getByte(n - 1)) & 63
+    }
+
+    /** Points the table at `terms`. The slot table is unique per
+      * (field, term) but the STRINGS can repeat across fields, so
+      * equal strings chain (`dup`) and a token hit increments the
+      * whole chain — each chained slot's tf is then correct
+      * regardless of which purpose the slot serves. */
+    private def load(terms: ArrayData): Unit = if (!(stable && (terms eq loaded))) {
+      loaded = terms
+      if (terms.numElements() != m) {
+        m = terms.numElements()
+        termStrs = new Array[UTF8String](m)
+        tfs = new Array[Int](m)
+        hashes = new Array[Int](m)
+        dup = new Array[Int](m)
+        cap = 4
+        while (cap < m * 2 + 1) cap <<= 1
+        slots = new Array[Int](cap)
+      }
       java.util.Arrays.fill(slots, -1)
-      val hashes = new Array[Int](m)
-      val dup = new Array[Int](m)
       java.util.Arrays.fill(dup, -1)
+      java.util.Arrays.fill(termStrs.asInstanceOf[Array[AnyRef]], null)
+      sigMask = 0L
       var j = 0
       while (j < m) {
         if (!terms.isNullAt(j)) {
           val ts = terms.getUTF8String(j)
           termStrs(j) = ts
+          sigMask |= 1L << sig(ts)
           val h = ts.hashCode
           hashes(j) = h
           var p = h & (cap - 1)
@@ -1367,24 +1453,60 @@ object DslQueryScore {
         }
         j += 1
       }
+    }
+
+    /** tf per term slot of `tokens`: O(dl) token lookups, no per-row
+      * allocation once the table is loaded. Slots holding filter attr
+      * names or keyword-field terms also count (never read as text
+      * tf). */
+    def count(terms: ArrayData, tokens: ArrayData): Unit = {
+      load(terms)
+      java.util.Arrays.fill(tfs, 0)
+      val n = tokens.numElements()
       var i = 0
       while (i < n) {
         if (!tokens.isNullAt(i)) {
           val tok = tokens.getUTF8String(i)
-          val h = tok.hashCode
-          var p = h & (cap - 1)
-          var s = slots(p)
-          while (s != -1 && !(hashes(s) == h && termStrs(s).equals(tok))) {
-            p = (p + 1) & (cap - 1)
-            s = slots(p)
+          if (((sigMask >>> sig(tok)) & 1L) != 0L) {
+            val h = tok.hashCode
+            var p = h & (cap - 1)
+            var s = slots(p)
+            while (s != -1 && !(hashes(s) == h && termStrs(s).equals(tok))) {
+              p = (p + 1) & (cap - 1)
+              s = slots(p)
+            }
+            while (s != -1) { tfs(s) += 1; s = dup(s) }
           }
-          while (s != -1) { tfs(s) += 1; s = dup(s) }
         }
         i += 1
       }
     }
+  }
+
+  /** Static so generated code can call it directly. The per-row tf
+    * table is built LAZILY by `table` (a pair rejected by a filter on
+    * the cheap AND spine never scans the token array at all): O(dl)
+    * hashed token lookups instead of the O(dl x m) nested equals
+    * loop. Then the interpreter walks the pre-order program once;
+    * score summation follows program order, which is deterministic
+    * per shape, so results are partitioning-independent. */
+  def compute(tokens: ArrayData, ops: ArrayData, terms: ArrayData,
+      doubles: ArrayData, attrs: org.apache.spark.sql.catalyst.util.MapData,
+      attrsStr: org.apache.spark.sql.catalyst.util.MapData,
+      xtokens: org.apache.spark.sql.catalyst.util.MapData,
+      xavgdl: org.apache.spark.sql.catalyst.util.MapData,
+      kind: Int, k1: Double, b: Double, avgdl: Double, table: TermTable)
+      : org.apache.spark.sql.catalyst.InternalRow = {
+    val n = tokens.numElements()
+    var tfs: Array[Int] = null
+    var termStrs: Array[UTF8String] = null
+    def ensureTfs(): Unit = if (tfs == null) {
+      table.count(terms, tokens)
+      tfs = table.tfs
+      termStrs = table.termStrs
+    }
     val dl = n.toDouble
-    val constOff = m // consts follow the idf prefix in `doubles`
+    val constOff = terms.numElements() // consts follow the idf prefix in `doubles`
 
     def simOf(tf: Double, idf: Double): Double =
       if (kind == 0) idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
@@ -1422,8 +1544,8 @@ object DslQueryScore {
       }
       null
     }
-    // keyword-field term score: tf 1, dl 1, avgdl 1 (the scan
-    // compiler's termScore on a keyword field)
+    // keyword-field term score: tf 1, dl 1, avgdl 1 (a keyword value
+    // is one whole term)
     def kwSim(idf: Double): Double =
       if (kind == 0) idf * (k1 + 1.0) / (1.0 + k1) else idf * idf
 
@@ -1479,8 +1601,7 @@ object DslQueryScore {
         }
         c
       }
-    // secondary-field similarity: that field's dl and avgdl (the scan
-    // compiler's termScore on a non-probe text field)
+    // secondary-field similarity: that field's dl and avgdl
     def xsim(tf: Double, idf: Double): Double = {
       val xdl = if (xfArr == null) 0.0 else xfArr.numElements().toDouble
       if (kind == 0) idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * xdl / xfAvg))
@@ -1508,8 +1629,7 @@ object DslQueryScore {
       case Op.MIN => pc += 1; skipN()
       case Op.PHRASE => pc += 1; skipN()
       case Op.NEAR => pc += 3
-      case Op.CMP => pc += 3
-      case Op.RANGE => pc += 3
+      case Op.CMP | Op.RANGE | Op.STRCMP | Op.STRRANGE => pc += 3
       case Op.INSET => pc += 1; skipN()
       case Op.EXISTS | Op.MISSING => pc += 1
       case Op.KWTERM => pc += 2
@@ -1550,8 +1670,7 @@ object DslQueryScore {
         // best child score + tie x the rest. Child scores follow the
         // engine's And/Or convention: LEAVES gate their own score on
         // their own match, composite children contribute their score
-        // mass whether or not their predicate holds — identical to
-        // the scan compiler, so the two paths cannot diverge
+        // mass whether or not their predicate holds
         val n = next()
         val tie = doubles.getDouble(constOff + next())
         // mx starts at -Inf (not 0) so max semantics match the scan
@@ -1573,7 +1692,7 @@ object DslQueryScore {
         (c._1, if (c._1) b else 0.0)
       case Op.FUNCSC =>
         // field-value-factor: child x (1 + factor x ln(1 + max(v, 0)));
-        // NULL or negative signal = no boost, like the scan compiler
+        // NULL or negative signal = no boost
         val f = next()
         val factor = doubles.getDouble(constOff + next())
         val c = ev()
@@ -1687,6 +1806,25 @@ object DslQueryScore {
         val hi = doubles.getDouble(constOff + next())
         val av = attrOf(slot)
         (av != null && av.doubleValue() >= lo && av.doubleValue() <= hi, 0.0)
+      case Op.STRCMP =>
+        val op = next(); val f = next(); val t = next()
+        val v = strAttrOf(f)
+        val ok = v != null && {
+          val c = v.compareTo(terms.getUTF8String(t))
+          op match {
+            case 0 => c == 0
+            case 1 => c > 0
+            case 2 => c >= 0
+            case 3 => c < 0
+            case _ => c <= 0
+          }
+        }
+        (ok, 0.0)
+      case Op.STRRANGE =>
+        val f = next(); val lo = next(); val hi = next()
+        val v = strAttrOf(f)
+        (v != null && v.compareTo(terms.getUTF8String(lo)) >= 0 &&
+          v.compareTo(terms.getUTF8String(hi)) <= 0, 0.0)
       case Op.INSET =>
         val slot = next(); val cnt = next()
         val av = attrOf(slot)
@@ -1782,7 +1920,7 @@ object DslQueryScore {
         (found, 0.0)
       // constant-score any-of-terms (rewritten dictionary-expansion
       // leaf — Lucene CONSTANT_SCORE rewrite: matching docs score
-      // 1.0 regardless of tf/idf, like the scan path's constScoreAny)
+      // 1.0 regardless of tf/idf)
       case Op.CANY =>
         val cnt = next()
         ensureTfs()
@@ -2033,6 +2171,14 @@ object SearchExpressions {
         exprs(5).eval().asInstanceOf[Double],
         exprs(6).eval().asInstanceOf[Double],
         exprs(7).eval().asInstanceOf[Double])),
+    (FunctionIdentifier("name_map"),
+      info("name_map", "name_map(names, value1, ..., valueN) - map from the distinct literal names to the row's values, values referenced rather than copied"),
+      (exprs: Seq[Expression]) => NameMap(
+        exprs.head.eval().asInstanceOf[ArrayData].toArray[UTF8String](StringType).map(_.toString).toSeq,
+        exprs.tail)),
+    (FunctionIdentifier("eval_once"),
+      info("eval_once", "eval_once(expr) - expr, evaluated once per row: never copied into a pushed-down filter"),
+      (exprs: Seq[Expression]) => EvalOnce(exprs.head)),
     (FunctionIdentifier("dsl_query_score"),
       info("dsl_query_score",
         "dsl_query_score(tokens, ops, terms, doubles, attrs, attrs_str, xtokens, xavgdl, kind, k1, b, avgdl) - struct(ok, score) nested-AST query verification + similarity over a token array"),

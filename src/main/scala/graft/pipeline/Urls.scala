@@ -581,14 +581,16 @@ object Urls {
     // (r17; the iterative entries pay this fold every iteration).
     // Arithmetic identical to the in-plan sort_array fold it
     // replaces: buckets are distinct, so ordering by bucket and
-    // summing left-to-right reproduces the fold bit-exactly.
+    // summing left-to-right reproduces the fold bit-exactly. A null
+    // dom hashes to a null bucket, which sorts FIRST, as sort_array
+    // placed it.
     val buckets = dv
       .groupBy(substring(md5(col("dom").cast("binary")), 1, 2).as("b"))
       .agg(aggregate(
         sort_array(collect_list(struct(col("dom"), col("v")))),
         lit(0.0), (a, x) => a + x.getField("v")).as("s"))
       .collect()
-    buckets.sortBy(_.getString(0)).foldLeft(0.0)((a, r) => a + r.getDouble(1))
+    buckets.sortBy(r => Option(r.getString(0))).foldLeft(0.0)((a, r) => a + r.getDouble(1))
   }
 
   /** The power-iteration core over a normalized edge frame

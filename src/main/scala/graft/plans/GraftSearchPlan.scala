@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Cast, Expression, ExpressionInfo, InterpretedUnsafeProjection, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
@@ -608,9 +608,23 @@ final case class GraftSearchExec(dir: String, rawQuery: String, k: Int,
   override protected def doExecute(): RDD[InternalRow] = {
     // `session` is SparkPlan's own captured session (set at planning)
     val idx = graft.search.SearchQueries.indexFor(session, dir)
-    idx.searchRaw(rawQuery, k)
-      .select(col(idx.spec.keyCol).cast("long"), col("score").cast("double"))
-      .queryExecution.toRdd
+    val hits = idx.searchRaw(rawQuery, k)
+    // (key, score) are cut from the k hit rows AFTER the search plan:
+    // a select on top would prune the scan stage's columns and give
+    // SQL searches a generated class of their own, not the one every
+    // Scala-side search already shares
+    val schema = hits.schema
+    def field(name: String): Expression = {
+      val i = schema.fieldIndex(name)
+      BoundReference(i, schema(i).dataType, schema(i).nullable)
+    }
+    val tz = Some(session.sessionState.conf.sessionLocalTimeZone)
+    val cut = Seq(Cast(field(idx.spec.keyCol), LongType, tz),
+      Cast(field("score"), DoubleType, tz))
+    hits.queryExecution.toRdd.mapPartitions { rows =>
+      val project = InterpretedUnsafeProjection.createProjection(cut)
+      rows.map(project)
+    }
   }
 }
 

@@ -4,7 +4,9 @@ import graft.analysis.{Analyzer, Analyzers}
 import graft.dsl._
 import graft.functions.{SearchExpressions, TopKAgg}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
 import org.apache.spark.storage.StorageLevel
 
 /** Scoring mode (reference: similarities/ConfigurableBM25Similarity.
@@ -126,100 +128,47 @@ final class SearchIndex private (
   private def queryAn: Analyzer = analyzer(spec.queryAnalyzer)
   private def key: Column = col(spec.keyCol)
 
-  private def sim: (Column, Column, Double, Double) => Column = spec.similarity match {
-    case BM25(k1, b) =>
-      (tf, dl, idf, avgdl) =>
-        lit(idf) * (tf * lit(k1 + 1.0)) /
-          (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(avgdl)))
-    case TFIDF() =>
-      // classic TF-IDF with the same global IDF: sqrt(tf) * idf^2 / sqrt(dl)
-      (tf, dl, idf, _) => sqrt(tf) * lit(idf * idf) / sqrt(dl)
-  }
-
-  /** (matched, score) for one tf-style evidence count. BM25's algebra
-    * is already EXACTLY 0.0 at tf=0 (the numerator is tf; with dl
-    * defaulted to avgdl for absent fields and floored at a positive
-    * epsilon — tf > 0 implies dl >= 1, so the floor only ever acts on
-    * unmatched rows, where it keeps the b=1, dl=0 denominator away
-    * from 0/0 = NaN — the denominator is > 0 for every b in [0,1]),
-    * so no CASE gate is emitted around the score: a `when(tf > 0, s)`
-    * gate forces every tf sub-expression to be evaluated TWICE per
-    * row (once in the condition, once in the branch: codegen
-    * subexpression hoisting does not cross conditional branches),
-    * which at 4+ score references per query multiplies the per-row
-    * token-array scans several-fold (measured 6x on the dismax
-    * shape). TF-IDF keeps the gate: sqrt(dl) is 0 for an empty field
-    * and 0/0 would be NaN, not 0. */
-  private val simSelfGating: Boolean = spec.similarity match {
-    case _: BM25 => true
-    case _ => false
-  }
-  private def gatedSim(tf: Column, dl: Column, idfV: Double,
-      avgdl: Double): (Column, Column) =
-    if (simSelfGating) {
-      val s = sim(tf,
-        greatest(coalesce(dl, lit(avgdl)), lit(1e-9)), idfV, avgdl)
-      (tf > 0, s)
-    } else {
-      val s = sim(tf, dl, idfV, avgdl)
-      (tf > 0, when(tf > 0, s).otherwise(lit(0.0)))
-    }
-
   // ------------------------------------------------------------------
-  // compilation: AST -> (predicate Column, score Column)
+  // compilation: AST -> serialized query program -> dsl_query_score
   // ------------------------------------------------------------------
 
-  /** Collects every (field, analyzed term) pair the query scores on. */
-  private def collectTerms(q: SearchQuery): Set[(String, String)] = q match {
-    case AllDocs => Set.empty
-    case And(l, r) => collectTerms(l) ++ collectTerms(r)
-    case Or(l, r) => collectTerms(l) ++ collectTerms(r)
-    case Not(inner) => collectTerms(inner)
-    case Should(inner) => collectTerms(inner)
-    case MatchTerm(f, t) => Set(f -> t)
-    case MatchText(f, t) => queryAn.analyze(t).map(f -> _).toSet
-    case MatchAllText(f, t) => queryAn.analyze(t).map(f -> _).toSet
-    case MatchPhrase(f, t, _) => queryAn.analyze(t).map(f -> _).toSet
-    case MatchNear(f, a, b, _) => Set(f -> a, f -> b)
-    case MatchAllTerms(f, ts) => ts.map(f -> _).toSet
-    case MatchAnyTerms(f, ts) => ts.map(f -> _).toSet
-    case MatchSynonyms(f, ts) => ts.map(f -> _).toSet
-    case MatchMin(f, _, ts) => ts.map(f -> _).toSet
-    case Parsed(f, s) => collectTerms(Parsed.desugar(f, s))
-    case Boost(inner, _) => collectTerms(inner)
-    case DisMax(qs, _) => qs.flatMap(collectTerms).toSet
-    case ConstScore(inner, _) => collectTerms(inner)
-    case FunctionScore(inner, _, _) => collectTerms(inner)
-    case Demote(p, n, _) => collectTerms(p) ++ collectTerms(n)
-    // multi-term queries are constant-score: their dictionary
-    // expansion never needs IDF
-    case _: MatchWildcard | _: MatchFuzzy | _: MatchRegex => Set.empty
-    case _: SearchFilter => Set.empty
-  }
-
-  /** Global IDF for the given (field, term) pairs: one tiny action on
-    * the stats table (the engine analog of the reference's broadcast
-    * IDF map, BM25WithGlobalIDFSimilarity.scala:14-76). Terms absent
-    * from the corpus get df=0 → idf = log(1+(N+0.5)/0.5). */
-  def idfFor(pairs: Set[(String, String)]): Map[(String, String), Double] = {
-    // unknown fields (possible via parsed `field:term` syntax) never
-    // match — they are dropped here and short-circuited in compileWith,
-    // the Lucene QueryParser behavior for a nonexistent field
+  /** Document frequencies of the given (field, term) pairs: ONE tiny
+    * action on the stats table for the whole set (the engine analog
+    * of the reference's broadcast IDF map, BM25WithGlobalIDFSimilarity.
+    * scala:14-76). Pairs on fields this index never built and terms
+    * absent from the corpus are missing (df 0). The field and term
+    * sets travel as array literals, so every lookup plans to the same
+    * generated class whatever the query; the pair filter runs on the
+    * driver over the at most |fields| x |terms| rows that come back. */
+  private def dfFor(pairs: Set[(String, String)]): Map[(String, String), Long] = {
     val known = pairs.filter(p => isIndexedField(p._1))
     if (known.isEmpty) return Map.empty
-    val byField = known.groupBy(_._1)
-    val found = byField.iterator.flatMap { case (f, ps) =>
-      stats
-        .where(col("field") === f && col("term").isin(ps.map(_._2).toSeq: _*))
-        .select(col("term"), col("df"))
-        .collect()
-        .map(r => (f, r.getString(0)) -> r.getLong(1))
-    }.toMap
-    known.iterator.map { p =>
-      val n = fieldStats(p._1).numDocs
-      val df = found.getOrElse(p, 0L).toDouble
-      p -> math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-    }.toMap
+    stats
+      .where(array_contains(stringsLit(known.map(_._1).toSeq.sorted), col("field")) &&
+        array_contains(stringsLit(known.map(_._2).toSeq.sorted), col("term")))
+      .select(col("field"), col("term"), col("df"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+      .filter(e => known.contains(e._1))
+      .toMap
+  }
+
+  /** Corpus-global IDF `log(1 + (N - df + 0.5)/(df + 0.5))` of a term
+    * with document frequency `df` in `field`. */
+  private def idfOf(field: String, df: Long): Double = {
+    val n = fieldStats(field).numDocs
+    math.log(1.0 + (n - df.toDouble + 0.5) / (df.toDouble + 0.5))
+  }
+
+  /** Global IDF for the given (field, term) pairs through [[dfFor]]'s
+    * one stats action. Terms absent from the corpus get df=0 → idf =
+    * log(1+(N+0.5)/0.5); pairs on unknown fields (possible via parsed
+    * `field:term` syntax) are dropped — such leaves never match, the
+    * Lucene QueryParser behavior for a nonexistent field. */
+  def idfFor(pairs: Set[(String, String)]): Map[(String, String), Double] = {
+    val dfs = dfFor(pairs)
+    pairs.filter(p => isIndexedField(p._1))
+      .map(p => p -> idfOf(p._1, dfs.getOrElse(p, 0L))).toMap
   }
 
   /** Cross-field document frequencies: df(term) = #docs containing
@@ -303,23 +252,12 @@ final class SearchIndex private (
   private def tokensCol(field: String): Column = col(tokensColName(field))
   private def dlCol(field: String): Column = col(dlColName(field))
 
-  /** tf of one term in one field of the current row. A null token
-    * array (the doc has no value in that field) counts 0 — the
-    * Lucene absent-field semantic: the doc doesn't contain the term,
-    * so e.g. `Not(term)` MATCHES it. Without the coalesce, SQL
-    * three-valued logic would silently drop such docs from negated
-    * queries, diverging from the serialized interpreter. */
-  private def tfCol(field: String, term: String): Column =
-    if (spec.textFields.contains(field))
-      coalesce(call_function("array_count_eq", tokensCol(field), lit(term)), lit(0))
-    else // keyword field: exact value match, tf 1
-      when(col(field) === lit(term), lit(1)).otherwise(lit(0))
-
   /** Multi-term (wildcard/fuzzy) rewrite, the Lucene MultiTermQuery
     * discipline: expand the pattern against the term DICTIONARY
     * (stats — |vocab| rows, already persisted), then match documents
-    * with ordinary codegen'd term predicates. The dictionary probe is
-    * one tiny driver action per compile, the same cost class as
+    * against the expanded terms as one constant-score program leaf
+    * (`CANY`). The dictionary probe is one tiny driver action per
+    * distinct pattern, the same cost class as
     * [[idfFor]]; the alternative — a LIKE/levenshtein higher-order
     * function over every document's token array — evaluates
     * interpreted per token per doc and cannot use the dictionary's
@@ -348,205 +286,175 @@ final class SearchIndex private (
     case c => c.toString
   }
 
-  /** Constant-score any-of-terms: the compiled form of an expanded
-    * multi-term query (Lucene CONSTANT_SCORE rewrite — matching docs
-    * score 1.0 regardless of tf/idf). */
-  private def constScoreAny(field: String, terms: Seq[String]): (Column, Column) =
-    if (terms.isEmpty) noMatch
+  /** The field whose token array feeds `dsl_query_score` directly on
+    * the scan path; leaves on other text fields score through the
+    * cross-field map. Fixed per index, so every search shares it. */
+  private def scanField: String = spec.textFields.headOption.getOrElse("")
+
+  /** `q` serialized for the scan path, with its dictionary-expansion
+    * leaves (wildcard/fuzzy/regex) expanded by [[expandDict]] — one
+    * dictionary action per distinct pattern — and substituted in. */
+  private def serialize(q: SearchQuery): QueryProgram = {
+    val field = scanField
+    val p = QueryProgram.compile(q, field, spec.queryAnalyzer,
+      (spec.textFields ++ spec.keywordFields).toSet, spec.textFields.toSet)
+    val keys = QueryProgram.expansionKeys(p.ops, p.terms)
+    if (keys.isEmpty) p
     else {
-      // coalesce: null tokens / null keyword value = "contains none
-      // of the terms" (absent-field semantic, as in tfCol)
-      val pred = coalesce(
-        if (spec.textFields.contains(field))
-          arrays_overlap(tokensCol(field), array(terms.map(lit): _*))
-        else col(field).isin(terms: _*), lit(false))
-      (pred, when(pred, lit(1.0)).otherwise(lit(0.0)))
+      val exp = keys.map { case k @ (kind, f, pat, maxEdits) =>
+        k -> expandDict(f, kind match {
+          case 0 => col("term").like(likePattern(pat))
+          case 1 => levenshtein(col("term"), lit(pat)) <= maxEdits
+          // Lucene RegexpQuery: the pattern is the Lucene RegExp
+          // DIALECT, translated to Java regex, then anchored, since
+          // Lucene matches the WHOLE term and rlike is a substring
+          // search
+          case _ => col("term").rlike("^(?:" + LuceneRegex.translate(pat) + ")$")
+        })
+      }.toMap
+      val (ops, terms, termFields, _) = QueryProgram.substitute(p.ops, p.terms,
+        p.termFields, Nil, field, spec.textFields.toSet, exp)
+      p.copy(ops = ops, terms = terms, termFields = termFields)
     }
-
-  private def termScore(field: String, term: String,
-      idf: Map[(String, String), Double]): (Column, Column) = {
-    val tf = tfCol(field, term)
-    val (dl, avgdl) =
-      if (spec.textFields.contains(field)) (dlCol(field).cast("double"), fieldStats(field).avgDl)
-      else (lit(1.0), 1.0)
-    gatedSim(tf.cast("double"), dl, idf(field -> term), avgdl)
   }
 
-  /** Compiles the AST to (match predicate, score expression). Both are
-    * pure Column expressions evaluated in whole-stage codegen; the
-    * only data-dependent inputs are the broadcast-small IDF literals. */
+  /** An array literal of `xs` typed `array<elem>`: the Literal
+    * `typedLit` builds, without its runtime TypeTag reflection, which
+    * every call repeats (a scan-path search builds several). */
+  private def arrayLit(xs: Seq[Any], elem: DataType, containsNull: Boolean): Column =
+    GraftColumnBridge.column(Literal.create(xs, ArrayType(elem, containsNull)))
+
+  /** [[arrayLit]] of strings, typed like `typedLit` of a `Seq[String]`. */
+  private def stringsLit(xs: Seq[String]): Column = arrayLit(xs, StringType, containsNull = true)
+
+  /** The interpreter's combined doubles: per-slot IDF ++ consts. */
+  private def doublesOf(p: QueryProgram, idf: Map[(String, String), Double]): Seq[Double] =
+    p.termFields.zip(p.terms).map(idf.getOrElse(_, 0.0)) ++ p.consts
+
+  /** The scan-path scorer of one program: `dsl_query_score` over
+    * every document with the program arrays as plan LITERALS. Codegen
+    * emits array literals as reference objects, so neither the query
+    * nor its IDFs appear in the generated source and every search
+    * reuses one compiled class (and its JIT-warmed code). The doc-side
+    * maps hold every column of the index's own attribute sets
+    * ([[scanAttrs]]) plus any column the program compares in a kind
+    * the defaults do not cover. */
+  private def scanScorer(p: QueryProgram, doubles: Seq[Double]): Column = {
+    val (num, str) = scanAttrs
+    val tokens =
+      if (spec.storePositions && spec.textFields.nonEmpty)
+        coalesce(tokensCol(scanField), array().cast("array<string>"))
+      else array().cast("array<string>")
+    val xFields = if (spec.storePositions) spec.textFields.filter(_ != scanField) else Nil
+    programScore(tokens, arrayLit(p.ops, IntegerType, containsNull = false),
+      stringsLit(p.terms), arrayLit(doubles, DoubleType, containsNull = false),
+      programDocInputs(num ++ p.attrFields.filterNot(num.contains),
+        str ++ p.strAttrFields.filterNot(str.contains), xFields),
+      scanField)
+  }
+
+  /** The index's default doc-side attribute columns: (numeric — every
+    * orderable non-internal column, encoded like QueryProgram.numVal;
+    * string — every string column except the text fields' raw text,
+    * plus the keyword fields). The raw text is the widest column and
+    * is almost never a filter target, so copying it into every row's
+    * map would cost each search more than the one extra compile a
+    * program that does filter on it pays (via `strAttrFields`). */
+  @transient private lazy val scanAttrs: (Seq[String], Seq[String]) = {
+    import org.apache.spark.sql.types._
+    val internal = internalCols(spec).toSet
+    val cols = docs.schema.fields.filterNot(f => internal(f.name))
+    val num = cols.collect {
+      case f if f.dataType.isInstanceOf[NumericType] || f.dataType == BooleanType ||
+        f.dataType == DateType || f.dataType == TimestampType => f.name
+    }
+    val text = spec.textFields.toSet
+    val str = cols.collect { case f if f.dataType == StringType && !text(f.name) => f.name }
+    (num.toSeq, (str.toSeq ++ spec.keywordFields).distinct)
+  }
+
+  /** `struct(ok, score)` of `q` for every document: one stats action
+    * for the IDFs (none when q scores no term), then the shared
+    * scan-path scorer. */
+  private def scoreStruct(q: SearchQuery): Column = {
+    val p = serialize(q)
+    val pairs = p.termFields.zip(p.terms).filter(_._1.nonEmpty).toSet
+    scanScorer(p, doublesOf(p, idfFor(pairs)))
+  }
+
+  /** Compiles the AST to (match predicate, score expression): both
+    * read ONE `dsl_query_score` evaluation of the serialized program
+    * (see [[scanScorer]]), whose only data-dependent inputs are the
+    * program and IDF array literals — every query plans to the same
+    * generated code. The IDF lookup is one driver action. */
   def compile(q: SearchQuery): (Column, Column) = {
-    val idf = idfFor(collectTerms(q))
-    compileWith(q, idf)
+    val r = scoreStruct(q)
+    (r.getField("ok"), r.getField("score"))
   }
 
-  private val noMatch: (Column, Column) = (lit(false), lit(0.0))
+  /** The documents a [[scoreStruct]]-style scorer matches, with their
+    * `score` column. The scorer runs once per row: it is projected
+    * behind `eval_once`, which keeps the optimizer from pushing the
+    * match filter below the projection — that would copy the whole
+    * evaluation into the filter and run it twice per matching row. */
+  private def matching(scorer: Column): DataFrame =
+    docs.withColumn("__m", call_function("eval_once", scorer))
+      .where(col("__m.ok"))
+      .withColumn("score", col("__m.score"))
+      .drop("__m")
 
-  private def compileWith(q: SearchQuery,
-      idf: Map[(String, String), Double]): (Column, Column) = q match {
-    // text queries against a field this index never built: no hits
-    // (Lucene QueryParser behavior) — reachable via parsed
-    // `field:term` syntax with a typo'd or foreign field name
-    case MatchTerm(f, _) if !isIndexedField(f) => noMatch
-    case MatchText(f, _) if !isIndexedField(f) => noMatch
-    case MatchAllText(f, _) if !isIndexedField(f) => noMatch
-    // phrases additionally need token positions, which only text
-    // fields store — a phrase on a keyword field matches nothing
-    // (it has no adjacency to satisfy) instead of dying on the
-    // unresolved __tokens_ column
-    case MatchPhrase(f, _, _) if !spec.textFields.contains(f) => noMatch
-    case MatchNear(f, _, _, _) if !spec.textFields.contains(f) => noMatch
-    case MatchAllTerms(f, _) if !isIndexedField(f) => noMatch
-    case MatchAnyTerms(f, _) if !isIndexedField(f) => noMatch
-    case MatchSynonyms(f, _) if !isIndexedField(f) => noMatch
-    case MatchMin(f, _, _) if !isIndexedField(f) => noMatch
-    case MatchWildcard(f, _) if !isIndexedField(f) => noMatch
-    case MatchFuzzy(f, _, _) if !isIndexedField(f) => noMatch
-    case MatchRegex(f, _) if !isIndexedField(f) => noMatch
-    case AllDocs => (lit(true), lit(1.0))
-    case Boost(inner, factor) =>
-      val (p, s) = compileWith(inner, idf)
-      (p, s * lit(factor))
-    case MatchWildcard(f, pat) =>
-      constScoreAny(f, expandDict(f, col("term").like(likePattern(pat))))
-    case MatchFuzzy(f, t, maxEdits) =>
-      constScoreAny(f, expandDict(f, levenshtein(col("term"), lit(t)) <= maxEdits))
-    case MatchRegex(f, pat) =>
-      // Lucene RegexpQuery: the pattern is the Lucene RegExp DIALECT
-      // (intervals, ~ complement, & intersection, @, "...", \c
-      // literal escapes) — translated to Java regex, then anchored,
-      // since Lucene matches the WHOLE term and rlike is a substring
-      // search. Unsupported dialect positions (interior ~/&) reject
-      // at compile time instead of silently meaning something else.
-      constScoreAny(f, expandDict(f,
-        col("term").rlike("^(?:" + LuceneRegex.translate(pat) + ")$")))
-    case And(l, r) =>
-      val (pl, sl) = compileWith(l, idf); val (pr, sr) = compileWith(r, idf)
-      (pl && pr, sl + sr)
-    case Or(l, r) =>
-      val (pl, sl) = compileWith(l, idf); val (pr, sr) = compileWith(r, idf)
-      (pl || pr, sl + sr) // each side's score is already gated on its own match
-    case Not(inner) =>
-      val (p, _) = compileWith(inner, idf)
-      (!p, lit(0.0))
-    case Should(inner) =>
-      val (_, s) = compileWith(inner, idf)
-      (lit(true), s)
-    case MatchTerm(f, t) => termScore(f, t, idf)
-    case MatchText(f, t) => compileWith(MatchAnyTerms(f, queryAn.analyze(t)), idf)
-    case MatchAllText(f, t) => compileWith(MatchAllTerms(f, queryAn.analyze(t)), idf)
-    case MatchPhrase(f, t, slop) =>
-      val terms = queryAn.analyze(t)
-      if (terms.isEmpty) (lit(false), lit(0.0))
-      else {
-        val tf = coalesce(call_function("phrase_count", tokensCol(f),
-          array(terms.map(lit): _*), lit(slop)).cast("double"), lit(0.0))
-        val phraseIdf = terms.map(term => idf(f -> term)).sum
-        gatedSim(tf, dlCol(f).cast("double"), phraseIdf, fieldStats(f).avgDl)
-      }
-    case MatchNear(f, a, b, dist) =>
-      // span-near scoring mirrors the phrase case: tf = proximity
-      // pair count, idf = summed constituent idfs
-      val tf = coalesce(call_function("near_count", tokensCol(f),
-        lit(a), lit(b), lit(dist)).cast("double"), lit(0.0))
-      val nearIdf = idf(f -> a) + idf(f -> b)
-      gatedSim(tf, dlCol(f).cast("double"), nearIdf, fieldStats(f).avgDl)
-    case MatchAllTerms(f, ts) =>
-      if (ts.isEmpty) (lit(true), lit(0.0))
-      else {
-        val parts = ts.map(t => termScore(f, t, idf))
-        (parts.map(_._1).reduceLeft(_ && _), parts.map(_._2).reduceLeft(_ + _))
-      }
-    case MatchAnyTerms(f, ts) =>
-      if (ts.isEmpty) (lit(false), lit(0.0))
-      else {
-        val parts = ts.map(t => termScore(f, t, idf))
-        (parts.map(_._1).reduceLeft(_ || _), parts.map(_._2).reduceLeft(_ + _))
-      }
-    case DisMax(qs, tie) =>
-      if (qs.isEmpty) noMatch
-      else {
-        // Lucene DisjunctionMaxQuery: best matching clause plus
-        // tieBreaker x the rest, 0.0 when NO clause matches (composite
-        // clauses like a half-matched And carry score mass without a
-        // match — the gate keeps that mass from leaking through
-        // Should/Or parents; DslQueryScore gates identically). The
-        // (match, score) pairs fold over ONE materialized struct
-        // array in ONE aggregate pass: naming mx/total/anyMatch
-        // directly over the raw clause expressions would inline each
-        // clause's token-array scans four times over (greatest twice
-        // + the sum + the gate), and CASE branches keep codegen from
-        // hoisting them (measured 6x slower on the 4-term dismax
-        // shape). mx seeds at -Inf (greatest(-Inf, s) = s) and the
-        // running sum at 0.0 (0.0 + s1 = s1 bit-exact), so the fold
-        // replays the interpreter's loop exactly — scores are
-        // bit-identical to it even for all-negative clause scores
-        // (e.g. a negative Boost factor).
-        val parts = qs.map(compileWith(_, idf))
-        val anyMatch = parts.map(_._1).reduceLeft(_ || _)
-        val arr = array(parts.map { case (p, s) =>
-          struct(p.as("p"), s.as("s"))
-        }: _*)
-        val s = aggregate(arr,
-          struct(lit(false).as("any"),
-            lit(Double.NegativeInfinity).as("mx"), lit(0.0).as("tot")),
-          (a, x) => struct(
-            (a.getField("any") || x.getField("p")).as("any"),
-            greatest(a.getField("mx"), x.getField("s")).as("mx"),
-            (a.getField("tot") + x.getField("s")).as("tot")),
-          a => when(a.getField("any"), a.getField("mx") +
-            lit(tie) * (a.getField("tot") - a.getField("mx")))
-            .otherwise(lit(0.0)))
-        (anyMatch, s)
-      }
-    case ConstScore(inner, boost) =>
-      val (p, _) = compileWith(inner, idf)
-      (p, when(p, lit(boost)).otherwise(lit(0.0)))
-    case FunctionScore(inner, f, factor) =>
-      // multiplier mirrors the interpreter's null/negative handling:
-      // absent signal = no boost (x1)
-      val (p, s) = compileWith(inner, idf)
-      val mult = lit(1.0) + lit(factor) *
-        log(lit(1.0) + greatest(coalesce(col(f).cast("double"), lit(0.0)), lit(0.0)))
-      (p, s * mult)
-    case Demote(pos, neg, factor) =>
-      // soft Not: the negative clause only scales the score
-      val (pp, ps) = compileWith(pos, idf)
-      val (np, _) = compileWith(neg, idf)
-      (pp, when(np, ps * lit(factor)).otherwise(ps))
-    case MatchSynonyms(f, ts) =>
-      if (ts.isEmpty) (lit(false), lit(0.0))
-      else {
-        // Lucene SynonymQuery: the group scores as ONE pseudo-term —
-        // tf is the SUM of the variants' term frequencies, document
-        // frequency the MAX over variants (idf monotone-decreasing in
-        // df, so that is the MIN of the variant idfs)
-        val tf = ts.map(t => tfCol(f, t).cast("double")).reduceLeft(_ + _)
-        val (dl, avgdl) =
-          if (spec.textFields.contains(f)) (dlCol(f).cast("double"), fieldStats(f).avgDl)
-          else (lit(1.0), 1.0)
-        gatedSim(tf, dl, ts.map(t => idf(f -> t)).min, avgdl)
-      }
-    case MatchMin(f, min, ts) =>
-      val parts = ts.map(t => termScore(f, t, idf))
-      val nMatched = parts.map(p => when(p._1, 1).otherwise(0)).reduceLeft(_ + _)
-      (nMatched >= min, parts.map(_._2).reduceLeft(_ + _))
-    case Parsed(f, s) => compileWith(Parsed.desugar(f, s), idf)
-    // filters coalesce to false on null values: a doc MISSING the
-    // attribute fails the filter (so Not(filter) matches it) — the
-    // Lucene absent-field semantic, and what the serialized
-    // interpreter does; bare SQL three-valued logic would instead
-    // silently drop such docs from negated queries
-    case EqFilter(f, v) => (coalesce(col(f) === lit(v), lit(false)), lit(0.0))
-    case GtFilter(f, v) => (coalesce(col(f) > lit(v), lit(false)), lit(0.0))
-    case GeFilter(f, v) => (coalesce(col(f) >= lit(v), lit(false)), lit(0.0))
-    case LtFilter(f, v) => (coalesce(col(f) < lit(v), lit(false)), lit(0.0))
-    case LeFilter(f, v) => (coalesce(col(f) <= lit(v), lit(false)), lit(0.0))
-    case RangeFilter(f, lo, hi) =>
-      (coalesce(col(f).between(lit(lo), lit(hi)), lit(false)), lit(0.0))
-    case InSetFilter(f, vs) => (coalesce(col(f).isin(vs: _*), lit(false)), lit(0.0))
-    case ExistsFilter(f) => (col(f).isNotNull, lit(0.0))
-    case MissingFilter(f) => (col(f).isNull, lit(0.0))
+  /** The top-k hits of a matched frame, ties broken on ascending key. */
+  private def topK(matched: DataFrame, k: Int): DataFrame =
+    matched.drop(internalCols(spec): _*).orderBy(col("score").desc, key.asc).limit(k)
+
+  /** `dsl_query_score(tokens, ops, terms, doubles, docInputs...)`
+    * under this index's similarity, with `field`'s avgdl for the
+    * token array given. Shared by the scan path and [[queryJoinAst]]. */
+  private def programScore(tokens: Column, ops: Column, terms: Column, doubles: Column,
+      docInputs: Seq[Column], field: String): Column = {
+    val (kind, k1, b) = spec.similarity match {
+      case BM25(a, c) => (0, a, c)
+      case TFIDF() => (1, 0.0, 0.0)
+    }
+    val avgdl = fieldStats.get(field).map(_.avgDl).getOrElse(1.0)
+    call_function("dsl_query_score", Seq(tokens, ops, terms, doubles) ++ docInputs ++
+      Seq(lit(kind), lit(k1), lit(b), lit(avgdl)): _*)
+  }
+
+  /** The doc-side inputs of `dsl_query_score` after the token array,
+    * as name-keyed maps: numeric attributes (`attrFields`, encoded
+    * like QueryProgram.numVal — numerics cast, booleans 0/1 with null
+    * kept, dates epoch days, timestamps epoch micros, so ordering and
+    * equality agree with Spark's own comparisons), string attributes
+    * (`strAttrFields`, cast to string), and the token arrays and
+    * avgdls of the cross-field text leaves' fields (`xFields`). Column
+    * names are checked against the doc schema at plan time. */
+  private def programDocInputs(attrFields: Seq[String], strAttrFields: Seq[String],
+      xFields: Seq[String]): Seq[Column] = {
+    import org.apache.spark.sql.types._
+    val docSchema = docs.schema
+    def known(f: String): DataType = docSchema.find(_.name == f).map(_.dataType)
+      .getOrElse(throw new IllegalArgumentException(
+        s"query filter references unknown doc column '$f'"))
+    def numAttrExpr(f: String): Column = known(f) match {
+      case _: NumericType => col(f).cast("double")
+      case BooleanType =>
+        when(col(f).isNull, lit(null).cast("double"))
+          .when(col(f), lit(1.0)).otherwise(lit(0.0))
+      case DateType => unix_date(col(f)).cast("double")
+      case TimestampType => unix_micros(col(f)).cast("double")
+      case other => throw new IllegalArgumentException(
+        s"query comparison filters need an orderable column; '$f' is $other")
+    }
+    def strAttrExpr(f: String): Column = { known(f); col(f).cast("string") }
+    def nameMap(names: Seq[String], value: String => Column, vType: String): Column =
+      if (names.isEmpty)
+        map_from_arrays(array().cast("array<string>"), array().cast(s"array<$vType>"))
+      else call_function("name_map", stringsLit(names) +: names.map(value): _*)
+    Seq(nameMap(attrFields, numAttrExpr, "double"),
+      nameMap(strAttrFields, strAttrExpr, "string"),
+      nameMap(xFields, tokensCol, "array<string>"),
+      nameMap(xFields, f => lit(fieldStats(f).avgDl), "double"))
   }
 
   // ------------------------------------------------------------------
@@ -554,21 +462,15 @@ final class SearchIndex private (
   // ------------------------------------------------------------------
 
   /** Distributed top-k search: result stays a DataFrame (reference
-    * `search`, SearchableRDD.scala:153-156). Plan is scan → codegen'd
-    * predicate+score → TakeOrderedAndProject (per-partition heap +
-    * driver merge — the built-in replacement for the reference's
-    * treeAggregate 2-pointer merge, PartitionsIndexLuceneRDD.scala:
-    * 100-109). Ties break on ascending key for determinism. */
+    * `search`, SearchableRDD.scala:153-156). Plan is scan → the
+    * shared serialized-program scorer ([[compile]]) → match filter →
+    * TakeOrderedAndProject (per-partition heap + driver merge — the
+    * built-in replacement for the reference's treeAggregate 2-pointer
+    * merge, PartitionsIndexLuceneRDD.scala:100-109). Ties break on
+    * ascending key for determinism. */
   def search(q: SearchQuery, k: Int): DataFrame =
-    if (spec.storePositions) {
-      val (pred, score) = compile(q)
-      docs
-        .withColumn("score", score)
-        .where(pred)
-        .drop(internalCols(spec): _*)
-        .orderBy(col("score").desc, key.asc)
-        .limit(k)
-    } else postingsSearch(q, k)
+    if (spec.storePositions) topK(matching(scoreStruct(q)), k)
+    else postingsSearch(q, k)
 
   /** Scan-free search for a no-positions index: the flat term part of
     * the query probes the postings (tf survives without positions),
@@ -596,15 +498,10 @@ final class SearchIndex private (
       case other => (Some(other), Nil, 0.0)
     }
     val (textQ, filters, base) = split(q)
-    val filterPred = filters.map(f => compileWith(f, Map.empty)._1)
-      .foldLeft(lit(true))(_ && _)
     textQ match {
-      case None =>
-        // filter/AllDocs-only query: constant score identical to the
-        // scan path's, no postings needed
-        docs.withColumn("score", lit(base)).where(filterPred)
-          .drop(internalCols(spec): _*)
-          .orderBy(col("score").desc, key.asc).limit(k)
+      // filter/AllDocs-only query: the program scores it without
+      // token arrays, no postings needed
+      case None => topK(matching(scoreStruct(q)), k)
       case Some(tq) =>
         val (field, terms, minMatch) = tq match {
           case MatchTerm(f, t) => (f, Seq(t), 0)
@@ -619,12 +516,9 @@ final class SearchIndex private (
         val q0 = Seq((0L, field, terms, minMatch)).toDF("qid", "field", "terms", "min_match")
         val scored = batchSearchPerDoc(q0)
           .select(col("key").as("__hit_key"), (col("score") + lit(base)).as("score"))
-        docs.join(scored, key === col("__hit_key"))
-          .where(filterPred)
-          .drop("__hit_key")
-          .drop(internalCols(spec): _*)
-          .orderBy(col("score").desc, key.asc)
-          .limit(k)
+        val hits = docs.join(scored, key === col("__hit_key")).drop("__hit_key")
+        topK(filters.reduceOption[SearchQuery](And)
+          .fold(hits)(f => hits.where(scoreStruct(f).getField("ok"))), k)
     }
   }
 
@@ -655,44 +549,38 @@ final class SearchIndex private (
     * Lucene `IndexSearcher.explain` surface (the debugging staple of
     * every relevance-tuning loop): one row per (hit, matched term)
     * with the term's tf, df, idf and its score CONTRIBUTION, which
-    * sum exactly to the hit's total (same per-term columns the scan
-    * path compiles, just not collapsed). Plan: the scan-path top-k
-    * first (k rows), contributions exploded in-row AFTER the limit —
-    * the explode multiplies k rows by |terms|, never the corpus.
-    * Output: (key, score, term, tf, df, idf, contribution), matched
-    * terms only. */
+    * sum exactly to the hit's total. Hits and totals come from the
+    * any-term program, each contribution from that term's own
+    * single-term program — the scan-path scorer both times. Plan: the
+    * top-k first (k rows), contributions exploded in-row AFTER the
+    * limit — the explode multiplies k rows by |terms|, never the
+    * corpus. Output: (key, score, term, tf, df, idf, contribution),
+    * matched terms only. */
   def explainTerms(field: String, terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "explainTerms needs at least one term")
     require(spec.textFields.contains(field), s"$field is not an indexed text field")
-    val idf = idfFor(terms.map(t => (field, t)).toSet)
-    val dfMap = {
-      val n = fieldStats(field).numDocs
-      // invert idf = ln(1+(n-df+.5)/(df+.5)) back to df exactly via
-      // the stats table (second bounded read, same action class)
-      stats.where(col("field") === field && col("term").isin(terms: _*))
-        .select(col("term"), col("df")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // ONE stats action serves the df column and every program's IDFs
+    val dfs = dfFor(terms.map(field -> _).toSet)
+    def df(t: String): Long = dfs.getOrElse((field, t), 0L)
+    val idf = terms.map(t => (field, t) -> idfOf(field, df(t))).toMap
+    def scorer(q: SearchQuery): Column = {
+      val p = serialize(q)
+      scanScorer(p, doublesOf(p, idf))
     }
     val parts = terms.map { t =>
-      // compileWith against the already-fetched idf map: ONE stats
-      // action for the whole term set, not one per term
-      val (pred, contrib) = compileWith(MatchTerm(field, t), idf)
+      val r = scorer(MatchTerm(field, t))
       struct(lit(t).as("term"),
-        tfCol(field, t).cast("long").as("tf"),
-        lit(dfMap.getOrElse(t, 0L)).as("df"),
-        lit(idf.getOrElse((field, t), 0.0)).as("idf"),
-        when(pred, contrib).otherwise(lit(0.0)).as("contribution"),
-        pred.as("matched"))
+        coalesce(call_function("array_count_eq", tokensCol(field), lit(t)), lit(0))
+          .cast("long").as("tf"),
+        lit(df(t)).as("df"),
+        lit(idf((field, t))).as("idf"),
+        r.getField("score").as("contribution"),
+        r.getField("ok").as("matched"))
     }
-    val score = parts.map(p => p.getField("contribution")).reduce(_ + _)
-    val anyMatch = parts.map(p => p.getField("matched")).reduce(_ || _)
-    docs
-      .withColumn("__parts", array(parts: _*))
-      .withColumn("score", score)
-      .where(anyMatch)
+    matching(scorer(MatchAnyTerms(field, terms)))
       .orderBy(col("score").desc, key.asc)
       .limit(k)
-      .select(key.as("key"), col("score"), explode(col("__parts")).as("p"))
+      .select(key.as("key"), col("score"), explode(array(parts: _*)).as("p"))
       .where(col("p.matched"))
       .select(col("key"), col("score"), col("p.term").as("term"),
         col("p.tf").as("tf"), col("p.df").as("df"), col("p.idf").as("idf"),
@@ -746,11 +634,12 @@ final class SearchIndex private (
       val idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
       // field-order accumulation of weighted, length-normalized tf
       val tfAcc = fields.map { case (f, w, b) =>
-        // null dl (absent field value) -> 0, like tfCol's coalesce
+        // null tokens / dl (absent field value) count 0
         val bNorm = lit(1.0 - b) +
           lit(b) * coalesce(dlCol(f).cast("double"), lit(0.0)) /
             lit(fieldStats(f).avgDl)
-        lit(w) * tfCol(f, t).cast("double") / bNorm
+        val tf = coalesce(call_function("array_count_eq", tokensCol(f), lit(t)), lit(0))
+        lit(w) * tf.cast("double") / bNorm
       }.reduce(_ + _)
       (lit(idf) * tfAcc / (lit(k1) + tfAcc), tfAcc > lit(0.0))
     }
@@ -777,10 +666,7 @@ final class SearchIndex private (
   def collapseSearch(q: SearchQuery, collapseField: String, k: Int): DataFrame = {
     require(spec.storePositions,
       "collapseSearch requires storePositions=true (scan-path scoring)")
-    val (pred, score) = compile(q)
-    docs
-      .withColumn("score", score)
-      .where(pred)
+    matching(scoreStruct(q))
       .groupBy(col(collapseField))
       // max(struct) picks highest score; -key makes ties prefer the
       // SMALLEST key, matching orderBy(score desc, key asc)
@@ -798,19 +684,18 @@ final class SearchIndex private (
     * no page ever sorts more than its own top-k: OFFSET-style paging
     * re-sorts (and at the reference's driver, re-collects) the whole
     * prefix; this stays one codegen'd filter + bounded top-k per
-    * page at any depth. */
+    * page at any depth. The cursor values sit in one-field struct
+    * literals, which codegen references instead of inlining, so every
+    * page reuses the same generated class. */
   def searchAfter(q: SearchQuery, k: Int,
       afterScore: Double, afterKey: Any): DataFrame = {
     require(spec.storePositions,
       "searchAfter requires storePositions=true (scan-path scoring)")
-    val (pred, score) = compile(q)
-    docs
-      .withColumn("score", score)
-      .where(pred && (col("score") < lit(afterScore) ||
-        (col("score") === lit(afterScore) && key > lit(afterKey))))
-      .drop(internalCols(spec): _*)
-      .orderBy(col("score").desc, key.asc)
-      .limit(k)
+    def boxed(c: Column): Column = struct(c.as("v"))
+    val score = boxed(col("score"))
+    val cursorScore = boxed(lit(afterScore))
+    topK(matching(scoreStruct(q)).where(score < cursorScore ||
+      (score === cursorScore && boxed(key) > boxed(lit(afterKey)))), k)
   }
 
   /** Hit highlighting (Lucene Highlighter, public API surface): for
@@ -825,18 +710,15 @@ final class SearchIndex private (
     require(spec.textFields.contains(field), s"$field is not an indexed text field")
     require(spec.storePositions, "highlight requires stored token arrays")
     val toks = tokensCol(field)
-    // array_position returns 0 for absent terms — lift to null so
-    // `least` skips them (it ignores nulls), then the earliest match
-    val positions = terms.map(t =>
-      when(array_position(toks, t) > 0, array_position(toks, t)))
-    val firstPos = least(positions: _*)
-    val (pred, score) = compile(q)
+    // array_position returns 0 for absent terms — drop those, then
+    // the earliest match (null when none). The terms travel as one
+    // array literal, so the projection is the same for any term list.
+    val firstPos = array_min(filter(
+      transform(stringsLit(terms), t => array_position(toks, t)), p => p > 0))
     // top-k FIRST (bounded TakeOrderedAndProject), snippets computed
     // on the k survivors only — the token columns are still in scope
     // because the internal-column drop happens after
-    docs
-      .withColumn("score", score)
-      .where(pred)
+    matching(scoreStruct(q))
       .orderBy(col("score").desc, key.asc)
       .limit(k)
       .withColumn("hit_pos", firstPos)
@@ -1178,9 +1060,8 @@ final class SearchIndex private (
     * scala:273). CORPUS-SCALE lefts belong on [[queryJoinAst]],
     * which distributes the same arbitrary-generator contract with a
     * constant-size plan (or on the [[queryJoin]]/[[queryJoinPhrase]]/
-    * [[queryJoinBool]] specializations); keep this driver-batch path
-    * only for filter values outside the serialized form's encodable
-    * set (numerics, strings, booleans, dates, timestamps).
+    * [[queryJoinBool]] specializations). Both paths score through
+    * the same serialized program, so they accept the same queries.
     *
     * @param queryGen driver-side function from a left Row to the
     *   query AST; reads whatever columns the caller selected into
@@ -1195,10 +1076,7 @@ final class SearchIndex private (
     // impact-ordered EXACT pruning: the generator contract is
     // identical to queryJoinAst's, so pruning routes there (fully
     // distributed, nothing collected, MaxScore candidate pruning) and
-    // also lifts this path's driver-small left cap. Generators whose
-    // filter values fall outside the serialized program's encodable
-    // set (numerics, strings, booleans, dates, timestamps) fail at
-    // plan time there — keep those on the unpruned driver-batch path.
+    // also lifts this path's driver-small left cap.
     //
     // PROBE FIELD (ADVICE r15): the pruned rewrite compiles against
     // ONE probe field. The default is the first indexed text field;
@@ -1214,18 +1092,18 @@ final class SearchIndex private (
         excludeSelf, impactPruning = true)
       return left.join(hits0, left(qidCol) === hits0("qid")).drop(hits0("qid"))
     }
-    // hard left-size guard: this path COLLECTS the left to the driver
-    // (the documented bounded-left fallback for generators outside
-    // [[queryJoinAst]]'s serializable value set). Fail fast with a
-    // pointer at the corpus-scale path instead of OOMing the driver;
-    // the probe is a LIMIT-bounded count, never a full scan of a
-    // large left.
+    // hard left-size guard: this is the driver-batch path — it
+    // COLLECTS the left and plans one scan per query, while
+    // [[queryJoinAst]] runs the same queries fully distributed. Fail
+    // fast with a pointer at the corpus-scale path instead of OOMing
+    // the driver; the probe is a LIMIT-bounded count, never a full
+    // scan of a large left.
     val cap = SearchIndex.queryJoinDslMaxLeft
     val probed = left.limit(cap + 1).count()
     require(probed <= cap,
-      s"queryJoinDsl collects the left side to the driver, and this left exceeds " +
-        s"$cap rows — use queryJoinAst (fully distributed for arbitrary generator " +
-        "ASTs) or, if the collect is intended, raise SearchIndex.queryJoinDslMaxLeft")
+      s"queryJoinDsl is the driver-batch path: it collects the left side, and this " +
+        s"left exceeds $cap rows — use queryJoinAst (the same queries, fully " +
+        "distributed) or, if the collect is intended, raise SearchIndex.queryJoinDslMaxLeft")
     val queries = left.collect().toSeq.map(r => r.getAs[Number](qidCol).longValue() ->
       queryGen(r))
     val raw = batchSearchDsl(queries, if (excludeSelf) k + 1 else k)
@@ -1865,16 +1743,16 @@ final class SearchIndex private (
     * candidate sets, generalizing Lucene's lead-with-the-rarest-MUST
     * discipline to nested ASTs — probes the postings with it, and
     * verifies+scores each (shape, candidate) pair with one codegen'd
-    * [[graft.functions.DslQueryScore]] pass whose semantics are
-    * node-for-node the scan path's (`compileWith`). TOTAL shapes
+    * [[graft.functions.DslQueryScore]] pass — the same scorer the
+    * scan path ([[compile]]) evaluates per document. TOTAL shapes
     * (top-level Not/AllDocs/Should/pure filter — queries that can
     * match a doc containing none of their terms) take a full corpus
     * pass, the honest cost of a match-all query.
     *
     * KEYWORD-field leaves (MatchTerm & friends on an un-analyzed
     * field) and string-valued Eq/InSet filters distribute too: they
-    * verify against a doc-side string-attribute map with the scan
-    * compiler's keyword scoring (tf 1, dl 1, avgdl 1) and never
+    * verify against a doc-side string-attribute map with keyword
+    * scoring (tf 1, dl 1, avgdl 1) and never
     * probe — under `And` they ride their text sibling's probe; a
     * pure keyword query is an honest corpus pass.
     *
@@ -1882,21 +1760,20 @@ final class SearchIndex private (
     * too: each distinct (kind, field, pattern, maxEdits) joins once
     * against the term dictionary ([[expandShapes]] — the Lucene
     * multi-term rewrite with its constant-score semantics and
-    * dictionary-order maxClauseCount cap, same as the scan path's
-    * expandDict) and the serialized programs are rewritten in-plan;
+    * dictionary-order maxClauseCount cap, same as [[expandDict]])
+    * and the serialized programs are rewritten in-plan;
     * a text-field expansion's probe set is its expanded terms.
     *
     * CROSS-FIELD text leaves (scored leaves on an indexed text field
     * other than `field`, including phrase/near/expansion there)
     * verify against a doc-side per-field tokens map with that
-    * field's dl and avgdl — the scan compiler's secondary-field
-    * scoring node-for-node; like keyword leaves they never probe.
+    * field's dl and avgdl; like keyword leaves they never probe.
     *
     * Filter values may be numerics, strings, booleans, dates or
     * timestamps (encoded order-preserving into the consts table —
     * epoch days / epoch micros — with the matching doc-side
-    * `unix_date`/`unix_micros` columns). Anything else routes to
-    * [[queryJoinDsl]] by a plan-time error.
+    * `unix_date`/`unix_micros` columns). Anything else fails at
+    * plan time, as it does on the scan path.
     *
     * Driver-side cost: one bounded action collecting the DISTINCT
     * filter attribute column names (bounded by the doc schema width,
@@ -2190,30 +2067,8 @@ final class SearchIndex private (
     val xFields = fieldSeq(2)
     val nShapes = meta0.getLong(4)
     val shapes = expandShapes(shapes0, field, meta0.getInt(3) > 0, keepFrame)
-    val docSchema = docs.schema
-    // doc-side encoding matching QueryProgram.numVal: numerics cast,
-    // booleans 0/1 (null-preserving), dates epoch days, timestamps
-    // epoch micros — ordering/equality agree with the native column
-    // comparisons the scan path compiles
-    import org.apache.spark.sql.types._
-    def numAttrExpr(f: String): Column = docSchema.find(_.name == f).map(_.dataType) match {
-      case Some(_: NumericType) => col(f).cast("double")
-      case Some(BooleanType) =>
-        when(col(f).isNull, lit(null).cast("double"))
-          .when(col(f), lit(1.0)).otherwise(lit(0.0))
-      case Some(DateType) => unix_date(col(f)).cast("double")
-      case Some(TimestampType) => unix_micros(col(f)).cast("double")
-      case Some(other) => throw new IllegalArgumentException(
-        s"queryJoinAst comparison filters need an orderable column; '$f' is $other — " +
-          "route this query through queryJoinDsl")
-      case None => throw new IllegalArgumentException(
-        s"queryJoinAst: filter references unknown doc column '$f'")
-    }
-    attrFields.foreach(numAttrExpr) // validate eagerly, plan-time
-    strAttrFields.foreach { f =>
-      require(docSchema.exists(_.name == f),
-        s"queryJoinAst: keyword/string filter references unknown doc column '$f'")
-    }
+    // validates the attr columns eagerly, plan-time
+    val docInputs = programDocInputs(attrFields, strAttrFields, xFields)
     val st = stats.select(col("field"), col("term"), col("df"))
     // per-slot IDF vector aligned with the program's term table,
     // resolved against each slot's OWN field (text slots against the
@@ -2342,10 +2197,6 @@ final class SearchIndex private (
       .withColumn("probe", element_at(col("alts"), col("ai") + 1))
       .select(col("sid"), col("probe"))
     val exactCap = maxCandidatesPerShape == Int.MaxValue
-    val (kind, k1v, bv) = spec.similarity match {
-      case BM25(a, c) => (0, a, c)
-      case TFIDF() => (1, 0.0, 0.0)
-    }
     val progs = withDoubles.select(col("sid"), col("ops"), col("terms"),
       col("doubles"))
     // Program attach ORDER is a measured decision (16x receipts in
@@ -2362,36 +2213,13 @@ final class SearchIndex private (
     // shuffle-hash attach before the key exchange, which is
     // wide-but-linear and never sorts.
     val attachLate = nShapes <= SearchIndex.astBroadcastShapesMax
-    // doc side: token array + the numeric and string attr maps
-    // (filter columns resp. keyword-field values), one corpus join
-    def nameMap(fields: Seq[String], value: String => Column, vType: String) =
-      if (fields.isEmpty)
-        map_from_arrays(array().cast("array<string>"),
-          array().cast(s"array<$vType>"))
-      else map_from_arrays(
-        array(fields.map(lit): _*), array(fields.map(value): _*))
-    val xTokensMap =
-      if (xFields.isEmpty)
-        map_from_arrays(array().cast("array<string>"),
-          array().cast("array<array<string>>"))
-      else map_from_arrays(
-        array(xFields.map(lit): _*), array(xFields.map(f => tokensCol(f)): _*))
-    val xAvgdlMap =
-      if (xFields.isEmpty)
-        map_from_arrays(array().cast("array<string>"),
-          array().cast("array<double>"))
-      else map_from_arrays(
-        array(xFields.map(lit): _*),
-        array(xFields.map(f => lit(fieldStats(f).avgDl)): _*))
-    val docSide = docs.select(key.as("__doc_key"),
-      tokensCol(field).as("__tokens"),
-      nameMap(attrFields, numAttrExpr, "double").as("__attrs"),
-      nameMap(strAttrFields, f => col(f).cast("string"), "string").as("__attrs_str"),
-      xTokensMap.as("__xtokens"), xAvgdlMap.as("__xavgdl"))
-    def scoreExpr: Column = call_function("dsl_query_score", col("__tokens"),
-      col("ops"), col("terms"), col("doubles"), col("__attrs"), col("__attrs_str"),
-      col("__xtokens"), col("__xavgdl"),
-      lit(kind), lit(k1v), lit(bv), lit(fs.avgDl))
+    // doc side: token array + the attr / cross-field maps, one
+    // corpus join
+    val docInputNames = Seq("__attrs", "__attrs_str", "__xtokens", "__xavgdl")
+    val docSide = docs.select(key.as("__doc_key") +: tokensCol(field).as("__tokens") +:
+      docInputs.zip(docInputNames).map { case (c, n) => c.as(n) }: _*)
+    def scoreExpr: Column = programScore(col("__tokens"), col("ops"), col("terms"),
+      col("doubles"), docInputNames.map(col), field)
     // attach + verify for a bare (sid, key) candidate frame, keeping
     // the unsorted slim-candidate discipline (shuffle-hash corpus
     // attach, broadcast-or-shuffle-hash program attach)
@@ -2534,6 +2362,10 @@ final class SearchIndex private (
             transform(col("__alts"), x => x.getField("ts")).as("__alt_terms"),
             transform(col("__alts"), x => x.getField("dfs")).as("__alt_dfs"))
         val probeF = field
+        val (kind, k1v) = spec.similarity match {
+          case BM25(a, _) => (0, a)
+          case TFIDF() => (1, 0.0)
+        }
         val essUdf = udf((ops: Seq[Int], terms: Seq[String], tfs: Seq[String],
             dbl: Seq[Double], mis: Seq[Double], altT: Seq[Seq[String]],
             altD: Seq[Seq[Long]], th: java.lang.Double) => {

@@ -82,6 +82,15 @@ class UrlsSpec extends AnyFunSuite {
     assert(math.abs(sums.head - rows.map(_._2).sum) < 1e-9)
   }
 
+  test("orderedGlobalSum folds a null-dom bucket first instead of failing") {
+    val dv = Seq[(String, Double)](("a.com", 0.25), (null, 0.5), ("b.org", 0.125)).toDF("dom", "v")
+    // the null bucket's sum leads the fold: 0.5 + then the md5-ordered rest
+    val buckets = Seq(("a.com", 0.25), ("b.org", 0.125))
+      .sortBy { case (d, _) => java.security.MessageDigest.getInstance("MD5")
+        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(2) }
+    assert(Urls.orderedGlobalSum(dv) == buckets.foldLeft(0.5)(_ + _._2))
+  }
+
   test("orderedKeyedSum: hub-target fold is partitioning-invariant") {
     // web-scale shape: ONE hub target receives ~half of all edges
     // (every crawled page linking a homepage). The two-level fold

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.TestSpark
+import graft.{ReadsSharedGates, TestSpark}
 import graft.dsl.builders._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Degenerate inputs a production index must survive: empty corpora,
   * empty documents, absent terms, k larger than the corpus, null
   * keyword fields. */
-class EdgeCasesSpec extends AnyFunSuite {
+class EdgeCasesSpec extends AnyFunSuite with ReadsSharedGates {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -57,6 +57,23 @@ class EdgeCasesSpec extends AnyFunSuite {
     idx.unpersist()
   }
 
+  test("long filter values a double cannot compare exactly are rejected, the rest compare exactly") {
+    val big = (1L << 53) + 1
+    val docs = Seq((1L, "alpha", big), (2L, "alpha", big - 2), (3L, "alpha", 7L))
+      .toDF("doc_id", "text", "n")
+    val idx = SearchIndex.build(docs, IndexSpec("doc_id", Seq("text")))
+    try {
+      val e = intercept[IllegalArgumentException] {
+        idx.search(graft.dsl.And("text" matchTerm "alpha", graft.dsl.GtFilter("n", big - 1)), 5)
+      }
+      assert(e.getMessage.contains("cannot be compared exactly"), e.getMessage)
+      // the largest accepted magnitude still orders every long exactly
+      val hits = idx.search(graft.dsl.And("text" matchTerm "alpha",
+        graft.dsl.GtFilter("n", (1L << 53) - 1)), 5).select("doc_id").as[Long].collect().toSet
+      assert(hits == Set(1L))
+    } finally idx.unpersist()
+  }
+
   test("getElements with no matching keys is empty, not an error") {
     val docs = Seq((1L, "x")).toDF("doc_id", "text")
     val idx = SearchIndex.build(docs, IndexSpec("doc_id", Seq("text")))
@@ -90,7 +107,7 @@ class EdgeCasesSpec extends AnyFunSuite {
 
   test("queryJoinDsl fails fast on a left larger than the collect cap") {
     // queryJoinDsl is the one API that collects its left to the
-    // driver (the bounded-left fallback); above the cap it must
+    // driver (the driver-batch path); above the cap it must
     // refuse with a pointer at the distributed path instead of
     // attempting a corpus-sized collect
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.TestSpark
+import graft.{ReadsSharedGates, TestSpark}
 import graft.dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
@@ -18,7 +18,7 @@ import scala.util.Random
   * regime where exact top-k is Theta(corpus) per shape, SCALE.md)
   * plus one rare high-impact term that lets the threshold rise above
   * the dense terms' combined score mass. */
-class ImpactPruningSpec extends AnyFunSuite {
+class ImpactPruningSpec extends AnyFunSuite with ReadsSharedGates {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.TestSpark
+import graft.{SharedGates, TestSpark}
 import graft.dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
@@ -84,15 +84,19 @@ class MemoLifecycleSpec extends AnyFunSuite {
         (ast, bool)
       } finally idx.unpersist()
     }
-    try {
-      SearchIndex.astBroadcastShapesMax = 65536L
-      val (bcAst, bcBool) = runBoth()
-      SearchIndex.astBroadcastShapesMax = 0L // every batch is "over the gate"
-      val (shAst, shBool) = runBoth()
-      assert(shAst == bcAst)
-      assert(shBool == bcBool)
-      assert(bcAst.nonEmpty && bcBool.nonEmpty)
-    } finally SearchIndex.astBroadcastShapesMax = saved
+    // the gate is process-wide: hold the shared-gates write lock so no
+    // suite reading it runs while it is moved
+    SharedGates.changing {
+      try {
+        SearchIndex.astBroadcastShapesMax = 65536L
+        val (bcAst, bcBool) = runBoth()
+        SearchIndex.astBroadcastShapesMax = 0L // every batch is "over the gate"
+        val (shAst, shBool) = runBoth()
+        assert(shAst == bcAst)
+        assert(shBool == bcBool)
+        assert(bcAst.nonEmpty && bcBool.nonEmpty)
+      } finally SearchIndex.astBroadcastShapesMax = saved
+    }
   }
 
   test("null qids on the pruned flat queryJoin are filtered, not NPE'd; flag stays result-invisible") {

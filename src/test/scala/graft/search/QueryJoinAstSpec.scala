@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.TestSpark
+import graft.{ReadsSharedGates, TestSpark}
 import graft.dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
@@ -11,10 +11,12 @@ import scala.util.Random
 /** The distributed nested-AST query join must agree with the
   * driver-batch path ([[SearchIndex.queryJoinDsl]], which compiles
   * each query through the scan path) on every query shape — fixed
-  * nested cases plus a seeded fuzz over random ASTs. That makes
-  * `queryJoinAst`'s serialized interpreter provably consistent with
-  * `compileWith` wherever both run. */
-class QueryJoinAstSpec extends AnyFunSuite {
+  * nested cases plus a seeded fuzz over random ASTs. Both paths score
+  * through the same serialized-program interpreter, so this pins the
+  * distributed plumbing (probe choice, candidate generation, doc-side
+  * maps, per-query top-k) against the per-document scan; the scan
+  * path itself is pinned against golden results by `ScanParitySpec`. */
+class QueryJoinAstSpec extends AnyFunSuite with ReadsSharedGates {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._
