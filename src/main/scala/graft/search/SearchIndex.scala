@@ -3,6 +3,7 @@ package graft.search
 import graft.analysis.{Analyzer, Analyzers}
 import graft.dsl._
 import graft.functions.{SearchExpressions, TopKAgg}
+import graft.sources.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -1282,8 +1283,8 @@ final class SearchIndex private (
     // expressions — resolution strips the per-construction Origin
     // identity raw Columns carry, which would otherwise never hash
     // equal) and every plan-shaping parameter; re-issuing the same
-    // join reuses the persisted canon/qinfo/threshold frames and
-    // only the probe+verify re-runs.
+    // join reuses the canon checkpoint and the shape and threshold
+    // tables, and only the probe+verify re-runs.
     val empty = array().cast("array<string>")
     val (loSel, hiSel) = attrFilter match {
       case Some((_, lo, hi)) => (lo.cast("double").as("__lo"), hi.cast("double").as("__hi"))
@@ -1298,8 +1299,7 @@ final class SearchIndex private (
     val canonPlan = canonRaw.queryExecution.analyzed
     val memoKey = (canonPlan.semanticHash(),
       s"bool#af=${attrFilter.map(_._1).getOrElse("-")}#k=$k#mom=$minOptMatch" +
-        s"#mh=$maxHitsPerIndex#es=$excludeSelf#ip=$impactPruning" +
-        s"#auto=$autoImpactPruning",
+        s"#mh=$maxHitsPerIndex#es=$excludeSelf#ip=$impactPruning",
       qidCol, field)
     val scored =
       if (!memoEnabled) {
@@ -1341,8 +1341,17 @@ final class SearchIndex private (
 
   /** The setup + probe + verify pipeline behind [[queryJoinBool]],
     * producing the un-capped scored (qid, key, score) frame plus the
-    * persisted setup frames scoped to the memo entry (released on
-    * eviction or index [[unpersist]]). */
+    * setup frames scoped to the memo entry (released on eviction or
+    * index [[unpersist]]).
+    *
+    * Setup cost: one checkpoint of the |left|-row `canon` frame and
+    * one collect of the shape table `qinfo` (one row per distinct
+    * shape), plus one collect of the threshold table when pruning.
+    * The tables are re-planned as local relations when the
+    * batch has at most [[SearchIndex.astBroadcastShapesMax]] rows
+    * (so at most that many shapes, the gate that broadcasts them);
+    * above it they are lineage-cut and stay distributed, and `qinfo`
+    * is counted for the broadcast decision. */
   private def buildBoolScored(canonRaw: DataFrame,
       field: String, k: Int, minOptMatch: Int, attrField: Option[String],
       excludeSelf: Boolean, maxHitsPerIndex: Int,
@@ -1359,13 +1368,12 @@ final class SearchIndex private (
     // bounds instead (min over the shape's qids of each qid's
     // (k+1)-th best FILTERED seed score).
     // canonical query rows: role arrays sorted+deduped so textually
-    // different but equal queries share a shape. Materialized behind
-    // a lineage barrier ([[SearchIndex.cutLineage]]): two plan
-    // branches read it (shape dedup + fan-out join), and every
+    // different but equal queries share a shape. Checkpointed: two
+    // plan branches read it (shape dedup + fan-out join), and every
     // downstream stage would otherwise re-embed the left derivation
     // in its plan and task closures.
-    val canon = keep(SearchIndex.cutLineage(canonRaw,
-      StorageLevel.MEMORY_AND_DISK))
+    val (canon0, collect) = SearchIndex.checkpointCanon(canonRaw)
+    val canon = keep(canon0)
     // QUERY DEDUPLICATION: generated queries repeat (many left rows
     // produce the same clause sets — the data-driven analog of a
     // query cache), so the postings probe, scoring and verification
@@ -1374,49 +1382,58 @@ final class SearchIndex private (
     // |distinct shapes| x df, not |left| x df — on a left whose
     // generator has bounded range this is the difference between a
     // linear and a quadratic join.
-    val shapes = canon.groupBy("__req", "__opt", "__exc").agg(min(col("qid")).as("sid"))
+    val shapes = canon.groupBy("__req", "__opt", "__exc")
+      .agg(min(col("qid")).as("sid"), count(lit(1)).as("__nq"))
     val qterms = shapes
-      .select(col("sid"), size(col("__req")).as("n_req"),
+      .select(col("sid"), col("__req"), col("__opt"), col("__exc"), col("__nq"),
+        size(col("__req")).as("n_req"),
         explode(concat(
           transform(col("__req"), t => struct(t.as("term"), lit(1).as("role"))),
           transform(col("__opt"), t => struct(t.as("term"), lit(0).as("role"))),
           transform(col("__exc"), t => struct(t.as("term"), lit(-1).as("role"))))).as("qt"))
-      .select(col("sid"), col("n_req"),
-        col("qt.term").as("term"), col("qt.role").as("role"))
+      .select(col("sid"), col("__req"), col("__opt"), col("__exc"), col("__nq"),
+        col("n_req"), col("qt.term").as("term"), col("qt.role").as("role"))
     // absent terms keep df=0 so required-term queries with an unknown
     // term simply match nothing (req < n_req — the probe term's empty
     // postings yield no candidates, and the in-row verify would
     // reject any candidate anyway), like idfFor
-    val withIdf = qterms
+    val withIdf0 = qterms
       .join(stats.where(col("field") === lit(field)).select(col("term"), col("df")),
         Seq("term"), "left")
       .na.fill(0L, Seq("df"))
       .withColumn("idf", log(lit(1.0) +
         (lit(fs.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5)))
-      // full per-term max impact (idf^p x the measured idf-free max
-      // over the term's postings) — the pruning bound's raw material;
-      // joined here so the aligned arrays below carry it per shape
-      .join(maxImpactStats.where(col("field") === lit(field))
-        .select(col("term"), col("mi_raw")), Seq("term"), "left")
-      .na.fill(0.0, Seq("mi_raw"))
-      .withColumn("mi", pow(col("idf"),
-        lit(if (spec.similarity == TFIDF()) 2.0 else 1.0)) * col("mi_raw"))
-    // per-shape clause info: ALIGNED term/role/idf arrays (sorted —
-    // deterministic score summation order) + the probe term set:
-    // the minimum-df required term (Lucene: lead with the rarest
-    // MUST clause), or every optional term when no clause is
-    // required. Lineage-cut like canon: |shapes| rows, read by both
-    // probe branches — without it each branch re-runs the
-    // collect_list aggregate and its upstream stats join.
-    val qinfo = keep(SearchIndex.cutLineage(withIdf
+    // pruning only: the full per-term max impact (idf^p x the
+    // measured idf-free max over the term's postings) — the pruning
+    // bound's raw material, joined here so the aligned arrays below
+    // carry it per shape. The exact join never reads it, so it never
+    // pays the index-wide max-impact aggregate.
+    val withIdf =
+      if (!impactPruning) withIdf0.withColumn("mi", lit(0.0))
+      else withIdf0
+        .join(maxImpactStats.where(col("field") === lit(field))
+          .select(col("term"), col("mi_raw")), Seq("term"), "left")
+        .na.fill(0.0, Seq("mi_raw"))
+        .withColumn("mi", pow(col("idf"),
+          lit(if (spec.similarity == TFIDF()) 2.0 else 1.0)) * col("mi_raw"))
+    // the SHAPE TABLE, one row per shape: the shape's clause arrays
+    // (the fan-out join key), its qid count, ALIGNED term/role/idf
+    // arrays (sorted — deterministic score summation order) and the
+    // probe term set: the minimum-df required term (Lucene: lead with
+    // the rarest MUST clause), or every optional term when no clause
+    // is required. Everything downstream reads this one table.
+    val (qinfo, qrows) = shapeTable(withIdf
       .groupBy(col("sid"))
       .agg(
         sort_array(collect_list(struct(col("term"), col("role"), col("idf"),
           col("mi"), col("df")))).as("__q"),
+        first(col("__req")).as("__req"), first(col("__opt")).as("__opt"),
+        first(col("__exc")).as("__exc"), first(col("__nq")).as("__nq"),
         first(col("n_req")).as("n_req"),
         min(when(col("role") === 1, struct(col("df"), col("term")))).as("__rarest"),
         collect_list(when(col("role") === 0, col("term"))).as("__optTerms"))
-      .select(col("sid"), col("n_req"),
+      .select(col("sid"), col("__req"), col("__opt"), col("__exc"), col("__nq"),
+        col("n_req"),
         transform(col("__q"), x => x.getField("term")).as("__terms"),
         transform(col("__q"), x => x.getField("role")).as("__roles"),
         transform(col("__q"), x => x.getField("idf")).as("__idfs"),
@@ -1424,7 +1441,12 @@ final class SearchIndex private (
         transform(col("__q"), x => x.getField("df")).as("__dfs"),
         when(col("n_req") > 0, array(col("__rarest.term")))
           .otherwise(col("__optTerms")).as("__probes")),
-      StorageLevel.MEMORY_AND_DISK))
+      keep, collect)
+    // the broadcast gate: a collected table is under it by
+    // construction; above the collect gate the lineage-cut table is
+    // counted
+    val bcProbes = collect || qinfo.count() <= SearchIndex.astBroadcastShapesMax
+    def small(df: DataFrame): DataFrame = if (bcProbes) broadcast(df) else df
     val posts = postings.where(col("field") === lit(field))
       .select(col("term"), col("key"))
     // candidate generation: one postings probe per shape on the
@@ -1473,7 +1495,6 @@ final class SearchIndex private (
     // AQE-coalesced partition (measured: a 2.5s single-task stage
     // doing the entire probe+verify). Corpus-scale query batches
     // (beyond astBroadcastShapesMax) keep the planner's choice.
-    val bcProbes = qinfo.count() <= SearchIndex.astBroadcastShapesMax
     val qSlim = qinfo.select(col("sid"), col("n_req"), col("__terms"),
       col("__roles"), col("__idfs"))
     def verify(cands: DataFrame): DataFrame = {
@@ -1494,7 +1515,10 @@ final class SearchIndex private (
         .select((Seq(col("sid"), col("key"), col("__bq.score").as("score")) ++
           attrSel.map(_ => col("__attr"))): _*)
     }
-    val fan = canon.join(shapes, Seq("__req", "__opt", "__exc"))
+    // qid fan-out: canon against the shape table's clause arrays
+    val fan = canon
+      .join(small(qinfo.select(col("__req"), col("__opt"), col("__exc"), col("sid"))),
+        Seq("__req", "__opt", "__exc"))
       .select(col("qid"), col("sid"), col("__lo"), col("__hi"))
     val probes = qinfo.select(col("sid"), col("n_req"),
       explode(col("__probes")).as("term"))
@@ -1519,24 +1543,9 @@ final class SearchIndex private (
     //      is needed: pruned candidates remain a superset of every
     //      qid's filtered top-k).
     // Shapes with a null threshold keep the exact probe below.
-    //
-    // AUTO gate (r16, [[autoImpactPruning]] — default OFF): an
-    // unforced, uncapped call may still run this native MaxScore
-    // pipeline, but ONLY when the batch holds SHOULD-only prunable
-    // shapes whose total optional-postings volume clears the
-    // measured break-even ([[autoPruneMinTotalDf]]). Req-led shapes
-    // never auto-prune: their candidate volume is lower-bounded by
-    // df(rarest required) and pruning measured at exact cost
-    // (SCALE.md r15). The gate costs one |shapes|-row aggregate
-    // action, and when it fails the plan is BIT-IDENTICAL to the
-    // exact one — no seed stages, no extra persists.
-    val autoPrune = !impactPruning && autoImpactPruning &&
-      maxHitsPerIndex == Int.MaxValue
     val thetaBySid: Option[DataFrame] =
-      if (!impactPruning && !autoPrune) None
+      if (!impactPruning) None
       else {
-        val stProbe = stats.where(col("field") === lit(field))
-          .select(col("term"), col("df"))
         val sPostsTfDl = postings.where(col("field") === lit(field))
           .select(col("term"), col("key"), col("tf"), col("dl"))
         val idfC = log(lit(1.0) +
@@ -1556,40 +1565,25 @@ final class SearchIndex private (
             mis: Seq[Double], dfs: Seq[Long], nReq: Int,
             probeTs: Seq[String]) => SearchIndex.boolPrunable(
           terms, roles, mis, dfs, nReq, probeTs, minDfGate))
-        val prunable0 = qinfo
-          .where(size(col("__probes")) > 0 &&
-            prunableUdf(col("__terms"), col("__roles"), col("__mis"),
-              col("__dfs"), col("n_req"), col("__probes")))
-        val admitted: Option[DataFrame] =
-          if (!autoPrune) Some(prunable0.select(col("sid")))
-          else {
-            val eligible = prunable0.where(col("n_req") === 0)
-              .select(col("sid"), aggregate(
-                zip_with(col("__dfs"), col("__roles"),
-                  (d, r) => when(r === lit(0), d).otherwise(lit(0L))),
-                lit(0L), (acc, x) => acc + x).as("adf"))
-              .where(col("adf") > lit(astSeedsPerShape.toLong))
-            val tdf = eligible.agg(coalesce(sum(col("adf")), lit(0L)))
-              .head().getLong(0)
-            if (tdf <= autoPruneMinTotalDf) None
-            else Some(eligible.select(col("sid")))
-          }
-        admitted.map { prunableSids =>
         // seed from the rarest SCORING term (required or optional),
         // not the rarest PROBE term: for a dense-required shape the
         // probe is the head term whose top-impact postings are
         // opt-poor — a threshold seeded there never clears the
         // residual mass, while the rarest optional's postings hold
         // the opt-rich docs the true top-k comes from (and its scan
-        // is the cheapest of any scoring term's)
-        val seedTerm = withIdf.where(col("role") >= 0 && col("df") > 0)
-          .select(col("sid"), col("term"), col("df"))
-          .join(prunableSids, Seq("sid"))
-          .groupBy(col("sid"))
-          .agg(min(struct(col("df"), col("term"))).as("m"))
-          .select(col("sid"), col("m.term").as("term"))
+        // is the cheapest of any scoring term's). Read off the shape
+        // table's aligned arrays: no aggregate.
+        val seedTerm = qinfo
+          .where(size(col("__probes")) > 0 &&
+            prunableUdf(col("__terms"), col("__roles"), col("__mis"),
+              col("__dfs"), col("n_req"), col("__probes")))
+          .select(col("sid"), array_min(filter(
+            arrays_zip(col("__dfs"), col("__terms"), col("__roles")),
+            x => x.getField("__roles") >= 0 && x.getField("__dfs") > 0)).as("m"))
+          .where(col("m").isNotNull)
+          .select(col("sid"), col("m.__terms").as("term"), col("m.__dfs").as("df"))
         // stream the postings side and broadcast the seed-term frame
-        // (pre-joined with its df): left to the planner, sf-scale
+        // (with its df): left to the planner, sf-scale
         // postings fit under the auto-broadcast threshold and the
         // whole fan-out + partial top-k lands in the seed frame's
         // single AQE-coalesced partition (measured ~3.4s single-task
@@ -1603,13 +1597,12 @@ final class SearchIndex private (
         // 52 MB of partial-buffer shuffle on the bool entry); the
         // per-term one ships |distinct terms| x N.
         val seedTermTop = sPostsTfDl
-          .join(broadcast(seedTerm.select(col("term")).distinct()
-            .join(stProbe, Seq("term"))), Seq("term"))
+          .join(broadcast(seedTerm.select(col("term"), col("df")).distinct()), Seq("term"))
           .withColumn("__idf", idfC)
           .groupBy(col("term"))
           .agg(topkAggFor(posts, math.max(astSeedsPerShape, k + 1))(
             col("key"), prio).as("__s"))
-        val seeds = seedTerm.join(seedTermTop, Seq("term"))
+        val seeds = seedTerm.select(col("sid"), col("term")).join(seedTermTop, Seq("term"))
           .select(col("sid"), explode(col("__s")).as("h"))
           .select(col("sid"), col("h.key").as("key"))
           .dropDuplicates("sid", "key")
@@ -1626,22 +1619,20 @@ final class SearchIndex private (
           .select(col("sid"),
             when(size(col("__top")) >= k + 1,
               element_at(col("__top"), k + 1).getField("score")).as("__thq"))
-        val nQids = fan.groupBy(col("sid")).agg(count(lit(1)).as("__nq"))
-        // lineage-cut: the threshold frame is |shapes| rows, and
-        // every candidate-branch plan below would otherwise carry
-        // the whole seed/verify subtree
-        keep(SearchIndex.cutLineage(thetaQ
+        // the qid counts come from the shape table, not from another
+        // pass over canon
+        val theta = thetaQ
           .groupBy(col("sid"))
           .agg(count(lit(1)).as("__ng"),
             count(col("__thq")).as("__nb"),
             min(col("__thq")).as("__min_th"))
-          .join(nQids, Seq("sid"))
+          .join(small(qinfo.select(col("sid"), col("__nq"))), Seq("sid"))
           .select(col("sid"),
             when(col("__ng") === col("__nq") && col("__nb") === col("__nq"),
               col("__min_th")).as("__theta"))
-          .where(col("__theta").isNotNull),
-          StorageLevel.MEMORY_AND_DISK))
-        } // admitted.map
+        // the threshold table: |shapes| rows, read by both candidate
+        // branches below
+        Some(shapeTable(theta.where(col("__theta").isNotNull), keep, collect)._1)
       }
     def termJoin(p: DataFrame, big: DataFrame): DataFrame =
       if (bcProbes) big.join(broadcast(p), Seq("term"))
@@ -1775,10 +1766,11 @@ final class SearchIndex private (
     * `unix_date`/`unix_micros` columns). Anything else fails at
     * plan time, as it does on the scan path.
     *
-    * Driver-side cost: one bounded action collecting the DISTINCT
-    * filter attribute column names (bounded by the doc schema width,
-    * never by |left|). Output is (qid, rank, key, score) like
-    * [[lightQueryJoin]].
+    * Setup cost: see [[buildAstScored]] — under the broadcast gate
+    * the per-shape setup tables are collected (bounded by the gate)
+    * and the DISTINCT filter attribute column names are read off
+    * them. Output is (qid, rank,
+    * key, score) like [[lightQueryJoin]].
     *
     * REPEATED invocations are memoized: the scored (qid, key, score)
     * frame — everything up to the per-call top-k/self-exclusion
@@ -1786,8 +1778,9 @@ final class SearchIndex private (
     * canonicalized form and the generator's serialized closure
     * (class + captured state), so re-issuing the same join (a
     * re-executed workload, a bench rerun, a k sweep) reuses the
-    * persisted canon/shape/probe frames and skips the metadata
-    * action entirely; only the probe+verify job re-runs. Two calls
+    * canon checkpoint and the shape tables and launches nothing
+    * until its result is collected; only the probe+verify job
+    * re-runs. Two calls
     * share an entry only when `sameResult` holds for the left AND
     * the generators serialize byte-identically — a generator whose
     * captured state changed fingerprints differently and misses.
@@ -1829,11 +1822,7 @@ final class SearchIndex private (
     *   and one rare term's postings. Shapes with no usable bound
     *   (negative boosts, < k+1 scored seeds) fall back to the full
     *   probe, which is always exact. Mutually exclusive with
-    *   `maxCandidatesPerShape`. Passing false does NOT disable the
-    *   machinery: by default ([[autoImpactPruning]]) the engine
-    *   still runs it with a per-shape density gate, so dense
-    *   batches prune without the caller asking — `true` merely
-    *   forces the seed pass for every shape with a sound bound. */
+    *   `maxCandidatesPerShape`. */
   def queryJoinAst(left: DataFrame, qidCol: String, queryGen: Row => SearchQuery,
       field: String, k: Int, excludeSelf: Boolean = false,
       maxHitsPerIndex: Int = Int.MaxValue,
@@ -1843,24 +1832,20 @@ final class SearchIndex private (
     require(maxCandidatesPerShape >= 1, "maxCandidatesPerShape must be >= 1")
     require(!(impactPruning && maxCandidatesPerShape != Int.MaxValue),
       "impactPruning is exact and replaces maxCandidatesPerShape — pass one, not both")
-    // AUTO mode (see [[autoImpactPruning]]): an unforced, uncapped
-    // call still runs the pruning pipeline, density-gated per shape
-    val autoPrune = !impactPruning && autoImpactPruning &&
-      maxCandidatesPerShape == Int.MaxValue
     // +1 covers excludeSelf: keeping each shape's exact top-(k+1)
     // keeps every qid's exact top-k after removing at most itself
-    val pruneK = if (impactPruning || autoPrune) k + 1 else 0
+    val pruneK = if (impactPruning) k + 1 else 0
     val leftPlan = left.queryExecution.analyzed
     val memoKey = (leftPlan.semanticHash(),
       closureFingerprint(queryGen) +
-        s"#cap=$maxCandidatesPerShape#prune=$pruneK#auto=$autoPrune",
+        s"#cap=$maxCandidatesPerShape#prune=$pruneK",
       qidCol, field)
     val scored =
       if (!memoEnabled) {
         // memo hatch (SPARK_GRAFT_MEMO=0): build fresh, frames live in
         // callFrames (released at unpersist) — cold-cost measurement
         val (df, frames) = buildAstScored(left, qidCol, queryGen, field,
-          maxCandidatesPerShape, pruneK, autoGate = autoPrune)
+          maxCandidatesPerShape, pruneK)
         frames.foreach(trackPersist)
         df
       } else astJoinMemo.synchronized {
@@ -1872,14 +1857,14 @@ final class SearchIndex private (
           df
         case existing =>
           val (df, frames) = buildAstScored(left, qidCol, queryGen, field,
-            maxCandidatesPerShape, pruneK, autoGate = autoPrune)
+            maxCandidatesPerShape, pruneK)
           // hash-collision displacement: park the old entry's frames
           // (see parkDisplaced) instead of leaking them (ADVICE r16)
           existing.foreach { case (_, _, old) => parkDisplaced(old) }
           astJoinMemo(memoKey) = (leftPlan, df, frames)
           // bounded memo (ADVICE r10): a long-lived index serving many
           // distinct (left, generator) joins would otherwise pin an
-          // unbounded set of persisted canon/shape/probe frames.
+          // unbounded set of stored canon/shape frames.
           // Eviction PARKS the entry's own frames until unpersist.
           while (astJoinMemo.size > astJoinMemoCap) {
             val (_, (_, _, evicted)) = astJoinMemo.head
@@ -1913,21 +1898,29 @@ final class SearchIndex private (
       case _: java.io.IOException => java.util.UUID.randomUUID().toString
     }
 
-  /** Cross-invocation memo for [[queryJoinAst]] (see its scaladoc).
-    * Values hold the scored frame, the analyzed left plan for the
-    * hash-collision-proof `sameResult` re-check, and the entry's own
-    * persisted setup frames (released on LRU eviction or index
-    * [[unpersist]]). LinkedHashMap insertion order IS the access
-    * order (hits re-insert), so `head` is the LRU victim. */
+  /** Cross-invocation memo for [[queryJoinAst]] and
+    * [[queryJoinBool]] (see their scaladocs). Values hold the scored
+    * frame, the analyzed left plan for the hash-collision-proof
+    * `sameResult` re-check, and the entry's own stored setup frames
+    * (parked on LRU eviction, released at index [[unpersist]]).
+    * When its left has at most [[SearchIndex.astBroadcastShapesMax]]
+    * rows an entry stores ONE frame, the |left|-row `canon`
+    * checkpoint — its per-shape tables are local relations held by
+    * the scored frame's plan; above that the shape tables are
+    * lineage-cut and stored too.
+    * LinkedHashMap insertion order IS the access order (hits
+    * re-insert), so `head` is the LRU victim. */
   private val astJoinMemo = scala.collection.mutable.LinkedHashMap.empty[
     (Int, String, String, String),
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame, Seq[DataFrame])]
 
-  /** Memo capacity — small: an entry pins ~3 persisted frames sized
-    * by |left| and |shapes|, and real workloads cycle few distinct
-    * (left, generator) pairs. 16 since the bool pipeline shares the
-    * memo (r16): a workload alternating the ast and bool front doors
-    * must not thrash either's entries. Test hook is the var. */
+  /** Memo capacity — small: an entry pins its |left|-row `canon`
+    * checkpoint (plus lineage-cut |shapes|-row tables above the
+    * broadcast gate, and the seed checkpoint of a pruned AST join),
+    * and real workloads cycle few distinct (left, generator) pairs.
+    * 16 since the bool pipeline shares the memo (r16): a workload
+    * alternating the ast and bool front doors must not thrash
+    * either's entries. Test hook is the var. */
   private[graft] var astJoinMemoCap: Int = 16
 
   /** Test hook: distinct memoized AST-join setups on this index. */
@@ -1939,42 +1932,6 @@ final class SearchIndex private (
     * bounded verifies but yield a tighter threshold and therefore
     * more pruning. Var is a test hook. */
   private[graft] var astSeedsPerShape: Int = 64
-
-  /** Batch-level break-even for AUTO impact pruning: the gate turns
-    * the MaxScore pipeline on only when the TOTAL postings volume
-    * (Σ df over probe terms) of the eligible shapes exceeds this.
-    * Below it the pipeline's fixed stage latency — seed scan, seed
-    * verify, threshold + essential-bounds aggregates, two persists —
-    * exceeds any verify savings: at sf0.1 the dense-bool bench entry
-    * measured exact 5.1s vs forced-pruned 8.1s (Σdf ~1M), while the
-    * 16x Zipf corpus measured exact 140.8s vs pruned 17.5s (Σdf
-    * ~56M). Applies to both [[queryJoinAst]] and [[queryJoinBool]]
-    * auto gates; forced pruning ignores it. Var is a test/ops hook. */
-  var autoPruneMinTotalDf: Long = 4000000L
-
-  /** AUTO impact pruning — default OFF (r16). When enabled, an
-    * uncapped, unforced [[queryJoinAst]] call still runs the
-    * MaxScore pipeline, paying the per-shape seed pass ONLY for
-    * shapes the gate predicts a win for: PURE scored disjunctions —
-    * one probe alternative of >= 2 terms with more postings than the
-    * seed set itself (Σdf > astSeedsPerShape) — whose score bound is
-    * INFORMATIVE: no cross-field text legs and no keyword/string
-    * legs, because those bound at a constant the threshold can never
-    * beat, so the seed/verify machinery would be pure overhead
-    * (the r15 `query_join_ast_xfield` 38-52s-vs-3.5-9.9s receipt).
-    * A batch where NO shape passes the gate skips the entire
-    * seed/stats pipeline — the plan is bit-identical to the exact
-    * one, not merely result-identical.
-    *
-    * Default OFF because r15 shipped it ON and the bench measured
-    * the auto plan slower than the exact fallback on every
-    * nested/cross-field workload (BENCH_r15 400s vs the 167s floor
-    * set; VERDICT r15). Opt in per index with this var, or fleet-wide
-    * with `SPARK_GRAFT_AUTO_PRUNE=1` (any other value, or unset,
-    * keeps the exact-probe default; `impactPruning = true` on the
-    * call still forces the seed pass for every shape regardless). */
-  var autoImpactPruning: Boolean =
-    sys.env.get("SPARK_GRAFT_AUTO_PRUNE").contains("1")
 
   /** Cross-invocation query-join memoization — default ON.
     * `SPARK_GRAFT_MEMO=0` disables it so a bench run measures COLD
@@ -1993,20 +1950,26 @@ final class SearchIndex private (
     * full probe (counting it re-runs the bounded candidate stages). */
   @volatile private[graft] var lastAstCandsFrame: DataFrame = _
 
-  /** Test hook: the (sid, key) seed frame of the most recent pruned/
-    * auto [[buildAstScored]] (null when the pipeline ran unpruned) —
-    * lets specs pin that a SPARSE batch under auto mode skips the
-    * seed pass (empty frame) while a dense one pays it. */
-  @volatile private[graft] var lastAstSeedsFrame: DataFrame = _
-
   /** The setup + probe + verify pipeline behind [[queryJoinAst]],
     * producing the un-capped scored (qid, key, score) frame plus the
-    * persisted setup frames scoped to the memo entry (released on
-    * eviction, not at index teardown). */
+    * setup frames scoped to the memo entry (released on eviction or
+    * index [[unpersist]]).
+    *
+    * Setup cost: one checkpoint of the |left|-row `canon` frame, one
+    * collect of the deduplicated shapes (the metadata, the shape
+    * count and the fan-out key come from its rows) and one collect of
+    * the per-shape scoring table (IDF vector + chosen probe
+    * alternative); a dictionary expansion adds one collect, pruning
+    * a seed checkpoint and one collect of the pruned probe table.
+    * When the batch has at most [[SearchIndex.astBroadcastShapesMax]]
+    * rows the tables are re-planned as local relations; above it
+    * they are lineage-cut and stay distributed, one bounded action
+    * reads the metadata and the shape count, and the qid fan-out is
+    * lineage-cut too. */
   private def buildAstScored(left: DataFrame, qidCol: String,
       queryGen: Row => SearchQuery, field: String,
       maxCandidatesPerShape: Int = Int.MaxValue,
-      pruneK: Int = 0, autoGate: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+      pruneK: Int = 0): (DataFrame, Seq[DataFrame]) = {
     val entryFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def keepFrame(df: DataFrame): DataFrame = { entryFrames += df; df }
     val fs = fieldStats(field)
@@ -2027,46 +1990,52 @@ final class SearchIndex private (
         p.attrFields, p.strAttrFields, p.xTextFields, p.probeAlts.getOrElse(Seq.empty))
     }.toDF("qid", "ops", "terms", "term_fields", "consts",
       "attr_fields", "str_attr_fields", "x_text_fields", "alts")
-    // materialized behind a lineage barrier: the shape dedup and the
-    // qid fan-out both read it, and the opaque generator map would
-    // otherwise ride every downstream task closure (lifetime
-    // tracking as in queryJoinPhrase/queryJoinBool)
-    val canon = keepFrame(SearchIndex.cutLineage(serialized,
-      StorageLevel.MEMORY_AND_DISK))
+    // checkpointed: the shape dedup and the qid fan-out both read it,
+    // and the opaque generator map would otherwise ride every
+    // downstream task closure
+    val (canon0, collect) = SearchIndex.checkpointCanon(serialized)
+    val canon = keepFrame(canon0)
     // shapes0 keeps the SERIALIZED columns (the fan-out join key);
     // `shapes` is its dictionary-expanded rewrite — identical when no
-    // shape carries a wildcard/fuzzy/regex leaf
-    // the attr-field arrays are functions of the grouped program
+    // shape carries a wildcard/fuzzy/regex leaf.
+    // The attr-field arrays are functions of the grouped program
     // columns, so first() is deterministic; carrying them here lets
-    // the metadata action below aggregate |shapes| rows instead of
-    // |left| AND read off the shape count for the attach decision in
-    // the same single action (no separate shapes0.count() job)
-    val shapes0 = keepFrame(SearchIndex.cutLineage(canon
+    // the metadata below read |shapes| rows instead of |left|.
+    val (shapes0, shapeRows) = shapeTable(canon
       .groupBy("ops", "terms", "term_fields", "consts", "alts")
       .agg(min(col("qid")).as("sid"),
         first(col("attr_fields")).as("attr_fields"),
         first(col("str_attr_fields")).as("str_attr_fields"),
         first(col("x_text_fields")).as("x_text_fields")),
-      StorageLevel.MEMORY_AND_DISK))
-    // distinct filter / keyword / cross-field attr columns plus the
-    // needs-expansion flag and the shape count, in ONE bounded action
-    // (output is field NAMES — doc-schema-width, never |left|; the
-    // opcode scan over-approximates EXPAND, a false positive only
-    // routes through an identity rewrite)
-    val meta0 = shapes0.agg(
-      array_sort(array_distinct(flatten(collect_list(col("attr_fields"))))).as("af"),
-      array_sort(array_distinct(flatten(collect_list(col("str_attr_fields"))))).as("sf"),
-      array_sort(array_distinct(flatten(collect_list(col("x_text_fields"))))).as("xf"),
-      coalesce(max(when(array_contains(col("ops"), lit(QueryProgram.Op.EXPAND)), 1)
-        .otherwise(0)), lit(0)).as("exp"),
-      count(lit(1)).as("nshapes")).head()
-    def fieldSeq(i: Int): Seq[String] =
-      if (meta0.isNullAt(i)) Seq.empty else meta0.getSeq[String](i).toSeq
-    val attrFields = fieldSeq(0)
-    val strAttrFields = fieldSeq(1)
-    val xFields = fieldSeq(2)
-    val nShapes = meta0.getLong(4)
-    val shapes = expandShapes(shapes0, field, meta0.getInt(3) > 0, keepFrame)
+      keepFrame, collect)
+    // distinct filter / keyword / cross-field attr columns, the
+    // needs-expansion flag and the shape count (field NAMES —
+    // doc-schema-width, never |left|; the opcode scan over-approximates
+    // EXPAND, a false positive only routes through an identity
+    // rewrite): read off the collected shape rows, or in one bounded
+    // action above the collect gate
+    val (attrFields, strAttrFields, xFields, needsExpansion, nShapes) = shapeRows match {
+      case Some(rows) =>
+        def names(c: String) = rows.toSeq.flatMap { r =>
+          val i = r.fieldIndex(c)
+          if (r.isNullAt(i)) Nil else r.getSeq[String](i).toSeq
+        }.distinct.sorted
+        (names("attr_fields"), names("str_attr_fields"), names("x_text_fields"),
+          rows.exists(r => r.getSeq[Int](r.fieldIndex("ops")).contains(QueryProgram.Op.EXPAND)),
+          rows.length.toLong)
+      case None =>
+        val m = shapes0.agg(
+          array_sort(array_distinct(flatten(collect_list(col("attr_fields"))))),
+          array_sort(array_distinct(flatten(collect_list(col("str_attr_fields"))))),
+          array_sort(array_distinct(flatten(collect_list(col("x_text_fields"))))),
+          coalesce(max(when(array_contains(col("ops"), lit(QueryProgram.Op.EXPAND)), 1)
+            .otherwise(0)), lit(0)),
+          count(lit(1))).head()
+        def names(i: Int) = if (m.isNullAt(i)) Seq.empty[String] else m.getSeq[String](i).toSeq
+        (names(0), names(1), names(2), m.getInt(3) > 0, m.getLong(4))
+    }
+    def table(df: DataFrame): DataFrame = shapeTable(df, keepFrame, collect)._1
+    val shapes = expandShapes(shapes0, field, needsExpansion, table)
     // validates the attr columns eagerly, plan-time
     val docInputs = programDocInputs(attrFields, strAttrFields, xFields)
     val st = stats.select(col("field"), col("term"), col("df"))
@@ -2077,43 +2046,7 @@ final class SearchIndex private (
     // and their idf is never read. The program's consts are appended
     // after the idf prefix — DslQueryScore reads const operands at
     // |terms| + idx.
-    // AUTO gate, decided LAZILY and UP FRONT (r16 — VERDICT r15
-    // "what's wrong #1/#2"): before building ANY pruning machinery,
-    // auto mode selects the shapes whose MaxScore bound is
-    // INFORMATIVE — a single probe alternative of >= 2 terms, denser
-    // than the seed set, with NO cross-field text legs, NO
-    // keyword/string legs (both bound at constants the threshold
-    // can't beat — the r15 xfield 38-52s-vs-3.5-9.9s receipt) and NO
-    // dictionary expansion (constant-score units, flat impact
-    // spread) — and runs the seed/stats pipeline only when their
-    // TOTAL postings volume clears [[autoPruneMinTotalDf]], the
-    // measured break-even against the pipeline's fixed stage
-    // latency. A batch that fails the gate takes the plain exact
-    // plan: zero extra frames, zero extra persists, the plan
-    // BIT-IDENTICAL to autoImpactPruning=false (not merely
-    // result-identical). Cost of the gate itself: one |shapes|-row
-    // aggregate action in auto mode only.
-    val stGate = stats.where(col("field") === lit(field))
-      .select(col("term"), col("df"))
-    val autoAdmitted: Option[DataFrame] =
-      if (!autoGate) None
-      else {
-        val eligible = shapes0.where(
-            size(col("x_text_fields")) === 0 &&
-            size(col("str_attr_fields")) === 0 &&
-            !array_contains(col("ops"), lit(QueryProgram.Op.EXPAND)) &&
-            size(col("alts")) === 1 &&
-            size(element_at(col("alts"), 1)) >= 2)
-          .select(col("sid"), explode(element_at(col("alts"), 1)).as("term"))
-          .join(stGate, Seq("term"), "left").na.fill(0L, Seq("df"))
-          .groupBy(col("sid")).agg(sum(col("df")).as("adf"))
-          .where(col("adf") > lit(astSeedsPerShape.toLong))
-        val tdf = eligible.agg(coalesce(sum(col("adf")), lit(0L))).head().getLong(0)
-        if (tdf <= autoPruneMinTotalDf) None
-        else Some(keepFrame(SearchIndex.cutLineage(
-          eligible.select(col("sid")), StorageLevel.MEMORY_AND_DISK)))
-      }
-    val pruning = pruneK > 0 && (!autoGate || autoAdmitted.isDefined)
+    val pruning = pruneK > 0
     val termIdf0 = shapes
       .select(col("sid"), col("term_fields"),
         posexplode(col("terms")).as(Seq("pos", "term")))
@@ -2147,18 +2080,6 @@ final class SearchIndex private (
             transform(col("pi"), x => x.getField("idf")).as("idfs"),
             transform(col("pi"), x => x.getField("mi")).as("mis"))
       }
-    val withDoublesCols =
-      Seq(col("sid"), col("ops"), col("terms"), col("doubles"), col("alts")) ++
-        (if (pruning)
-          Seq(col("term_fields"),
-            coalesce(col("mis"), array().cast("array<double>")).as("mis"))
-        else Nil)
-    val withDoubles = keepFrame(SearchIndex.cutLineage(
-      shapes.join(termIdf, Seq("sid"), "left")
-      .withColumn("doubles",
-        concat(coalesce(col("idfs"), array().cast("array<double>")), col("consts")))
-      .select(withDoublesCols: _*),
-      StorageLevel.MEMORY_AND_DISK))
     // probe-alternative selection by total df — the nested-AST
     // generalization of queryJoinBool's rarest-required-term probe.
     // Probe terms are PROBE-FIELD terms by construction (probeAlts
@@ -2166,23 +2087,27 @@ final class SearchIndex private (
     // explode_outer keeps zero-term alts (the "matches nothing"
     // probe) at df 0, which min() rightly prefers.
     val stProbe = stats.where(col("field") === lit(field)).select(col("term"), col("df"))
-    // persisted with the memo entry: the selection is deterministic
-    // per (left, generator) and costs a posexplode + stats join + two
-    // aggregations — |shapes| rows once materialized, so repeat calls
-    // skip ~4 AQE stages of pure latency. (Persisting further
-    // DOWNSTREAM frames — the resolved probe tables or the slim
-    // candidate keys — measured SLOWER: the cached leaf changes the
-    // postings-join strategy and a repeat call degenerates to one
-    // 8s sort-merge job; the selection aggregate is the sweet spot.)
-    val chosen = keepFrame(SearchIndex.cutLineage(
-      withDoubles.where(size(col("alts")) > 0)
+    val chosenAlt = shapes.where(size(col("alts")) > 0)
       .select(col("sid"), posexplode(col("alts")).as(Seq("ai", "alt")))
       .select(col("sid"), col("ai"), explode_outer(col("alt")).as("term"))
       .join(stProbe, Seq("term"), "left").na.fill(0L, Seq("df"))
       .groupBy(col("sid"), col("ai")).agg(sum(col("df")).as("adf"))
       .groupBy(col("sid")).agg(min(struct(col("adf"), col("ai"))).as("c"))
-      .select(col("sid"), col("c.ai").as("ai"), col("c.adf").as("adf")),
-      StorageLevel.MEMORY_AND_DISK))
+      .select(col("sid"), col("c.ai").as("ai"))
+    // the per-shape SCORING TABLE: the program, its doubles vector
+    // (idfs ++ consts) and the chosen probe alternative (null for a
+    // TOTAL shape) in one |shapes|-row table, so repeat calls skip
+    // the stats joins and the selection aggregates
+    val scoring = table(shapes.join(termIdf, Seq("sid"), "left")
+      .join(chosenAlt, Seq("sid"), "left")
+      .withColumn("doubles",
+        concat(coalesce(col("idfs"), array().cast("array<double>")), col("consts")))
+      .select((Seq(col("sid"), col("ops"), col("terms"), col("doubles"), col("alts"),
+        col("ai")) ++
+        (if (pruning)
+          Seq(col("term_fields"),
+            coalesce(col("mis"), array().cast("array<double>")).as("mis"))
+        else Nil)): _*))
     val posts = postings.where(col("field") === lit(field))
       .select(col("term"), col("key"))
     // SLIM candidate discipline (measured at 16x sf0.1: the previous
@@ -2193,20 +2118,18 @@ final class SearchIndex private (
     // probe joins below keep candidates as bare (sid, key) pairs and
     // every wide re-attach is a SHUFFLE_HASH join, which streams the
     // candidate side with NO sort of it at any width).
-    val probed0 = withDoubles.join(chosen, Seq("sid"))
-      .withColumn("probe", element_at(col("alts"), col("ai") + 1))
-      .select(col("sid"), col("probe"))
+    val probed0 = scoring.where(col("ai").isNotNull)
+      .select(col("sid"), element_at(col("alts"), col("ai") + 1).as("probe"))
     val exactCap = maxCandidatesPerShape == Int.MaxValue
-    val progs = withDoubles.select(col("sid"), col("ops"), col("terms"),
+    val progs = scoring.select(col("sid"), col("ops"), col("terms"),
       col("doubles"))
     // Program attach ORDER is a measured decision (16x receipts in
     // SCALE.md): attaching the ~1KB serialized programs BEFORE the
     // key exchange makes that exchange materialize candidates x 1KB
     // (10.7 GB written for the dense-expansion batch — pure
     // serialization CPU). When the shape batch is small enough to
-    // broadcast (the count rode the one bounded metadata action
-    // above), attach it AFTER the corpus join instead: the candidate
-    // stream then crosses its ONLY exchange as bare (sid, key)
+    // broadcast, attach it AFTER the corpus join instead: the
+    // candidate stream then crosses its ONLY exchange as bare (sid, key)
     // pairs, the corpus attaches via shuffle-hash, and the programs
     // ride a broadcast — zero wide exchanges anywhere. Corpus-scale
     // shape batches (a million-query left) fall back to the
@@ -2250,17 +2173,7 @@ final class SearchIndex private (
     // a degenerate bound can never lose the hits the threshold came
     // from.
     val (probedPruned, seedCands) =
-      if (!pruning) {
-        // test-hook semantics: null = pruning never considered;
-        // EMPTY = auto mode ran and the gate admitted nothing (the
-        // seed pass was skipped, per the lazy-gate contract)
-        lastAstSeedsFrame =
-          if (autoGate) {
-            import spark.implicits._
-            Seq.empty[(Long, Long)].toDF("sid", "key")
-          } else null
-        (None, None)
-      }
+      if (!pruning) (None, None)
       else {
         val sPosts = postings.where(col("field") === lit(field))
           .select(col("term"), col("key"), col("tf"), col("dl"))
@@ -2282,28 +2195,16 @@ final class SearchIndex private (
         // expensive as the thing it prunes. Absent terms (df 0) have
         // no postings and are excluded; a shape whose terms are all
         // absent gets no seeds, a null threshold, and no pruning.
-        // AUTO mode reaches here only when the up-front gate
-        // admitted >= 1 informative dense shape clearing the batch
-        // break-even (see `autoAdmitted` above) — every pruning
-        // stage below is then restricted to the admitted shapes;
-        // everything else rides the exact branch untouched. Forced
-        // mode (impactPruning = true) still seeds every shape with
-        // a sound bound — the caller asked.
-        val minTerm0 = probed0
+        val minTerm = probed0
           .select(col("sid"), explode(col("probe")).as("term"))
           .join(stProbe, Seq("term"))
           .where(col("df") > 0)
           .groupBy(col("sid"))
           .agg(min(struct(col("df"), col("term"))).as("m"))
-          .select(col("sid"), col("m.term").as("term"))
-        val minTerm = autoAdmitted match {
-          case Some(adm) => minTerm0.join(adm, Seq("sid"))
-          case None => minTerm0
-        }
-        // broadcast the tiny seed-term frame and stream postings —
-        // same single-task-fan-out fix as the bool pipeline's seed
-        // scan above (minTerm's terms all came from stProbe with
-        // df > 0, so the inner pre-join loses nothing). Aggregated
+          .select(col("sid"), col("m.term").as("term"), col("m.df").as("df"))
+        // broadcast the tiny seed-term frame (with its df) and stream
+        // postings — same single-task-fan-out fix as the bool
+        // pipeline's seed scan above. Aggregated
         // per TERM then fanned out to shapes (r16, see the bool
         // pipeline's seedTermTop comment): prio is idf-scaled but
         // idf is constant within a term, so the per-term top-N IS
@@ -2311,35 +2212,27 @@ final class SearchIndex private (
         // instead of |shapes| x df through never-full partial
         // buffers.
         val seedTermTop = sPosts
-          .join(broadcast(minTerm.select(col("term")).distinct()
-            .join(stProbe, Seq("term"))), Seq("term"))
+          .join(broadcast(minTerm.select(col("term"), col("df")).distinct()), Seq("term"))
           .withColumn("__idf", idfC)
           .groupBy(col("term"))
           .agg(topkAggFor(posts, math.max(astSeedsPerShape, pruneK))(
             col("key"), prio).as("__s"))
-        val seeds = keepFrame(SearchIndex.cutLineage(
-          minTerm.join(seedTermTop, Seq("term"))
+        // up to astSeedsPerShape rows per shape: checkpointed, not
+        // collected (its joins hint the corpus side as the build side)
+        val seeds = keepFrame(
+          minTerm.select(col("sid"), col("term")).join(seedTermTop, Seq("term"))
           .select(col("sid"), explode(col("__s")).as("h"))
           .select(col("sid"), col("h.key").as("key"))
-          .dropDuplicates("sid", "key"),
-          StorageLevel.MEMORY_AND_DISK))
+          .dropDuplicates("sid", "key")
+          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK))
         val theta = attachAndScore(seeds).where(col("ok"))
           .groupBy(col("sid"))
           .agg(topkAggFor(posts, pruneK)(col("key"), col("score")).as("__top"))
           .select(col("sid"),
             when(size(col("__top")) >= pruneK,
               element_at(col("__top"), pruneK).getField("score")).as("__theta"))
-        // the base frame every remaining pruning stage derives from:
-        // auto mode restricts to the gate-admitted shapes (everything
-        // else rides the exact branch and must not pay the altStats
-        // aggregates or the essential-bounds UDF — the r15 version
-        // computed both for EVERY shape, a measured 2x forced-path
-        // regression and the auto plan bloat that OOM'd
-        // executedPlan.toString, VERDICT r15)
-        val pruneBase = autoAdmitted match {
-          case Some(adm) => withDoubles.join(adm, Seq("sid"))
-          case None => withDoubles.where(size(col("alts")) > 0)
-        }
+        // the base frame every remaining pruning stage derives from
+        val pruneBase = scoring.where(size(col("alts")) > 0)
         // per-(shape, alternative) df tables over EVERY alternative,
         // not just the min-total-df one: the essential-probe
         // selection below may find that a denser alternative prunes
@@ -2379,29 +2272,27 @@ final class SearchIndex private (
             pairs.map(_.map(_._1)), pairs.map(_.map(_._2)),
             th, probeF, kind, k1v)
         })
-        // persisted with the memo entry: the single/multi split below
-        // consumes the probe frame twice, and repeat invocations
-        // re-execute the memoized scored plan — without this persist
-        // the whole seed/threshold/essential pipeline (a handful of
-        // bounded but latency-bearing stages) would re-run twice per
-        // call. |shapes| rows of term lists once materialized.
-        val pruned = keepFrame(SearchIndex.cutLineage(pruneBase
+        // a shape table kept with the memo entry: the single/multi
+        // split below consumes the probe frame twice, and repeat
+        // invocations re-execute the memoized scored plan — without
+        // it the whole seed/threshold/essential pipeline (a handful
+        // of bounded but latency-bearing stages) would re-run twice
+        // per call. |shapes| rows of term lists.
+        val pruned = table(pruneBase
           .join(altStats, Seq("sid"))
           .join(theta, Seq("sid"), "left")
           .withColumn("probe", essUdf(col("ops"), col("terms"),
             col("term_fields"), col("doubles"), col("mis"),
             col("__alt_terms"), col("__alt_dfs"), col("__theta")))
           // __th: did the threshold BIND for this shape? Unbound
-          // shapes (no/too-few seeds — every auto-gated sparse shape,
-          // every unboundable program) take the exact branch's slim
+          // shapes (no/too-few seeds, every unboundable program) take
+          // the exact branch's slim
           // probe below: bare (term, key) postings, no part filter,
           // no seed union, no global dedup — the full-volume
           // candidate stream must never pay the pruned path's
           // dedup exchange just because pruning was AVAILABLE.
           .withColumn("__th", col("__theta").isNotNull)
-          .select(col("sid"), col("probe"), col("__th")),
-          StorageLevel.MEMORY_AND_DISK))
-        lastAstSeedsFrame = seeds // test hook (auto-gate pins)
+          .select(col("sid"), col("probe"), col("__th")))
         (Some(pruned), Some(seeds))
       }
     // single-term probes dominate (every AND-led shape) and their
@@ -2505,15 +2396,7 @@ final class SearchIndex private (
           .select(col("sid"), col("pt").getField("_1").as("term")),
           posts).drop("term")
           .dropDuplicates("sid", "key")
-        val prunedSide = boundCands.unionByName(uSingle).unionByName(uMulti)
-        // auto mode: `pruned` covers only the gate-admitted shapes —
-        // everything else takes the exact branch VERBATIM (bare
-        // postings, no tf/dl widening, no effectiveness join)
-        autoAdmitted match {
-          case Some(adm) => prunedSide.unionByName(
-            exactCandsFor(probed0.join(adm, Seq("sid"), "left_anti")))
-          case None => prunedSide
-        }
+        boundCands.unionByName(uSingle).unionByName(uMulti)
     }
     val candsBounded =
       if (exactCap) candsRaw
@@ -2537,7 +2420,7 @@ final class SearchIndex private (
         docSide.join(broadcast(keptKeys), col("__doc_key") === col("__kept_key"))
           .drop("__kept_key")
       }
-    val totalCands = withDoubles.where(size(col("alts")) === 0)
+    val totalCands = scoring.where(size(col("alts")) === 0)
       .select(col("sid"), col("ops"), col("terms"), col("doubles"))
       .crossJoin(totalDocSide)
       .withColumn("key", col("__doc_key"))
@@ -2560,13 +2443,17 @@ final class SearchIndex private (
       .withColumn("__r", scoreExpr)
       .where(col("__r.ok"))
       .select(col("sid"), col("key"), col("__r.score").as("score"))
-    // persisted with the memo entry: the qid fan-out joins canon to
-    // shapes0 on FIVE array columns — materialized it is |left| slim
-    // (qid, sid) rows, and repeat calls skip the array-keyed join
-    val fan = keepFrame(SearchIndex.cutLineage(canon
-      .join(shapes0, Seq("ops", "terms", "term_fields", "consts", "alts"))
-      .select(col("qid"), col("sid")),
-      StorageLevel.MEMORY_AND_DISK))
+    // qid fan-out: canon against the shape table on FIVE array
+    // columns. Under the collect gate the table broadcasts and the
+    // join is one map-side pass over canon; above it the |left|-row
+    // (qid, sid) result is lineage-cut so repeat calls skip the
+    // array-keyed join.
+    val fanKeys = Seq("ops", "terms", "term_fields", "consts", "alts")
+    val fan =
+      if (collect) canon.join(broadcast(shapes0.select((fanKeys :+ "sid").map(col): _*)),
+        fanKeys).select(col("qid"), col("sid"))
+      else keepFrame(SearchIndex.cutLineage(canon.join(shapes0, fanKeys)
+        .select(col("qid"), col("sid")), StorageLevel.MEMORY_AND_DISK))
     (verified.join(fan, Seq("sid"))
       .select(col("qid"), col("key"), col("score")), entryFrames.toSeq)
   }
@@ -2584,11 +2471,11 @@ final class SearchIndex private (
     * expansion join never shuffles the vocabulary; the per-pattern
     * cap is a row_number window partitioned by pattern (matched rows
     * are vocabulary-bounded, corpus-independent). `needed` = false
-    * (decided by the caller's one bounded metadata action) passes
-    * the frame through untouched — the plan is exactly the
-    * pre-expansion one. */
+    * (read off the caller's shape table) passes the frame through
+    * untouched — the plan is exactly the pre-expansion one.
+    * `table` materializes the rewritten |shapes|-row frame. */
   private def expandShapes(shapes0: DataFrame, field: String,
-      needed: Boolean, keep: DataFrame => DataFrame): DataFrame = {
+      needed: Boolean, table: DataFrame => DataFrame): DataFrame = {
     val shapeCols = shapes0.select("sid", "ops", "terms", "term_fields", "consts", "alts")
     if (!needed) return shapeCols
     import spark.implicits._
@@ -2641,10 +2528,9 @@ final class SearchIndex private (
           r.getSeq[String](2), r.getSeq[String](3), alts, probeField, textF, exp)
         (r.getLong(0), o2, t2, f2, r.getSeq[Double](4), a2)
       }.toDF("sid", "ops", "terms", "term_fields", "consts", "alts")
-    // two downstream readers (idf table + doubles assembly) — persist
-    // so the dictionary join runs once; released with the memo
-    // entry's other frames (LRU eviction or index unpersist)
-    keep(SearchIndex.cutLineage(rewritten, StorageLevel.MEMORY_AND_DISK))
+    // two downstream readers (idf table + probe selection) —
+    // materialized so the dictionary join runs once
+    table(rewritten)
   }
 
   /** Ids-only query join (reference lightQueryJoin,
@@ -3096,10 +2982,11 @@ final class SearchIndex private (
   private[graft] def lineageParents: Seq[SearchIndex] = parents
 
   /** Per-call persisted helper frames (queryJoinPhrase's analyzed
-    * query batch, queryJoinBool's canon/qinfo): registered so
-    * [[unpersist]] releases them with the index — a long-lived
-    * session issuing many joins would otherwise leak one cached
-    * frame per invocation (nothing else reaches them). */
+    * query batch, the index-wide stats frames, the setup frames of
+    * query joins run with the memo off or displaced from it):
+    * registered so [[unpersist]] releases them with the index — a
+    * long-lived session issuing many joins would otherwise leak one
+    * cached frame per invocation (nothing else reaches them). */
   private val callFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private def trackPersist(df: DataFrame): DataFrame =
     callFrames.synchronized { callFrames += df; df }
@@ -3112,9 +2999,12 @@ final class SearchIndex private (
     * localCheckpoint'd RDD cannot recompute after unpersist — the
     * old immediate release broke any re-execution of a previously
     * returned frame with "checkpoint block not found" (ADVICE r16,
-    * medium; MemoLifecycleSpec pins the survival). Storage growth is
-    * bounded by the number of DISTINCT displaced setups, each
-    * |left|/|shapes|-sized — the pre-memo callFrames regime. */
+    * medium; MemoLifecycleSpec pins the survival). Storage therefore
+    * grows with every DISTINCT displaced setup until unpersist — by
+    * one |left|-row `canon` checkpoint per displaced entry whose left
+    * had at most [[SearchIndex.astBroadcastShapesMax]] rows (its
+    * shape tables are local relations and go with the plans that
+    * reference them). */
   private def parkDisplaced(frames: Seq[DataFrame]): Unit =
     callFrames.synchronized { callFrames ++= frames }
 
@@ -3279,6 +3169,10 @@ object SearchIndex {
     * default is ~64 MB of broadcast, the order of a generous
     * autoBroadcastJoinThreshold; above it the programs attach via a
     * pre-exchange shuffle-hash join (wide-but-linear, never sorted).
+    * The same gate, applied to the left's row count, decides for
+    * [[queryJoinAst]] and [[queryJoinBool]] alike whether the
+    * per-shape setup tables are collected into local relations
+    * ([[checkpointCanon]], [[shapeTable]]).
     * Process-wide, adjustable. */
   @volatile var astBroadcastShapesMax: Long = 65536L
 
@@ -3327,6 +3221,31 @@ object SearchIndex {
   private[search] def cutLineage(df: DataFrame,
       storageLevel: StorageLevel): DataFrame =
     graft.sources.Frames.cutLineage(df, storageLevel)
+
+  /** The |left|-row canonical query frame of a query join behind one
+    * localCheckpoint, and whether its per-shape setup tables are
+    * collected: they are when the frame has at most
+    * [[astBroadcastShapesMax]] rows, since a batch has no more shapes
+    * than rows. The decision costs nothing beyond the checkpoint's
+    * own job, so a larger batch pays no extra collect. */
+  private[search] def checkpointCanon(df: DataFrame): (DataFrame, Boolean) = {
+    val (canon, rows) = Frames.checkpointCounted(df, StorageLevel.MEMORY_AND_DISK)
+    (canon, rows <= astBroadcastShapesMax)
+  }
+
+  /** A query-join setup table with one row per distinct query shape
+    * (shape dedup, IDF vectors, thresholds, probe sets). When
+    * `collect` holds (see [[checkpointCanon]]) it is built with ONE
+    * collect and re-planned as a local relation: no checkpoint, no
+    * persist, no count, no storage, and the collected rows come back
+    * for the caller to read (shape count, metadata). Otherwise it is
+    * lineage-cut and registered with `keep`. */
+  private[search] def shapeTable(df: DataFrame, keep: DataFrame => DataFrame,
+      collect: Boolean): (DataFrame, Option[Array[Row]]) =
+    if (collect) {
+      val (local, rows) = Frames.collectLocal(df)
+      (local, Some(rows))
+    } else (keep(cutLineage(df, StorageLevel.MEMORY_AND_DISK)), None)
 
   /** Release a frame whether it is cache-persisted or lineage-cut. */
   private[search] def releaseFrame(df: DataFrame, blocking: Boolean): Unit =

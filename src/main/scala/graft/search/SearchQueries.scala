@@ -57,11 +57,10 @@ object SearchQueries {
     else spark.read.parquet(files: _*)
   }
 
-  // NOTE: the SPARK_GRAFT_AUTO_PRUNE=1 opt-in hatch lives in the
-  // [[SearchIndex.autoImpactPruning]] initializer, so EVERY index —
-  // default, xfield, stemmed, incremental, scale-harness — honors it
-  // without per-builder wiring (r15 VERDICT: the old per-builder
-  // hatch missed xfieldIndexFor and friends).
+  // The default index of a corpus directory, built once and shared
+  // by the SQL table functions and Scala callers; query-join behavior
+  // (exact unless a call asks for impactPruning) is per call, never
+  // per index.
   def indexFor(spark: SparkSession, dir: String): SearchIndex =
     cache.get(dir) {
       SearchIndex.build(snapshotDocs(spark, dir), spec)

@@ -308,10 +308,9 @@ class PlanShapeSpec extends AnyFunSuite with ReadsSharedGates {
     // the queryJoinAst plan; enforce that they stay fully in-plan:
     // (a) the job count is a small constant (per-shape driver loops
     // or per-pattern dictionary actions would scale with |left|),
-    // (b) no LocalTableScan / Scan ExistingRDD — the in-plan
-    // fingerprint of a collect->parallelize roundtrip (the bounded
-    // schema-width actions collect field NAMES into literals, which
-    // do not scan).
+    // (b) no collected data beyond the per-shape setup tables —
+    // a LocalTableScan of left-row or corpus data is the in-plan
+    // fingerprint of a collect->parallelize roundtrip.
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -352,15 +351,25 @@ class PlanShapeSpec extends AnyFunSuite with ReadsSharedGates {
           s"$name memo miss on repeat (entries $memoBefore -> ${idx.astJoinMemoEntries})")
         assert(repeatJobs <= 30, s"$name repeat launched $repeatJobs jobs")
         val p = df.queryExecution.executedPlan.toString
-        // fieldStatsDf (per-field num_docs for the in-plan IDF join)
-        // is a FIELD-COUNT-sized driver literal, not corpus data —
-        // the one LocalTableScan this plan may contain
-        val offending = p.linesIterator
-          .filter(_.contains("LocalTableScan"))
-          .filterNot(_.contains("LocalTableScan [field#"))
-          .toSeq
-        assert(offending.isEmpty,
-          s"$name plan contains driver-local data:\n" + offending.mkString("\n"))
+        // Two kinds of local-relation leaf are by design: fieldStatsDf
+        // (per-field num_docs for the in-plan IDF join, a FIELD-COUNT-
+        // sized literal) and the per-shape setup tables a call
+        // collects under the broadcast gate (SearchIndex.shapeTable:
+        // keyed by `sid`, one row per distinct query shape, so never
+        // more rows than the join's left side — the entries' left is
+        // every 10th document). Left-row or corpus data is not.
+        val leftBound = idx.docs.where(col("doc_id") % 10 === 0).count()
+        val scans = PlanWalk.localScans(df)
+        assert(scans.exists(_.output.exists(_.name == "sid")),
+          s"$name: a batch under the gate reads its shape tables as local relations")
+        val offending = scans.filterNot { l =>
+          val names = l.output.map(_.name)
+          names.headOption.contains("field") ||
+            (names.contains("sid") && l.rows.size <= leftBound)
+        }
+        assert(offending.isEmpty, s"$name plan contains collected data: " +
+          offending.map(l => s"${l.output.mkString(", ")} (${l.rows.size} rows)")
+            .mkString("; "))
         // Scan ExistingRDD is now the EXPECTED leaf for the index's
         // lineage-cut frames (SearchIndex.cutLineage — distributed
         // localCheckpoint blocks, never driver data); the old blanket
@@ -529,4 +538,14 @@ class PlanShapeSpec extends AnyFunSuite with ReadsSharedGates {
         s"$name sorts the candidate stream:\n${p.take(1200)}")
     }
   }
+}
+
+/** Walks a query's executed adaptive plan, query stages included. */
+private object PlanWalk
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  def localScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.LocalTableScanExec] =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case l: org.apache.spark.sql.execution.LocalTableScanExec => l
+    }
 }

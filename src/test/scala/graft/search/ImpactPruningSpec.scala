@@ -48,8 +48,7 @@ class ImpactPruningSpec extends AnyFunSuite with ReadsSharedGates {
   private def bothWithCands(left: DataFrame, gen: Row => SearchQuery, k: Int,
       excludeSelf: Boolean = false)
       : (Set[(Long, Int, Long, Double)], Set[(Long, Int, Long, Double)], Long, Long) = {
-    // auto pruning defaults OFF (r16), so the plain call IS the
-    // exact baseline
+    // the plain call IS the exact baseline
     val exact = norm(idx.queryJoinAst(left, "doc_id", gen, "text", k, excludeSelf))
     val exactCands = idx.lastAstCandsFrame.count()
     val pruned = norm(idx.queryJoinAst(left, "doc_id", gen, "text", k, excludeSelf,
@@ -153,7 +152,7 @@ class ImpactPruningSpec extends AnyFunSuite with ReadsSharedGates {
     idx2.astSeedsPerShape = 8 // small seed set so the union cannot mask the filter
     val left = c2.where(col("doc_id") % 60 === 0).select("doc_id")
     val gen: Row => SearchQuery = _ => MatchAnyTerms("text", Seq("aa", "bb", "ss"))
-    // auto defaults OFF: the plain call is the true unpruned baseline
+    // the plain call is the true unpruned baseline
     val exact = norm(idx2.queryJoinAst(left, "doc_id", gen, "text", 3,
       excludeSelf = true))
     val exactCands = idx2.lastAstCandsFrame.count()
@@ -230,78 +229,6 @@ class ImpactPruningSpec extends AnyFunSuite with ReadsSharedGates {
     assert(c4 == 0.0)
     assert(u4.size == 1 && u4.head.requiresAll && u4.head.slots.size == 2)
     assert(math.abs(u4.head.ub - 3.0 * 2.2) < 1e-12) // sat(idf sum) = (1+2)*(k1+1)
-  }
-
-  test("auto pruning (opt-in): dense shapes prune, gate-rejected batches skip the seed pass, results exact") {
-    val left = corpus.where(col("doc_id") % 16 === 0).select("doc_id")
-    val dGen: Row => SearchQuery = _ => MatchAnyTerms("text", Seq("aa", "bb", "rr"))
-    // default OFF (r16): the plain call IS the exact plan
-    assert(!idx.autoImpactPruning, "auto pruning must default off")
-    val base = norm(idx.queryJoinAst(left, "doc_id", dGen, "text", 3,
-      excludeSelf = true))
-    val baseCands = idx.lastAstCandsFrame.count()
-    assert(idx.lastAstSeedsFrame == null,
-      "default-off plain call must never consider pruning")
-    idx.autoImpactPruning = true
-    idx.autoPruneMinTotalDf = 0L // fixture corpus is tiny; drop the batch break-even
-    try {
-      // opt-in, no flag on the call: auto mode must prune the dense
-      // shape (Σdf ~767 > astSeedsPerShape = 64)
-      val auto = norm(idx.queryJoinAst(left, "doc_id", dGen, "text", 3,
-        excludeSelf = true))
-      val autoCands = idx.lastAstCandsFrame.count()
-      assert(auto == base, "auto pruning must be result-invisible")
-      assert(autoCands < baseCands,
-        s"auto mode should prune the dense shape: $autoCands vs $baseCands")
-      assert(idx.lastAstSeedsFrame != null && idx.lastAstSeedsFrame.count() > 0,
-        "dense shape pays the seed pass")
-      // sparse shape (df(rr) = 15 < 64 = astSeedsPerShape): the gate
-      // admits nothing — the seed pass must be SKIPPED lazily (empty
-      // hook frame = "auto ran, gate admitted zero shapes")
-      val sGen: Row => SearchQuery = _ => MatchTerm("text", "rr")
-      val sparse = norm(idx.queryJoinAst(left, "doc_id", sGen, "text", 3,
-        excludeSelf = true))
-      assert(sparse.nonEmpty)
-      assert(idx.lastAstSeedsFrame.count() == 0,
-        "gate-rejected batch must skip the seed pass under auto mode")
-      // batch break-even: restoring the volume gate must ALSO reject
-      // the dense fixture shape (Σdf ~767 << the sf0.1-calibrated
-      // break-even) and hand back the exact plan
-      idx.autoPruneMinTotalDf = 4000000L
-      val gated = norm(idx.queryJoinAst(left, "doc_id", dGen, "text", 4,
-        excludeSelf = true)) // k=4: fresh memo entry, same semantics modulo k
-      assert(gated.nonEmpty)
-      assert(idx.lastAstSeedsFrame.count() == 0,
-        "below the batch break-even the seed pass must not run")
-    } finally {
-      idx.autoImpactPruning = false
-      idx.autoPruneMinTotalDf = 4000000L
-    }
-  }
-
-  test("auto pruning (opt-in) on queryJoinBool: dense SHOULD-only batches prune, req-led and small batches stay exact") {
-    val empty = array().cast("array<string>")
-    val left = corpus.where(col("doc_id") % 16 === 0)
-      .select(col("doc_id"), empty.as("req"),
-        array(lit("aa"), lit("bb"), lit("rr")).as("opt"), empty.as("exc"))
-    def run() = idx.queryJoinBool(left, "doc_id", col("req"), col("opt"),
-        col("exc"), "text", k = 5, excludeSelf = true)
-      .select(col("qid").cast("long"), col("rank").cast("int"),
-        col("key").cast("long"), round(col("score"), 6))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    val exact = run() // default off
-    idx.autoImpactPruning = true
-    idx.autoPruneMinTotalDf = 0L
-    try {
-      assert(run() == exact, "bool auto pruning must be result-invisible")
-      // batch break-even restored: tiny fixture volume must fall back
-      idx.autoPruneMinTotalDf = 4000000L
-      assert(run() == exact, "gated-out bool batch stays exact")
-    } finally {
-      idx.autoImpactPruning = false
-      idx.autoPruneMinTotalDf = 4000000L
-    }
   }
 
   test("queryJoinBool(impactPruning): bit-identical on SHOULD-only dense, mixed, and attr-filtered shapes") {

@@ -65,38 +65,92 @@ class MemoLifecycleSpec extends AnyFunSuite {
   }
 
   test("astBroadcastShapesMax boundary: forcing the non-broadcast orientation is result-identical") {
-    // A/B at the gate (VERDICT r16 #1): below the gate the probe and
-    // qinfo sides broadcast; at/over it the planner keeps its choice
-    // and the qinfo attach falls back to shuffle-hash. Both
-    // orientations must produce identical hits on the same batch.
+    // A/B at the gate (VERDICT r16 #1): when the left has at most
+    // gate rows the per-shape setup tables are collected into local
+    // relations and the probe and program/clause sides broadcast;
+    // with more left rows but at most gate shapes the tables are
+    // lineage-cut and still broadcast; over both the planner keeps
+    // its choice and the attach falls back to shuffle-hash. All three
+    // front doors must produce identical (qid, rank, key, score) rows
+    // on every side. The left repeats each document's query under a
+    // second qid: 14 rows, 7 shapes.
     val saved = SearchIndex.astBroadcastShapesMax
-    val left = corpus.select(col("doc_id"), col("text"))
+    val twice = corpus.unionByName(corpus.withColumn("doc_id", col("doc_id") + 100))
+    val left = twice.select(col("doc_id"), col("text"))
     val genA: Row => SearchQuery =
       r => MatchAnyTerms("text", r.getAs[String]("text").split(" ").take(3).toSeq)
-    def runBoth(): (Set[(Long, Int, Long, Double)], Set[(Long, Int, Long, Double)]) = {
+    def exact(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long, Double)] =
+      df.select(col("qid").cast("long"), col("rank").cast("int"),
+        col("key").cast("long"), col("score"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    def runAll(): Seq[Set[(Long, Int, Long, Double)]] = {
       val idx = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
       try {
-        val ast = norm(idx.queryJoinAst(left, "doc_id", genA, "text", 3))
-        val l = corpus.select(col("doc_id"), split(col("text"), " ").as("req"))
-        val bool = norm(idx.queryJoinBool(l, "doc_id",
-          slice(col("req"), 1, 1), slice(col("req"), 2, 2),
-          array().cast("array<string>"), "text", 3))
-        (ast, bool)
+        val l = twice.select(col("doc_id"), split(col("text"), " ").as("req"))
+        val empty = array().cast("array<string>")
+        Seq(
+          exact(idx.queryJoinAst(left, "doc_id", genA, "text", 3)),
+          exact(idx.queryJoinBool(l, "doc_id",
+            slice(col("req"), 1, 1), slice(col("req"), 2, 2), empty, "text", 3)),
+          exact(idx.queryJoinBool(l, "doc_id", empty, slice(col("req"), 1, 3), empty,
+            "text", 3, excludeSelf = true, impactPruning = true)))
       } finally idx.unpersist()
     }
     // the gate is process-wide: hold the shared-gates write lock so no
     // suite reading it runs while it is moved
     SharedGates.changing {
       try {
-        SearchIndex.astBroadcastShapesMax = 65536L
-        val (bcAst, bcBool) = runBoth()
+        SearchIndex.astBroadcastShapesMax = 65536L // local-relation setup tables
+        val local = runAll()
+        SearchIndex.astBroadcastShapesMax = 7L // lineage-cut, broadcast
+        val cutBroadcast = runAll()
         SearchIndex.astBroadcastShapesMax = 0L // every batch is "over the gate"
-        val (shAst, shBool) = runBoth()
-        assert(shAst == bcAst)
-        assert(shBool == bcBool)
-        assert(bcAst.nonEmpty && bcBool.nonEmpty)
+        val cut = runAll()
+        Seq("queryJoinAst", "queryJoinBool", "queryJoinBool(impactPruning)")
+          .zip(local.zip(cutBroadcast.zip(cut))).foreach { case (name, (l, (b, c))) =>
+            assert(l.nonEmpty, s"$name returned no hits")
+            assert(b == l, s"$name differs between collected and lineage-cut tables")
+            assert(c == l, s"$name differs across the gate")
+          }
       } finally SearchIndex.astBroadcastShapesMax = saved
     }
+  }
+
+  test("memo footprint: each distinct exact join pins only its canon frame") {
+    // Under the gate a query join's per-shape setup tables are
+    // local relations (no storage); the one frame a memo entry
+    // pins is its |left|-row canonical query checkpoint. N distinct
+    // joins therefore grow the persisted RDDs by exactly N.
+    val idx = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
+    try {
+      val sc = spark.sparkContext
+      val left = corpus.select(col("doc_id"), col("text"),
+        split(col("text"), " ").as("w"))
+      val empty = array().cast("array<string>")
+      val joins: Seq[() => org.apache.spark.sql.DataFrame] = Seq(
+        () => idx.queryJoinAst(left, "doc_id",
+          r => MatchAnyTerms("text", r.getAs[String]("text").split(" ").take(2).toSeq),
+          "text", 3),
+        () => idx.queryJoinAst(left, "doc_id",
+          r => MatchTerm("text", r.getAs[String]("text").split(" ").head), "text", 3),
+        () => idx.queryJoinBool(left, "doc_id", slice(col("w"), 1, 1),
+          slice(col("w"), 2, 2), empty, "text", 3),
+        () => idx.queryJoinBool(left, "doc_id", empty, slice(col("w"), 1, 3), empty,
+          "text", 3),
+        () => idx.queryJoinBool(left, "doc_id", slice(col("w"), 2, 1), empty,
+          slice(col("w"), 1, 1), "text", 3, excludeSelf = true))
+      val entries0 = idx.astJoinMemoEntries
+      // compared as id sets: the context cleaner may drop unrelated
+      // RDDs of earlier suites meanwhile
+      val pinned0 = sc.getPersistentRDDs.keySet
+      joins.zipWithIndex.foreach { case (join, i) =>
+        join().collect()
+        assert(idx.astJoinMemoEntries == entries0 + i + 1)
+        val added = (sc.getPersistentRDDs.keySet -- pinned0).size
+        assert(added == i + 1, s"after ${i + 1} distinct joins: $added persisted RDDs, " +
+          "expected one canon checkpoint per entry")
+      }
+    } finally idx.unpersist()
   }
 
   test("null qids on the pruned flat queryJoin are filtered, not NPE'd; flag stays result-invisible") {

@@ -398,13 +398,6 @@ class QueryJoinAstSpec extends AnyFunSuite with ReadsSharedGates {
   test("repeat invocations share one memoized setup; distinct generators do not") {
     // fresh index so memo counting starts at zero
     val idx2 = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text"), Seq("lang")))
-    // unpruned plans are what make the scored frame k-INDEPENDENT
-    // (the k-bounded top-k is the per-call tail); auto impact pruning
-    // sets the seed threshold from k+1, so its frames key on k by
-    // necessity — this test pins the memo's IDENTITY semantics
-    // (closure fingerprint + canonicalized plan), so pin the
-    // k-sharing property on the path where it holds
-    idx2.autoImpactPruning = false
     try {
       val before = idx2.astJoinMemoEntries
       // one definition site, fresh lambda/DataFrame per call — the

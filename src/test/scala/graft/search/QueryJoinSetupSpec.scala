@@ -1,0 +1,115 @@
+package graft.search
+
+import graft.{ReadsSharedGates, TestSpark}
+import graft.dsl._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Per-call setup cost of the query-join front doors: the SQL
+  * executions and Spark jobs a call launches BEFORE its result is
+  * collected. A cold call checkpoints its |left|-row canonical query
+  * frame once and collects its per-shape setup tables (one for the
+  * exact joins' shapes, one more for the pruned bool threshold, one
+  * more for the AST scoring table); a memoized repeat launches
+  * nothing. Runs on a fresh index, so an exact call that built an
+  * index-wide pruning statistic would show up here too. */
+class QueryJoinSetupSpec extends AnyFunSuite with ReadsSharedGates {
+
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  // 60 documents of 8 seeded words over a 24-word vocabulary
+  lazy val corpus: DataFrame = {
+    val rnd = new scala.util.Random(11)
+    (0L until 60L).map { id =>
+      (id, Seq.fill(8)(s"w${rnd.nextInt(24)}").mkString(" "), 2000 + (id % 4).toInt)
+    }.toDF("doc_id", "text", "year")
+  }
+
+  /** 20 left rows, each query drawn from its own document's words. */
+  lazy val left: DataFrame = corpus.where(col("doc_id") % 3 === 0)
+    .select(col("doc_id"), split(col("text"), " ").as("w"),
+      (col("year") - 3).as("lo"), (col("year") + 3).as("hi"))
+    .select(col("doc_id"), slice(col("w"), 1, 1).as("req"),
+      slice(col("w"), 2, 2).as("opt"), slice(col("w"), 6, 1).as("exc"),
+      col("lo"), col("hi"), col("w"))
+
+  /** Counts SQL executions and jobs per job group. */
+  private object Launches extends SparkListener {
+    private val execs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    private val jobs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach(g => jobs(g) += 1)
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized {
+        s.jobGroupId.foreach(g => execs(g) += 1)
+      }
+      case _ =>
+    }
+    def counts(group: String): (Int, Int) = synchronized((execs(group), jobs(group)))
+  }
+
+  private var groups = 0
+
+  /** Runs `call` under a fresh job group and returns its frame and
+    * the (SQL executions, jobs) it launched. A fence job after the
+    * call is awaited on the listener: events arrive in posting order,
+    * so once the fence shows, every launch of the call is counted. */
+  private def launches(call: => DataFrame): (DataFrame, (Int, Int)) = {
+    val sc = spark.sparkContext
+    groups += 1
+    val group = s"qj-setup-$groups"
+    sc.setJobGroup(group, "query-join setup", interruptOnCancel = false)
+    val df = try call finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-fence", "fence", interruptOnCancel = false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (Launches.counts(s"$group-fence")._2 == 0 && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(Launches.counts(s"$group-fence")._2 == 1, "listener never saw the fence job")
+    (df, Launches.counts(group))
+  }
+
+  test("a cold query join launches a bounded setup; its repeat launches nothing") {
+    spark.sparkContext.addSparkListener(Launches)
+    val idx = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
+    try {
+      idx.docs.count()
+      val astGen: Row => SearchQuery = { r =>
+        val w = r.getSeq[String](r.fieldIndex("w"))
+        And(And(Or(And(MatchTerm("text", w(0)), MatchAnyTerms("text", Seq(w(1), w(2)))),
+          MatchPhrase("text", s"${w(3)} ${w(4)}")),
+          RangeFilter("year", r.getAs[Int]("lo"), r.getAs[Int]("hi"))),
+          Not(MatchTerm("text", w(5))))
+      }
+      val calls = Seq[(String, Int, () => DataFrame)](
+        ("queryJoinBool exact", 2, () => idx.queryJoinBool(left, "doc_id", col("req"),
+          col("opt"), col("exc"), "text", 5,
+          attrFilter = Some(("year", col("lo"), col("hi"))), excludeSelf = true)),
+        ("queryJoinBool(impactPruning)", 3, () => idx.queryJoinBool(left, "doc_id",
+          array().cast("array<string>"), concat(col("req"), col("opt")),
+          array().cast("array<string>"), "text", 5, excludeSelf = true,
+          impactPruning = true)),
+        ("queryJoinAst exact", 3, () => idx.queryJoinAst(left, "doc_id", astGen, "text", 5,
+          excludeSelf = true)))
+      for ((name, maxExecs, call) <- calls) {
+        val (cold, (execs, jobs)) = launches(call())
+        info(s"$name cold call: $execs SQL executions, $jobs jobs")
+        assert(execs <= maxExecs, s"$name cold call: $execs SQL executions ($jobs jobs)")
+        val first = cold.collect().toSet
+        assert(first.nonEmpty, s"$name returned no hits")
+        val (warm, repeat) = launches(call())
+        assert(repeat == (0, 0), s"$name repeat call launched $repeat (executions, jobs)")
+        assert(warm.collect().toSet == first, s"$name repeat differs from its first call")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(Launches)
+      idx.unpersist()
+    }
+  }
+}
