@@ -92,6 +92,39 @@ final case class IndexSpec(
 /** Per-field corpus statistics gathered at build time. */
 final case class FieldStats(numDocs: Long, avgDl: Double)
 
+/** The driver-resident term dictionary of one index: per field, its
+  * terms sorted with a parallel array of their document frequencies —
+  * the engine's analog of the reference's broadcast global-IDF map
+  * (DistributedIndexLuceneRDD.scala:552-587), held without a boxed
+  * entry per term. A lookup is one binary search; a term absent from
+  * the field, or a field absent from the index, has no entry. */
+private[search] final class TermDictionary private (
+    fields: Map[String, (Array[String], Array[Long])]) {
+
+  /** The df of `term` in `field`, if the index holds it. */
+  def df(field: String, term: String): Option[Long] = fields.get(field).flatMap {
+    case (terms, dfs) =>
+      val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
+      if (i >= 0) Some(dfs(i)) else None
+  }
+
+  /** Number of (field, term) entries. */
+  def size: Int = fields.valuesIterator.map(_._1.length).sum
+}
+
+private[search] object TermDictionary {
+
+  /** From collected (field, term, df) stats rows. Terms are sorted on
+    * the driver, in `String` order, so the binary search agrees with
+    * the sort; a null term (no query term can be null) is skipped. */
+  def apply(rows: Array[Row]): TermDictionary =
+    new TermDictionary(rows.filterNot(_.isNullAt(1)).groupBy(_.getString(0)).map {
+      case (field, rs) =>
+        val sorted = rs.sortBy(_.getString(1))
+        field -> (sorted.map(_.getString(1)), sorted.map(_.getLong(2)))
+    })
+}
+
 /** A distributed inverted index over a DataFrame — the engine's
   * `SearchableRDD` (reference: SearchableRDD.scala:94-336), built
   * Spark-first:
@@ -111,8 +144,12 @@ final case class FieldStats(numDocs: Long, avgDl: Double)
   *    (DistributedIndexLuceneRDD.scala:552-587).
   *
   * Scale: stats and postings are computed with hash aggregations
-  * (partial+final, map-side combine), never `groupByKey`; per-query
-  * IDF lookup touches only the query's terms; top-k is
+  * (partial+final, map-side combine), never `groupByKey`; a search
+  * launches one Spark job, its scan: the query's IDFs come from the
+  * index's driver-resident term dictionary, built once per index by
+  * one collect of `stats` while that table has at most
+  * [[SearchIndex.AutoBroadcastMaxPostings]] rows (above that bound a
+  * search pays one IDF lookup job on `stats` as well); top-k is
   * `TakeOrderedAndProject` or the bounded [[TopKAgg]].
   */
 final class SearchIndex private (
@@ -133,15 +170,32 @@ final class SearchIndex private (
   // compilation: AST -> serialized query program -> dsl_query_score
   // ------------------------------------------------------------------
 
-  /** Document frequencies of the given (field, term) pairs: ONE tiny
-    * action on the stats table for the whole set (the engine analog
-    * of the reference's broadcast IDF map, BM25WithGlobalIDFSimilarity.
-    * scala:14-76). Pairs on fields this index never built and terms
-    * absent from the corpus are missing (df 0). The field and term
-    * sets travel as array literals, so every lookup plans to the same
-    * generated class whatever the query; the pair filter runs on the
-    * driver over the at most |fields| x |terms| rows that come back. */
-  private def dfFor(pairs: Set[(String, String)]): Map[(String, String), Long] = {
+  /** Document frequencies of the given (field, term) pairs, read from
+    * the index's [[termDictionary]] with no Spark job when the stats
+    * table has at most [[SearchIndex.AutoBroadcastMaxPostings]] rows
+    * (counted once per index); above that bound, from one action on
+    * the stats table ([[dfFromStats]]). Pairs on fields this index
+    * never built and terms absent from the corpus are missing (df 0). */
+  private def dfFor(pairs: Set[(String, String)]): Map[(String, String), Long] =
+    if (statsRows <= AutoBroadcastMaxPostings) dfFromDictionary(pairs)
+    else dfFromStats(pairs)
+
+  /** [[dfFor]] through the driver-resident dictionary. */
+  private[search] def dfFromDictionary(
+      pairs: Set[(String, String)]): Map[(String, String), Long] = {
+    val dict = termDictionary
+    pairs.iterator.filter(p => isIndexedField(p._1))
+      .flatMap(p => dict.df(p._1, p._2).map(p -> _)).toMap
+  }
+
+  /** [[dfFor]] as ONE tiny action on the stats table for the whole
+    * set: the lookup for a vocabulary the driver cannot hold. The
+    * field and term sets travel as array literals, so every lookup
+    * plans to the same generated class whatever the query; the pair
+    * filter runs on the driver over the at most |fields| x |terms|
+    * rows that come back. */
+  private[search] def dfFromStats(
+      pairs: Set[(String, String)]): Map[(String, String), Long] = {
     val known = pairs.filter(p => isIndexedField(p._1))
     if (known.isEmpty) return Map.empty
     stats
@@ -154,6 +208,31 @@ final class SearchIndex private (
       .toMap
   }
 
+  /** Stats row count, computed once: the gate for holding the
+    * [[termDictionary]] on the driver. */
+  private lazy val statsRows: Long = stats.count()
+
+  /** The `(field, term) -> df` dictionary of this index, built lazily
+    * ONCE by one collect of the stats table and then held on the
+    * driver: the global-IDF map the reference computes once beside
+    * its searcher (GlobalIDFLuceneIndex.scala:43-87). Transient, so a
+    * serialized index never ships it; dropped by [[unpersist]]. */
+  @transient @volatile private var termDictionaryRef: TermDictionary = _
+  private[search] def termDictionary: TermDictionary = {
+    var d = termDictionaryRef
+    if (d == null) synchronized {
+      d = termDictionaryRef
+      if (d == null) {
+        d = TermDictionary(stats.select(col("field"), col("term"), col("df")).collect())
+        termDictionaryRef = d
+      }
+    }
+    d
+  }
+
+  /** Test hook: is the term dictionary held right now? */
+  private[search] def termDictionaryHeld: Boolean = termDictionaryRef != null
+
   /** Corpus-global IDF `log(1 + (N - df + 0.5)/(df + 0.5))` of a term
     * with document frequency `df` in `field`. */
   private def idfOf(field: String, df: Long): Double = {
@@ -161,11 +240,12 @@ final class SearchIndex private (
     math.log(1.0 + (n - df.toDouble + 0.5) / (df.toDouble + 0.5))
   }
 
-  /** Global IDF for the given (field, term) pairs through [[dfFor]]'s
-    * one stats action. Terms absent from the corpus get df=0 → idf =
-    * log(1+(N+0.5)/0.5); pairs on unknown fields (possible via parsed
-    * `field:term` syntax) are dropped — such leaves never match, the
-    * Lucene QueryParser behavior for a nonexistent field. */
+  /** Global IDF for the given (field, term) pairs through [[dfFor]]
+    * (no Spark job below the dictionary's size gate). Terms absent
+    * from the corpus get df=0 → idf = log(1+(N+0.5)/0.5); pairs on
+    * unknown fields (possible via parsed `field:term` syntax) are
+    * dropped — such leaves never match, the Lucene QueryParser
+    * behavior for a nonexistent field. */
   def idfFor(pairs: Set[(String, String)]): Map[(String, String), Double] = {
     val dfs = dfFor(pairs)
     pairs.filter(p => isIndexedField(p._1))
@@ -178,7 +258,7 @@ final class SearchIndex private (
     * |vocab|-bounded aggregate over the persisted postings (a doc
     * carrying the term in two fields counts once via the distinct
     * key), then read per query with the same filtered-collect
-    * discipline as [[idfFor]]. Derived from postings rather than
+    * discipline as [[dfFromStats]]. Derived from postings rather than
     * persisted at save time so it stays correct across save/load and
     * incremental add/remove without extra artifact plumbing;
     * released by [[unpersist]]. */
@@ -259,7 +339,7 @@ final class SearchIndex private (
     * against the expanded terms as one constant-score program leaf
     * (`CANY`). The dictionary probe is one tiny driver action per
     * distinct pattern, the same cost class as
-    * [[idfFor]]; the alternative — a LIKE/levenshtein higher-order
+    * [[dfFromStats]]; the alternative — a LIKE/levenshtein higher-order
     * function over every document's token array — evaluates
     * interpreted per token per doc and cannot use the dictionary's
     * small size. Expansion is capped like Lucene's maxClauseCount;
@@ -374,9 +454,8 @@ final class SearchIndex private (
     (num.toSeq, (str.toSeq ++ spec.keywordFields).distinct)
   }
 
-  /** `struct(ok, score)` of `q` for every document: one stats action
-    * for the IDFs (none when q scores no term), then the shared
-    * scan-path scorer. */
+  /** `struct(ok, score)` of `q` for every document: the IDFs through
+    * [[idfFor]], then the shared scan-path scorer. */
   private def scoreStruct(q: SearchQuery): Column = {
     val p = serialize(q)
     val pairs = p.termFields.zip(p.terms).filter(_._1.nonEmpty).toSet
@@ -387,7 +466,7 @@ final class SearchIndex private (
     * read ONE `dsl_query_score` evaluation of the serialized program
     * (see [[scanScorer]]), whose only data-dependent inputs are the
     * program and IDF array literals — every query plans to the same
-    * generated code. The IDF lookup is one driver action. */
+    * generated code. The IDFs come from the term dictionary, no job. */
   def compile(q: SearchQuery): (Column, Column) = {
     val r = scoreStruct(q)
     (r.getField("ok"), r.getField("score"))
@@ -560,7 +639,7 @@ final class SearchIndex private (
   def explainTerms(field: String, terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "explainTerms needs at least one term")
     require(spec.textFields.contains(field), s"$field is not an indexed text field")
-    // ONE stats action serves the df column and every program's IDFs
+    // ONE df lookup serves the df column and every program's IDFs
     val dfs = dfFor(terms.map(field -> _).toSet)
     def df(t: String): Long = dfs.getOrElse((field, t), 0L)
     val idf = terms.map(t => (field, t) -> idfOf(field, df(t))).toMap
@@ -607,7 +686,7 @@ final class SearchIndex private (
     *
     * Match semantics: any term in any queried field. Plan: a
     * |terms|-row filtered collect on the cross-field stats (the
-    * [[idfFor]] discipline — no corpus-sized job in the query path) +
+    * [[dfFromStats]] discipline — no corpus-sized job in the query path) +
     * the scan-path codegen'd score + TakeOrderedAndProject — the same
     * cost class as [[search]]; every arithmetic fold is in term/field
     * order so a DuckDB oracle replays it bit-exactly.
@@ -626,7 +705,7 @@ final class SearchIndex private (
     val n = fieldStats(fields.head._1).numDocs
     // whole-document df per term from the materialized cross-field
     // stats table — a |terms|-row filtered collect, the same bounded
-    // read discipline as [[idfFor]]. No corpus-sized job in the query
+    // read discipline as [[dfFromStats]]. No corpus-sized job in the query
     // path (r10 verdict item: the previous shape aggregated the whole
     // corpus per call).
     val dfMap = xdfFor(terms)
@@ -3022,6 +3101,7 @@ final class SearchIndex private (
       callFrames.foreach(SearchIndex.releaseFrame(_, blocking))
       callFrames.clear()
     }
+    termDictionaryRef = null // driver heap only; rebuilt on next use
     xdfStatsFrame = null // tracked in callFrames; rebuild on next use
     maxImpactFrame = null // likewise
     astJoinMemo.synchronized {
@@ -3037,7 +3117,9 @@ object SearchIndex {
 
   /** Max postings rows for [[AutoLayout]] to pick the broadcast
     * layout (~a few hundred MB of (field, term, key, tf, dl) rows —
-    * the same order as a generous autoBroadcastJoinThreshold). */
+    * the same order as a generous autoBroadcastJoinThreshold). Also
+    * the most stats rows an index holds on the driver as its
+    * [[TermDictionary]]. */
   val AutoBroadcastMaxPostings: Long = 2L * 1000 * 1000
 
   /** One kept probe term of a pruned boolean shape + the block-max
@@ -3266,21 +3348,7 @@ object SearchIndex {
       if (storageLevel == StorageLevel.NONE) d else cutLineage(d, storageLevel)
 
     var docs = df
-    // SPARK_GRAFT_BUILD_SPREAD=1: repartition an under-parallel source
-    // to defaultParallelism before tokenization (a small-SF corpus
-    // parquet arrives in ~3 partitions and every persisted index frame
-    // inherits that cap). Default OFF: measured A/B at sf0.1/local[32]
-    // (3 runs, back-to-back) the extra tasks cost more than the
-    // parallelism buys — query_join_ast_expand_pruned 19-22s spread vs
-    // 13s unspread, query_join_bool_pruned ~equal — because these
-    // entries run ~100 short stages whose per-task overhead scales
-    // with the partition count while the per-partition work is tiny.
-    // At real scale input partitions >> cores, so the spread is a
-    // no-op there by construction; the hatch exists for mid-size
-    // deployments where one wave of tasks can't cover the input.
     val minPar = spark.sparkContext.defaultParallelism
-    if (sys.env.get("SPARK_GRAFT_BUILD_SPREAD").contains("1") &&
-        df.rdd.getNumPartitions < minPar) docs = docs.repartition(minPar)
     spec.textFields.foreach { f =>
       // array<string> columns are indexed per element (each element is
       // a term) — the reference's SeqField flattens arrays to one text
@@ -3340,10 +3408,10 @@ object SearchIndex {
     // at real scale input partitions >> cores and this is a no-op by
     // construction. Keyless round-robin is safe: every downstream
     // aggregate is partitioning-invariant by the repo's determinism
-    // discipline (InvarianceSpec pins it). Unlike the rejected
-    // SPARK_GRAFT_BUILD_SPREAD (which spread the DOCS frame and with
-    // it every short metadata stage), this touches only the
-    // fan-out-bearing frame.
+    // discipline (InvarianceSpec pins it). Only this fan-out-bearing
+    // frame is spread: spreading the docs frame too put every short
+    // metadata stage on defaultParallelism tasks and measured slower
+    // on the query-join entries at sf0.1.
     val postings0 = perFieldPostings.reduceLeft(_ unionAll _)
     val postings = mat(
       if (storageLevel != StorageLevel.NONE &&

@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * door (`search`, `searchAfter`, SQL), distinct searches of every interactive shape — flat OR,
   * min-match, `Parsed` with `+`/`-`, phrase, keyword filter, range
   * filter, cursor paging and the SQL `graft_search` — compile no new
-  * class, and each still plans to TakeOrderedAndProject. */
+  * class and launch exactly one Spark job, the scan (the IDFs come
+  * from the index's driver-resident term dictionary), and each still
+  * plans to TakeOrderedAndProject. */
 class CodegenReuseSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
@@ -49,26 +51,31 @@ class CodegenReuseSpec extends AnyFunSuite {
     idx.searchAfter(MatchAnyTerms("text", Seq("w4", "w5")), 10, 2.0, 3L).collect()
     sql("w4 w5").collect()
     val before = compiles
-    val searches: Seq[DataFrame] = Seq(
-      idx.search(MatchAnyTerms("text", Seq("w7", "w30", "w55")), 10),
-      idx.search(MatchAnyTerms("text", Seq("w2", "w11", "w40")), 10),
-      idx.search(MatchMin("text", 2, Seq("w1", "w9", "w22", "w50")), 10),
-      idx.search(MatchMin("text", 2, Seq("w3", "w4", "w5", "w6")), 10),
-      idx.search(Parsed("text", "+w1 w8 w12 -w3"), 10),
-      idx.search(Parsed("text", "+w20 w2 -w40"), 10),
-      idx.search(MatchPhrase("text", "w1 w2"), 10),
-      idx.search(MatchPhrase("text", "w5 w1"), 10),
-      idx.search(And(MatchAnyTerms("text", Seq("w1", "w17")), EqFilter("lang", "fr")), 10),
-      idx.search(And(MatchAnyTerms("text", Seq("w6", "w33")), EqFilter("lang", "de")), 10),
-      idx.search(And(MatchAnyTerms("text", Seq("w2", "w9")), RangeFilter("year", 2000, 2004)), 10),
-      idx.search(And(MatchAnyTerms("text", Seq("w8", "w28")), RangeFilter("year", 1996, 2012)), 10),
-      idx.searchAfter(MatchAnyTerms("text", Seq("w1", "w3")), 10, 1.5, 40L),
-      idx.searchAfter(MatchAnyTerms("text", Seq("w2", "w5")), 10, 0.75, 7L),
-      sql("w1 w2 w3"),
-      sql("+w3 w10 w44"))
-    searches.foreach(_.collect())
+    val searches: Seq[() => DataFrame] = Seq(
+      () => idx.search(MatchAnyTerms("text", Seq("w7", "w30", "w55")), 10),
+      () => idx.search(MatchAnyTerms("text", Seq("w2", "w11", "w40")), 10),
+      () => idx.search(MatchMin("text", 2, Seq("w1", "w9", "w22", "w50")), 10),
+      () => idx.search(MatchMin("text", 2, Seq("w3", "w4", "w5", "w6")), 10),
+      () => idx.search(Parsed("text", "+w1 w8 w12 -w3"), 10),
+      () => idx.search(Parsed("text", "+w20 w2 -w40"), 10),
+      () => idx.search(MatchPhrase("text", "w1 w2"), 10),
+      () => idx.search(MatchPhrase("text", "w5 w1"), 10),
+      () => idx.search(And(MatchAnyTerms("text", Seq("w1", "w17")), EqFilter("lang", "fr")), 10),
+      () => idx.search(And(MatchAnyTerms("text", Seq("w6", "w33")), EqFilter("lang", "de")), 10),
+      () => idx.search(
+        And(MatchAnyTerms("text", Seq("w2", "w9")), RangeFilter("year", 2000, 2004)), 10),
+      () => idx.search(
+        And(MatchAnyTerms("text", Seq("w8", "w28")), RangeFilter("year", 1996, 2012)), 10),
+      () => idx.searchAfter(MatchAnyTerms("text", Seq("w1", "w3")), 10, 1.5, 40L),
+      () => idx.searchAfter(MatchAnyTerms("text", Seq("w2", "w5")), 10, 0.75, 7L),
+      () => sql("w1 w2 w3"),
+      () => sql("+w3 w10 w44"))
+    // each search is planned and collected under its own job count
+    val counted = searches.map(s => Launches(spark) { val df = s(); df.collect(); df })
     assert(compiles == before, s"${compiles - before} classes compiled after warm-up")
-    searches.take(14).foreach { df =>
+    val jobs = counted.map(_._2._2)
+    assert(jobs.forall(_ == 1), s"jobs per search after warm-up: ${jobs.mkString(", ")}")
+    counted.take(14).map(_._1).foreach { df =>
       val plan = df.queryExecution.executedPlan
       assert(plan.nodeName == "TakeOrderedAndProject", plan.toString.take(400))
     }
@@ -83,9 +90,13 @@ class CodegenReuseSpec extends AnyFunSuite {
     // result's only class of its own; compile it off the index
     spark.range(1).select(col("id").as("doc_id"), lit(1.0).as("score")).collect()
     val before = compiles
-    val rows = spark.sql(s"SELECT * FROM graft_search('$dir', '+w3 w10 w44', 10)").collect()
+    val (rows, (_, sqlJobs)) = Launches(spark)(
+      spark.sql(s"SELECT * FROM graft_search('$dir', '+w3 w10 w44', 10)").collect())
     assert(compiles == before, s"${compiles - before} classes compiled by the first SQL search")
-    val expect = idx.searchRaw("+w3 w10 w44", 10).select("doc_id", "score").collect()
+    val (expect, (_, scalaJobs)) = Launches(spark)(
+      idx.searchRaw("+w3 w10 w44", 10).select("doc_id", "score").collect())
+    assert(sqlJobs <= scalaJobs, s"the first SQL search launched $sqlJobs jobs, " +
+      s"the same Scala search $scalaJobs")
     assert(rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       expect.map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     SearchQueries.clearCache()

@@ -2,8 +2,6 @@ package graft.search
 
 import graft.{ReadsSharedGates, TestSpark}
 import graft.dsl._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,46 +35,7 @@ class QueryJoinSetupSpec extends AnyFunSuite with ReadsSharedGates {
       slice(col("w"), 2, 2).as("opt"), slice(col("w"), 6, 1).as("exc"),
       col("lo"), col("hi"), col("w"))
 
-  /** Counts SQL executions and jobs per job group. */
-  private object Launches extends SparkListener {
-    private val execs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    private val jobs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .foreach(g => jobs(g) += 1)
-    }
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => synchronized {
-        s.jobGroupId.foreach(g => execs(g) += 1)
-      }
-      case _ =>
-    }
-    def counts(group: String): (Int, Int) = synchronized((execs(group), jobs(group)))
-  }
-
-  private var groups = 0
-
-  /** Runs `call` under a fresh job group and returns its frame and
-    * the (SQL executions, jobs) it launched. A fence job after the
-    * call is awaited on the listener: events arrive in posting order,
-    * so once the fence shows, every launch of the call is counted. */
-  private def launches(call: => DataFrame): (DataFrame, (Int, Int)) = {
-    val sc = spark.sparkContext
-    groups += 1
-    val group = s"qj-setup-$groups"
-    sc.setJobGroup(group, "query-join setup", interruptOnCancel = false)
-    val df = try call finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-fence", "fence", interruptOnCancel = false)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (Launches.counts(s"$group-fence")._2 == 0 && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    assert(Launches.counts(s"$group-fence")._2 == 1, "listener never saw the fence job")
-    (df, Launches.counts(group))
-  }
-
   test("a cold query join launches a bounded setup; its repeat launches nothing") {
-    spark.sparkContext.addSparkListener(Launches)
     val idx = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
     try {
       idx.docs.count()
@@ -98,18 +57,15 @@ class QueryJoinSetupSpec extends AnyFunSuite with ReadsSharedGates {
         ("queryJoinAst exact", 3, () => idx.queryJoinAst(left, "doc_id", astGen, "text", 5,
           excludeSelf = true)))
       for ((name, maxExecs, call) <- calls) {
-        val (cold, (execs, jobs)) = launches(call())
+        val (cold, (execs, jobs)) = Launches(spark)(call())
         info(s"$name cold call: $execs SQL executions, $jobs jobs")
         assert(execs <= maxExecs, s"$name cold call: $execs SQL executions ($jobs jobs)")
         val first = cold.collect().toSet
         assert(first.nonEmpty, s"$name returned no hits")
-        val (warm, repeat) = launches(call())
+        val (warm, repeat) = Launches(spark)(call())
         assert(repeat == (0, 0), s"$name repeat call launched $repeat (executions, jobs)")
         assert(warm.collect().toSet == first, s"$name repeat differs from its first call")
       }
-    } finally {
-      spark.sparkContext.removeSparkListener(Launches)
-      idx.unpersist()
-    }
+    } finally idx.unpersist()
   }
 }
