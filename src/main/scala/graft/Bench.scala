@@ -15,31 +15,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bounded top-k aggregates (TopKAgg) over thousands of groups:
-      // the 128-key default forces the sort-based object-agg fallback,
-      // which serializes each group buffer per row (measured 155s /
-      // 7.3GB spill on a 3.7M-row seed aggregate, SCALE.md r15)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      // bound plan-string rendering: Spark eagerly builds the
-      // SQLExecutionStart listener event's physicalPlanDescription
-      // (treeString of the whole physical plan) for EVERY action even
-      // with the UI disabled. The pruned query-join plans are MBs of
-      // text; jstack sampling showed TreeNode.generateTreeString hot
-      // in 57/75 driver samples and a 12.6s driver-only gap before the
-      // timed job (r16). Truncating the diagnostic string is
-      // result-invisible; measured query_join_ast_expand_pruned
-      // 14.3-19.3s -> 9.4s. Driver-side plan rendering is a real
-      // 100 TB concern too (same string is built on every AQE
-      // re-plan), so the production recommendation is the same value.
-      .config("spark.sql.maxPlanStringLength", "32768")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/Spark warmup outside the timed loop: first-use costs
     // (whole-stage codegen infrastructure, parquet reader init, task

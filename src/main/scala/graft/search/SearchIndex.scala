@@ -993,9 +993,8 @@ final class SearchIndex private (
     * large batches of flat term queries. */
   def batchSearchDsl(queries: Seq[(Long, SearchQuery)], k: Int): DataFrame =
     if (queries.isEmpty)
-      // zero queries (e.g. a queryJoinDsl left that filtered to no
-      // rows): an empty frame with the contract schema, not an
-      // empty.reduceLeft crash
+      // zero queries (an empty batch): an empty frame with the
+      // contract schema, not an empty.reduceLeft crash
       lightSearch(AllDocs, 1)
         .withColumn("qid", lit(0L)).withColumn("rank", lit(1))
         .select(col("qid"), col("rank"), key.as("key"), col("score"))
@@ -1130,72 +1129,34 @@ final class SearchIndex private (
   /** Query join with an ARBITRARY query generator — the reference's
     * `queryJoin(other, queryGenerator: T => DslQuery, ...)`
     * (SearchableRDD.scala:257-298): each left row generates any DSL
-    * AST (phrase, boolean, filtered...), not just a flat term set.
+    * AST (phrase, boolean, filtered...), not just a flat term set,
+    * and its top-k hits join back onto the left row.
     *
-    * Execution: the query batch is collected to the driver and each
-    * AST compiles to its own scan-path plan ([[batchSearchDsl]]),
-    * so this is for DRIVER-SMALL query batches (hundreds) of complex
-    * queries — the same regime where the reference materializes the
-    * query array into a batch per shard (PartitionsIndexLuceneRDD.
-    * scala:273). CORPUS-SCALE lefts belong on [[queryJoinAst]],
-    * which distributes the same arbitrary-generator contract with a
-    * constant-size plan (or on the [[queryJoin]]/[[queryJoinPhrase]]/
-    * [[queryJoinBool]] specializations). Both paths score through
-    * the same serialized program, so they accept the same queries.
+    * Runs on [[queryJoinAst]] (fully distributed, nothing collected,
+    * plan size constant in |left|) and joins its (qid, rank, key,
+    * score) hits back on the qid; the left's columns plus rank, key
+    * and score come out, like [[queryJoin]].
     *
-    * @param queryGen driver-side function from a left Row to the
-    *   query AST; reads whatever columns the caller selected into
-    *   `left`
+    * @param queryGen function from a left Row to the query AST; runs
+    *   on the executors and reads whatever columns the caller selected
+    *   into `left`
     * @param excludeSelf drop hits whose key equals the query's qid;
-    *   per-query top-k is re-ranked after the exclusion so each query
-    *   still yields up to k hits */
+    *   per-query top-k is taken after the exclusion so each query
+    *   still yields up to k hits
+    * @param pruneField the probe field handed to [[queryJoinAst]]
+    *   (default: the first indexed text field). A generator whose
+    *   queries lead on a DIFFERENT text field compiles to cross-field
+    *   leaves with no probe alternatives, so every shape becomes a
+    *   TOTAL (full-corpus) pass — correct, but it defeats the pruning
+    *   `impactPruning` asks for. Pass the field the generated queries'
+    *   scored leaves live on. */
   def queryJoinDsl(left: DataFrame, qidCol: String, queryGen: Row => SearchQuery,
       k: Int, excludeSelf: Boolean = false,
       impactPruning: Boolean = false,
       pruneField: Option[String] = None): DataFrame = {
-    // impact-ordered EXACT pruning: the generator contract is
-    // identical to queryJoinAst's, so pruning routes there (fully
-    // distributed, nothing collected, MaxScore candidate pruning) and
-    // also lifts this path's driver-small left cap.
-    //
-    // PROBE FIELD (ADVICE r15): the pruned rewrite compiles against
-    // ONE probe field. The default is the first indexed text field;
-    // a generator whose queries lead on a DIFFERENT text field then
-    // compiles to cross-field leaves with no probe alternatives, so
-    // every shape becomes a TOTAL (full-corpus) pass — correct, but
-    // it defeats the pruning the caller asked for. Pass `pruneField`
-    // when the generated queries' scored leaves live on a secondary
-    // text field.
-    if (impactPruning) {
-      val pf = pruneField.getOrElse(spec.textFields.head)
-      val hits0 = queryJoinAst(left, qidCol, queryGen, pf, k,
-        excludeSelf, impactPruning = true)
-      return left.join(hits0, left(qidCol) === hits0("qid")).drop(hits0("qid"))
-    }
-    // hard left-size guard: this is the driver-batch path — it
-    // COLLECTS the left and plans one scan per query, while
-    // [[queryJoinAst]] runs the same queries fully distributed. Fail
-    // fast with a pointer at the corpus-scale path instead of OOMing
-    // the driver; the probe is a LIMIT-bounded count, never a full
-    // scan of a large left.
-    val cap = SearchIndex.queryJoinDslMaxLeft
-    val probed = left.limit(cap + 1).count()
-    require(probed <= cap,
-      s"queryJoinDsl is the driver-batch path: it collects the left side, and this " +
-        s"left exceeds $cap rows — use queryJoinAst (the same queries, fully " +
-        "distributed) or, if the collect is intended, raise SearchIndex.queryJoinDslMaxLeft")
-    val queries = left.collect().toSeq.map(r => r.getAs[Number](qidCol).longValue() ->
-      queryGen(r))
-    val raw = batchSearchDsl(queries, if (excludeSelf) k + 1 else k)
-    val hits0 =
-      if (!excludeSelf) raw
-      else raw.where(col("qid") =!= col("key"))
-        .withColumn("rank",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("qid")).orderBy(col("score").desc, col("key").asc)))
-        .where(col("rank") <= k)
-    val hits = broadcast(hits0) // bounded: |left| x k rows, left is driver-small
-    left.join(hits, left(qidCol) === hits0("qid")).drop(hits0("qid"))
+    val hits = queryJoinAst(left, qidCol, queryGen, pruneField.getOrElse(spec.textFields.head),
+      k, excludeSelf, impactPruning = impactPruning)
+    left.join(hits, left(qidCol) === hits("qid")).drop(hits("qid"))
   }
 
   /** Data-driven PHRASE query join: each left row contributes a
@@ -1204,10 +1165,11 @@ final class SearchIndex private (
     * docs from the postings (every distinct phrase term present),
     * adjacency verified with the native `phrase_count` over the
     * stored token arrays, scores identical to `MatchPhrase`'s scan
-    * path. Unlike [[queryJoinDsl]] (arbitrary ASTs, driver-collected
-    * batch, one plan branch per query) nothing is collected and the
-    * plan size is constant in |left| — the corpus-scale path for the
-    * reference's phrase-generating `queryGenerator`
+    * path. Nothing is collected and the plan size is constant in
+    * |left|, and unlike a generated `MatchPhrase` through
+    * [[queryJoinAst]] no program is serialized per query — the
+    * specialized path for the reference's phrase-generating
+    * `queryGenerator`
     * (SearchableRDD.scala:257-298). Output is (qid, rank, key, score)
     * like [[lightQueryJoin]]. */
   def queryJoinPhrase(left: DataFrame, qidCol: String, phraseCol: Column, field: String,
@@ -1282,8 +1244,8 @@ final class SearchIndex private (
     * term arrays (Lucene BooleanQuery clause roles; the DSL's
     * `And` / `matchMin` / `Not` shape) plus an optional numeric range
     * filter, and the WHOLE batch runs as ONE distributed plan.
-    * Unlike [[queryJoinDsl]] nothing is collected and the plan size
-    * is constant in |left| — a left of millions of rows is fine.
+    * Nothing is collected and the plan size is constant in |left| —
+    * a left of millions of rows is fine.
     *
     * Plan (the [[queryJoinPhrase]] technique — postings candidates +
     * in-row verify, which is also Lucene's BooleanScorer shape: drive
@@ -1380,38 +1342,8 @@ final class SearchIndex private (
       s"bool#af=${attrFilter.map(_._1).getOrElse("-")}#k=$k#mom=$minOptMatch" +
         s"#mh=$maxHitsPerIndex#es=$excludeSelf#ip=$impactPruning",
       qidCol, field)
-    val scored =
-      if (!memoEnabled) {
-        // memo hatch (SPARK_GRAFT_MEMO=0): build fresh, frames live in
-        // callFrames (released at unpersist) — cold-cost measurement
-        val (df, frames) = buildBoolScored(canonRaw, field, k,
-          minOptMatch, attrFilter.map(_._1), excludeSelf,
-          maxHitsPerIndex, impactPruning)
-        frames.foreach(trackPersist)
-        df
-      } else astJoinMemo.synchronized {
-      astJoinMemo.get(memoKey) match {
-        case Some(e @ (plan, df, _)) if plan.sameResult(canonPlan) =>
-          astJoinMemo.remove(memoKey)
-          astJoinMemo(memoKey) = e
-          df
-        case existing =>
-          val (df, frames) = buildBoolScored(canonRaw, field, k,
-            minOptMatch, attrFilter.map(_._1), excludeSelf,
-            maxHitsPerIndex, impactPruning)
-          // a semanticHash collision whose sameResult failed displaces
-          // the old entry — park its frames (see parkDisplaced), don't
-          // leak them untracked (ADVICE r16)
-          existing.foreach { case (_, _, old) => parkDisplaced(old) }
-          astJoinMemo(memoKey) = (canonPlan, df, frames)
-          while (astJoinMemo.size > astJoinMemoCap) {
-            val (_, (_, _, evicted)) = astJoinMemo.head
-            astJoinMemo.remove(astJoinMemo.head._1)
-            parkDisplaced(evicted)
-          }
-          df
-      }
-    }
+    val scored = memoized(memoKey, canonPlan)(buildBoolScored(canonRaw, field, k,
+      minOptMatch, attrFilter.map(_._1), excludeSelf, maxHitsPerIndex, impactPruning))
     val preFanCap = attrFilter.isEmpty && !excludeSelf
     perQueryTopK(
       if (excludeSelf) scored.where(col("qid") =!= col("key")) else scored, k,
@@ -1524,21 +1456,14 @@ final class SearchIndex private (
     // the broadcast gate: a collected table is under it by
     // construction; above the collect gate the lineage-cut table is
     // counted
-    val bcProbes = collect || qinfo.count() <= SearchIndex.astBroadcastShapesMax
-    def small(df: DataFrame): DataFrame = if (bcProbes) broadcast(df) else df
-    val posts = postings.where(col("field") === lit(field))
-      .select(col("term"), col("key"))
-    // candidate generation: one postings probe per shape on the
-    // rarest required term — (sid, key) is unique by construction, no
-    // aggregate. The clause arrays ride along on the BROADCAST query
-    // side of the probe join, so candidates leave the join carrying
-    // everything the verifier needs — no second candidate-sized join.
-    // SHOULD-only shapes probe every optional term and pay a
-    // distinct; the branch is empty (and AQE-pruned) when every query
-    // has a required clause.
-    // in-row verification + scoring: join the candidates' token
-    // arrays (and the attr column, same join — no second corpus
-    // join) and run one codegen'd pass per (query, candidate)
+    val bc = collect || qinfo.count() <= SearchIndex.astBroadcastShapesMax
+    def small(df: DataFrame): DataFrame = if (bc) broadcast(df) else df
+    // in-row verification + scoring: the candidates' token arrays
+    // (and the attr column, same join — no second corpus join), then
+    // the clause arrays, one codegen'd pass per (query, candidate).
+    // Carrying __terms/__roles/__idfs on every candidate row through
+    // the corpus exchange shuffled 93 MB where the bare pairs are
+    // ~3 MB at sf0.1 (r17).
     val attrSel = attrField match {
       case Some(f) => Seq(col(f).cast("double").as("__attr"))
       case None => Seq.empty
@@ -1549,58 +1474,28 @@ final class SearchIndex private (
       case BM25(k1v, bv) => (0, k1v, bv)
       case TFIDF() => (1, 0.0, 0.0)
     }
-    // shuffle-hash, not sort-merge: the corpus side builds a
-    // per-partition hash table (bounded by partition sizing, as for
-    // any hash join of the corpus) while the candidate stream — the
-    // side that reaches |shapes| x min-df rows — streams through
-    // UNSORTED. An SMJ here sorts the wide candidate stream and is
-    // exactly the 13 GB-spill shape the 16x scale run caught in
-    // queryJoinAst.
-    // Candidates cross that exchange as BARE (sid, key) pairs (r17):
-    // the clause arrays re-attach AFTER the corpus shuffle from the
-    // |shapes|-bounded qinfo (broadcast under the same
-    // astBroadcastShapesMax gate as the probe joins; the planner's
-    // choice beyond it). Carrying __terms/__roles/__idfs on every
-    // candidate row shuffled 93 MB where the pairs are ~3 MB at
-    // sf0.1 (§2.3 — the r13 bare-pair discipline, which the native
-    // pruning pipeline had lost).
-    // probe-join ORIENTATION is forced, not left to size estimates
-    // (r16): stream the POSTINGS side (it keeps its partitioning, so
-    // the candidate fan-out parallelizes across the postings cache)
-    // and broadcast the |shapes|-bounded query side — the shape this
-    // pipeline's design always assumed. Left to the planner, an
-    // sf-scale postings cache fits under the auto-broadcast
-    // threshold and the whole fan-out lands on the query side's ONE
-    // AQE-coalesced partition (measured: a 2.5s single-task stage
-    // doing the entire probe+verify). Corpus-scale query batches
-    // (beyond astBroadcastShapesMax) keep the planner's choice.
     val qSlim = qinfo.select(col("sid"), col("n_req"), col("__terms"),
       col("__roles"), col("__idfs"))
-    def verify(cands: DataFrame): DataFrame = {
-      val scored = cands
-        .join(docSide.hint("shuffle_hash"), cands("key") === col("__doc_key"))
-        // beyond the broadcast gate the attach stays a SHUFFLE_HASH
-        // with qinfo as build side — the candidate stream must never
-        // be sorted (PlanShapeSpec pin; the 16x SMJ-spill lesson)
-        .join(if (bcProbes) broadcast(qSlim) else qSlim.hint("shuffle_hash"),
-          Seq("sid"))
-        .withColumn("__bq", call_function("bool_query_score",
+    def verify(cands: DataFrame): DataFrame =
+      attachAndScore(cands, docSide, qSlim, bc, call_function("bool_query_score",
           col("__tokens"), col("__terms"), col("__roles"), col("__idfs"),
           lit(kind), lit(k1), lit(b), lit(fs.avgDl)))
-      scored
-        .where(col("__bq.req") === col("n_req") && col("__bq.exc") === 0 &&
-          col("__bq.opt") >= greatest(lit(minOptMatch),
+        .where(col("__r.req") === col("n_req") && col("__r.exc") === 0 &&
+          col("__r.opt") >= greatest(lit(minOptMatch),
             when(col("n_req") === 0, lit(1)).otherwise(lit(0))))
-        .select((Seq(col("sid"), col("key"), col("__bq.score").as("score")) ++
+        .select((Seq(col("sid"), col("key"), col("__r.score").as("score")) ++
           attrSel.map(_ => col("__attr"))): _*)
-    }
     // qid fan-out: canon against the shape table's clause arrays
     val fan = canon
       .join(small(qinfo.select(col("__req"), col("__opt"), col("__exc"), col("sid"))),
         Seq("__req", "__opt", "__exc"))
       .select(col("qid"), col("sid"), col("__lo"), col("__hi"))
-    val probes = qinfo.select(col("sid"), col("n_req"),
-      explode(col("__probes")).as("term"))
+    val probes = qinfo.select(col("sid"), col("__probes").as("probe"))
+    // per-qid attr bounds, applied after the fan-out
+    def inBounds(fanned: DataFrame): DataFrame =
+      if (attrField.isEmpty) fanned
+      else fanned.where((col("__lo").isNull || col("__attr") >= col("__lo")) &&
+        (col("__hi").isNull || col("__attr") <= col("__hi")))
     // impact-ordered EXACT pruning, native (MaxScore adapted to
     // per-qid attr bounds — see the method comment):
     //   1. per shape, score a bounded seed set: the top
@@ -1625,17 +1520,6 @@ final class SearchIndex private (
     val thetaBySid: Option[DataFrame] =
       if (!impactPruning) None
       else {
-        val sPostsTfDl = postings.where(col("field") === lit(field))
-          .select(col("term"), col("key"), col("tf"), col("dl"))
-        val idfC = log(lit(1.0) +
-          (lit(fs.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
-        val prio = spec.similarity match {
-          case BM25(a, c) =>
-            col("__idf") * (col("tf") * lit(a + 1.0)) /
-              (col("tf") + lit(a) * (lit(1.0 - c) + lit(c) * col("dl") / lit(fs.avgDl)))
-          case TFIDF() =>
-            sqrt(col("tf")) * col("__idf") * col("__idf") / sqrt(col("dl"))
-        }
         // prunability gate (see [[SearchIndex.boolPrunable]]): only
         // shapes where the threshold machinery has leverage pay the
         // seed scan; the rest keep the exact probe untouched
@@ -1661,40 +1545,10 @@ final class SearchIndex private (
             x => x.getField("__roles") >= 0 && x.getField("__dfs") > 0)).as("m"))
           .where(col("m").isNotNull)
           .select(col("sid"), col("m.__terms").as("term"), col("m.__dfs").as("df"))
-        // stream the postings side and broadcast the seed-term frame
-        // (with its df): left to the planner, sf-scale
-        // postings fit under the auto-broadcast threshold and the
-        // whole fan-out + partial top-k lands in the seed frame's
-        // single AQE-coalesced partition (measured ~3.4s single-task
-        // stage); at real scale postings can never broadcast, so
-        // this is the only plan that survives anyway.
-        // Aggregate per TERM, then fan out to shapes (r16): prio's
-        // idf factor is constant within a term, so a shape's top-N
-        // seed postings ARE its seed term's per-term top-N — the
-        // per-shape aggregate shipped |shapes| x df(term) rows
-        // through partial buffers too sparse to reject (measured
-        // 52 MB of partial-buffer shuffle on the bool entry); the
-        // per-term one ships |distinct terms| x N.
-        val seedTermTop = sPostsTfDl
-          .join(broadcast(seedTerm.select(col("term"), col("df")).distinct()), Seq("term"))
-          .withColumn("__idf", idfC)
-          .groupBy(col("term"))
-          .agg(topkAggFor(posts, math.max(astSeedsPerShape, k + 1))(
-            col("key"), prio).as("__s"))
-        val seeds = seedTerm.select(col("sid"), col("term")).join(seedTermTop, Seq("term"))
-          .select(col("sid"), explode(col("__s")).as("h"))
-          .select(col("sid"), col("h.key").as("key"))
-          .dropDuplicates("sid", "key")
-        val seedScored = verify(seeds) // bare pairs; verify attaches qinfo
-        val seedFan = seedScored.join(fan, Seq("sid"))
-        val seedPass =
-          if (attrField.isDefined)
-            seedFan.where((col("__lo").isNull || col("__attr") >= col("__lo")) &&
-              (col("__hi").isNull || col("__attr") <= col("__hi")))
-          else seedFan
+        val seedPass = inBounds(verify(seedScan(seedTerm, field, k + 1)).join(fan, Seq("sid")))
         val thetaQ = seedPass
           .groupBy(col("sid"), col("qid"))
-          .agg(topkAggFor(posts, k + 1)(col("key"), col("score")).as("__top"))
+          .agg(topkAggFor(seedPass, k + 1)(col("key"), col("score")).as("__top"))
           .select(col("sid"),
             when(size(col("__top")) >= k + 1,
               element_at(col("__top"), k + 1).getField("score")).as("__thq"))
@@ -1713,26 +1567,9 @@ final class SearchIndex private (
         // branches below
         Some(shapeTable(theta.where(col("__theta").isNotNull), keep, collect)._1)
       }
-    def termJoin(p: DataFrame, big: DataFrame): DataFrame =
-      if (bcProbes) big.join(broadcast(p), Seq("term"))
-      else p.join(big, Seq("term"))
     val cands = thetaBySid match {
-      case None =>
-        val reqCand = termJoin(probes.where(col("n_req") > 0), posts)
-          .select(col("sid"), col("key"))
-        val optCand = termJoin(probes.where(col("n_req") === 0), posts)
-          .select(col("sid"), col("key"))
-          .dropDuplicates("sid", "key")
-        reqCand.unionByName(optCand)
+      case None => exactCands(probes, field, bc)
       case Some(theta) =>
-        val sPostsTfDl = postings.where(col("field") === lit(field))
-          .select(col("term"), col("key"), col("tf"), col("dl"))
-        val partE = spec.similarity match {
-          case BM25(a, c) =>
-            (col("tf") * lit(a + 1.0)) /
-              (col("tf") + lit(a) * (lit(1.0 - c) + lit(c) * col("dl") / lit(fs.avgDl)))
-          case TFIDF() => sqrt(col("tf")) / sqrt(col("dl"))
-        }
         val pExp = if (spec.similarity == TFIDF()) 2.0 else 1.0
         val essUdf = udf((terms: Seq[String], roles: Seq[Int], idfsA: Seq[Double],
             mis: Seq[Double], dfs: Seq[Long], nReq: Int, probeTs: Seq[String],
@@ -1755,22 +1592,13 @@ final class SearchIndex private (
             explode(col("__kept")).as("pt"))
           .select(col("sid"), col("__nk"),
             col("pt.term").as("term"), col("pt.mp").as("__mp"))
-        val prunedSingle = termJoin(prunedProbes.where(col("__nk") === 1), sPostsTfDl)
-          .where(partE >= col("__mp"))
-          .select(col("sid"), col("key"))
-        val prunedMulti = termJoin(prunedProbes.where(col("__nk") > 1), sPostsTfDl)
-          .where(partE >= col("__mp"))
-          .select(col("sid"), col("key"))
+        val prunedSingle = blockMaxCands(prunedProbes.where(col("__nk") === 1), field, bc)
+        val prunedMulti = blockMaxCands(prunedProbes.where(col("__nk") > 1), field, bc)
           .dropDuplicates("sid", "key")
         // exact branch for shapes whose threshold did not bind OR
         // whose essential set came back empty ("no bite")
-        val unpruned = probes.join(withTheta.select("sid"), Seq("sid"), "left_anti")
-        val uReq = termJoin(unpruned.where(col("n_req") > 0), posts)
-          .select(col("sid"), col("key"))
-        val uOpt = termJoin(unpruned.where(col("n_req") === 0), posts)
-          .select(col("sid"), col("key"))
-          .dropDuplicates("sid", "key")
-        prunedSingle.unionByName(prunedMulti).unionByName(uReq).unionByName(uOpt)
+        prunedSingle.unionByName(prunedMulti).unionByName(exactCands(
+          probes.join(withTheta.select("sid"), Seq("sid"), "left_anti"), field, bc))
     }
     val verified = verify(cands)
     // probe-depth cap (the per-SHAPE form of maxHitsPerIndex): bound
@@ -1784,13 +1612,7 @@ final class SearchIndex private (
       if (maxHitsPerIndex < k && preFanCap)
         perPartitionTopK(verified, "sid", maxHitsPerIndex)
       else verified
-    val joined = capped.join(fan, Seq("sid"))
-    val filtered =
-      if (attrField.isDefined)
-        joined.where((col("__lo").isNull || col("__attr") >= col("__lo")) &&
-          (col("__hi").isNull || col("__attr") <= col("__hi")))
-      else joined
-    (filtered.select(col("qid"), col("key"), col("score")),
+    (inBounds(capped.join(fan, Seq("sid"))).select(col("qid"), col("key"), col("score")),
       entryFrames.toSeq)
   }
 
@@ -1798,10 +1620,10 @@ final class SearchIndex private (
     * generator — the corpus-scale form of the reference's
     * `queryJoin(other, queryGenerator: T => DslQuery, ...)`
     * (SearchableRDD.scala:257-298) for ANY generated AST shape, not
-    * just the flat/phrase/boolean specializations. Unlike
-    * [[queryJoinDsl]] nothing is ever collected to the driver and
-    * the PLAN is constant-size in |left| — a corpus-proportional
-    * left is fine.
+    * just the flat/phrase/boolean specializations ([[queryJoinDsl]]
+    * is this join with the left's columns joined back). Nothing is
+    * ever collected to the driver and the PLAN is constant-size in
+    * |left| — a corpus-proportional left is fine.
     *
     * How: `queryGen` runs on the EXECUTORS (the reference ships the
     * same closure to its shards); each AST serializes to
@@ -1919,40 +1741,8 @@ final class SearchIndex private (
       closureFingerprint(queryGen) +
         s"#cap=$maxCandidatesPerShape#prune=$pruneK",
       qidCol, field)
-    val scored =
-      if (!memoEnabled) {
-        // memo hatch (SPARK_GRAFT_MEMO=0): build fresh, frames live in
-        // callFrames (released at unpersist) — cold-cost measurement
-        val (df, frames) = buildAstScored(left, qidCol, queryGen, field,
-          maxCandidatesPerShape, pruneK)
-        frames.foreach(trackPersist)
-        df
-      } else astJoinMemo.synchronized {
-      astJoinMemo.get(memoKey) match {
-        case Some(e @ (plan, df, _)) if plan.sameResult(leftPlan) =>
-          // LRU refresh: re-insert at the tail of the access order
-          astJoinMemo.remove(memoKey)
-          astJoinMemo(memoKey) = e
-          df
-        case existing =>
-          val (df, frames) = buildAstScored(left, qidCol, queryGen, field,
-            maxCandidatesPerShape, pruneK)
-          // hash-collision displacement: park the old entry's frames
-          // (see parkDisplaced) instead of leaking them (ADVICE r16)
-          existing.foreach { case (_, _, old) => parkDisplaced(old) }
-          astJoinMemo(memoKey) = (leftPlan, df, frames)
-          // bounded memo (ADVICE r10): a long-lived index serving many
-          // distinct (left, generator) joins would otherwise pin an
-          // unbounded set of stored canon/shape frames.
-          // Eviction PARKS the entry's own frames until unpersist.
-          while (astJoinMemo.size > astJoinMemoCap) {
-            val (_, (_, _, evicted)) = astJoinMemo.head
-            astJoinMemo.remove(astJoinMemo.head._1)
-            parkDisplaced(evicted)
-          }
-          df
-      }
-    }
+    val scored = memoized(memoKey, leftPlan)(buildAstScored(left, qidCol, queryGen, field,
+      maxCandidatesPerShape, pruneK))
     // probe-depth cap: qid-grained (post fan-out and self-exclusion,
     // so the cap can never eat rows a downstream step still needed)
     perQueryTopK(
@@ -2006,22 +1796,155 @@ final class SearchIndex private (
   private[graft] def astJoinMemoEntries: Int =
     astJoinMemo.synchronized(astJoinMemo.size)
 
+  /** The memo lookup of both query-join front doors: a hit (same key
+    * AND `sameResult` on the analyzed plan) is LRU-refreshed and
+    * returns its scored frame; a miss builds one, parks the frames of
+    * a hash-collision-displaced entry and of LRU victims past
+    * [[astJoinMemoCap]] (see [[parkDisplaced]]), and stores it. */
+  private def memoized(key: (Int, String, String, String),
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
+      build: => (DataFrame, Seq[DataFrame])): DataFrame =
+    astJoinMemo.synchronized {
+      astJoinMemo.get(key) match {
+        case Some(e @ (p, df, _)) if p.sameResult(plan) =>
+          // LRU refresh: re-insert at the tail of the access order
+          astJoinMemo.remove(key)
+          astJoinMemo(key) = e
+          df
+        case existing =>
+          val (df, frames) = build
+          existing.foreach { case (_, _, old) => parkDisplaced(old) }
+          astJoinMemo(key) = (plan, df, frames)
+          while (astJoinMemo.size > astJoinMemoCap) {
+            val (victim, (_, _, evicted)) = astJoinMemo.head
+            astJoinMemo.remove(victim)
+            parkDisplaced(evicted)
+          }
+          df
+      }
+    }
+
+  // ---- the query-join skeleton ----------------------------------
+  // [[buildBoolScored]] and [[buildAstScored]] run the same filter →
+  // verify pipeline over deduplicated query shapes: bare (sid, key)
+  // candidates from a postings probe (exact, or block-max pruned
+  // against a seed-scan threshold), one shuffle-hash corpus attach,
+  // then the shape side and the builder's own scorer
+  // (`bool_query_score` or `dsl_query_score`). `bc` is the broadcast
+  // gate: the batch has at most [[SearchIndex.astBroadcastShapesMax]]
+  // shapes.
+
+  /** `field`'s postings as (term, key), plus (tf, dl) for the
+    * impact-ordered stages. */
+  private def fieldPostings(field: String, tfDl: Boolean = false): DataFrame =
+    postings.where(col("field") === lit(field)).select((Seq(col("term"), col("key")) ++
+      (if (tfDl) Seq(col("tf"), col("dl")) else Nil)): _*)
+
+  /** Probe join of a shape-bounded (…, term) frame against postings.
+    * Orientation is forced, not left to size estimates (r16): under
+    * the gate stream the postings side (it keeps its partitioning, so
+    * the candidate fan-out parallelizes across the postings cache)
+    * and broadcast the probe side. Left to the planner, an sf-scale
+    * postings cache fits under the auto-broadcast threshold and the
+    * whole fan-out lands on the probe side's ONE AQE-coalesced
+    * partition (measured: a 2.5s single-task stage doing the entire
+    * probe+verify). Corpus-scale shape batches keep the planner's
+    * choice. */
+  private def termJoin(probe: DataFrame, posts: DataFrame, bc: Boolean): DataFrame =
+    if (bc) posts.join(broadcast(probe), Seq("term"))
+    else probe.join(posts, Seq("term"))
+
+  /** Exact candidates of a (sid, probe: array<string>) frame as bare
+    * (sid, key) pairs. Single-term probes dominate (every AND-led
+    * shape, every required-led boolean shape) and their (sid, key) is
+    * unique by construction — no dedup exchange; multi-term probes
+    * (OR/ANY-led, SHOULD-only) pay one unless `dedupMulti` is off
+    * (the capped AST path's distinct bottom-k dedups anyway). An
+    * EMPTY probe (a "matches nothing" alt) explodes to no rows. */
+  private def exactCands(probes: DataFrame, field: String, bc: Boolean,
+      dedupMulti: Boolean = true): DataFrame = {
+    val posts = fieldPostings(field)
+    val terms = probes.select(col("sid"), size(col("probe")).as("__np"),
+      explode(col("probe")).as("term"))
+    def cands(n: Column): DataFrame =
+      termJoin(terms.where(n), posts, bc).select(col("sid"), col("key"))
+    val multi = cands(col("__np") > 1)
+    cands(col("__np") === 1)
+      .unionByName(if (dedupMulti) multi.dropDuplicates("sid", "key") else multi)
+  }
+
+  /** Impact pruning's seed scan: for a (sid, term, df) frame of seed
+    * terms, the top max([[astSeedsPerShape]], `n`) postings of each
+    * term by single-term impact, fanned out to its shapes as distinct
+    * (sid, key) pairs. Streams the postings and broadcasts the seed
+    * terms (the single-task fan-out fix of [[termJoin]]). Aggregated
+    * per TERM, then fanned out (r16): the impact's idf factor is
+    * constant within a term, so a shape's top-N seed postings ARE its
+    * seed term's top-N — the per-shape aggregate shipped |shapes| x
+    * df(term) rows through partial buffers too sparse to reject
+    * (measured 52 MB of partial-buffer shuffle on the bool entry); the
+    * per-term one ships |distinct terms| x N. */
+  private def seedScan(seedTerms: DataFrame, field: String, n: Int): DataFrame = {
+    val fs = fieldStats(field)
+    val prio = spec.similarity match {
+      case BM25(a, c) =>
+        col("__idf") * (col("tf") * lit(a + 1.0)) /
+          (col("tf") + lit(a) * (lit(1.0 - c) + lit(c) * col("dl") / lit(fs.avgDl)))
+      case TFIDF() =>
+        sqrt(col("tf")) * col("__idf") * col("__idf") / sqrt(col("dl"))
+    }
+    val posts = fieldPostings(field, tfDl = true)
+    val top = posts
+      .join(broadcast(seedTerms.select(col("term"), col("df")).distinct()), Seq("term"))
+      .withColumn("__idf", log(lit(1.0) +
+        (lit(fs.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5)))
+      .groupBy(col("term"))
+      .agg(topkAggFor(posts, math.max(astSeedsPerShape, n))(col("key"), prio).as("__s"))
+    seedTerms.select(col("sid"), col("term")).join(top, Seq("term"))
+      .select(col("sid"), explode(col("__s")).as("h"))
+      .select(col("sid"), col("h.key").as("key"))
+      .dropDuplicates("sid", "key")
+  }
+
+  /** BLOCK-MAX candidates of a pruned (sid, term, __mp) probe frame:
+    * each kept probe term carries the minimum idf-free similarity part
+    * a posting must reach for its row's score upper bound to touch the
+    * shape's threshold; rows below it drop BEFORE any dedup exchange
+    * or wide attach, on the tf/dl the postings row already carries. */
+  private def blockMaxCands(probes: DataFrame, field: String, bc: Boolean): DataFrame = {
+    val avgDl = fieldStats(field).avgDl
+    val partE = spec.similarity match {
+      case BM25(a, c) =>
+        (col("tf") * lit(a + 1.0)) /
+          (col("tf") + lit(a) * (lit(1.0 - c) + lit(c) * col("dl") / lit(avgDl)))
+      case TFIDF() => sqrt(col("tf")) / sqrt(col("dl"))
+    }
+    termJoin(probes, fieldPostings(field, tfDl = true), bc)
+      .where(partE >= col("__mp"))
+      .select(col("sid"), col("key"))
+  }
+
+  /** Attach + score of bare (sid, key) candidates: the corpus side
+    * (`docSide`, keyed `__doc_key`) attaches by a shuffle-hash join —
+    * the corpus partition is the build side, the candidate stream
+    * (up to |shapes| x df rows) streams through UNSORTED; an SMJ
+    * here sorts it, the 13 GB-spill shape the 16x scale run caught.
+    * Then the |shapes|-bounded `shapeSide` attaches on sid: broadcast
+    * under the gate (no exchange at all), above it the build side of
+    * a shuffle-hash join, so the candidates cross their exchanges as
+    * bare pairs at any scale (PlanShapeSpec and MemoLifecycleSpec pin
+    * both). `score` lands in `__r`. */
+  private def attachAndScore(cands: DataFrame, docSide: DataFrame, shapeSide: DataFrame,
+      bc: Boolean, score: Column): DataFrame =
+    cands.join(docSide.hint("shuffle_hash"), cands("key") === col("__doc_key"))
+      .join(if (bc) broadcast(shapeSide) else shapeSide.hint("shuffle_hash"), Seq("sid"))
+      .withColumn("__r", score)
+
   /** Seeds scored per shape for the impact-pruning threshold (see
     * [[queryJoinAst]]'s `impactPruning`): more seeds cost more
     * bounded verifies but yield a tighter threshold and therefore
     * more pruning. Var is a test hook. */
   private[graft] var astSeedsPerShape: Int = 64
-
-  /** Cross-invocation query-join memoization — default ON.
-    * `SPARK_GRAFT_MEMO=0` disables it so a bench run measures COLD
-    * per-invocation setup cost (VERDICT r16 #2: the best-of-2 min
-    * otherwise reports repeat-invocation latency for the query-join
-    * family, and a cold setup regression would be invisible). When
-    * off, every invocation builds fresh setup frames tracked in
-    * callFrames (released at index unpersist — the pre-memo regime).
-    * Result-invisible either way. */
-  private[graft] val memoEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_MEMO").contains("0")
 
   /** Test hook: the (sid, key) candidate frame the most recent
     * [[buildAstScored]] admitted to verification — lets plan-shape
@@ -2051,7 +1974,6 @@ final class SearchIndex private (
       pruneK: Int = 0): (DataFrame, Seq[DataFrame]) = {
     val entryFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def keepFrame(df: DataFrame): DataFrame = { entryFrames += df; df }
-    val fs = fieldStats(field)
     // locals only — the map closure must not capture `this` (the
     // index holds DataFrames, which don't serialize)
     val targetField = field
@@ -2187,57 +2109,31 @@ final class SearchIndex private (
           Seq(col("term_fields"),
             coalesce(col("mis"), array().cast("array<double>")).as("mis"))
         else Nil)): _*))
-    val posts = postings.where(col("field") === lit(field))
-      .select(col("term"), col("key"))
     // SLIM candidate discipline (measured at 16x sf0.1: the previous
     // shape carried (ops, terms, doubles) on every candidate row
     // through the term join, a key exchange, and a key SORT feeding a
     // SortMergeJoin against the corpus — 36M candidates x ~1KB of
-    // program payload = a 13 GB sort spill that filled the disk; the
-    // probe joins below keep candidates as bare (sid, key) pairs and
-    // every wide re-attach is a SHUFFLE_HASH join, which streams the
-    // candidate side with NO sort of it at any width).
+    // program payload = a 13 GB sort spill that filled the disk):
+    // candidates stay bare (sid, key) pairs up to [[attachAndScore]].
     val probed0 = scoring.where(col("ai").isNotNull)
       .select(col("sid"), element_at(col("alts"), col("ai") + 1).as("probe"))
     val exactCap = maxCandidatesPerShape == Int.MaxValue
     val progs = scoring.select(col("sid"), col("ops"), col("terms"),
       col("doubles"))
-    // Program attach ORDER is a measured decision (16x receipts in
-    // SCALE.md): attaching the ~1KB serialized programs BEFORE the
-    // key exchange makes that exchange materialize candidates x 1KB
-    // (10.7 GB written for the dense-expansion batch — pure
-    // serialization CPU). When the shape batch is small enough to
-    // broadcast, attach it AFTER the corpus join instead: the
-    // candidate stream then crosses its ONLY exchange as bare (sid, key)
-    // pairs, the corpus attaches via shuffle-hash, and the programs
-    // ride a broadcast — zero wide exchanges anywhere. Corpus-scale
-    // shape batches (a million-query left) fall back to the
-    // shuffle-hash attach before the key exchange, which is
-    // wide-but-linear and never sorts.
-    val attachLate = nShapes <= SearchIndex.astBroadcastShapesMax
+    // the programs (~1KB each) attach AFTER the corpus join, broadcast
+    // under the gate: attaching them BEFORE the key exchange made it
+    // materialize candidates x 1KB (10.7 GB written for the
+    // dense-expansion batch at 16x, SCALE.md)
+    val bc = nShapes <= SearchIndex.astBroadcastShapesMax
     // doc side: token array + the attr / cross-field maps, one
     // corpus join
     val docInputNames = Seq("__attrs", "__attrs_str", "__xtokens", "__xavgdl")
     val docSide = docs.select(key.as("__doc_key") +: tokensCol(field).as("__tokens") +:
       docInputs.zip(docInputNames).map { case (c, n) => c.as(n) }: _*)
-    def scoreExpr: Column = programScore(col("__tokens"), col("ops"), col("terms"),
+    val scoreExpr = programScore(col("__tokens"), col("ops"), col("terms"),
       col("doubles"), docInputNames.map(col), field)
-    // attach + verify for a bare (sid, key) candidate frame, keeping
-    // the unsorted slim-candidate discipline (shuffle-hash corpus
-    // attach, broadcast-or-shuffle-hash program attach)
-    def attachAndScore(cands: DataFrame): DataFrame = {
-      val slim =
-        if (attachLate) cands
-        else cands.join(progs.hint("shuffle_hash"), Seq("sid"))
-      val withDocs = slim
-        .join(docSide.hint("shuffle_hash"), col("key") === col("__doc_key"))
-      val full =
-        if (attachLate) withDocs.join(broadcast(progs), Seq("sid"))
-        else withDocs
-      full.withColumn("__r", scoreExpr)
-        .select(col("sid"), col("key"),
-          col("__r.ok").as("ok"), col("__r.score").as("score"))
-    }
+    def verify(scoredCands: DataFrame): DataFrame = scoredCands.where(col("__r.ok"))
+      .select(col("sid"), col("key"), col("__r.score").as("score"))
     // impact-ordered EXACT pruning (see the queryJoinAst scaladoc):
     // score a bounded per-shape seed set chosen by measured
     // single-term impact, take the pruneK-th best exact seed score
@@ -2251,20 +2147,9 @@ final class SearchIndex private (
     // vectors. Seeds are unioned back into the candidates, so even
     // a degenerate bound can never lose the hits the threshold came
     // from.
-    val (probedPruned, seedCands) =
-      if (!pruning) (None, None)
+    val prunedAndSeeds: Option[(DataFrame, DataFrame)] =
+      if (!pruning) None
       else {
-        val sPosts = postings.where(col("field") === lit(field))
-          .select(col("term"), col("key"), col("tf"), col("dl"))
-        val idfC = log(lit(1.0) +
-          (lit(fs.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
-        val prio = spec.similarity match {
-          case BM25(a, c) =>
-            col("__idf") * (col("tf") * lit(a + 1.0)) /
-              (col("tf") + lit(a) * (lit(1.0 - c) + lit(c) * col("dl") / lit(fs.avgDl)))
-          case TFIDF() =>
-            sqrt(col("tf")) * col("__idf") * col("__idf") / sqrt(col("dl"))
-        }
         // seed from each shape's MIN-DF probe term only: the rarest
         // term is (almost always) the highest-impact one, so its
         // postings hold the top-score population the threshold needs,
@@ -2281,32 +2166,13 @@ final class SearchIndex private (
           .groupBy(col("sid"))
           .agg(min(struct(col("df"), col("term"))).as("m"))
           .select(col("sid"), col("m.term").as("term"), col("m.df").as("df"))
-        // broadcast the tiny seed-term frame (with its df) and stream
-        // postings — same single-task-fan-out fix as the bool
-        // pipeline's seed scan above. Aggregated
-        // per TERM then fanned out to shapes (r16, see the bool
-        // pipeline's seedTermTop comment): prio is idf-scaled but
-        // idf is constant within a term, so the per-term top-N IS
-        // every sharing shape's top-N — |terms| x N rows shipped
-        // instead of |shapes| x df through never-full partial
-        // buffers.
-        val seedTermTop = sPosts
-          .join(broadcast(minTerm.select(col("term"), col("df")).distinct()), Seq("term"))
-          .withColumn("__idf", idfC)
-          .groupBy(col("term"))
-          .agg(topkAggFor(posts, math.max(astSeedsPerShape, pruneK))(
-            col("key"), prio).as("__s"))
         // up to astSeedsPerShape rows per shape: checkpointed, not
         // collected (its joins hint the corpus side as the build side)
-        val seeds = keepFrame(
-          minTerm.select(col("sid"), col("term")).join(seedTermTop, Seq("term"))
-          .select(col("sid"), explode(col("__s")).as("h"))
-          .select(col("sid"), col("h.key").as("key"))
-          .dropDuplicates("sid", "key")
+        val seeds = keepFrame(seedScan(minTerm, field, pruneK)
           .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK))
-        val theta = attachAndScore(seeds).where(col("ok"))
+        val theta = verify(attachAndScore(seeds, docSide, progs, bc, scoreExpr))
           .groupBy(col("sid"))
-          .agg(topkAggFor(posts, pruneK)(col("key"), col("score")).as("__top"))
+          .agg(topkAggFor(seeds, pruneK)(col("key"), col("score")).as("__top"))
           .select(col("sid"),
             when(size(col("__top")) >= pruneK,
               element_at(col("__top"), pruneK).getField("score")).as("__theta"))
@@ -2372,17 +2238,8 @@ final class SearchIndex private (
           // dedup exchange just because pruning was AVAILABLE.
           .withColumn("__th", col("__theta").isNotNull)
           .select(col("sid"), col("probe"), col("__th")))
-        (Some(pruned), Some(seeds))
+        Some((pruned, seeds))
       }
-    // single-term probes dominate (every AND-led shape) and their
-    // (sid, key) is unique by construction — no dedup exchange;
-    // multi-term probes (OR/ANY-led) pay one
-    // try_element_at, not element_at: a "matches nothing" probe (an
-    // EMPTY alt — unknown-field leaf, or a dictionary expansion that
-    // matched no terms) is filtered out by the size predicate, but
-    // constraint inference can reorder isnotnull(element_at(..)) in
-    // front of it, which under ANSI throws on the empty array
-    //
     // pre-verify early termination for dense shapes (see the
     // queryJoinAst scaladoc): keep only the first N DISTINCT
     // candidate keys per shape BEFORE any exchange, wide attach or
@@ -2397,43 +2254,9 @@ final class SearchIndex private (
     // implicitly, so it skips the (sid, key) dedup exchange — on a
     // dense batch that exchange moves Sum(df) rows and was MEASURED
     // to dominate the capped run, CappedExpandBench/SCALE.md.)
-    // probe-join orientation forced like the bool pipeline's (see
-    // its `termJoin` comment): stream postings, broadcast the
-    // shape-bounded probe side — size estimates at sf scale
-    // otherwise broadcast the postings cache and serialize the whole
-    // fan-out on the probe frame's one checkpointed partition
-    def termJoin(p: DataFrame, big: DataFrame): DataFrame =
-      if (attachLate) big.join(broadcast(p), Seq("term"))
-      else p.join(big, Seq("term"))
-    def exactCandsFor(probe: DataFrame): DataFrame = {
-      val single = termJoin(probe.where(size(col("probe")) === 1)
-        .withColumn("term", try_element_at(col("probe"), lit(1))).drop("probe"),
-        posts).drop("term")
-      val multiRaw = termJoin(probe.where(size(col("probe")) > 1)
-        .select(col("sid"), explode(col("probe")).as("term")),
-        posts).drop("term")
-      val multi =
-        if (exactCap) multiRaw.dropDuplicates("sid", "key") else multiRaw
-      single.unionByName(multi)
-    }
-    val candsRaw = probedPruned match {
-      case None => exactCandsFor(probed0)
-      case Some(pruned) =>
-        // BLOCK-MAX candidate prefilter (QueryProgram
-        // .essentialProbeBounds): each kept probe term carries the
-        // minimum idf-free similarity part a posting must reach for
-        // the row's score upper bound to touch theta — rows below it
-        // drop BEFORE the dedup exchange and the wide attach, on tf/dl
-        // the postings row already carries. Seeds union back in, so
-        // the threshold's own witnesses are never lost.
-        val sPostsTfDl = postings.where(col("field") === lit(field))
-          .select(col("term"), col("key"), col("tf"), col("dl"))
-        val partE = spec.similarity match {
-          case BM25(a, c) =>
-            (col("tf") * lit(a + 1.0)) /
-              (col("tf") + lit(a) * (lit(1.0 - c) + lit(c) * col("dl") / lit(fs.avgDl)))
-          case TFIDF() => sqrt(col("tf")) / sqrt(col("dl"))
-        }
+    val candsRaw = prunedAndSeeds match {
+      case None => exactCands(probed0, field, bc, dedupMulti = exactCap)
+      case Some((pruned, seeds)) =>
         // THRESHOLD split (r16, simplified from r15's four-way
         // "effectiveness" split): shapes whose threshold BOUND take
         // the block-max probe; null-theta shapes take the exact
@@ -2452,30 +2275,16 @@ final class SearchIndex private (
         // threshold's witnesses are never lost; single-term probes
         // ride the same dedup, so one explode branch covers all).
         val bound = pruned.where(col("__th"))
-        val boundProbe = termJoin(bound
+        val boundCands = blockMaxCands(bound
           .select(col("sid"), explode(col("probe")).as("pt"))
           .select(col("sid"), col("pt").getField("_1").as("term"),
-            col("pt").getField("_2").as("__mp")),
-          sPostsTfDl)
-          .where(partE >= col("__mp"))
-          .select(col("sid"), col("key"))
-        val boundCands = boundProbe
-          .unionByName(seedCands.get.join(bound.select("sid"), Seq("sid")))
+            col("pt").getField("_2").as("__mp")), field, bc)
+          .unionByName(seeds.join(bound.select("sid"), Seq("sid")))
           .dropDuplicates("sid", "key")
-        // UNBOUND shapes: the exact branch's slim discipline — bare
-        // (term, key) postings, single-term probes unique by
-        // construction (no exchange), only multi-term probes dedup
-        val unbound = pruned.where(!col("__th"))
-        val uSingle = termJoin(unbound.where(size(col("probe")) === 1)
-          .withColumn("pt", try_element_at(col("probe"), lit(1)))
-          .select(col("sid"), col("pt").getField("_1").as("term")),
-          posts).drop("term")
-        val uMulti = termJoin(unbound.where(size(col("probe")) > 1)
-          .select(col("sid"), explode(col("probe")).as("pt"))
-          .select(col("sid"), col("pt").getField("_1").as("term")),
-          posts).drop("term")
-          .dropDuplicates("sid", "key")
-        boundCands.unionByName(uSingle).unionByName(uMulti)
+        // UNBOUND shapes: the exact branch's slim discipline
+        boundCands.unionByName(exactCands(pruned.where(!col("__th"))
+          .select(col("sid"), transform(col("probe"), _.getField("_1")).as("probe")),
+          field, bc))
     }
     val candsBounded =
       if (exactCap) candsRaw
@@ -2494,7 +2303,7 @@ final class SearchIndex private (
       if (exactCap) docSide
       else {
         val keptKeys = docSide
-          .agg(bottomKFor(posts, maxCandidatesPerShape)(col("__doc_key")).as("__k"))
+          .agg(bottomKFor(candsRaw, maxCandidatesPerShape)(col("__doc_key")).as("__k"))
           .select(explode(col("__k")).as("__kept_key"))
         docSide.join(broadcast(keptKeys), col("__doc_key") === col("__kept_key"))
           .drop("__kept_key")
@@ -2503,25 +2312,8 @@ final class SearchIndex private (
       .select(col("sid"), col("ops"), col("terms"), col("doubles"))
       .crossJoin(totalDocSide)
       .withColumn("key", col("__doc_key"))
-    val probeCands = {
-      val candsSlim =
-        if (attachLate) candsBounded
-        else candsBounded.join(progs.hint("shuffle_hash"), Seq("sid"))
-      // corpus attach as a shuffle-hash join: the build side is a
-      // corpus partition (sized by the shuffle-partition count
-      // exactly like any hash join of the corpus), the
-      // probe-candidate side — the one that can reach |left| x df
-      // rows — streams through with no sort at any scale; the
-      // program broadcast (attachLate) adds no exchange at all
-      val withDocs = candsSlim
-        .join(docSide.hint("shuffle_hash"), col("key") === col("__doc_key"))
-      if (attachLate) withDocs.join(broadcast(progs), Seq("sid"))
-      else withDocs
-    }
-    val verified = probeCands.unionByName(totalCands)
-      .withColumn("__r", scoreExpr)
-      .where(col("__r.ok"))
-      .select(col("sid"), col("key"), col("__r.score").as("score"))
+    val verified = verify(attachAndScore(candsBounded, docSide, progs, bc, scoreExpr)
+      .unionByName(totalCands.withColumn("__r", scoreExpr)))
     // qid fan-out: canon against the shape table on FIVE array
     // columns. Under the collect gate the table broadcasts and the
     // join is one map-side pass over canon; above it the |left|-row
@@ -3062,7 +2854,7 @@ final class SearchIndex private (
 
   /** Per-call persisted helper frames (queryJoinPhrase's analyzed
     * query batch, the index-wide stats frames, the setup frames of
-    * query joins run with the memo off or displaced from it):
+    * query joins displaced from the memo):
     * registered so [[unpersist]] releases them with the index — a
     * long-lived session issuing many joins would otherwise leak one
     * cached frame per invocation (nothing else reaches them). */
@@ -3237,20 +3029,15 @@ object SearchIndex {
     if (isExactSet && chosen.forall(_.mp == neg)) Seq.empty else chosen
   }
 
-  /** Hard cap on the left-side row count [[SearchIndex.queryJoinDsl]]
-    * will collect to the driver — the one API a naive caller could
-    * point at a corpus-sized left. Exceeding it fails fast with a
-    * pointer at `queryJoinAst`. Process-wide and adjustable for the
-    * rare intended large collect. */
-  @volatile var queryJoinDslMaxLeft: Int = 65536
-
-  /** Largest distinct-shape count for which [[queryJoinAst]] attaches
-    * the serialized query programs by BROADCAST after the corpus join
-    * (so its candidate stream crosses its only exchange as bare
-    * (sid, key) pairs — SCALE.md receipts). ~1 KB per shape, so the
-    * default is ~64 MB of broadcast, the order of a generous
-    * autoBroadcastJoinThreshold; above it the programs attach via a
-    * pre-exchange shuffle-hash join (wide-but-linear, never sorted).
+  /** Largest distinct-shape count for which a query join
+    * ([[queryJoinAst]], [[queryJoinBool]]) broadcasts its shape side:
+    * the probe joins, and the program or clause attach after the
+    * corpus join (so the candidate stream crosses its only exchange as
+    * bare (sid, key) pairs — SCALE.md receipts). ~1 KB per AST shape,
+    * so the default is ~64 MB of broadcast, the order of a generous
+    * autoBroadcastJoinThreshold; above it the shape side attaches
+    * after the corpus join as the build side of a shuffle-hash join
+    * (wide-but-linear, never sorted).
     * The same gate, applied to the left's row count, decides for
     * [[queryJoinAst]] and [[queryJoinBool]] alike whether the
     * per-shape setup tables are collected into local relations

@@ -758,10 +758,10 @@ object SearchQueries {
         .orderBy("doc_id", "rank")
     }),
 
-    // the same phrase self-join as query_join_dsl but DATA-DRIVEN:
-    // one distributed plan (postings candidates + phrase_count
-    // verify), no driver collect, plan size constant in |left| — must
-    // produce the identical result set
+    // the same phrase self-join as query_join_dsl but through the
+    // specialized phrase plan (postings candidates + phrase_count
+    // verify, no serialized programs) — must produce the identical
+    // result set
     "query_join_phrase" -> ((s, dir) => {
       val idx = indexFor(s, dir)
       val left = idx.docs
@@ -791,8 +791,7 @@ object SearchQueries {
     }),
 
     // BOOLEAN query join with a corpus-PROPORTIONAL left (every 10th
-    // doc is a query — the regime queryJoinDsl's driver collect
-    // cannot reach; the left grows with the corpus, unlike
+    // doc is a query — the left grows with the corpus, unlike
     // query_join's fixed 20): each doc requires its first token,
     // prefers its 2nd-3rd, excludes its 4th, and filters hits to docs
     // no longer than itself. One distributed plan, size constant in

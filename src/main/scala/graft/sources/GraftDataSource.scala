@@ -107,7 +107,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister {
     // fail fast on driver-memory-event k: the scan materializes all k
     // rows on the driver at planning time (k-bounded by construction
     // is the whole design), so an unguarded k=10^7 would OOM the
-    // driver with no warning — the queryJoinDslMaxLeft discipline
+    // driver with no warning
     val maxK = GraftDataSource.maxK
     require(k <= maxK,
       s"graft source: k=$k exceeds the driver-side cap $maxK (the DSv2 " +

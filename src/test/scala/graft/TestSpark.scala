@@ -5,23 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Shared local session for all suites (one JVM, one context). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      // bounded top-k aggregates (TopKAgg) over thousands of groups:
-      // the 128-key default forces the sort-based object-agg fallback,
-      // which serializes each group buffer per row (measured 155s /
-      // 7.3GB spill on a 3.7M-row seed aggregate, SCALE.md r15)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Verify/Bench: events.parquet is TIMESTAMP(NANOS), which
-      // Spark 4 only reads under this flag (Tables normalizes back)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the build-time extension route (spark-submit contract):
-      // installs the native expressions + the graft_search TVF
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+      // plan-shape specs match on whole executed-plan strings: keep
+      // Spark's unbounded default, not the mains' truncation
+      .config("spark.sql.maxPlanStringLength",
+        org.apache.spark.unsafe.array.ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toLong)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -105,28 +105,39 @@ class EdgeCasesSpec extends AnyFunSuite with ReadsSharedGates {
     idx.unpersist()
   }
 
-  test("queryJoinDsl fails fast on a left larger than the collect cap") {
-    // queryJoinDsl is the one API that collects its left to the
-    // driver (the driver-batch path); above the cap it must
-    // refuse with a pointer at the distributed path instead of
-    // attempting a corpus-sized collect
-    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+  test("a zero-row left through every query-join front door: zero rows, contract schema") {
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"), (3L, "alpha delta"))
+      .toDF("doc_id", "text")
     val idx = SearchIndex.build(docs, IndexSpec("doc_id", Seq("text")))
-    val left = spark.range(0, 100).toDF("qid")
-    val saved = SearchIndex.queryJoinDslMaxLeft
     try {
-      SearchIndex.queryJoinDslMaxLeft = 10
-      val e = intercept[IllegalArgumentException] {
-        idx.queryJoinDsl(left, "qid", _ => "text" matchTerm "beta", 3)
+      val left = docs.where(lit(false))
+      val words = split(col("text"), " ")
+      val none = array().cast("array<string>")
+      val gen: org.apache.spark.sql.Row => graft.dsl.SearchQuery =
+        r => "text" matchAny termSet(r.getAs[String]("text").split(" ").toSeq: _*)
+      val hitCols = Seq("rank", "key", "score")
+      val joins = Seq(
+        ("queryJoin", left.columns.toSeq ++ hitCols,
+          idx.queryJoin(left, "doc_id", words, "text", 3)),
+        ("queryJoin(impactPruning)", left.columns.toSeq ++ hitCols,
+          idx.queryJoin(left, "doc_id", words, "text", 3, impactPruning = true)),
+        ("queryJoinBool", "qid" +: hitCols,
+          idx.queryJoinBool(left, "doc_id", slice(words, 1, 1), words, none, "text", 3)),
+        ("queryJoinBool(impactPruning)", "qid" +: hitCols,
+          idx.queryJoinBool(left, "doc_id", none, words, none, "text", 3,
+            excludeSelf = true, impactPruning = true)),
+        ("queryJoinAst", "qid" +: hitCols,
+          idx.queryJoinAst(left, "doc_id", gen, "text", 3)),
+        ("queryJoinAst(impactPruning)", "qid" +: hitCols,
+          idx.queryJoinAst(left, "doc_id", gen, "text", 3, impactPruning = true)),
+        ("queryJoinDsl", left.columns.toSeq ++ hitCols,
+          idx.queryJoinDsl(left, "doc_id", gen, 3, excludeSelf = true)),
+        ("queryJoinPhrase", "qid" +: hitCols,
+          idx.queryJoinPhrase(left, "doc_id", col("text"), "text", 3)))
+      for ((name, cols, df) <- joins) {
+        assert(df.columns.toSeq == cols, s"$name schema: ${df.columns.mkString(", ")}")
+        assert(df.collect().isEmpty, s"$name returned rows for an empty left")
       }
-      assert(e.getMessage.contains("queryJoinAst"))
-      assert(e.getMessage.contains("queryJoinDslMaxLeft"))
-      // at the cap boundary it still runs
-      SearchIndex.queryJoinDslMaxLeft = 100
-      assert(idx.queryJoinDsl(left, "qid", _ => "text" matchTerm "beta", 3).count() > 0)
-    } finally {
-      SearchIndex.queryJoinDslMaxLeft = saved
-      idx.unpersist()
-    }
+    } finally idx.unpersist()
   }
 }

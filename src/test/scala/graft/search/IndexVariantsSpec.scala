@@ -91,7 +91,7 @@ class IndexVariantsSpec extends AnyFunSuite with ReadsSharedGates {
       .queryJoinPhrase(left, "doc_id", col("phrase"), "text", 5, excludeSelf = true)
       .select("qid", "key", "score").as[(Long, Long, Double)].collect()
       .map { case (q, h, s) => (q, h) -> s }.toMap
-    val scanPath = idx.queryJoinDsl(left, "doc_id",
+    val scanPath = ScanJoinReference(idx, left, "doc_id",
         r => MatchPhrase("text", r.getAs[String]("phrase")), 5, excludeSelf = true)
       .select(col("doc_id"), col("key"), col("score"))
       .as[(Long, Long, Double)].collect()

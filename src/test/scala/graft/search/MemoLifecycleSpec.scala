@@ -19,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (the flag stays result-invisible);
   *  - queryJoinDsl(impactPruning) on a generator that leads on a
   *    SECONDARY text field needs pruneField to stay efficient but
-  *    must be result-identical with and without it.
+  *    must be result-identical with and without it (and with the
+  *    per-query scan reference).
   */
 class MemoLifecycleSpec extends AnyFunSuite {
 
@@ -73,17 +74,22 @@ class MemoLifecycleSpec extends AnyFunSuite {
     // its choice and the attach falls back to shuffle-hash. All three
     // front doors must produce identical (qid, rank, key, score) rows
     // on every side. The left repeats each document's query under a
-    // second qid: 14 rows, 7 shapes.
+    // second qid: 14 rows, 7 shapes. Over the gate the attach order is
+    // pinned too (no benchmark runs there): the corpus (__doc_key)
+    // join is never a sort-merge and no Sort runs over the candidate
+    // keys — the shape side attaches as a shuffle-hash build side.
     val saved = SearchIndex.astBroadcastShapesMax
     val twice = corpus.unionByName(corpus.withColumn("doc_id", col("doc_id") + 100))
     val left = twice.select(col("doc_id"), col("text"))
     val genA: Row => SearchQuery =
       r => MatchAnyTerms("text", r.getAs[String]("text").split(" ").take(3).toSeq)
-    def exact(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long, Double)] =
-      df.select(col("qid").cast("long"), col("rank").cast("int"),
+    // the rows, and the executed plan they came from
+    def exact(df: org.apache.spark.sql.DataFrame): (Set[(Long, Int, Long, Double)], String) =
+      (df.select(col("qid").cast("long"), col("rank").cast("int"),
         col("key").cast("long"), col("score"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    def runAll(): Seq[Set[(Long, Int, Long, Double)]] = {
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet,
+        df.queryExecution.executedPlan.toString)
+    def runAll(): Seq[(Set[(Long, Int, Long, Double)], String)] = {
       val idx = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
       try {
         val l = twice.select(col("doc_id"), split(col("text"), " ").as("req"))
@@ -107,10 +113,18 @@ class MemoLifecycleSpec extends AnyFunSuite {
         SearchIndex.astBroadcastShapesMax = 0L // every batch is "over the gate"
         val cut = runAll()
         Seq("queryJoinAst", "queryJoinBool", "queryJoinBool(impactPruning)")
-          .zip(local.zip(cutBroadcast.zip(cut))).foreach { case (name, (l, (b, c))) =>
-            assert(l.nonEmpty, s"$name returned no hits")
-            assert(b == l, s"$name differs between collected and lineage-cut tables")
-            assert(c == l, s"$name differs across the gate")
+          .zip(local.zip(cutBroadcast.zip(cut))).foreach {
+            case (name, ((l, _), ((b, _), (c, plan)))) =>
+              assert(l.nonEmpty, s"$name returned no hits")
+              assert(b == l, s"$name differs between collected and lineage-cut tables")
+              assert(c == l, s"$name differs across the gate")
+              assert(!"SortMergeJoin [^\\n]*__doc_key".r.findFirstIn(plan).isDefined,
+                s"$name sort-merges the candidate stream against the corpus:\n$plan")
+              assert("(ShuffledHashJoin|BroadcastHashJoin) [^\\n]*__doc_key".r
+                .findFirstIn(plan).isDefined,
+                s"$name lost the hash-join corpus attach:\n$plan")
+              assert(!"Sort \\[key#\\d+L ASC".r.findFirstIn(plan).isDefined,
+                s"$name sorts the candidate stream:\n$plan")
           }
       } finally SearchIndex.astBroadcastShapesMax = saved
     }
@@ -185,7 +199,8 @@ class MemoLifecycleSpec extends AnyFunSuite {
         .select(col("doc_id").cast("long"), col("rank").cast("int"),
           col("key").cast("long"), round(col("score"), 6))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-      val exact = norm2(idx.queryJoinDsl(left, "doc_id", gen, k = 3))
+      val exact = norm2(ScanJoinReference(idx, left, "doc_id", gen, k = 3))
+      assert(norm2(idx.queryJoinDsl(left, "doc_id", gen, k = 3)) == exact)
       val prunedDefault = norm2(idx.queryJoinDsl(left, "doc_id", gen, k = 3,
         impactPruning = true))
       val prunedField = norm2(idx.queryJoinDsl(left, "doc_id", gen, k = 3,

@@ -8,14 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-/** The distributed nested-AST query join must agree with the
-  * driver-batch path ([[SearchIndex.queryJoinDsl]], which compiles
-  * each query through the scan path) on every query shape — fixed
-  * nested cases plus a seeded fuzz over random ASTs. Both paths score
-  * through the same serialized-program interpreter, so this pins the
-  * distributed plumbing (probe choice, candidate generation, doc-side
-  * maps, per-query top-k) against the per-document scan; the scan
-  * path itself is pinned against golden results by `ScanParitySpec`. */
+/** The distributed nested-AST query join must agree with a per-query
+  * scan ([[ScanJoinReference]]: the left collected, each query run
+  * through the public scan path `batchSearchDsl`, hits joined back on
+  * the qid) on every query shape — fixed nested cases plus a seeded
+  * fuzz over random ASTs. Both score through the same
+  * serialized-program interpreter, so this pins the distributed
+  * plumbing (probe choice, candidate generation, doc-side maps, shape
+  * dedup, per-query top-k) against the per-document scan; the scan
+  * path itself is pinned against golden results by `ScanParitySpec`.
+  * ("The driver path" below is that reference.) */
 class QueryJoinAstSpec extends AnyFunSuite with ReadsSharedGates {
 
   lazy val spark = TestSpark.spark
@@ -41,7 +43,7 @@ class QueryJoinAstSpec extends AnyFunSuite with ReadsSharedGates {
         col("key").cast("long"), round(col("score"), 6))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     val ast = norm(idx.queryJoinAst(left, "doc_id", gen, "text", k, excludeSelf), "qid")
-    val dsl = norm(idx.queryJoinDsl(left, "doc_id", gen, k, excludeSelf), "doc_id")
+    val dsl = norm(ScanJoinReference(idx, left, "doc_id", gen, k, excludeSelf), "doc_id")
     (ast, dsl)
   }
 
@@ -259,7 +261,7 @@ class QueryJoinAstSpec extends AnyFunSuite with ReadsSharedGates {
         col("key").cast("long"), round(col("score"), 6))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     val ast = norm(idx2.queryJoinAst(left, "doc_id", gen, "text", k), "qid")
-    val dsl = norm(idx2.queryJoinDsl(left, "doc_id", gen, k), "doc_id")
+    val dsl = norm(ScanJoinReference(idx2, left, "doc_id", gen, k), "doc_id")
     assert(ast == dsl, s"\nast: ${ast.toSeq.sorted}\ndsl: ${dsl.toSeq.sorted}")
     assert(ast.size >= minHits)
   }
@@ -308,7 +310,7 @@ class QueryJoinAstSpec extends AnyFunSuite with ReadsSharedGates {
           col("key").cast("long"), round(col("score"), 6))
           .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
       val ast = norm(idx3.queryJoinAst(left, "doc_id", gen, "text", 5), "qid")
-      val dsl = norm(idx3.queryJoinDsl(left, "doc_id", gen, 5), "doc_id")
+      val dsl = norm(ScanJoinReference(idx3, left, "doc_id", gen, 5), "doc_id")
       assert(ast == dsl, s"\nast: ${ast.toSeq.sorted}\ndsl: ${dsl.toSeq.sorted}")
       assert(ast.size >= minHits)
     }
