@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.dsl.builders._
 import graft.search.{IndexSpec, SearchIndex}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end walkthrough mirroring the reference's example program
@@ -16,17 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Walkthrough {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      // UTC like Verify/Bench: the events NTZ-ts normalization is
-      // only value-preserving under UTC (Tables.normalizeEventsTs
-      // asserts it at the cast site)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the SQL-visible surface (graft_search / graft_batch_search /
-      // graft_query_join TVFs + native expressions) — step 14
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[8]"), 8)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

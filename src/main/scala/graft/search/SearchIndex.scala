@@ -158,7 +158,9 @@ final class SearchIndex private (
     val docs: DataFrame,
     val postings: DataFrame,
     val stats: DataFrame,
-    val fieldStats: Map[String, FieldStats]) extends Serializable {
+    val fieldStats: Map[String, FieldStats],
+    private[graft] val joinGates: SearchIndex.JoinGates = SearchIndex.JoinGates())
+  extends Serializable {
 
   import SearchIndex._
 
@@ -268,11 +270,11 @@ final class SearchIndex private (
     if (f == null) synchronized {
       f = xdfStatsFrame
       if (f == null) {
-        f = trackPersist(postings
+        f = postings
           .where(col("field").isin(spec.textFields: _*))
           .groupBy(col("term"))
           .agg(countDistinct(col("key")).as("df"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         xdfStatsFrame = f
       }
     }
@@ -306,11 +308,11 @@ final class SearchIndex private (
               (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avg_dl")))
           case TFIDF() => sqrt(col("tf")) / sqrt(col("dl"))
         }
-        f = trackPersist(postings
+        f = postings
           .join(broadcast(fieldStatsDf.select(col("field"), col("avg_dl"))), Seq("field"))
           .groupBy(col("field"), col("term"))
           .agg(max(part).as("mi_raw"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         maxImpactFrame = f
       }
     }
@@ -1094,12 +1096,7 @@ final class SearchIndex private (
     if (impactPruning) {
       require(maxHitsPerIndex == Int.MaxValue && !broadcastHits,
         "impactPruning is exact and replaces maxHitsPerIndex/broadcastHits tuning — pass one, not both")
-      // null qids produce no hits on the unpruned path (the fan-out
-      // join just misses); the pruned path's executor-side serialize
-      // would NPE on getAs[Number].longValue instead — filter them so
-      // the flag stays result-invisible (ADVICE r15)
-      val prepared = left.where(col(qidCol).isNotNull)
-        .select(col(qidCol).cast("long").as("__qid"),
+      val prepared = left.select(col(qidCol).cast("long").as("__qid"),
         sort_array(array_distinct(coalesce(termsCol, array().cast("array<string>"))))
           .as("__terms"))
       val f = field
@@ -1161,80 +1158,24 @@ final class SearchIndex private (
 
   /** Data-driven PHRASE query join: each left row contributes a
     * phrase (a string column, analyzed with the query-time analyzer)
-    * and the whole batch runs as ONE distributed plan — candidate
-    * docs from the postings (every distinct phrase term present),
-    * adjacency verified with the native `phrase_count` over the
-    * stored token arrays, scores identical to `MatchPhrase`'s scan
-    * path. Nothing is collected and the plan size is constant in
-    * |left|, and unlike a generated `MatchPhrase` through
-    * [[queryJoinAst]] no program is serialized per query — the
-    * specialized path for the reference's phrase-generating
-    * `queryGenerator`
-    * (SearchableRDD.scala:257-298). Output is (qid, rank, key, score)
-    * like [[lightQueryJoin]]. */
+    * and its top-k hits come back as (qid, rank, key, score), like
+    * [[lightQueryJoin]]. It is [[queryJoinAst]] with the reference's
+    * phrase-generating `queryGenerator` (SearchableRDD.scala:257-298):
+    * one `MatchPhrase(field, phrase, slop)` per row, so the batch
+    * shares the query-join memo, shape dedup and plan, and scores
+    * exactly as `MatchPhrase` does on the scan path. A null phrase,
+    * or one the analyzer empties, matches nothing. */
   def queryJoinPhrase(left: DataFrame, qidCol: String, phraseCol: Column, field: String,
       k: Int, excludeSelf: Boolean = false, slop: Int = 0): DataFrame = {
     require(spec.storePositions,
       "queryJoinPhrase needs stored positions (storePositions = true)")
     require(spec.textFields.contains(field), s"$field is not an indexed text field")
-    val fs = fieldStats(field)
-    // persisted: three plan branches read this frame (IDF aggregate,
-    // candidate probe, phrase_count join) and would otherwise each
-    // re-run the left derivation + analyzer. Lifetime is tied to the
-    // returned plan — once the caller drops the result, the
-    // ContextCleaner reclaims the cache.
-    val queries = trackPersist(left
-      .select(col(qidCol).cast("long").as("qid"), queryAn.tokensCol(phraseCol).as("terms"))
-      .where(size(col("terms")) > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val qterms = queries.select(col("qid"), explode(col("terms")).as("term"))
-    // per-query phrase IDF: sum of per-occurrence term IDFs (the scan
-    // path's terms.map(idf).sum) — absent terms get df=0 like idfFor
-    val qidf = qterms
-      .join(stats.where(col("field") === lit(field))
-        .select(col("term"), col("df")), Seq("term"), "left")
-      .na.fill(0L, Seq("df"))
-      .withColumn("idf", log(lit(1.0) +
-        (lit(fs.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5)))
-      .groupBy(col("qid"))
-      .agg(sum(col("idf")).as("p_idf"), countDistinct(col("term")).as("n_distinct"))
-    // candidates: docs that contain EVERY distinct term of the phrase
-    // (necessary for adjacency) — a keyed postings equi-join, so cost
-    // scales with true term matches, never |left| x |corpus|
-    val cand = qterms.distinct()
-      .join(postings.where(col("field") === lit(field))
-        .select(col("term"), col("key")), Seq("term"))
-      .groupBy(col("qid"), col("key"))
-      .agg(count(lit(1)).as("n_matched"))
-      .join(qidf, Seq("qid"))
-      .where(col("n_matched") === col("n_distinct"))
-      .select(col("qid"), col("key"), col("p_idf"))
-    // adjacency + scoring on the stored token arrays of candidates
-    val docSide = docs.select(key.as("__doc_key"),
-      tokensCol(field).as("__tokens"), dlCol(field).cast("double").as("__dl"))
-    val simScore = spec.similarity match {
-      case BM25(k1, b) =>
-        col("p_idf") * (col("__tf") * lit(k1 + 1.0)) /
-          (col("__tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / lit(fs.avgDl)))
-      case TFIDF() =>
-        sqrt(col("__tf")) * (col("p_idf") * col("p_idf")) / sqrt(col("__dl"))
-    }
-    // attach the query terms FIRST (candidates still slim — the qid
-    // exchange never carries token arrays), then the corpus tokens
-    // LAST via a shuffle-hash join so the candidate stream is never
-    // sorted after it turns wide (the 16x scale lesson from
-    // queryJoinAst: SMJ-sorting a wide candidate stream spills
-    // unboundedly; SHJ streams it)
-    val scored = cand
-      .join(queries.hint("shuffle_hash"), Seq("qid"))
-      .join(docSide.hint("shuffle_hash"), cand("key") === col("__doc_key"))
-      .withColumn("__tf",
-        call_function("phrase_count", col("__tokens"), col("terms"), lit(slop)).cast("double"))
-      .where(col("__tf") > 0)
-      .withColumn("score", simScore)
-      .select(col("qid"), col("key"), col("score"))
-    perQueryTopK(
-      if (excludeSelf) scored.where(col("qid") =!= col("key")) else scored, k)
+    val f = field
+    val s = slop
+    queryJoinAst(left.select(col(qidCol).cast("long").as("__qid"),
+        phraseCol.cast("string").as("__phrase")), "__qid",
+      r => if (r.isNullAt(1)) MatchAnyTerms(f, Nil) else MatchPhrase(f, r.getString(1), s),
+      field, k, excludeSelf)
   }
 
   /** Data-driven BOOLEAN query join — the corpus-scale path for the
@@ -1247,11 +1188,12 @@ final class SearchIndex private (
     * Nothing is collected and the plan size is constant in |left| —
     * a left of millions of rows is fine.
     *
-    * Plan (the [[queryJoinPhrase]] technique — postings candidates +
-    * in-row verify, which is also Lucene's BooleanScorer shape: drive
-    * from the RAREST required clause's postings, verify the remaining
-    * clauses per candidate): the probe joins postings on ONE term per
-    * query — the minimum-df required term (all optional terms, made
+    * Plan (the query-join skeleton [[queryJoinAst]] shares — postings
+    * candidates + in-row verify, which is also Lucene's BooleanScorer
+    * shape: drive from the RAREST required clause's postings, verify
+    * the remaining clauses per candidate): the probe joins postings
+    * on ONE term per query — the minimum-df required term (all
+    * optional terms, made
     * distinct, when the query has no required clause) — so candidate
     * volume is Sum(min-df), not Sum(df) over every clause; candidates
     * then join the corpus token arrays once (AQE broadcasts the
@@ -1290,8 +1232,9 @@ final class SearchIndex private (
     *   rewrite was measured 2x slower: per-row attr bounds inside
     *   the program split every shared shape, SCALE.md r15). Per
     *   shape the plan scores a bounded seed set (the top
-    *   [[astSeedsPerShape]] highest-impact postings of the min-df
-    *   probe term, through the full verify gates), takes as
+    *   [[SearchIndex.JoinGates]]`.seedsPerShape` highest-impact
+    *   postings of the min-df probe term, through the full verify
+    *   gates), takes as
     *   threshold the MINIMUM over the shape's qids of each qid's
     *   (k+1)-th best ATTR-FILTERED seed score (binding only when
     *   every qid produced one — per-qid bounds stay honored; k+1
@@ -1352,17 +1295,19 @@ final class SearchIndex private (
 
   /** The setup + probe + verify pipeline behind [[queryJoinBool]],
     * producing the un-capped scored (qid, key, score) frame plus the
-    * setup frames scoped to the memo entry (released on eviction or
-    * index [[unpersist]]).
+    * setup frames scoped to the memo entry (see [[memoized]] for
+    * their lifetime). Rows with a null qid are dropped here: they
+    * get no hits.
     *
     * Setup cost: one checkpoint of the |left|-row `canon` frame and
     * one collect of the shape table `qinfo` (one row per distinct
     * shape), plus one collect of the threshold table when pruning.
     * The tables are re-planned as local relations when the
-    * batch has at most [[SearchIndex.astBroadcastShapesMax]] rows
-    * (so at most that many shapes, the gate that broadcasts them);
-    * above it they are lineage-cut and stay distributed, and `qinfo`
-    * is counted for the broadcast decision. */
+    * batch has at most [[SearchIndex.JoinGates]]`.broadcastShapesMax`
+    * rows (so at most that many shapes, the gate that broadcasts
+    * them), and the qid fan-out broadcasts too; above it they are
+    * lineage-cut and stay distributed, and `qinfo` is counted for the
+    * broadcast decision. */
   private def buildBoolScored(canonRaw: DataFrame,
       field: String, k: Int, minOptMatch: Int, attrField: Option[String],
       excludeSelf: Boolean, maxHitsPerIndex: Int,
@@ -1383,7 +1328,8 @@ final class SearchIndex private (
     // plan branches read it (shape dedup + fan-out join), and every
     // downstream stage would otherwise re-embed the left derivation
     // in its plan and task closures.
-    val (canon0, collect) = SearchIndex.checkpointCanon(canonRaw)
+    val (canon0, collect) = SearchIndex.checkpointCanon(
+      canonRaw.where(col("qid").isNotNull), joinGates.broadcastShapesMax)
     val canon = keep(canon0)
     // QUERY DEDUPLICATION: generated queries repeat (many left rows
     // produce the same clause sets — the data-driven analog of a
@@ -1456,7 +1402,7 @@ final class SearchIndex private (
     // the broadcast gate: a collected table is under it by
     // construction; above the collect gate the lineage-cut table is
     // counted
-    val bc = collect || qinfo.count() <= SearchIndex.astBroadcastShapesMax
+    val bc = collect || qinfo.count() <= joinGates.broadcastShapesMax
     def small(df: DataFrame): DataFrame = if (bc) broadcast(df) else df
     // in-row verification + scoring: the candidates' token arrays
     // (and the attr column, same join — no second corpus join), then
@@ -1485,11 +1431,15 @@ final class SearchIndex private (
             when(col("n_req") === 0, lit(1)).otherwise(lit(0))))
         .select((Seq(col("sid"), col("key"), col("__r.score").as("score")) ++
           attrSel.map(_ => col("__attr"))): _*)
-    // qid fan-out: canon against the shape table's clause arrays
-    val fan = canon
+    // qid fan-out: canon against the shape table's clause arrays.
+    // Under the collect gate it has at most gate rows and broadcasts
+    // into both joins that read it, so their plans never depend on
+    // which AQE stage finishes first
+    val fan0 = canon
       .join(small(qinfo.select(col("__req"), col("__opt"), col("__exc"), col("sid"))),
         Seq("__req", "__opt", "__exc"))
       .select(col("qid"), col("sid"), col("__lo"), col("__hi"))
+    val fan = if (collect) broadcast(fan0) else fan0
     val probes = qinfo.select(col("sid"), col("__probes").as("probe"))
     // per-qid attr bounds, applied after the fan-out
     def inBounds(fanned: DataFrame): DataFrame =
@@ -1499,7 +1449,7 @@ final class SearchIndex private (
     // impact-ordered EXACT pruning, native (MaxScore adapted to
     // per-qid attr bounds — see the method comment):
     //   1. per shape, score a bounded seed set: the top
-    //      [[astSeedsPerShape]] highest-impact postings of the
+    //      `seedsPerShape` highest-impact postings of the
     //      MIN-DF probe term, through the same verify gates;
     //   2. per (shape, qid), the threshold is the qid's (k+1)-th
     //      best seed score AFTER its own attr bounds (k+1 absorbs
@@ -1523,7 +1473,7 @@ final class SearchIndex private (
         // prunability gate (see [[SearchIndex.boolPrunable]]): only
         // shapes where the threshold machinery has leverage pay the
         // seed scan; the rest keep the exact probe untouched
-        val minDfGate = astSeedsPerShape.toLong
+        val minDfGate = joinGates.seedsPerShape.toLong
         val prunableUdf = udf((terms: Seq[String], roles: Seq[Int],
             mis: Seq[Double], dfs: Seq[Long], nReq: Int,
             probeTs: Seq[String]) => SearchIndex.boolPrunable(
@@ -1685,7 +1635,8 @@ final class SearchIndex private (
     * share an entry only when `sameResult` holds for the left AND
     * the generators serialize byte-identically — a generator whose
     * captured state changed fingerprints differently and misses.
-    * Memoized frames are released with the index ([[unpersist]]).
+    * Memoized frames live while the memo or a returned result reaches
+    * them, and at most until index [[unpersist]] (see [[memoized]]).
     *
     * @param maxCandidatesPerShape pre-VERIFY early termination for
     *   DENSE queries (default exact). A query whose probe terms match
@@ -1703,7 +1654,8 @@ final class SearchIndex private (
     * @param impactPruning EXACT early termination for DENSE queries —
     *   the impact-ordered (MaxScore-family) alternative to
     *   `maxCandidatesPerShape`'s accuracy trade. Per shape the plan
-    *   first scores a BOUNDED seed set — the [[astSeedsPerShape]]
+    *   first scores a BOUNDED seed set — the
+    *   [[SearchIndex.JoinGates]]`.seedsPerShape`
     *   highest-single-term-impact postings of the shape's MIN-DF
     *   probe term; the rarest term is (almost always) the
     *   highest-impact one, so its postings hold the top-score
@@ -1771,26 +1723,19 @@ final class SearchIndex private (
     * [[queryJoinBool]] (see their scaladocs). Values hold the scored
     * frame, the analyzed left plan for the hash-collision-proof
     * `sameResult` re-check, and the entry's own stored setup frames
-    * (parked on LRU eviction, released at index [[unpersist]]).
-    * When its left has at most [[SearchIndex.astBroadcastShapesMax]]
-    * rows an entry stores ONE frame, the |left|-row `canon`
-    * checkpoint — its per-shape tables are local relations held by
-    * the scored frame's plan; above that the shape tables are
-    * lineage-cut and stored too.
+    * (see [[memoized]] for their lifetime).
+    * When its left has at most `joinGates.broadcastShapesMax` rows an
+    * entry stores ONE frame, the |left|-row `canon` checkpoint — its
+    * per-shape tables are local relations held by the scored frame's
+    * plan; above that the shape tables are lineage-cut and stored
+    * too. At most `joinGates.memoCap` entries: an entry pins its
+    * setup frames, and real workloads cycle few distinct
+    * (left, generator) pairs.
     * LinkedHashMap insertion order IS the access order (hits
     * re-insert), so `head` is the LRU victim. */
   private val astJoinMemo = scala.collection.mutable.LinkedHashMap.empty[
     (Int, String, String, String),
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame, Seq[DataFrame])]
-
-  /** Memo capacity — small: an entry pins its |left|-row `canon`
-    * checkpoint (plus lineage-cut |shapes|-row tables above the
-    * broadcast gate, and the seed checkpoint of a pruned AST join),
-    * and real workloads cycle few distinct (left, generator) pairs.
-    * 16 since the bool pipeline shares the memo (r16): a workload
-    * alternating the ast and bool front doors must not thrash
-    * either's entries. Test hook is the var. */
-  private[graft] var astJoinMemoCap: Int = 16
 
   /** Test hook: distinct memoized AST-join setups on this index. */
   private[graft] def astJoinMemoEntries: Int =
@@ -1798,9 +1743,19 @@ final class SearchIndex private (
 
   /** The memo lookup of both query-join front doors: a hit (same key
     * AND `sameResult` on the analyzed plan) is LRU-refreshed and
-    * returns its scored frame; a miss builds one, parks the frames of
-    * a hash-collision-displaced entry and of LRU victims past
-    * [[astJoinMemoCap]] (see [[parkDisplaced]]), and stores it. */
+    * returns its scored frame; a miss builds one and stores it,
+    * dropping a hash-collision-displaced entry and the LRU victims
+    * past `joinGates.memoCap`.
+    *
+    * A dropped entry's frames live exactly as long as something
+    * reaches them: a caller-held result frame still reads its
+    * checkpoint blocks (a localCheckpoint'd RDD cannot recompute, so
+    * releasing them would break its re-execution), and Spark's
+    * ContextCleaner frees them once no result plan holds their RDDs.
+    * Only the columnar cache of a lineage-cut frame (above the gate)
+    * is dropped at once: the session's CacheManager, not a result
+    * plan, holds that, and it rebuilds from the checkpoint beneath it.
+    * [[unpersist]] releases the live entries. */
   private def memoized(key: (Int, String, String, String),
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
       build: => (DataFrame, Seq[DataFrame])): DataFrame =
@@ -1813,12 +1768,13 @@ final class SearchIndex private (
           df
         case existing =>
           val (df, frames) = build
-          existing.foreach { case (_, _, old) => parkDisplaced(old) }
+          def drop(old: Seq[DataFrame]): Unit = old.foreach(_.unpersist(false))
+          existing.foreach { case (_, _, old) => drop(old) }
           astJoinMemo(key) = (plan, df, frames)
-          while (astJoinMemo.size > astJoinMemoCap) {
+          while (astJoinMemo.size > joinGates.memoCap) {
             val (victim, (_, _, evicted)) = astJoinMemo.head
             astJoinMemo.remove(victim)
-            parkDisplaced(evicted)
+            drop(evicted)
           }
           df
       }
@@ -1831,7 +1787,7 @@ final class SearchIndex private (
   // against a seed-scan threshold), one shuffle-hash corpus attach,
   // then the shape side and the builder's own scorer
   // (`bool_query_score` or `dsl_query_score`). `bc` is the broadcast
-  // gate: the batch has at most [[SearchIndex.astBroadcastShapesMax]]
+  // gate: the batch has at most `joinGates.broadcastShapesMax`
   // shapes.
 
   /** `field`'s postings as (term, key), plus (tf, dl) for the
@@ -1874,7 +1830,7 @@ final class SearchIndex private (
   }
 
   /** Impact pruning's seed scan: for a (sid, term, df) frame of seed
-    * terms, the top max([[astSeedsPerShape]], `n`) postings of each
+    * terms, the top max(`seedsPerShape`, `n`) postings of each
     * term by single-term impact, fanned out to its shapes as distinct
     * (sid, key) pairs. Streams the postings and broadcasts the seed
     * terms (the single-task fan-out fix of [[termJoin]]). Aggregated
@@ -1899,7 +1855,8 @@ final class SearchIndex private (
       .withColumn("__idf", log(lit(1.0) +
         (lit(fs.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5)))
       .groupBy(col("term"))
-      .agg(topkAggFor(posts, math.max(astSeedsPerShape, n))(col("key"), prio).as("__s"))
+      .agg(topkAggFor(posts, math.max(joinGates.seedsPerShape, n))(col("key"), prio)
+        .as("__s"))
     seedTerms.select(col("sid"), col("term")).join(top, Seq("term"))
       .select(col("sid"), explode(col("__s")).as("h"))
       .select(col("sid"), col("h.key").as("key"))
@@ -1940,12 +1897,6 @@ final class SearchIndex private (
       .join(if (bc) broadcast(shapeSide) else shapeSide.hint("shuffle_hash"), Seq("sid"))
       .withColumn("__r", score)
 
-  /** Seeds scored per shape for the impact-pruning threshold (see
-    * [[queryJoinAst]]'s `impactPruning`): more seeds cost more
-    * bounded verifies but yield a tighter threshold and therefore
-    * more pruning. Var is a test hook. */
-  private[graft] var astSeedsPerShape: Int = 64
-
   /** Test hook: the (sid, key) candidate frame the most recent
     * [[buildAstScored]] admitted to verification — lets plan-shape
     * specs pin that impact pruning admits FEWER candidates than the
@@ -1954,8 +1905,9 @@ final class SearchIndex private (
 
   /** The setup + probe + verify pipeline behind [[queryJoinAst]],
     * producing the un-capped scored (qid, key, score) frame plus the
-    * setup frames scoped to the memo entry (released on eviction or
-    * index [[unpersist]]).
+    * setup frames scoped to the memo entry (see [[memoized]] for
+    * their lifetime). Rows with a null qid are dropped before the
+    * generator runs: they get no hits.
     *
     * Setup cost: one checkpoint of the |left|-row `canon` frame, one
     * collect of the deduplicated shapes (the metadata, the shape
@@ -1963,11 +1915,12 @@ final class SearchIndex private (
     * the per-shape scoring table (IDF vector + chosen probe
     * alternative); a dictionary expansion adds one collect, pruning
     * a seed checkpoint and one collect of the pruned probe table.
-    * When the batch has at most [[SearchIndex.astBroadcastShapesMax]]
-    * rows the tables are re-planned as local relations; above it
-    * they are lineage-cut and stay distributed, one bounded action
-    * reads the metadata and the shape count, and the qid fan-out is
-    * lineage-cut too. */
+    * When the batch has at most
+    * [[SearchIndex.JoinGates]]`.broadcastShapesMax` rows the tables
+    * are re-planned as local relations and the qid fan-out
+    * broadcasts; above it they are lineage-cut and stay distributed,
+    * one bounded action reads the metadata and the shape count, and
+    * the qid fan-out is lineage-cut too. */
   private def buildAstScored(left: DataFrame, qidCol: String,
       queryGen: Row => SearchQuery, field: String,
       maxCandidatesPerShape: Int = Int.MaxValue,
@@ -1985,7 +1938,7 @@ final class SearchIndex private (
     // executor-side AST generation + serialization; alts = Seq.empty
     // encodes a TOTAL shape (QueryProgram.probeAlts invariant: a
     // defined alternatives list is never empty)
-    val serialized = left.map { r =>
+    val serialized = left.where(col(qidName).isNotNull).map { r =>
       val p = QueryProgram.compile(queryGen(r), targetField, qAnalyzer, indexedF, textF)
       (r.getAs[Number](qidName).longValue(), p.ops, p.terms, p.termFields, p.consts,
         p.attrFields, p.strAttrFields, p.xTextFields, p.probeAlts.getOrElse(Seq.empty))
@@ -1994,7 +1947,8 @@ final class SearchIndex private (
     // checkpointed: the shape dedup and the qid fan-out both read it,
     // and the opaque generator map would otherwise ride every
     // downstream task closure
-    val (canon0, collect) = SearchIndex.checkpointCanon(serialized)
+    val (canon0, collect) =
+      SearchIndex.checkpointCanon(serialized, joinGates.broadcastShapesMax)
     val canon = keepFrame(canon0)
     // shapes0 keeps the SERIALIZED columns (the fan-out join key);
     // `shapes` is its dictionary-expanded rewrite — identical when no
@@ -2124,7 +2078,7 @@ final class SearchIndex private (
     // under the gate: attaching them BEFORE the key exchange made it
     // materialize candidates x 1KB (10.7 GB written for the
     // dense-expansion batch at 16x, SCALE.md)
-    val bc = nShapes <= SearchIndex.astBroadcastShapesMax
+    val bc = nShapes <= joinGates.broadcastShapesMax
     // doc side: token array + the attr / cross-field maps, one
     // corpus join
     val docInputNames = Seq("__attrs", "__attrs_str", "__xtokens", "__xavgdl")
@@ -2140,7 +2094,7 @@ final class SearchIndex private (
     // as the threshold, and shrink each shape's probe to the terms
     // outside which no document can reach it
     // (QueryProgram.essentialTerms). Every stage is bounded: seeds
-    // are |shapes| x astSeedsPerShape rows through the same
+    // are |shapes| x seedsPerShape rows through the same
     // shuffle-hash verify as the main path, the threshold and the
     // per-alt df table are |shapes|-row aggregates, and the bound
     // analysis is a per-shape UDF over the already-joined idf/mi
@@ -2166,7 +2120,7 @@ final class SearchIndex private (
           .groupBy(col("sid"))
           .agg(min(struct(col("df"), col("term"))).as("m"))
           .select(col("sid"), col("m.term").as("term"), col("m.df").as("df"))
-        // up to astSeedsPerShape rows per shape: checkpointed, not
+        // up to seedsPerShape rows per shape: checkpointed, not
         // collected (its joins hint the corpus side as the build side)
         val seeds = keepFrame(seedScan(minTerm, field, pruneK)
           .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK))
@@ -2315,14 +2269,16 @@ final class SearchIndex private (
     val verified = verify(attachAndScore(candsBounded, docSide, progs, bc, scoreExpr)
       .unionByName(totalCands.withColumn("__r", scoreExpr)))
     // qid fan-out: canon against the shape table on FIVE array
-    // columns. Under the collect gate the table broadcasts and the
-    // join is one map-side pass over canon; above it the |left|-row
-    // (qid, sid) result is lineage-cut so repeat calls skip the
-    // array-keyed join.
+    // columns. Under the collect gate the table broadcasts, the join
+    // is one map-side pass over canon, and its at most gate rows
+    // broadcast into the final join (a plan independent of AQE stage
+    // timing); above it the |left|-row (qid, sid) result is
+    // lineage-cut so repeat calls skip the array-keyed join.
     val fanKeys = Seq("ops", "terms", "term_fields", "consts", "alts")
     val fan =
-      if (collect) canon.join(broadcast(shapes0.select((fanKeys :+ "sid").map(col): _*)),
-        fanKeys).select(col("qid"), col("sid"))
+      if (collect) broadcast(canon.join(
+        broadcast(shapes0.select((fanKeys :+ "sid").map(col): _*)),
+        fanKeys).select(col("qid"), col("sid")))
       else keepFrame(SearchIndex.cutLineage(canon.join(shapes0, fanKeys)
         .select(col("qid"), col("sid")), StorageLevel.MEMORY_AND_DISK))
     (verified.join(fan, Seq("sid"))
@@ -2739,7 +2695,8 @@ final class SearchIndex private (
     * (reference analog: ConfigurableSimilarity plugins,
     * similarities/ConfigurableSimilarity.scala:6-9). */
   def withSimilarity(sim: Similarity): SearchIndex =
-    new SearchIndex(spark, spec.copy(similarity = sim), docs, postings, stats, fieldStats)
+    new SearchIndex(spark, spec.copy(similarity = sim), docs, postings, stats, fieldStats,
+      joinGates)
 
   /** Same index, different physical layout for the batch/postings
     * path — the artifacts are layout-independent (layout only selects
@@ -2748,7 +2705,14 @@ final class SearchIndex private (
     * SearchableRDD implementations at build time, SURVEY §1.4 — here
     * a per-query decision, which a single-build engine can afford). */
   def withLayout(l: IndexLayout): SearchIndex =
-    new SearchIndex(spark, spec.copy(layout = l), docs, postings, stats, fieldStats)
+    new SearchIndex(spark, spec.copy(layout = l), docs, postings, stats, fieldStats,
+      joinGates)
+
+  /** Same index, different query-join tuning (the artifacts do not
+    * depend on it). The copy has its own memo and lazily built
+    * frames; `unpersist` on either releases the shared artifacts. */
+  private[graft] def withJoinGates(g: JoinGates): SearchIndex =
+    new SearchIndex(spark, spec, docs, postings, stats, fieldStats, g)
 
   // ------------------------------------------------------------------
   // incremental maintenance
@@ -2852,33 +2816,6 @@ final class SearchIndex private (
     * (identity, not recomputation). Empty for a fresh build. */
   private[graft] def lineageParents: Seq[SearchIndex] = parents
 
-  /** Per-call persisted helper frames (queryJoinPhrase's analyzed
-    * query batch, the index-wide stats frames, the setup frames of
-    * query joins displaced from the memo):
-    * registered so [[unpersist]] releases them with the index — a
-    * long-lived session issuing many joins would otherwise leak one
-    * cached frame per invocation (nothing else reaches them). */
-  private val callFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private def trackPersist(df: DataFrame): DataFrame =
-    callFrames.synchronized { callFrames += df; df }
-
-  /** Frames displaced from the AST-join memo (LRU eviction past
-    * [[astJoinMemoCap]], or a semanticHash-collision overwrite) are
-    * PARKED in [[callFrames]] and released at index [[unpersist]],
-    * NOT released immediately: a caller-held result DataFrame still
-    * references its entry's checkpointed setup frames, and a
-    * localCheckpoint'd RDD cannot recompute after unpersist — the
-    * old immediate release broke any re-execution of a previously
-    * returned frame with "checkpoint block not found" (ADVICE r16,
-    * medium; MemoLifecycleSpec pins the survival). Storage therefore
-    * grows with every DISTINCT displaced setup until unpersist — by
-    * one |left|-row `canon` checkpoint per displaced entry whose left
-    * had at most [[SearchIndex.astBroadcastShapesMax]] rows (its
-    * shape tables are local relations and go with the plans that
-    * reference them). */
-  private def parkDisplaced(frames: Seq[DataFrame]): Unit =
-    callFrames.synchronized { callFrames ++= frames }
-
   /** Blocking so a caller tearing down one index (bench section
     * transitions, corpus replacement) doesn't leave block removal
     * racing with its next query's tasks. Cascades through
@@ -2889,13 +2826,12 @@ final class SearchIndex private (
     SearchIndex.releaseFrame(postings, blocking)
     SearchIndex.releaseFrame(stats, blocking)
     extraFrames.foreach(SearchIndex.releaseFrame(_, blocking))
-    callFrames.synchronized {
-      callFrames.foreach(SearchIndex.releaseFrame(_, blocking))
-      callFrames.clear()
-    }
     termDictionaryRef = null // driver heap only; rebuilt on next use
-    xdfStatsFrame = null // tracked in callFrames; rebuild on next use
-    maxImpactFrame = null // likewise
+    // the lazily built index-wide frames; rebuilt on next use
+    Seq(xdfStatsFrame, maxImpactFrame).filter(_ != null)
+      .foreach(SearchIndex.releaseFrame(_, blocking))
+    xdfStatsFrame = null
+    maxImpactFrame = null
     astJoinMemo.synchronized {
       astJoinMemo.values.foreach(
         _._3.foreach(SearchIndex.releaseFrame(_, blocking)))
@@ -3029,21 +2965,34 @@ object SearchIndex {
     if (isExactSet && chosen.forall(_.mp == neg)) Seq.empty else chosen
   }
 
-  /** Largest distinct-shape count for which a query join
-    * ([[queryJoinAst]], [[queryJoinBool]]) broadcasts its shape side:
-    * the probe joins, and the program or clause attach after the
-    * corpus join (so the candidate stream crosses its only exchange as
-    * bare (sid, key) pairs — SCALE.md receipts). ~1 KB per AST shape,
-    * so the default is ~64 MB of broadcast, the order of a generous
-    * autoBroadcastJoinThreshold; above it the shape side attaches
-    * after the corpus join as the build side of a shuffle-hash join
-    * (wide-but-linear, never sorted).
-    * The same gate, applied to the left's row count, decides for
-    * [[queryJoinAst]] and [[queryJoinBool]] alike whether the
-    * per-shape setup tables are collected into local relations
-    * ([[checkpointCanon]], [[shapeTable]]).
-    * Process-wide, adjustable. */
-  @volatile var astBroadcastShapesMax: Long = 65536L
+  /** The query-join tuning of one index, fixed when it is built
+    * (tests take another through `SearchIndex.withJoinGates`).
+    *
+    * @param broadcastShapesMax largest distinct-shape count for which
+    *   a query join ([[SearchIndex.queryJoinAst]],
+    *   [[SearchIndex.queryJoinBool]]) broadcasts its shape side: the
+    *   probe joins, and the program or clause attach after the corpus
+    *   join (so the candidate stream crosses its only exchange as
+    *   bare (sid, key) pairs — SCALE.md receipts). ~1 KB per AST
+    *   shape, so 65536 is ~64 MB of broadcast, the order of a
+    *   generous autoBroadcastJoinThreshold; above it the shape side
+    *   attaches after the corpus join as the build side of a
+    *   shuffle-hash join (wide-but-linear, never sorted). The same
+    *   gate, applied to the left's row count, decides whether the
+    *   per-shape setup tables are collected into local relations and
+    *   the qid fan-out broadcasts ([[checkpointCanon]],
+    *   [[shapeTable]]).
+    * @param seedsPerShape seeds scored per shape for the
+    *   impact-pruning threshold: more seeds cost more bounded
+    *   verifies but yield a tighter threshold and therefore more
+    *   pruning.
+    * @param memoCap query-join memo entries kept per index; 16 so a
+    *   workload alternating the AST and bool front doors does not
+    *   thrash either's entries. */
+  private[graft] final case class JoinGates(
+      broadcastShapesMax: Long = 65536L,
+      seedsPerShape: Int = 64,
+      memoCap: Int = 16)
 
   /** Name of the internal token-array column for `field` — public so
     * callers can build query-generator expressions over the analyzed
@@ -3093,13 +3042,13 @@ object SearchIndex {
 
   /** The |left|-row canonical query frame of a query join behind one
     * localCheckpoint, and whether its per-shape setup tables are
-    * collected: they are when the frame has at most
-    * [[astBroadcastShapesMax]] rows, since a batch has no more shapes
-    * than rows. The decision costs nothing beyond the checkpoint's
-    * own job, so a larger batch pays no extra collect. */
-  private[search] def checkpointCanon(df: DataFrame): (DataFrame, Boolean) = {
+    * collected: they are when the frame has at most `gate` rows
+    * ([[JoinGates]]`.broadcastShapesMax`), since a batch has no more
+    * shapes than rows. The decision costs nothing beyond the
+    * checkpoint's own job, so a larger batch pays no extra collect. */
+  private[search] def checkpointCanon(df: DataFrame, gate: Long): (DataFrame, Boolean) = {
     val (canon, rows) = Frames.checkpointCounted(df, StorageLevel.MEMORY_AND_DISK)
-    (canon, rows <= astBroadcastShapesMax)
+    (canon, rows <= gate)
   }
 
   /** A query-join setup table with one row per distinct query shape

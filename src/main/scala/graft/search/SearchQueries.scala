@@ -759,9 +759,8 @@ object SearchQueries {
     }),
 
     // the same phrase self-join as query_join_dsl but through the
-    // specialized phrase plan (postings candidates + phrase_count
-    // verify, no serialized programs) — must produce the identical
-    // result set
+    // phrase-column front door (queryJoinPhrase generates the same
+    // MatchPhrase per row) — must produce the identical result set
     "query_join_phrase" -> ((s, dir) => {
       val idx = indexFor(s, dir)
       val left = idx.docs

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * each earlier family (dedup, curation, search, ANN); every entry in
   * SparkEntry.queries is separately hash-checked against DuckDB by
   * the driver, so this spec focuses the partitioning axis. */
-class InvarianceSpec extends AnyFunSuite with ReadsSharedGates {
+class InvarianceSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
 

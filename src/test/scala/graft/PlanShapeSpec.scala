@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * refactor that silently trades a broadcast for a shuffle, or a
   * bounded top-k for a global sort, fails here instead of in
   * production explain output. */
-class PlanShapeSpec extends AnyFunSuite with ReadsSharedGates {
+class PlanShapeSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._

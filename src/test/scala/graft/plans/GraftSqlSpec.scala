@@ -1,13 +1,13 @@
 package graft.plans
 
-import graft.{ReadsSharedGates, TestSpark}
+import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL-visible search surface: graft_search must resolve as a
   * table function, plan into the fused EXPLAIN-visible probe node,
   * and return exactly the Scala API's rows. */
-class GraftSqlSpec extends AnyFunSuite with ReadsSharedGates {
+class GraftSqlSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._

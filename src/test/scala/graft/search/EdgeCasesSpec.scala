@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.{ReadsSharedGates, TestSpark}
+import graft.TestSpark
 import graft.dsl.builders._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Degenerate inputs a production index must survive: empty corpora,
   * empty documents, absent terms, k larger than the corpus, null
   * keyword fields. */
-class EdgeCasesSpec extends AnyFunSuite with ReadsSharedGates {
+class EdgeCasesSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -105,38 +105,63 @@ class EdgeCasesSpec extends AnyFunSuite with ReadsSharedGates {
     idx.unpersist()
   }
 
-  test("a zero-row left through every query-join front door: zero rows, contract schema") {
-    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"), (3L, "alpha delta"))
+  /** Every query-join front door over `left` (doc_id, text): its
+    * name, its output columns and its result. */
+  private def frontDoors(idx: SearchIndex, left: org.apache.spark.sql.DataFrame)
+      : Seq[(String, Seq[String], org.apache.spark.sql.DataFrame)] = {
+    val words = split(col("text"), " ")
+    val none = array().cast("array<string>")
+    val gen: org.apache.spark.sql.Row => graft.dsl.SearchQuery =
+      r => "text" matchAny termSet(r.getAs[String]("text").split(" ").toSeq: _*)
+    val hitCols = Seq("rank", "key", "score")
+    Seq(
+      ("queryJoin", left.columns.toSeq ++ hitCols,
+        idx.queryJoin(left, "doc_id", words, "text", 3)),
+      ("queryJoin(impactPruning)", left.columns.toSeq ++ hitCols,
+        idx.queryJoin(left, "doc_id", words, "text", 3, impactPruning = true)),
+      ("queryJoinBool", "qid" +: hitCols,
+        idx.queryJoinBool(left, "doc_id", slice(words, 1, 1), words, none, "text", 3)),
+      ("queryJoinBool(impactPruning)", "qid" +: hitCols,
+        idx.queryJoinBool(left, "doc_id", none, words, none, "text", 3,
+          excludeSelf = true, impactPruning = true)),
+      ("queryJoinAst", "qid" +: hitCols,
+        idx.queryJoinAst(left, "doc_id", gen, "text", 3)),
+      ("queryJoinAst(impactPruning)", "qid" +: hitCols,
+        idx.queryJoinAst(left, "doc_id", gen, "text", 3, impactPruning = true)),
+      ("queryJoinDsl", left.columns.toSeq ++ hitCols,
+        idx.queryJoinDsl(left, "doc_id", gen, 3, excludeSelf = true)),
+      ("queryJoinPhrase", "qid" +: hitCols,
+        idx.queryJoinPhrase(left, "doc_id", col("text"), "text", 3)))
+  }
+
+  private lazy val frontDoorDocs =
+    Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"), (3L, "alpha delta"))
       .toDF("doc_id", "text")
-    val idx = SearchIndex.build(docs, IndexSpec("doc_id", Seq("text")))
+
+  test("a zero-row left through every query-join front door: zero rows, contract schema") {
+    val idx = SearchIndex.build(frontDoorDocs, IndexSpec("doc_id", Seq("text")))
     try {
-      val left = docs.where(lit(false))
-      val words = split(col("text"), " ")
-      val none = array().cast("array<string>")
-      val gen: org.apache.spark.sql.Row => graft.dsl.SearchQuery =
-        r => "text" matchAny termSet(r.getAs[String]("text").split(" ").toSeq: _*)
-      val hitCols = Seq("rank", "key", "score")
-      val joins = Seq(
-        ("queryJoin", left.columns.toSeq ++ hitCols,
-          idx.queryJoin(left, "doc_id", words, "text", 3)),
-        ("queryJoin(impactPruning)", left.columns.toSeq ++ hitCols,
-          idx.queryJoin(left, "doc_id", words, "text", 3, impactPruning = true)),
-        ("queryJoinBool", "qid" +: hitCols,
-          idx.queryJoinBool(left, "doc_id", slice(words, 1, 1), words, none, "text", 3)),
-        ("queryJoinBool(impactPruning)", "qid" +: hitCols,
-          idx.queryJoinBool(left, "doc_id", none, words, none, "text", 3,
-            excludeSelf = true, impactPruning = true)),
-        ("queryJoinAst", "qid" +: hitCols,
-          idx.queryJoinAst(left, "doc_id", gen, "text", 3)),
-        ("queryJoinAst(impactPruning)", "qid" +: hitCols,
-          idx.queryJoinAst(left, "doc_id", gen, "text", 3, impactPruning = true)),
-        ("queryJoinDsl", left.columns.toSeq ++ hitCols,
-          idx.queryJoinDsl(left, "doc_id", gen, 3, excludeSelf = true)),
-        ("queryJoinPhrase", "qid" +: hitCols,
-          idx.queryJoinPhrase(left, "doc_id", col("text"), "text", 3)))
-      for ((name, cols, df) <- joins) {
+      for ((name, cols, df) <- frontDoors(idx, frontDoorDocs.where(lit(false)))) {
         assert(df.columns.toSeq == cols, s"$name schema: ${df.columns.mkString(", ")}")
         assert(df.collect().isEmpty, s"$name returned rows for an empty left")
+      }
+    } finally idx.unpersist()
+  }
+
+  test("a null qid gets no hits through every query-join front door") {
+    // the null-qid row shares its query with qid 1: whether it gets
+    // hits must not depend on that (the bool shape's sid is the min
+    // non-null qid), and no front door may fail on it
+    val idx = SearchIndex.build(frontDoorDocs, IndexSpec("doc_id", Seq("text")))
+    try {
+      val left = frontDoorDocs.where(col("doc_id") === 1L)
+        .unionByName(frontDoorDocs.where(col("doc_id") === 1L)
+          .withColumn("doc_id", lit(null).cast("long")))
+      for ((name, cols, df) <- frontDoors(idx, left)) {
+        val qids = df.select(col(if (cols.head == "qid") "qid" else "doc_id"))
+          .collect().map(r => Option(r.get(0)))
+        assert(qids.nonEmpty, s"$name returned no hits for qid 1")
+        assert(qids.forall(_.isDefined), s"$name returned hits for a null qid")
       }
     } finally idx.unpersist()
   }

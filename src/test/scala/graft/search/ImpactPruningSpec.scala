@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.{ReadsSharedGates, TestSpark}
+import graft.TestSpark
 import graft.dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
@@ -18,7 +18,7 @@ import scala.util.Random
   * regime where exact top-k is Theta(corpus) per shape, SCALE.md)
   * plus one rare high-impact term that lets the threshold rise above
   * the dense terms' combined score mass. */
-class ImpactPruningSpec extends AnyFunSuite with ReadsSharedGates {
+class ImpactPruningSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -148,8 +148,9 @@ class ImpactPruningSpec extends AnyFunSuite with ReadsSharedGates {
       val withS = if (id % 6 == 0) toks ++ Seq.fill(1 + (id % 4).toInt)("ss") else toks
       (id, withS.mkString(" "), 0L)
     }.toDF("doc_id", "text", "n_chars")
+    // small seed set so the union cannot mask the filter
     val idx2 = SearchIndex.build(c2, IndexSpec("doc_id", Seq("text")))
-    idx2.astSeedsPerShape = 8 // small seed set so the union cannot mask the filter
+      .withJoinGates(SearchIndex.JoinGates(seedsPerShape = 8))
     val left = c2.where(col("doc_id") % 60 === 0).select("doc_id")
     val gen: Row => SearchQuery = _ => MatchAnyTerms("text", Seq("aa", "bb", "ss"))
     // the plain call is the true unpruned baseline

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.{ReadsSharedGates, TestSpark}
+import graft.TestSpark
 import graft.dsl.builders._
 import graft.dsl.{Boost, DisMax, MatchPhrase, MatchTerm, Parsed}
 import org.apache.spark.sql.Column
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-class IndexVariantsSpec extends AnyFunSuite with ReadsSharedGates {
+class IndexVariantsSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.{ReadsSharedGates, TestSpark}
+import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * capped result is a subset of the exact one, the global best
   * always survives (it is its partition's best), sizes obey
   * partitions x n, and the default is exact. */
-class MaxHitsPerIndexSpec extends AnyFunSuite with ReadsSharedGates {
+class MaxHitsPerIndexSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.{SharedGates, TestSpark}
+import graft.TestSpark
 import graft.dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    medium: eviction used to release the checkpoint blocks the
   *    caller-held frame still reads — localCheckpoint'd RDDs cannot
   *    recompute, so re-execution died with "checkpoint block not
-  *    found"; displaced frames now park until index unpersist);
+  *    found");
+  *  - a displaced entry's frames are freed once nothing reaches them
+  *    (the ContextCleaner's reachability, not index unpersist, bounds
+  *    their lifetime);
   *  - null qids on the pruned flat path are filtered, not NPE'd
   *    (the flag stays result-invisible);
   *  - queryJoinDsl(impactPruning) on a generator that leads on a
@@ -42,27 +45,64 @@ class MemoLifecycleSpec extends AnyFunSuite {
       col("key").cast("long"), round(col("score"), 6))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
 
-  test("a returned query-join frame survives memo eviction (displaced frames park until unpersist)") {
-    val idx = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
-    val savedCap = idx.astJoinMemoCap
+  test("a returned query-join frame survives memo eviction (displaced frames live while a result reaches them)") {
+    val base = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
     try {
-      idx.astJoinMemoCap = 1
       val left = corpus.select(col("doc_id"), col("text"))
       val genA: Row => SearchQuery =
         r => MatchAnyTerms("text", r.getAs[String]("text").split(" ").take(2).toSeq)
       val genB: Row => SearchQuery =
         r => MatchAnyTerms("text", r.getAs[String]("text").split(" ").slice(2, 4).toSeq)
-      val a = idx.queryJoinAst(left, "doc_id", genA, "text", 3)
-      val first = norm(a)
-      // a SECOND distinct setup evicts A's entry at cap 1
-      idx.queryJoinAst(left, "doc_id", genB, "text", 3).collect()
-      assert(idx.astJoinMemoEntries == 1)
-      // the caller-held frame must re-execute, bit-identically
-      assert(norm(a) == first)
-    } finally {
-      idx.astJoinMemoCap = savedCap
-      idx.unpersist()
-    }
+      // under the gate an entry holds its canon checkpoint; over it
+      // (gate 0) its lineage-cut shape tables too, whose columnar
+      // cache eviction drops at once
+      for (gate <- Seq(65536L, 0L)) {
+        val idx = base.withJoinGates(SearchIndex.JoinGates(broadcastShapesMax = gate, memoCap = 1))
+        val a = idx.queryJoinAst(left, "doc_id", genA, "text", 3)
+        val first = norm(a)
+        // a SECOND distinct setup evicts A's entry at cap 1
+        idx.queryJoinAst(left, "doc_id", genB, "text", 3).collect()
+        assert(idx.astJoinMemoEntries == 1)
+        // the caller-held frame must re-execute, bit-identically
+        assert(norm(a) == first, s"gate $gate")
+        assert(first.nonEmpty)
+      }
+    } finally base.unpersist()
+  }
+
+  test("displaced memo entries are freed once no result reaches them") {
+    // ADVICE medium: a long-lived index serving many distinct joins
+    // must not pin one canon checkpoint per join it ever ran. Six
+    // distinct joins at memo cap 2, only the last result kept: after
+    // GC, the persisted RDDs the joins added (the canon checkpoints)
+    // are at most the cap — the live result's entry is one of them.
+    val base = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
+    val idx = base.withJoinGates(SearchIndex.JoinGates(memoCap = 2))
+    try {
+      val sc = spark.sparkContext
+      val left = corpus.select(col("doc_id"), col("text"))
+      // compared as id sets: the context cleaner may drop unrelated
+      // RDDs of earlier suites meanwhile
+      val pinned0 = sc.getPersistentRDDs.keySet
+      var last: org.apache.spark.sql.DataFrame = null
+      for (n <- 1 to 6) {
+        val gen: Row => SearchQuery =
+          r => MatchAnyTerms("text", r.getAs[String]("text").split(" ").take(n).toSeq)
+        last = idx.queryJoinAst(left, "doc_id", gen, "text", 3)
+        last.collect()
+      }
+      assert(idx.astJoinMemoEntries == 2)
+      def added: Int = (sc.getPersistentRDDs.keySet -- pinned0).size
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (added > 2 && System.nanoTime() < deadline) {
+        System.gc()
+        Thread.sleep(200)
+      }
+      assert(added <= 2, s"$added persisted RDDs still pinned after GC; expected at most " +
+        "the memo cap's 2 canon checkpoints")
+      // the kept result still reads its entry's checkpoint
+      assert(last.collect().nonEmpty)
+    } finally idx.unpersist()
   }
 
   test("astBroadcastShapesMax boundary: forcing the non-broadcast orientation is result-identical") {
@@ -78,7 +118,6 @@ class MemoLifecycleSpec extends AnyFunSuite {
     // pinned too (no benchmark runs there): the corpus (__doc_key)
     // join is never a sort-merge and no Sort runs over the candidate
     // keys — the shape side attaches as a shuffle-hash build side.
-    val saved = SearchIndex.astBroadcastShapesMax
     val twice = corpus.unionByName(corpus.withColumn("doc_id", col("doc_id") + 100))
     val left = twice.select(col("doc_id"), col("text"))
     val genA: Row => SearchQuery =
@@ -89,8 +128,9 @@ class MemoLifecycleSpec extends AnyFunSuite {
         col("key").cast("long"), col("score"))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet,
         df.queryExecution.executedPlan.toString)
-    def runAll(): Seq[(Set[(Long, Int, Long, Double)], String)] = {
-      val idx = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
+    def runAll(gate: Long): Seq[(Set[(Long, Int, Long, Double)], String)] = {
+      val base = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
+      val idx = base.withJoinGates(SearchIndex.JoinGates(broadcastShapesMax = gate))
       try {
         val l = twice.select(col("doc_id"), split(col("text"), " ").as("req"))
         val empty = array().cast("array<string>")
@@ -102,32 +142,28 @@ class MemoLifecycleSpec extends AnyFunSuite {
             "text", 3, excludeSelf = true, impactPruning = true)))
       } finally idx.unpersist()
     }
-    // the gate is process-wide: hold the shared-gates write lock so no
-    // suite reading it runs while it is moved
-    SharedGates.changing {
-      try {
-        SearchIndex.astBroadcastShapesMax = 65536L // local-relation setup tables
-        val local = runAll()
-        SearchIndex.astBroadcastShapesMax = 7L // lineage-cut, broadcast
-        val cutBroadcast = runAll()
-        SearchIndex.astBroadcastShapesMax = 0L // every batch is "over the gate"
-        val cut = runAll()
-        Seq("queryJoinAst", "queryJoinBool", "queryJoinBool(impactPruning)")
-          .zip(local.zip(cutBroadcast.zip(cut))).foreach {
-            case (name, ((l, _), ((b, _), (c, plan)))) =>
-              assert(l.nonEmpty, s"$name returned no hits")
-              assert(b == l, s"$name differs between collected and lineage-cut tables")
-              assert(c == l, s"$name differs across the gate")
-              assert(!"SortMergeJoin [^\\n]*__doc_key".r.findFirstIn(plan).isDefined,
-                s"$name sort-merges the candidate stream against the corpus:\n$plan")
-              assert("(ShuffledHashJoin|BroadcastHashJoin) [^\\n]*__doc_key".r
-                .findFirstIn(plan).isDefined,
-                s"$name lost the hash-join corpus attach:\n$plan")
-              assert(!"Sort \\[key#\\d+L ASC".r.findFirstIn(plan).isDefined,
-                s"$name sorts the candidate stream:\n$plan")
-          }
-      } finally SearchIndex.astBroadcastShapesMax = saved
-    }
+    val local = runAll(65536L) // local-relation setup tables
+    val cutBroadcast = runAll(7L) // lineage-cut, broadcast
+    val cut = runAll(0L) // every batch is "over the gate"
+    Seq("queryJoinAst", "queryJoinBool", "queryJoinBool(impactPruning)")
+      .zip(local.zip(cutBroadcast.zip(cut))).foreach {
+        case (name, ((l, localPlan), ((b, _), (c, plan)))) =>
+          assert(l.nonEmpty, s"$name returned no hits")
+          assert(b == l, s"$name differs between collected and lineage-cut tables")
+          assert(c == l, s"$name differs across the gate")
+          // under the gate the qid fan-out broadcasts: no join keyed
+          // on sid alone shuffles, whichever AQE stage finishes first
+          assert(!"Exchange hashpartitioning\\(sid#\\d+L?, \\d+\\)".r
+            .findFirstIn(localPlan).isDefined,
+            s"$name shuffles on sid under the gate:\n$localPlan")
+          assert(!"SortMergeJoin [^\\n]*__doc_key".r.findFirstIn(plan).isDefined,
+            s"$name sort-merges the candidate stream against the corpus:\n$plan")
+          assert("(ShuffledHashJoin|BroadcastHashJoin) [^\\n]*__doc_key".r
+            .findFirstIn(plan).isDefined,
+            s"$name lost the hash-join corpus attach:\n$plan")
+          assert(!"Sort \\[key#\\d+L ASC".r.findFirstIn(plan).isDefined,
+            s"$name sorts the candidate stream:\n$plan")
+      }
   }
 
   test("memo footprint: each distinct exact join pins only its canon frame") {

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.{ReadsSharedGates, TestSpark}
+import graft.TestSpark
 import graft.dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
@@ -18,7 +18,7 @@ import scala.util.Random
   * dedup, per-query top-k) against the per-document scan; the scan
   * path itself is pinned against golden results by `ScanParitySpec`.
   * ("The driver path" below is that reference.) */
-class QueryJoinAstSpec extends AnyFunSuite with ReadsSharedGates {
+class QueryJoinAstSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._

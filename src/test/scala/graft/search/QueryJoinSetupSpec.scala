@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.{ReadsSharedGates, TestSpark}
+import graft.TestSpark
 import graft.dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * more for the AST scoring table); a memoized repeat launches
   * nothing. Runs on a fresh index, so an exact call that built an
   * index-wide pruning statistic would show up here too. */
-class QueryJoinSetupSpec extends AnyFunSuite with ReadsSharedGates {
+class QueryJoinSetupSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._

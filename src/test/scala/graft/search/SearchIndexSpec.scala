@@ -1,12 +1,12 @@
 package graft.search
 
-import graft.{ReadsSharedGates, TestSpark}
+import graft.TestSpark
 import graft.dsl._
 import graft.dsl.builders._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SearchIndexSpec extends AnyFunSuite with ReadsSharedGates {
+class SearchIndexSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._
