@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local Spark session configuration of the engine's mains
-  * (`Bench`, `Verify`) and its test suites: the oracle dump, the bench
-  * and the tests run under the same settings. Callers add what is
-  * theirs (an app name) and call `getOrCreate()`. */
+  * (`Bench`, `Verify`, `tools.IndexBuildBench`, `examples.Walkthrough`)
+  * and its test suites: the oracle dump, the bench and the tests run
+  * under the same settings. Callers add what is theirs (an app name)
+  * and call `getOrCreate()`. */
 object GraftSession {
   def builder(master: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()

@@ -242,6 +242,55 @@ final class SearchIndex private (
     math.log(1.0 + (n - df.toDouble + 0.5) / (df.toDouble + 0.5))
   }
 
+  /** [[idfOf]] as a column over `numDocs` and `df` columns. */
+  private def idfCol(numDocs: Column, df: Column): Column =
+    log(lit(1.0) + (numDocs.cast("double") - df + 0.5) / (df + 0.5))
+
+  /** The one term-statistics lookup of a query-join setup: `shapes`
+    * (one row per `sid`) trades its `slots` column
+    * (array<struct<field, term>>) for `__dfs`, `__idfs` and, with
+    * `impacts`, `__mis`: the measured max impact idf^p x mi_raw
+    * (p = 1 BM25 / 2 TFIDF, mi_raw from [[maxImpactStats]]), the
+    * impact-pruning bound's raw material. Each is position-aligned
+    * with the slots. One explode, one left join on (field, term), one
+    * `groupBy(sid)`; the frame's other columns ride through it, so a
+    * caller with wide per-shape columns passes only `sid` and the
+    * slots and joins the result back. A slot absent from the corpus keeps df 0 and max
+    * impact 0, like [[idfFor]]; N comes from the driver's `fieldStats`
+    * and is 0 on a field this index never built (an attr name's ""
+    * slot). */
+  private def withTermStats(shapes: DataFrame, slots: String, impacts: Boolean): DataFrame = {
+    val carried = shapes.columns.filterNot(c => c == "sid" || c == slots).toSeq
+    val numDocs = fieldStats.foldLeft(lit(0L)) { case (n, (f, s)) =>
+      when(col("field") === f, lit(s.numDocs)).otherwise(n)
+    }
+    val looked = shapes
+      .select((col("sid") +: carried.map(col)) :+
+        posexplode_outer(col(slots)).as(Seq("__pos", "__slot")): _*)
+      .withColumn("field", col("__slot.field"))
+      .withColumn("term", col("__slot.term"))
+      .join(stats.select(col("field"), col("term"), col("df")), Seq("field", "term"), "left")
+    val withMi = if (!impacts) looked
+      else looked.join(maxImpactStats.select(col("field"), col("term"), col("mi_raw")),
+        Seq("field", "term"), "left")
+    val df = coalesce(col("df"), lit(0L))
+    val idf = idfCol(numDocs, df)
+    val pExp = if (spec.similarity == TFIDF()) 2.0 else 1.0
+    val entry = struct((Seq(col("__pos"), df.as("df"), idf.as("idf")) ++
+      (if (impacts) Seq((pow(idf, lit(pExp)) * coalesce(col("mi_raw"), lit(0.0))).as("mi"))
+      else Nil)): _*)
+    // an empty slot array explodes to one null slot, which collects to
+    // nothing: every shape keeps its row, with empty arrays
+    withMi.groupBy(col("sid"))
+      .agg(sort_array(collect_list(when(col("__pos").isNotNull, entry))).as("__st"),
+        carried.map(c => first(col(c)).as(c)): _*)
+      .select((Seq(col("sid")) ++ carried.map(col) ++ Seq(
+        transform(col("__st"), _.getField("df")).as("__dfs"),
+        transform(col("__st"), _.getField("idf")).as("__idfs")) ++
+        (if (impacts) Seq(transform(col("__st"), _.getField("mi")).as("__mis"))
+        else Nil)): _*)
+  }
+
   /** Global IDF for the given (field, term) pairs through [[dfFor]]
     * (no Spark job below the dictionary's size gate). Terms absent
     * from the corpus get df=0 → idf = log(1+(N+0.5)/0.5); pairs on
@@ -704,7 +753,6 @@ final class SearchIndex private (
     }
     require(spec.storePositions,
       "bm25fSearch requires storePositions=true (per-field token arrays)")
-    val n = fieldStats(fields.head._1).numDocs
     // whole-document df per term from the materialized cross-field
     // stats table — a |terms|-row filtered collect, the same bounded
     // read discipline as [[dfFromStats]]. No corpus-sized job in the query
@@ -712,8 +760,7 @@ final class SearchIndex private (
     // corpus per call).
     val dfMap = xdfFor(terms)
     val perTerm = terms.map { t =>
-      val df = dfMap.getOrElse(t, 0L).toDouble
-      val idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+      val idf = idfOf(fields.head._1, dfMap.getOrElse(t, 0L))
       // field-order accumulation of weighted, length-normalized tf
       val tfAcc = fields.map { case (f, w, b) =>
         // null tokens / dl (absent field value) count 0
@@ -866,10 +913,8 @@ final class SearchIndex private (
 
   /** Per-term global IDF (reference getTermIDFs, IDFUtils.scala:9-28). */
   def getTermIDFs: DataFrame = {
-    val n = fieldStatsDf
-    stats.join(broadcast(n), "field")
-      .select(col("field"), col("term"),
-        log(lit(1.0) + (col("num_docs") - col("df") + 0.5) / (col("df") + 0.5)).as("idf"))
+    stats.join(broadcast(fieldStatsDf), "field")
+      .select(col("field"), col("term"), idfCol(col("num_docs"), col("df")).as("idf"))
   }
 
   /** One-stop per-term statistics: document frequency, collection
@@ -881,7 +926,7 @@ final class SearchIndex private (
   def getTermStats: DataFrame =
     stats.join(broadcast(fieldStatsDf), "field")
       .select(col("field"), col("term"), col("df"), col("cf"),
-        log(lit(1.0) + (col("num_docs") - col("df") + 0.5) / (col("df") + 0.5)).as("idf"))
+        idfCol(col("num_docs"), col("df")).as("idf"))
 
   /** Did-you-mean term suggestions (the Lucene DirectSpellChecker /
     * FuzzySuggester surface): for each input term, the top-`k`
@@ -1341,63 +1386,40 @@ final class SearchIndex private (
     // linear and a quadratic join.
     val shapes = canon.groupBy("__req", "__opt", "__exc")
       .agg(min(col("qid")).as("sid"), count(lit(1)).as("__nq"))
-    val qterms = shapes
-      .select(col("sid"), col("__req"), col("__opt"), col("__exc"), col("__nq"),
-        size(col("__req")).as("n_req"),
-        explode(concat(
-          transform(col("__req"), t => struct(t.as("term"), lit(1).as("role"))),
-          transform(col("__opt"), t => struct(t.as("term"), lit(0).as("role"))),
-          transform(col("__exc"), t => struct(t.as("term"), lit(-1).as("role"))))).as("qt"))
-      .select(col("sid"), col("__req"), col("__opt"), col("__exc"), col("__nq"),
-        col("n_req"), col("qt.term").as("term"), col("qt.role").as("role"))
-    // absent terms keep df=0 so required-term queries with an unknown
-    // term simply match nothing (req < n_req — the probe term's empty
-    // postings yield no candidates, and the in-row verify would
-    // reject any candidate anyway), like idfFor
-    val withIdf0 = qterms
-      .join(stats.where(col("field") === lit(field)).select(col("term"), col("df")),
-        Seq("term"), "left")
-      .na.fill(0L, Seq("df"))
-      .withColumn("idf", log(lit(1.0) +
-        (lit(fs.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5)))
-    // pruning only: the full per-term max impact (idf^p x the
-    // measured idf-free max over the term's postings) — the pruning
-    // bound's raw material, joined here so the aligned arrays below
-    // carry it per shape. The exact join never reads it, so it never
-    // pays the index-wide max-impact aggregate.
-    val withIdf =
-      if (!impactPruning) withIdf0.withColumn("mi", lit(0.0))
-      else withIdf0
-        .join(maxImpactStats.where(col("field") === lit(field))
-          .select(col("term"), col("mi_raw")), Seq("term"), "left")
-        .na.fill(0.0, Seq("mi_raw"))
-        .withColumn("mi", pow(col("idf"),
-          lit(if (spec.similarity == TFIDF()) 2.0 else 1.0)) * col("mi_raw"))
+    // the shape's clause terms as (term, role) slots, sorted: the
+    // deterministic score summation order. Absent terms keep df=0, so
+    // required-term queries with an unknown term simply match nothing
+    // (the probe term's empty postings yield no candidates, and the
+    // in-row verify would reject any candidate anyway), like idfFor.
+    // Only pruning reads the per-term max impacts: the exact join
+    // never pays that index-wide aggregate.
+    val withStats = withTermStats(shapes
+      .withColumn("__q", sort_array(concat(
+        transform(col("__req"), t => struct(t.as("term"), lit(1).as("role"))),
+        transform(col("__opt"), t => struct(t.as("term"), lit(0).as("role"))),
+        transform(col("__exc"), t => struct(t.as("term"), lit(-1).as("role"))))))
+      .withColumn("__slots", transform(col("__q"),
+        x => struct(lit(field).as("field"), x.getField("term").as("term")))),
+      "__slots", impactPruning)
+    val rarest = array_min(filter(
+      zip_with(col("__q"), col("__dfs"), (x, d) => struct(d.as("df"),
+        x.getField("term").as("term"), x.getField("role").as("role"))),
+      _.getField("role") === 1))
     // the SHAPE TABLE, one row per shape: the shape's clause arrays
     // (the fan-out join key), its qid count, ALIGNED term/role/idf
-    // arrays (sorted — deterministic score summation order) and the
-    // probe term set: the minimum-df required term (Lucene: lead with
-    // the rarest MUST clause), or every optional term when no clause
-    // is required. Everything downstream reads this one table.
-    val (qinfo, qrows) = shapeTable(withIdf
-      .groupBy(col("sid"))
-      .agg(
-        sort_array(collect_list(struct(col("term"), col("role"), col("idf"),
-          col("mi"), col("df")))).as("__q"),
-        first(col("__req")).as("__req"), first(col("__opt")).as("__opt"),
-        first(col("__exc")).as("__exc"), first(col("__nq")).as("__nq"),
-        first(col("n_req")).as("n_req"),
-        min(when(col("role") === 1, struct(col("df"), col("term")))).as("__rarest"),
-        collect_list(when(col("role") === 0, col("term"))).as("__optTerms"))
-      .select(col("sid"), col("__req"), col("__opt"), col("__exc"), col("__nq"),
-        col("n_req"),
-        transform(col("__q"), x => x.getField("term")).as("__terms"),
-        transform(col("__q"), x => x.getField("role")).as("__roles"),
-        transform(col("__q"), x => x.getField("idf")).as("__idfs"),
-        transform(col("__q"), x => x.getField("mi")).as("__mis"),
-        transform(col("__q"), x => x.getField("df")).as("__dfs"),
-        when(col("n_req") > 0, array(col("__rarest.term")))
-          .otherwise(col("__optTerms")).as("__probes")),
+    // arrays and the probe term set: the minimum-df required term
+    // (Lucene: lead with the rarest MUST clause), or every optional
+    // term when no clause is required. Everything downstream reads
+    // this one table.
+    val (qinfo, _) = shapeTable(withStats
+      .select((Seq(col("sid"), col("__req"), col("__opt"), col("__exc"), col("__nq"),
+        size(col("__req")).as("n_req"),
+        transform(col("__q"), _.getField("term")).as("__terms"),
+        transform(col("__q"), _.getField("role")).as("__roles"),
+        col("__idfs"), col("__dfs"),
+        when(size(col("__req")) > 0, array(rarest.getField("term")))
+          .otherwise(filter(col("__opt"), _.isNotNull)).as("__probes")) ++
+        (if (impactPruning) Seq(col("__mis")) else Nil)): _*),
       keep, collect)
     // the broadcast gate: a collected table is under it by
     // construction; above the collect gate the lineage-cut table is
@@ -1852,8 +1874,7 @@ final class SearchIndex private (
     val posts = fieldPostings(field, tfDl = true)
     val top = posts
       .join(broadcast(seedTerms.select(col("term"), col("df")).distinct()), Seq("term"))
-      .withColumn("__idf", log(lit(1.0) +
-        (lit(fs.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5)))
+      .withColumn("__idf", idfCol(lit(fs.numDocs), col("df")))
       .groupBy(col("term"))
       .agg(topkAggFor(posts, math.max(joinGates.seedsPerShape, n))(col("key"), prio)
         .as("__s"))
@@ -1993,75 +2014,41 @@ final class SearchIndex private (
     val shapes = expandShapes(shapes0, field, needsExpansion, table)
     // validates the attr columns eagerly, plan-time
     val docInputs = programDocInputs(attrFields, strAttrFields, xFields)
-    val st = stats.select(col("field"), col("term"), col("df"))
-    // per-slot IDF vector aligned with the program's term table,
-    // resolved against each slot's OWN field (text slots against the
-    // probe field, keyword slots against theirs); absent terms keep
-    // df=0 like idfFor; attr-name slots (field "") match no stats row
-    // and their idf is never read. The program's consts are appended
-    // after the idf prefix — DslQueryScore reads const operands at
-    // |terms| + idx.
+    // ONE term-statistics lookup per call (see [[withTermStats]]):
+    // the program's term slots, each resolved against its OWN field
+    // (text slots against the probe field, keyword slots against
+    // theirs; attr-name slots, field "", match no stats row and their
+    // idf is never read), then every probe alternative's terms, which
+    // are PROBE-FIELD terms by construction (probeAlts soundness)
     val pruning = pruneK > 0
-    val termIdf0 = shapes
-      .select(col("sid"), col("term_fields"),
-        posexplode(col("terms")).as(Seq("pos", "term")))
-      .withColumn("field", element_at(col("term_fields"), col("pos") + 1))
-      .drop("term_fields")
-      .join(st, Seq("field", "term"), "left").na.fill(0L, Seq("df"))
-      .join(broadcast(fieldStatsDf.select(col("field"), col("num_docs"))),
-        Seq("field"), "left")
-      .withColumn("idf", log(lit(1.0) +
-        (coalesce(col("num_docs").cast("double"), lit(0.0)) - col("df") + 0.5) /
-          (col("df") + 0.5)))
-    // pruning also needs the per-slot MEASURED max impact, aligned
-    // like the idf vector: idf^p x mi_raw with the same idf the
-    // scoring uses (p = 1 BM25 / 2 TFIDF, see [[maxImpactStats]]);
-    // slots absent from the corpus bound to 0 (they match nothing)
-    val termIdf =
-      if (!pruning)
-        termIdf0.groupBy(col("sid"))
-          .agg(sort_array(collect_list(struct(col("pos"), col("idf")))).as("pi"))
-          .select(col("sid"), transform(col("pi"), x => x.getField("idf")).as("idfs"))
-      else {
-        val p = spec.similarity match { case _: BM25 => 1.0; case TFIDF() => 2.0 }
-        termIdf0
-          .join(maxImpactStats, Seq("field", "term"), "left")
-          .withColumn("mi", pow(col("idf"), lit(p)) *
-            coalesce(col("mi_raw"), lit(0.0)))
-          .groupBy(col("sid"))
-          .agg(sort_array(collect_list(
-            struct(col("pos"), col("idf"), col("mi")))).as("pi"))
-          .select(col("sid"),
-            transform(col("pi"), x => x.getField("idf")).as("idfs"),
-            transform(col("pi"), x => x.getField("mi")).as("mis"))
-      }
-    // probe-alternative selection by total df — the nested-AST
-    // generalization of queryJoinBool's rarest-required-term probe.
-    // Probe terms are PROBE-FIELD terms by construction (probeAlts
-    // soundness), so their dfs resolve against that field's stats.
-    // explode_outer keeps zero-term alts (the "matches nothing"
-    // probe) at df 0, which min() rightly prefers.
-    val stProbe = stats.where(col("field") === lit(field)).select(col("term"), col("df"))
-    val chosenAlt = shapes.where(size(col("alts")) > 0)
-      .select(col("sid"), posexplode(col("alts")).as(Seq("ai", "alt")))
-      .select(col("sid"), col("ai"), explode_outer(col("alt")).as("term"))
-      .join(stProbe, Seq("term"), "left").na.fill(0L, Seq("df"))
-      .groupBy(col("sid"), col("ai")).agg(sum(col("df")).as("adf"))
-      .groupBy(col("sid")).agg(min(struct(col("adf"), col("ai"))).as("c"))
-      .select(col("sid"), col("c.ai").as("ai"))
+    val nTerms = size(col("terms"))
+    val looked = shapes.join(withTermStats(shapes.select(col("sid"), concat(
+        zip_with(col("term_fields"), col("terms"), (f, t) => struct(f.as("field"), t.as("term"))),
+        transform(flatten(col("alts")), t => struct(lit(field).as("field"), t.as("term"))))
+        .as("__slots")), "__slots", pruning), Seq("sid"))
+    // alternative i's dfs: the slots after the program terms and the
+    // alternatives before it
+    val altDfs = transform(col("alts"), (alt, i) => slice(col("__dfs"),
+      nTerms + aggregate(slice(col("alts"), lit(1), i), lit(0), (n, a) => n + size(a)) + 1,
+      size(alt)))
+    val idfs = slice(col("__idfs"), lit(1), nTerms)
     // the per-shape SCORING TABLE: the program, its doubles vector
-    // (idfs ++ consts) and the chosen probe alternative (null for a
-    // TOTAL shape) in one |shapes|-row table, so repeat calls skip
-    // the stats joins and the selection aggregates
-    val scoring = table(shapes.join(termIdf, Seq("sid"), "left")
-      .join(chosenAlt, Seq("sid"), "left")
-      .withColumn("doubles",
-        concat(coalesce(col("idfs"), array().cast("array<double>")), col("consts")))
-      .select((Seq(col("sid"), col("ops"), col("terms"), col("doubles"), col("alts"),
-        col("ai")) ++
+    // (the idf vector ++ the consts: DslQueryScore reads const
+    // operands at |terms| + idx) and the chosen probe alternative
+    // `ai`, the minimum total df (ties to the lowest index; an empty
+    // "matches nothing" alt costs 0 and rightly wins) — the nested-AST
+    // generalization of queryJoinBool's rarest-required-term probe,
+    // null for a TOTAL shape. Pruning also carries the per-slot
+    // measured max impacts aligned like the idf vector (0 for slots
+    // absent from the corpus) and every alternative's dfs
+    val scoring = table(looked.withColumn("__alt_dfs", altDfs)
+      .select((Seq(col("sid"), col("ops"), col("terms"),
+        concat(idfs, col("consts")).as("doubles"), col("alts"),
+        array_min(transform(col("__alt_dfs"), (ds, i) => struct(
+          aggregate(ds, lit(0L), (x, y) => x + y).as("adf"), i.as("ai")))).getField("ai").as("ai")) ++
         (if (pruning)
-          Seq(col("term_fields"),
-            coalesce(col("mis"), array().cast("array<double>")).as("mis"))
+          Seq(col("term_fields"), col("__alt_dfs"),
+            slice(col("__mis"), lit(1), nTerms).as("mis"))
         else Nil)): _*))
     // SLIM candidate discipline (measured at 16x sf0.1: the previous
     // shape carried (ops, terms, doubles) on every candidate row
@@ -2095,12 +2082,11 @@ final class SearchIndex private (
     // outside which no document can reach it
     // (QueryProgram.essentialTerms). Every stage is bounded: seeds
     // are |shapes| x seedsPerShape rows through the same
-    // shuffle-hash verify as the main path, the threshold and the
-    // per-alt df table are |shapes|-row aggregates, and the bound
-    // analysis is a per-shape UDF over the already-joined idf/mi
-    // vectors. Seeds are unioned back into the candidates, so even
-    // a degenerate bound can never lose the hits the threshold came
-    // from.
+    // shuffle-hash verify as the main path, the threshold is a
+    // |shapes|-row aggregate, and the bound analysis is a per-shape
+    // UDF over the scoring table's idf/mi/df vectors. Seeds are
+    // unioned back into the candidates, so even a degenerate bound
+    // can never lose the hits the threshold came from.
     val prunedAndSeeds: Option[(DataFrame, DataFrame)] =
       if (!pruning) None
       else {
@@ -2113,12 +2099,11 @@ final class SearchIndex private (
         // expensive as the thing it prunes. Absent terms (df 0) have
         // no postings and are excluded; a shape whose terms are all
         // absent gets no seeds, a null threshold, and no pruning.
-        val minTerm = probed0
-          .select(col("sid"), explode(col("probe")).as("term"))
-          .join(stProbe, Seq("term"))
-          .where(col("df") > 0)
-          .groupBy(col("sid"))
-          .agg(min(struct(col("df"), col("term"))).as("m"))
+        val minTerm = scoring.where(col("ai").isNotNull)
+          .select(col("sid"), array_min(filter(zip_with(
+            element_at(col("alts"), col("ai") + 1), element_at(col("__alt_dfs"), col("ai") + 1),
+            (t, d) => struct(d.as("df"), t.as("term"))), _.getField("df") > 0)).as("m"))
+          .where(col("m").isNotNull)
           .select(col("sid"), col("m.term").as("term"), col("m.df").as("df"))
         // up to seedsPerShape rows per shape: checkpointed, not
         // collected (its joins hint the corpus side as the build side)
@@ -2130,59 +2115,31 @@ final class SearchIndex private (
           .select(col("sid"),
             when(size(col("__top")) >= pruneK,
               element_at(col("__top"), pruneK).getField("score")).as("__theta"))
-        // the base frame every remaining pruning stage derives from
-        val pruneBase = scoring.where(size(col("alts")) > 0)
-        // per-(shape, alternative) df tables over EVERY alternative,
-        // not just the min-total-df one: the essential-probe
-        // selection below may find that a denser alternative prunes
-        // to a cheaper essential set (explode_outer keeps the
-        // "matches nothing" empty alt at cost 0, which it rightly
-        // wins with)
-        val altStats = pruneBase
-          .select(col("sid"), posexplode(col("alts")).as(Seq("__ai", "__alt")))
-          .select(col("sid"), col("__ai"),
-            posexplode_outer(col("__alt")).as(Seq("__tp", "term")))
-          .join(stProbe, Seq("term"), "left").na.fill(0L, Seq("df"))
-          .groupBy(col("sid"), col("__ai"))
-          .agg(sort_array(collect_list(
-            struct(col("__tp"), col("term"), col("df")))).as("__a"))
-          .groupBy(col("sid"))
-          .agg(sort_array(collect_list(struct(col("__ai"),
-            transform(col("__a"), x => x.getField("term")).as("ts"),
-            transform(col("__a"), x => x.getField("df")).as("dfs")))).as("__alts"))
-          .select(col("sid"),
-            transform(col("__alts"), x => x.getField("ts")).as("__alt_terms"),
-            transform(col("__alts"), x => x.getField("dfs")).as("__alt_dfs"))
         val probeF = field
         val (kind, k1v) = spec.similarity match {
           case BM25(a, _) => (0, a)
           case TFIDF() => (1, 0.0)
         }
+        // the essential-probe selection reads EVERY alternative's dfs,
+        // not just the min-total-df one's: a denser alternative may
+        // prune to a cheaper essential set
         val essUdf = udf((ops: Seq[Int], terms: Seq[String], tfs: Seq[String],
             dbl: Seq[Double], mis: Seq[Double], altT: Seq[Seq[String]],
-            altD: Seq[Seq[Long]], th: java.lang.Double) => {
-          // drop the null placeholder row an EMPTY alt's outer
-          // explode produced, keeping term/df alignment
-          val pairs = altT.zip(altD).map { case (ts, ds) =>
-            ts.zip(ds).filter(_._1 != null)
-          }
+            altD: Seq[Seq[Long]], th: java.lang.Double) =>
           QueryProgram.essentialProbeBounds(ops.toIndexedSeq, terms.toIndexedSeq,
-            tfs.toIndexedSeq, dbl.toIndexedSeq, mis.toIndexedSeq,
-            pairs.map(_.map(_._1)), pairs.map(_.map(_._2)),
-            th, probeF, kind, k1v)
-        })
+            tfs.toIndexedSeq, dbl.toIndexedSeq, mis.toIndexedSeq, altT, altD,
+            th, probeF, kind, k1v))
         // a shape table kept with the memo entry: the single/multi
         // split below consumes the probe frame twice, and repeat
         // invocations re-execute the memoized scored plan — without
         // it the whole seed/threshold/essential pipeline (a handful
         // of bounded but latency-bearing stages) would re-run twice
         // per call. |shapes| rows of term lists.
-        val pruned = table(pruneBase
-          .join(altStats, Seq("sid"))
+        val pruned = table(scoring.where(size(col("alts")) > 0)
           .join(theta, Seq("sid"), "left")
           .withColumn("probe", essUdf(col("ops"), col("terms"),
             col("term_fields"), col("doubles"), col("mis"),
-            col("__alt_terms"), col("__alt_dfs"), col("__theta")))
+            col("alts"), col("__alt_dfs"), col("__theta")))
           // __th: did the threshold BIND for this shape? Unbound
           // shapes (no/too-few seeds, every unboundable program) take
           // the exact branch's slim
@@ -2207,7 +2164,8 @@ final class SearchIndex private (
     // avoid. The capped path's distinct bottom-k also dedups
     // implicitly, so it skips the (sid, key) dedup exchange — on a
     // dense batch that exchange moves Sum(df) rows and was MEASURED
-    // to dominate the capped run, CappedExpandBench/SCALE.md.)
+    // to dominate the capped run: SCALE.md's 16x capped-expansion
+    // receipts, scale_results/capped_expand_16x_r14.json.)
     val candsRaw = prunedAndSeeds match {
       case None => exactCands(probed0, field, bc, dedupMulti = exactCap)
       case Some((pruned, seeds)) =>
@@ -2530,8 +2488,7 @@ final class SearchIndex private (
       .join(stats.select(col("field"), col("term"), col("df")), Seq("field", "term"), "left")
       .na.fill(0L, Seq("df"))
       .join(broadcast(fieldStatsDf), "field")
-      .withColumn("idf",
-        log(lit(1.0) + (col("num_docs") - col("df") + 0.5) / (col("df") + 0.5)))
+      .withColumn("idf", idfCol(col("num_docs"), col("df")))
       .select("qid", "field", "term", "min_match", "n_terms", "idf", "avg_dl")
     val bm = spec.similarity match {
       case BM25(k1, b) =>

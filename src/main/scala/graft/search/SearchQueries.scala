@@ -953,7 +953,8 @@ object SearchQueries {
     // constant-score units, keyword-field constants). Left is a
     // quarter of the expand entry's so the seed/threshold stages —
     // the thing this entry times — stay a bounded slice of the
-    // bench floor; CappedExpandBench + SCALE.md carry the 16x
+    // bench floor; SCALE.md's 16x receipts
+    // (scale_results/capped_expand_16x_r14.json) carry the
     // exact-vs-pruned headline on the dense synthetic corpus.
     "query_join_ast_expand_pruned" -> ((s, dir) => {
       val idx = indexFor(s, dir)

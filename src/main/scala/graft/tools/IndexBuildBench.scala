@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Cold-build scaling measurement, the companion to [[ScaleCorpus]]:
   * the bench subset's best-of-2 minimum amortizes the build-once
   * registries away (the second run serves every probe from the warm
@@ -19,19 +17,7 @@ object IndexBuildBench {
     require(args.length == 1, "usage: IndexBuildBench <sfDir>")
     val dir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bounded top-k aggregates (TopKAgg) over thousands of groups:
-      // the 128-key default forces the sort-based object-agg fallback,
-      // which serializes each group buffer per row (measured 155s /
-      // 7.3GB spill on a 3.7M-row seed aggregate, SCALE.md r15)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warmup outside the timed region (codegen infra, parquet reader,
     // JIT) — same rationale as Bench's

@@ -381,4 +381,38 @@ class ImpactPruningSpec extends AnyFunSuite {
       null, "text", 0, 1.2)
     assert(e3 == alt)
   }
+
+  test("exact probe choice: the alternative with the smallest total df is probed") {
+    // "rr", "qq" and "ss" planted in disjoint documents (df 10, 10, 2)
+    // over the dense {aa bb cc dd} background
+    val rnd = new Random(3)
+    val vocab = Array("aa", "bb", "cc", "dd")
+    val c3 = (0L until 200L).map { id =>
+      val toks = Seq.fill(10)(vocab(rnd.nextInt(vocab.length)))
+      val planted = if (id % 20 == 0) Seq("rr") else if (id % 20 == 10) Seq("qq")
+        else if (id == 5 || id == 15) Seq("ss") else Nil
+      (id, (toks ++ planted).mkString(" "))
+    }.toDF("doc_id", "text")
+    val idx3 = SearchIndex.build(c3, IndexSpec("doc_id", Seq("text")))
+    try {
+      def df(t: String): Long = c3.where(array_contains(split(col("text"), " "), t)).count()
+      val left = c3.where(col("doc_id") % 25 === 0).select("doc_id")
+      def admitted(gen: Row => SearchQuery): Long = {
+        assert(idx3.queryJoinAst(left, "doc_id", gen, "text", 3).count() > 0)
+        idx3.lastAstCandsFrame.count()
+      }
+      // And: the alternatives are [aa] and [rr]; the rare one leads
+      // although it is listed second
+      assert(df("rr") < df("aa"))
+      assert(admitted(_ => And(MatchTerm("text", "aa"), MatchTerm("text", "rr"))) == df("rr"))
+      // And of two Or's: the alternatives are [ss, aa] and [rr, qq].
+      // The first holds the rarest term, but the second has the
+      // smaller TOTAL df, and only the total decides
+      val first = df("ss") + df("aa")
+      val second = df("rr") + df("qq")
+      assert(df("ss") < df("rr") && second < first)
+      assert(admitted(_ => And(Or(MatchTerm("text", "ss"), MatchTerm("text", "aa")),
+        Or(MatchTerm("text", "rr"), MatchTerm("text", "qq")))) == second)
+    } finally idx3.unpersist()
+  }
 }
