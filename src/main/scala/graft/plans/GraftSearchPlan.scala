@@ -1,9 +1,14 @@
 package graft.plans
 
+import graft.search.ScanSearch
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Cast, Expression, ExpressionInfo, InterpretedUnsafeProjection, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project, Statistics}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.col
@@ -374,6 +379,17 @@ object GraftSearchPlan {
     if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[GraftSearchStrategy]))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ new GraftSearchStrategy
+
+  /** The DataFrame of one scan-path search: a lazy
+    * [[GraftScanSearchNode]] over the index's search schema, planned
+    * by [[GraftSearchStrategy]] (installed here on a session built
+    * without [[graft.GraftExtensions]]). */
+  def searchFrame(search: ScanSearch): DataFrame = {
+    val spark = search.index.spark
+    installStrategy(spark)
+    GraftColumnBridge.frame(spark,
+      GraftScanSearchNode(search, DataTypeUtils.toAttributes(search.index.searchSchema)))
+  }
 }
 
 /** Logical leaf for a `graft_search` call: the whole match+score+
@@ -395,6 +411,21 @@ object GraftSearchNode {
   private[plans] def freshOutput(): Seq[Attribute] = Seq(
     AttributeReference("doc_id", LongType, nullable = false)(),
     AttributeReference("score", DoubleType, nullable = false)())
+}
+
+/** Logical leaf of one scan-path [[graft.search.SearchIndex.search]]:
+  * (index, query, program, IDFs, k), planned as a whole into a
+  * [[GraftScanSearchExec]]. Output: the index's search schema, fresh
+  * attributes per search; a self-join of one search result gets a new
+  * instance for its second side. */
+final case class GraftScanSearchNode(search: ScanSearch, output: Seq[Attribute])
+    extends LeafNode with MultiInstanceRelation {
+  override def newInstance(): LogicalPlan = copy(output = output.map(_.newInstance()))
+  override def maxRows: Option[Long] = Some(search.k.toLong)
+  override def computeStats(): Statistics =
+    Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * search.k)
+  override def simpleString(maxFields: Int): String =
+    s"GraftSearchNode query=${search.query}, k=${search.k}"
 }
 
 /** Logical leaf for a `graft_query_join` call: the whole left-build +
@@ -568,6 +599,14 @@ object GraftTermStatsNode {
   * operators. */
 final class GraftSearchStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case GraftScanSearchNode(search, out) =>
+      GraftScanSearchExec(search, out) :: Nil
+    // plain columns of a search (`lightSearch`): a template of its own
+    // prunes the scan and keeps the one-stage collect
+    case Project(list, GraftScanSearchNode(search, _))
+        if list.forall(_.isInstanceOf[Attribute]) && search.columns.isEmpty =>
+      val out = list.map(_.toAttribute)
+      GraftScanSearchExec(search.copy(columns = Some(out.map(_.name))), out) :: Nil
     case GraftSearchNode(dir, raw, k, out) =>
       GraftSearchExec(dir, raw, k, out) :: Nil
     case GraftQueryJoinNode(dir, maxQid, nTerms, k, out) =>
@@ -594,38 +633,79 @@ final class GraftSearchStrategy extends SparkStrategy {
   }
 }
 
-/** The fused index-probe physical operator: one EXPLAIN node covering
-  * analyze → postings probe → BM25 score → top-k. Execution plans
-  * the library's own search pipeline against the build-once cached
-  * index ([[graft.search.SearchQueries.indexFor]]) and returns its
-  * rows; the inner plan's stages run as ordinary Spark jobs, so
-  * nothing about the probe's distribution changes — this operator is
-  * the SQL front door, fused for visibility, not a bypass. */
-final case class GraftSearchExec(dir: String, rawQuery: String, k: Int,
-    output: Seq[Attribute]) extends LeafExecNode {
-  override def simpleString(maxFields: Int): String =
-    s"GraftSearch dir=$dir, query='$rawQuery', k=$k"
-  override protected def doExecute(): RDD[InternalRow] = {
-    // `session` is SparkPlan's own captured session (set at planning)
-    val idx = graft.search.SearchQueries.indexFor(session, dir)
-    val hits = idx.searchRaw(rawQuery, k)
-    // (key, score) are cut from the k hit rows AFTER the search plan:
-    // a select on top would prune the scan stage's columns and give
-    // SQL searches a generated class of their own, not the one every
-    // Scala-side search already shares
-    val schema = hits.schema
-    def field(name: String): Expression = {
-      val i = schema.fieldIndex(name)
-      BoundReference(i, schema(i).dataType, schema(i).nullable)
+/** A search node that runs one bound search plan
+  * ([[graft.search.SearchIndex.scanPlan]]): `executeCollect` is the
+  * plan's own (TakeOrderedAndProject's per-partition heaps merged on
+  * the driver: one job, one stage), `doExecute` is its RDD (for a
+  * consumer above the node), and `cut`, when set, projects each row
+  * (expressions bound to the plan's output). */
+sealed trait BoundSearchExec extends LeafExecNode {
+  /** The physical plan this node runs: bound once per node, shared
+    * with no other search. */
+  private[graft] def bound: SparkPlan
+  protected def cut: Option[Seq[Expression]]
+
+  override def executeCollect(): Array[InternalRow] = {
+    val rows = bound.executeCollect()
+    cut.fold(rows) { c =>
+      val project = InterpretedUnsafeProjection.createProjection(c)
+      rows.map(r => project(r).copy())
     }
-    val tz = Some(session.sessionState.conf.sessionLocalTimeZone)
-    val cut = Seq(Cast(field(idx.spec.keyCol), LongType, tz),
-      Cast(field("score"), DoubleType, tz))
-    hits.queryExecution.toRdd.mapPartitions { rows =>
-      val project = InterpretedUnsafeProjection.createProjection(cut)
+  }
+
+  override def executeTake(n: Int): Array[InternalRow] = executeCollect().take(n)
+
+  override protected def doExecute(): RDD[InternalRow] = cut.fold(bound.execute()) { c =>
+    bound.execute().mapPartitions { rows =>
+      val project = InterpretedUnsafeProjection.createProjection(c)
       rows.map(project)
     }
   }
+}
+
+/** The Scala front door's search operator: `EXPLAIN` shows the query
+  * and k, with the bound plan as its inner child. */
+final case class GraftScanSearchExec(search: ScanSearch, output: Seq[Attribute])
+    extends BoundSearchExec {
+  @transient private[graft] lazy val bound: SparkPlan = search.plan()
+  override protected def cut: Option[Seq[Expression]] = None
+  override def innerChildren: Seq[QueryPlan[_]] = Seq(bound)
+  override def simpleString(maxFields: Int): String =
+    s"GraftSearch query=${search.query}, k=${search.k}" +
+      search.columns.fold("")(cs => s", columns=${cs.mkString("[", ", ", "]")}")
+}
+
+/** The fused index-probe physical operator of SQL `graft_search`: one
+  * EXPLAIN node covering analyze → score → top-k. Execution looks up
+  * the build-once cached index ([[graft.search.SearchQueries.indexFor]])
+  * and runs the same bound plan as the Scala `search`
+  * ([[graft.search.SearchIndex.searchPlan]]), cutting (key, score)
+  * from its k rows: `SELECT ... FROM graft_search(...)` collects in one
+  * job and one stage. The index lookup waits for execution, so
+  * `EXPLAIN` never builds an index. */
+final case class GraftSearchExec(dir: String, rawQuery: String, k: Int,
+    output: Seq[Attribute]) extends BoundSearchExec {
+  override def simpleString(maxFields: Int): String =
+    s"GraftSearch dir=$dir, query='$rawQuery', k=$k"
+
+  // `session` is SparkPlan's own captured session (set at planning)
+  @transient private lazy val plan: (SparkPlan, Seq[Expression]) = {
+    val idx = graft.search.SearchQueries.indexFor(session, dir)
+    val hits = idx.searchPlan(idx.constructQuery(rawQuery, idx.spec.textFields.head), k)
+    // (key, score) are cut from the k hit rows AFTER the search plan:
+    // a projection inside it would prune the scan stage's columns and
+    // give SQL searches a generated class of their own, not the one
+    // every Scala-side search already shares
+    val out = hits.output
+    def field(name: String): Expression = {
+      val i = out.indexWhere(_.name == name)
+      BoundReference(i, out(i).dataType, out(i).nullable)
+    }
+    val tz = Some(session.sessionState.conf.sessionLocalTimeZone)
+    (hits, Seq(Cast(field(idx.spec.keyCol), LongType, tz), Cast(field("score"), DoubleType, tz)))
+  }
+  private[graft] def bound: SparkPlan = plan._1
+  override protected def cut: Option[Seq[Expression]] = Some(plan._2)
 }
 
 /** The fused search-JOIN physical operator — the SQL front door for

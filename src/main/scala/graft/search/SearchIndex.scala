@@ -3,11 +3,13 @@ package graft.search
 import graft.analysis.{Analyzer, Analyzers}
 import graft.dsl._
 import graft.functions.{SearchExpressions, TopKAgg}
+import graft.plans.GraftSearchPlan
 import graft.sources.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Scoring mode (reference: similarities/ConfigurableBM25Similarity.
@@ -450,14 +452,11 @@ final class SearchIndex private (
     }
   }
 
-  /** An array literal of `xs` typed `array<elem>`: the Literal
-    * `typedLit` builds, without its runtime TypeTag reflection, which
-    * every call repeats (a scan-path search builds several). */
-  private def arrayLit(xs: Seq[Any], elem: DataType, containsNull: Boolean): Column =
-    GraftColumnBridge.column(Literal.create(xs, ArrayType(elem, containsNull)))
-
-  /** [[arrayLit]] of strings, typed like `typedLit` of a `Seq[String]`. */
-  private def stringsLit(xs: Seq[String]): Column = arrayLit(xs, StringType, containsNull = true)
+  /** A string-array literal of `xs`, typed like `typedLit` of a
+    * `Seq[String]`: the Literal `typedLit` builds, without its runtime
+    * TypeTag reflection, which every call repeats. */
+  private def stringsLit(xs: Seq[String]): Column =
+    GraftColumnBridge.column(Literal.create(xs, ArrayType(StringType, containsNull = true)))
 
   /** The interpreter's combined doubles: per-slot IDF ++ consts. */
   private def doublesOf(p: QueryProgram, idf: Map[(String, String), Double]): Seq[Double] =
@@ -472,18 +471,30 @@ final class SearchIndex private (
     * ([[scanAttrs]]) plus any column the program compares in a kind
     * the defaults do not cover. */
   private def scanScorer(p: QueryProgram, doubles: Seq[Double]): Column = {
-    val (num, str) = scanAttrs
+    val (num, str, xFields) = scanInputs(p)
     val tokens =
       if (spec.storePositions && spec.textFields.nonEmpty)
         coalesce(tokensCol(scanField), array().cast("array<string>"))
       else array().cast("array<string>")
-    val xFields = if (spec.storePositions) spec.textFields.filter(_ != scanField) else Nil
-    programScore(tokens, arrayLit(p.ops, IntegerType, containsNull = false),
-      stringsLit(p.terms), arrayLit(doubles, DoubleType, containsNull = false),
-      programDocInputs(num ++ p.attrFields.filterNot(num.contains),
-        str ++ p.strAttrFields.filterNot(str.contains), xFields),
-      scanField)
+    val Seq(ops, terms, dbl) = programLiterals(p, doubles).map(GraftColumnBridge.column)
+    programScore(tokens, ops, terms, dbl, programDocInputs(num, str, xFields), scanField)
   }
+
+  /** The doc-side input names of `p`'s scan scorer: (numeric
+    * attributes, string attributes, cross-field text fields). With the
+    * session conf they key its prepared plan ([[scanPlan]]). */
+  private def scanInputs(p: QueryProgram): (Seq[String], Seq[String], Seq[String]) = {
+    val (num, str) = scanAttrs
+    (num ++ p.attrFields.filterNot(num.contains), str ++ p.strAttrFields.filterNot(str.contains),
+      if (spec.storePositions) spec.textFields.filter(_ != scanField) else Nil)
+  }
+
+  /** The scan scorer's only per-search inputs besides the doc-side
+    * names: the (ops, terms, doubles) array literals. */
+  private def programLiterals(p: QueryProgram, doubles: Seq[Double]): Seq[Literal] = Seq(
+    Literal.create(p.ops, ArrayType(IntegerType, containsNull = false)),
+    Literal.create(p.terms, ArrayType(StringType, containsNull = true)),
+    Literal.create(doubles, ArrayType(DoubleType, containsNull = false)))
 
   /** The index's default doc-side attribute columns: (numeric — every
     * orderable non-internal column, encoded like QueryProgram.numVal;
@@ -505,12 +516,19 @@ final class SearchIndex private (
     (num.toSeq, (str.toSeq ++ spec.keywordFields).distinct)
   }
 
-  /** `struct(ok, score)` of `q` for every document: the IDFs through
-    * [[idfFor]], then the shared scan-path scorer. */
-  private def scoreStruct(q: SearchQuery): Column = {
+  /** `q` serialized for the scan path, with its doubles: the IDFs
+    * through [[idfFor]] ++ the program's consts. */
+  private def programOf(q: SearchQuery): (QueryProgram, Seq[Double]) = {
     val p = serialize(q)
     val pairs = p.termFields.zip(p.terms).filter(_._1.nonEmpty).toSet
-    scanScorer(p, doublesOf(p, idfFor(pairs)))
+    (p, doublesOf(p, idfFor(pairs)))
+  }
+
+  /** `struct(ok, score)` of `q` for every document: the shared
+    * scan-path scorer of [[programOf]]. */
+  private def scoreStruct(q: SearchQuery): Column = {
+    val (p, doubles) = programOf(q)
+    scanScorer(p, doubles)
   }
 
   /** Compiles the AST to (match predicate, score expression): both
@@ -598,10 +616,88 @@ final class SearchIndex private (
     * TakeOrderedAndProject (per-partition heap + driver merge — the
     * built-in replacement for the reference's treeAggregate 2-pointer
     * merge, PartitionsIndexLuceneRDD.scala:100-109). Ties break on
-    * ascending key for determinism. */
+    * ascending key for determinism.
+    *
+    * On an index with positions and k > 0 the frame is one lazy
+    * `GraftSearch` leaf ([[graft.plans.GraftScanSearchNode]]) carrying
+    * (index, program, IDFs, k). The program and its IDFs are built
+    * here, so a bad query fails at this call; the plan it runs comes
+    * from [[scanPlan]]: after the index's first search, a bound copy
+    * of one prepared plan, analyzed, optimized and planned once per
+    * index (the build-once-then-probe regime of the reference's
+    * SearchableRDD). `EXPLAIN` shows the query, k and the bound plan. */
   def search(q: SearchQuery, k: Int): DataFrame =
-    if (spec.storePositions) topK(matching(scoreStruct(q)), k)
-    else postingsSearch(q, k)
+    prepared(q, k).fold(identity, GraftSearchPlan.searchFrame)
+
+  /** The physical plan that [[search]] runs for (q, k), shared with no
+    * other search: the SQL `graft_search` front door. */
+  private[graft] def searchPlan(q: SearchQuery, k: Int): SparkPlan =
+    prepared(q, k).fold(_.queryExecution.executedPlan, _.plan())
+
+  /** [[search]] as either the frame it plans the ordinary way (no
+    * positions, or k <= 0, which Catalyst rejects or plans to an empty
+    * relation) or the scan-path search it binds. */
+  private def prepared(q: SearchQuery, k: Int): Either[DataFrame, ScanSearch] =
+    if (!spec.storePositions) Left(postingsSearch(q, k))
+    else {
+      val (p, doubles) = programOf(q)
+      val scorer = scanScorer(p, doubles) // checks the doc columns the program reads
+      if (k <= 0) Left(topK(matching(scorer), k)) else Right(ScanSearch(this, q, p, doubles, k))
+    }
+
+  /** Prepared scan plans ([[ScanTemplate]]), keyed by the doc-side
+    * input names ([[scanInputs]]), the result columns kept and the
+    * session's SQL conf; at most
+    * [[ScanTemplate.MaxPerIndex]], least recently used out first.
+    * Dropped by [[unpersist]]. */
+  @transient private lazy val scanTemplates =
+    new java.util.LinkedHashMap[AnyRef, ScanTemplate](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, ScanTemplate]): Boolean =
+        size() > ScanTemplate.MaxPerIndex
+    }
+
+  /** The physical plan of one scan-path search of `p` (with its
+    * doubles) and `k`, keeping `columns` of the result (None: all),
+    * shared with no other search. When a template fits (same doc-side
+    * inputs, same columns, same session conf, and the docs cache it
+    * scans is still the registered one), a deep copy of it with the
+    * program literals and k bound in: no analysis, optimization or
+    * physical planning. Otherwise `topK(matching(scanScorer(p,
+    * doubles)), k)` (with its columns selected) planned from the
+    * start, which becomes the template when a bind can reproduce it.
+    * A template scanning a cache that is
+    * gone (after [[unpersist]] or `spark.catalog.clearCache()`) is
+    * dropped, so a search never re-pins blocks the ordinary plan would
+    * not read. */
+  private[graft] def scanPlan(p: QueryProgram, doubles: Seq[Double], k: Int,
+      columns: Option[Seq[String]]): SparkPlan =
+    GraftColumnBridge.withActive(spark) {
+      val key = (scanInputs(p), columns, spark.conf.getAll)
+      val cache = GraftColumnBridge.cacheOf(docs)
+      val held = scanTemplates.synchronized {
+        val t = Option(scanTemplates.get(key))
+        if (t.exists(!_.scans(cache))) scanTemplates.remove(key)
+        t.filter(_.scans(cache))
+      }
+      held.flatMap(_.bind(programLiterals(p, doubles), k)).getOrElse {
+        val top = topK(matching(scanScorer(p, doubles)), k)
+        val fresh = columns.fold(top)(cs => top.select(cs.map(col): _*)).queryExecution.executedPlan
+        ScanTemplate.of(fresh, cache)
+          .foreach(t => scanTemplates.synchronized(scanTemplates.put(key, t)))
+        fresh
+      }
+    }
+
+  /** Test hook: the scan-path [[search]] frame planned from the start. */
+  private[search] def plannedSearch(q: SearchQuery, k: Int): DataFrame =
+    topK(matching(scoreStruct(q)), k)
+
+  /** The schema of a scan-path [[search]] result (the stored doc
+    * columns and `score`), read once from an analyzed search frame. */
+  @transient private[graft] lazy val searchSchema: StructType = {
+    val p = serialize(AllDocs)
+    topK(matching(scanScorer(p, doublesOf(p, Map.empty))), 1).schema
+  }
 
   /** Scan-free search for a no-positions index: the flat term part of
     * the query probes the postings (tf survives without positions),
@@ -2779,6 +2875,7 @@ final class SearchIndex private (
     * incrementally-derived lineage ([[addDocuments]] /
     * [[removeDocuments]]). */
   def unpersist(blocking: Boolean = true): Unit = {
+    scanTemplates.synchronized(scanTemplates.clear())
     SearchIndex.releaseFrame(docs, blocking)
     SearchIndex.releaseFrame(postings, blocking)
     SearchIndex.releaseFrame(stats, blocking)

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+
 /** Staleness-guarded build-once registry for corpus-derived artifacts
   * (search indexes, persisted edge aggregates, generated fixtures).
   *
@@ -111,21 +113,29 @@ object CorpusRegistry {
     * directory-rooted base index would silently re-list an in-place
     * append and double-count it inside an incremental merge —
     * explicit file roots re-list to themselves. */
-  def dataFiles(path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val name = s.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith("."))
-          out += s.getPath.toString
-      }
-      out.sorted.toSeq
-    }
+  def dataFiles(path: String): Seq[String] =
+    listAll(path).getOrElse(Nil).map(_.getPath).filterNot { p =>
+      p.getName.startsWith("_") || p.getName.startsWith(".")
+    }.map(_.toString).sorted
+
+  /** One Hadoop configuration for every listing: a new one per call
+    * re-parses its XML resources. */
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** Every file under `path` (hidden and commit-marker files
+    * included), or None when `path` is absent: `path` itself when it
+    * is a file, else a recursive `listStatus` walk. `listFiles` lists
+    * the same set, but its located statuses read each file's
+    * permissions, one shell fork per file on the local filesystem. */
+  private def listAll(path: String): Option[Seq[FileStatus]] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val root = try fs.getFileStatus(p) catch { case _: java.io.FileNotFoundException => return None }
+    val out = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    def walk(s: FileStatus): Unit =
+      if (s.isDirectory) fs.listStatus(s.getPath).foreach(walk) else out += s
+    walk(root)
+    Some(out.toSeq)
   }
 
   /** Drop the memoized signature for `path` — called by writers that
@@ -155,15 +165,10 @@ object CorpusRegistry {
 
   private def listSignature(path: String): String = {
     listingsPerformed.incrementAndGet()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (!fs.exists(p)) return "absent"
-    var sz = 0L; var mt = 0L; var n = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next()
-      sz += s.getLen; mt = math.max(mt, s.getModificationTime); n += 1
+    listAll(path).fold("absent") { files =>
+      val sz = files.map(_.getLen).sum
+      val mt = files.map(_.getModificationTime).foldLeft(0L)(math.max)
+      java.lang.Long.toHexString((sz * 31L) ^ (mt * 17L) ^ files.length.toLong)
     }
-    java.lang.Long.toHexString((sz * 31L) ^ (mt * 17L) ^ n)
   }
 }

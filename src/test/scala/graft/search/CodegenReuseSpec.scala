@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * filter, cursor paging and the SQL `graft_search` — compile no new
   * class and launch exactly one Spark job, the scan (the IDFs come
   * from the index's driver-resident term dictionary), and each still
-  * plans to TakeOrderedAndProject. */
+  * runs a TakeOrderedAndProject plan (for `search`, the bound plan
+  * under its GraftSearch node). */
 class CodegenReuseSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
@@ -75,8 +76,13 @@ class CodegenReuseSpec extends AnyFunSuite {
     assert(compiles == before, s"${compiles - before} classes compiled after warm-up")
     val jobs = counted.map(_._2._2)
     assert(jobs.forall(_ == 1), s"jobs per search after warm-up: ${jobs.mkString(", ")}")
+    // a `search` runs the bound plan of its GraftSearch node; that
+    // plan, like the cursor page's own, ends in TakeOrderedAndProject
     counted.take(14).map(_._1).foreach { df =>
-      val plan = df.queryExecution.executedPlan
+      val plan = df.queryExecution.executedPlan match {
+        case s: graft.plans.GraftScanSearchExec => s.bound
+        case p => p
+      }
       assert(plan.nodeName == "TakeOrderedAndProject", plan.toString.take(400))
     }
     SearchQueries.clearCache()

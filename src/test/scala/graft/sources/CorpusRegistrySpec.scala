@@ -23,6 +23,60 @@ class CorpusRegistrySpec extends AnyFunSuite {
     assert(CorpusRegistry.signature(s"$d/nope") == "absent")
   }
 
+  /** The signature and data files as the `listFiles` walk computes them. */
+  private def listFilesReference(path: String): (String, Seq[String]) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    var sz = 0L; var mt = 0L; var n = 0L
+    val data = scala.collection.mutable.ArrayBuffer.empty[String]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val s = it.next()
+      sz += s.getLen; mt = math.max(mt, s.getModificationTime); n += 1
+      if (!s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+        data += s.getPath.toString
+    }
+    (java.lang.Long.toHexString((sz * 31L) ^ (mt * 17L) ^ n), data.sorted.toSeq)
+  }
+
+  test("signature and data files equal the listFiles walk over nested hidden files") {
+    val d = java.nio.file.Files.createTempDirectory("reg_walk")
+    spark.range(40).repartition(4).write.parquet(d.resolve("t.parquet").toString)
+    def put(rel: String, bytes: Int): Unit = {
+      val f = d.resolve(rel)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.write(f, Array.fill[Byte](bytes)(1))
+    }
+    put("nested/deeper/part-x.parquet", 11)
+    put("nested/.hidden", 5)
+    put("nested/_SUCCESS", 0)
+    put("nested/.part-x.parquet.crc", 7)
+    put("_meta/part-y.parquet", 3)
+    val (sig, data) = listFilesReference(d.toString)
+    assert(CorpusRegistry.signature(d.toString) == sig)
+    assert(CorpusRegistry.dataFiles(d.toString) == data)
+    assert(data.exists(_.endsWith("nested/deeper/part-x.parquet")) && !data.exists(_.contains(".crc")))
+    val file = s"$d/nested/deeper/part-x.parquet"
+    assert(CorpusRegistry.signature(file) == listFilesReference(file)._1)
+    assert(CorpusRegistry.dataFiles(file) == listFilesReference(file)._2)
+    assert(CorpusRegistry.dataFiles(s"$d/nope").isEmpty)
+  }
+
+  test("signature changes on append and on a same-bytes rewrite with a new mtime") {
+    val d = java.nio.file.Files.createTempDirectory("reg_append").toString
+    spark.range(10).write.parquet(s"$d/t.parquet")
+    val s1 = CorpusRegistry.signature(d)
+    spark.range(10).write.mode("append").parquet(s"$d/t.parquet")
+    val s2 = CorpusRegistry.signature(d)
+    assert(s2 != s1, "an appended part must change the signature")
+    val part = new java.io.File(CorpusRegistry.dataFiles(d).head.stripPrefix("file:"))
+    val bytes = java.nio.file.Files.readAllBytes(part.toPath)
+    java.nio.file.Files.write(part.toPath, bytes)
+    assert(part.setLastModified(part.lastModified() + 5000L))
+    assert(CorpusRegistry.signature(d) != s2, "a rewrite with a new mtime must change the signature")
+    assert(CorpusRegistry.signature(d) == listFilesReference(d)._1)
+  }
+
   test("TTL memoization: one LIST per window, invalidation re-lists") {
     val d = java.nio.file.Files.createTempDirectory("reg_ttl").toString
     spark.range(10).write.mode("overwrite").parquet(s"$d/t.parquet")
