@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUti
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
@@ -634,11 +634,12 @@ final class GraftSearchStrategy extends SparkStrategy {
 }
 
 /** A search node that runs one bound search plan
-  * ([[graft.search.SearchIndex.scanPlan]]): `executeCollect` is the
-  * plan's own (TakeOrderedAndProject's per-partition heaps merged on
-  * the driver: one job, one stage), `doExecute` is its RDD (for a
-  * consumer above the node), and `cut`, when set, projects each row
-  * (expressions bound to the plan's output). */
+  * ([[graft.search.SearchIndex.scanPlan]]): `executeCollect` runs a
+  * TakeOrderedAndProject root as [[TopKCollect]] (per-partition heaps
+  * merged on the driver: one job, one stage) and any other root as its
+  * own collect, `doExecute` is the plan's RDD (for a consumer above the
+  * node), and `cut`, when set, projects each row (expressions bound to
+  * the plan's output). */
 sealed trait BoundSearchExec extends LeafExecNode {
   /** The physical plan this node runs: bound once per node, shared
     * with no other search. */
@@ -646,7 +647,10 @@ sealed trait BoundSearchExec extends LeafExecNode {
   protected def cut: Option[Seq[Expression]]
 
   override def executeCollect(): Array[InternalRow] = {
-    val rows = bound.executeCollect()
+    val rows = bound match {
+      case t: TakeOrderedAndProjectExec if t.offset == 0 => TopKCollect(t)
+      case b => b.executeCollect()
+    }
     cut.fold(rows) { c =>
       val project = InterpretedUnsafeProjection.createProjection(c)
       rows.map(r => project(r).copy())

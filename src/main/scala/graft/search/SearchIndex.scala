@@ -474,8 +474,8 @@ final class SearchIndex private (
     val (num, str, xFields) = scanInputs(p)
     val tokens =
       if (spec.storePositions && spec.textFields.nonEmpty)
-        coalesce(tokensCol(scanField), array().cast("array<string>"))
-      else array().cast("array<string>")
+        coalesce(tokensCol(scanField), array().cast(ArrayType(StringType)))
+      else array().cast(ArrayType(StringType))
     val Seq(ops, terms, dbl) = programLiterals(p, doubles).map(GraftColumnBridge.column)
     programScore(tokens, ops, terms, dbl, programDocInputs(num, str, xFields), scanField)
   }
@@ -586,24 +586,24 @@ final class SearchIndex private (
       .getOrElse(throw new IllegalArgumentException(
         s"query filter references unknown doc column '$f'"))
     def numAttrExpr(f: String): Column = known(f) match {
-      case _: NumericType => col(f).cast("double")
+      case _: NumericType => col(f).cast(DoubleType)
       case BooleanType =>
-        when(col(f).isNull, lit(null).cast("double"))
+        when(col(f).isNull, lit(null).cast(DoubleType))
           .when(col(f), lit(1.0)).otherwise(lit(0.0))
-      case DateType => unix_date(col(f)).cast("double")
-      case TimestampType => unix_micros(col(f)).cast("double")
+      case DateType => unix_date(col(f)).cast(DoubleType)
+      case TimestampType => unix_micros(col(f)).cast(DoubleType)
       case other => throw new IllegalArgumentException(
         s"query comparison filters need an orderable column; '$f' is $other")
     }
-    def strAttrExpr(f: String): Column = { known(f); col(f).cast("string") }
-    def nameMap(names: Seq[String], value: String => Column, vType: String): Column =
+    def strAttrExpr(f: String): Column = { known(f); col(f).cast(StringType) }
+    def nameMap(names: Seq[String], value: String => Column, vType: DataType): Column =
       if (names.isEmpty)
-        map_from_arrays(array().cast("array<string>"), array().cast(s"array<$vType>"))
+        map_from_arrays(array().cast(ArrayType(StringType)), array().cast(ArrayType(vType)))
       else call_function("name_map", stringsLit(names) +: names.map(value): _*)
-    Seq(nameMap(attrFields, numAttrExpr, "double"),
-      nameMap(strAttrFields, strAttrExpr, "string"),
-      nameMap(xFields, tokensCol, "array<string>"),
-      nameMap(xFields, f => lit(fieldStats(f).avgDl), "double"))
+    Seq(nameMap(attrFields, numAttrExpr, DoubleType),
+      nameMap(strAttrFields, strAttrExpr, StringType),
+      nameMap(xFields, tokensCol, ArrayType(StringType)),
+      nameMap(xFields, f => lit(fieldStats(f).avgDl), DoubleType))
   }
 
   // ------------------------------------------------------------------

@@ -3,10 +3,15 @@ package graft.search
 import graft.TestSpark
 import graft.dsl._
 import graft.plans.GraftScanSearchExec
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.{col, spark_partition_id}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -187,6 +192,128 @@ class PreparedSearchSpec extends AnyFunSuite {
     val cleared = pinned()
     shapes.zip(regExpect).foreach { case (q, e) => assert(reg.search(q, 10).collect().toSeq == e) }
     assert(pinned() subsetOf cleared, s"pinned ${pinned() -- cleared} after clearCache")
+    SearchQueries.clearCache()
+  }
+
+  /** The indylambda closures Spark's ClosureCleaner cleans on this
+    * thread while `body` runs, by implementation method name. A logger
+    * config of its own (DEBUG, not additive, so nothing reaches the
+    * console) is in place only for the block. */
+  private def cleaned(body: => Unit): Seq[String] = {
+    val name = "org.apache.spark.util.ClosureCleaner"
+    val prefix = "Cleaning indylambda closure: "
+    val thread = Thread.currentThread.getName
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("closure-cleans", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (e.getThreadName == thread && m.startsWith(prefix)) seen.add(m.stripPrefix(prefix))
+      }
+    }
+    val ctx = LoggerContext.getContext(false)
+    val config = ctx.getConfiguration
+    val prior = Option(config.getLoggers.get(name))
+    val counting = new LoggerConfig(name, Level.DEBUG, false)
+    counting.addAppender(appender, Level.DEBUG, null)
+    appender.start()
+    config.addLogger(name, counting)
+    ctx.updateLoggers()
+    try body finally {
+      config.removeLogger(name)
+      prior.foreach(config.addLogger(name, _))
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.toArray(new Array[String](0)).toSeq
+  }
+
+  test("a bound search's collect cleans at most two closures, none from takeOrdered or runJob") {
+    val dir = corpusDir()
+    val idx = SearchQueries.indexFor(spark, dir)
+    def sql(raw: String) = spark.sql(s"SELECT * FROM graft_search('$dir', '$raw', 10)")
+    shapes.foreach(q => idx.search(q, 10).collect())
+    sql("w4 w5").collect()
+    val perSearch = shapes.map(q => s"search $q" -> cleaned(idx.search(q, 10).collect())) ++
+      rawShapes.map(raw => s"SQL '$raw'" -> cleaned(sql(raw).collect()))
+    perSearch.foreach { case (what, names) =>
+      assert(names.nonEmpty, s"$what: no clean logged; is the counting appender attached?")
+      assert(names.length <= 2, s"$what cleaned ${names.mkString(", ")}")
+      assert(!names.exists(n => n.contains("takeOrdered") || n.contains("runJob")),
+        s"$what cleaned ${names.mkString(", ")}")
+    }
+    SearchQueries.clearCache()
+  }
+
+  test("the collect merges like TakeOrderedAndProject: ties at k, no match, small k, large k, projected") {
+    // 200 documents over 4 files: 4 heavy `alpha` documents, 40 tied
+    // ones whose equal scores straddle k, the rest without `alpha`
+    val dir = java.nio.file.Files.createTempDirectory("prepared_ties").toString
+    (1 to 200).map { i =>
+      val text =
+        if (i % 50 == 7) "alpha alpha alpha gamma"
+        else if (i % 5 == 0) "alpha beta gamma"
+        else s"beta gamma ${words(i % 60)} ${words((i * 7) % 60)}"
+      (i.toLong, text, Seq("en", "fr", "de")(i % 3), s"s${i % 5}", 1995 + i % 25)
+    }.toDF("doc_id", "text", "lang", "source", "year").repartition(4)
+      .write.parquet(s"$dir/documents.parquet")
+    val idx = SearchQueries.indexFor(spark, dir)
+    val tiedParts = idx.docs.where(col("doc_id") % 5 === 0)
+      .select(spark_partition_id()).distinct().count()
+    assert(tiedParts > 1, "the tied documents sit in one partition")
+    val alpha = MatchAnyTerms("text", Seq("alpha"))
+    val queries = Seq(alpha, MatchAnyTerms("text", Seq("zzz")), MatchAnyTerms("text", Seq("w3")),
+      And(alpha, EqFilter("lang", "fr")))
+    queries.foreach(q => idx.search(q, 10).collect())
+    for (q <- queries; k <- Seq(1, 3, 4, 5, 10, 44, 45, 500)) {
+      val fresh = idx.plannedSearch(q, k)
+      assert(idx.search(q, k).collect().toSeq == fresh.collect().toSeq, s"$q k=$k")
+      assert(idx.lightSearch(q, k).collect().toSeq == fresh.select("doc_id", "score").collect().toSeq,
+        s"light $q k=$k")
+      // a column set without the sort key: the plan projects after the top-k
+      assert(idx.search(q, k).select("doc_id").collect().toSeq == fresh.select("doc_id").collect().toSeq,
+        s"doc_id $q k=$k")
+    }
+    // the heavy documents, then the tied ones by ascending key
+    val top10 = hits(idx.search(alpha, 10).collect()).map(_._1)
+    assert(top10 == Seq(7L, 57L, 107L, 157L, 5L, 10L, 15L, 20L, 25L, 30L), top10)
+    assert(idx.search(MatchAnyTerms("text", Seq("zzz")), 10).collect().isEmpty)
+    for (raw <- Seq("alpha", "zzz", "alpha gamma"); k <- Seq(1, 6, 500)) {
+      val got = spark.sql(s"SELECT doc_id, score FROM graft_search('$dir', '$raw', $k)").collect()
+      val fresh = idx.plannedSearch(idx.constructQuery(raw, "text"), k).collect()
+      assert(hits(got) == hits(fresh), s"SQL '$raw' k=$k")
+    }
+    SearchQueries.clearCache()
+  }
+
+  test("a docs frame with more partitions than documents: empty partitions merge to nothing") {
+    val docs = (1 to 10).map(i => (i.toLong, if (i % 2 == 0) "alpha beta" else "alpha", "en"))
+      .toDF("doc_id", "text", "lang").repartition(32)
+    val idx = SearchIndex.build(docs, IndexSpec("doc_id", Seq("text"), Seq("lang")))
+    assert(idx.docs.rdd.getNumPartitions > 10)
+    val qs = Seq(MatchAnyTerms("text", Seq("alpha")), MatchAnyTerms("text", Seq("beta")),
+      MatchAnyTerms("text", Seq("zzz")))
+    qs.foreach(q => idx.search(q, 3).collect())
+    for (q <- qs; k <- Seq(1, 3, 10, 500)) {
+      val fresh = idx.plannedSearch(q, k)
+      assert(idx.search(q, k).collect().toSeq == fresh.collect().toSeq, s"$q k=$k")
+      assert(idx.lightSearch(q, k).collect().toSeq == fresh.select("doc_id", "score").collect().toSeq,
+        s"light $q k=$k")
+    }
+    idx.unpersist()
+  }
+
+  test("the bound plan's scan metrics are filled by its collect") {
+    val dir = corpusDir()
+    val idx = SearchQueries.indexFor(spark, dir)
+    shapes.foreach(q => idx.search(q, 10).collect())
+    shapes.foreach { q =>
+      val df = idx.search(q, 10)
+      def scanned = boundOf(df).collect { case s: InMemoryTableScanExec => s }
+        .map(_.metrics("numOutputRows").value).sum
+      assert(scanned == 0L)
+      df.collect()
+      assert(scanned == 300L, s"$q: the scan reported $scanned rows")
+    }
     SearchQueries.clearCache()
   }
 }
