@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.search.ScanSearch
+import graft.search.{BoundScan, ScanSearch}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
@@ -636,19 +636,26 @@ final class GraftSearchStrategy extends SparkStrategy {
 /** A search node that runs one bound search plan
   * ([[graft.search.SearchIndex.scanPlan]]): `executeCollect` runs a
   * TakeOrderedAndProject root as [[TopKCollect]] (per-partition heaps
-  * merged on the driver: one job, one stage) and any other root as its
-  * own collect, `doExecute` is the plan's RDD (for a consumer above the
+  * merged on the driver: one job, one stage) over the scan stage, which
+  * for a plan bound from a template is that template's generated code
+  * with the search's own references ([[graft.search.BoundStage]]: no
+  * Java source generated per search), and any other root as its own
+  * collect; `doExecute` is the plan's RDD (for a consumer above the
   * node), and `cut`, when set, projects each row (expressions bound to
   * the plan's output). */
 sealed trait BoundSearchExec extends LeafExecNode {
-  /** The physical plan this node runs: bound once per node, shared
-    * with no other search. */
-  private[graft] def bound: SparkPlan
+  /** The plan this node runs, with its scan stage: bound once per
+    * node, shared with no other search. */
+  protected def scan: BoundScan
   protected def cut: Option[Seq[Expression]]
+
+  /** The physical plan this node runs. */
+  private[graft] def bound: SparkPlan = scan.plan
 
   override def executeCollect(): Array[InternalRow] = {
     val rows = bound match {
-      case t: TakeOrderedAndProjectExec if t.offset == 0 => TopKCollect(t)
+      case t: TakeOrderedAndProjectExec if t.offset == 0 =>
+        TopKCollect(t, scan.stage.fold(t.child.execute())(_.execute()))
       case b => b.executeCollect()
     }
     cut.fold(rows) { c =>
@@ -671,7 +678,7 @@ sealed trait BoundSearchExec extends LeafExecNode {
   * and k, with the bound plan as its inner child. */
 final case class GraftScanSearchExec(search: ScanSearch, output: Seq[Attribute])
     extends BoundSearchExec {
-  @transient private[graft] lazy val bound: SparkPlan = search.plan()
+  @transient override protected lazy val scan: BoundScan = search.plan()
   override protected def cut: Option[Seq[Expression]] = None
   override def innerChildren: Seq[QueryPlan[_]] = Seq(bound)
   override def simpleString(maxFields: Int): String =
@@ -693,14 +700,14 @@ final case class GraftSearchExec(dir: String, rawQuery: String, k: Int,
     s"GraftSearch dir=$dir, query='$rawQuery', k=$k"
 
   // `session` is SparkPlan's own captured session (set at planning)
-  @transient private lazy val plan: (SparkPlan, Seq[Expression]) = {
+  @transient private lazy val plan: (BoundScan, Seq[Expression]) = {
     val idx = graft.search.SearchQueries.indexFor(session, dir)
     val hits = idx.searchPlan(idx.constructQuery(rawQuery, idx.spec.textFields.head), k)
     // (key, score) are cut from the k hit rows AFTER the search plan:
     // a projection inside it would prune the scan stage's columns and
     // give SQL searches a generated class of their own, not the one
     // every Scala-side search already shares
-    val out = hits.output
+    val out = hits.plan.output
     def field(name: String): Expression = {
       val i = out.indexWhere(_.name == name)
       BoundReference(i, out(i).dataType, out(i).nullable)
@@ -708,7 +715,7 @@ final case class GraftSearchExec(dir: String, rawQuery: String, k: Int,
     val tz = Some(session.sessionState.conf.sessionLocalTimeZone)
     (hits, Seq(Cast(field(idx.spec.keyCol), LongType, tz), Cast(field("score"), DoubleType, tz)))
   }
-  private[graft] def bound: SparkPlan = plan._1
+  override protected def scan: BoundScan = plan._1
   override protected def cut: Option[Seq[Expression]] = Some(plan._2)
 }
 

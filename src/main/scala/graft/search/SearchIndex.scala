@@ -8,8 +8,7 @@ import graft.sources.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Scoring mode (reference: similarities/ConfigurableBM25Similarity.
@@ -570,6 +569,22 @@ final class SearchIndex private (
       Seq(lit(kind), lit(k1), lit(b), lit(avgdl)): _*)
   }
 
+  /** `f`'s type in the doc schema; a query filter on a column the
+    * docs lack is refused. */
+  private def docType(f: String): DataType = docs.schema.find(_.name == f).map(_.dataType)
+    .getOrElse(throw new IllegalArgumentException(s"query filter references unknown doc column '$f'"))
+
+  /** [[docType]] of a column a query compares by order: numeric,
+    * boolean, date or timestamp. */
+  private def orderableDocType(f: String): DataType = {
+    import org.apache.spark.sql.types._
+    docType(f) match {
+      case t @ (_: NumericType | BooleanType | DateType | TimestampType) => t
+      case other => throw new IllegalArgumentException(
+        s"query comparison filters need an orderable column; '$f' is $other")
+    }
+  }
+
   /** The doc-side inputs of `dsl_query_score` after the token array,
     * as name-keyed maps: numeric attributes (`attrFields`, encoded
     * like QueryProgram.numVal — numerics cast, booleans 0/1 with null
@@ -581,21 +596,15 @@ final class SearchIndex private (
   private def programDocInputs(attrFields: Seq[String], strAttrFields: Seq[String],
       xFields: Seq[String]): Seq[Column] = {
     import org.apache.spark.sql.types._
-    val docSchema = docs.schema
-    def known(f: String): DataType = docSchema.find(_.name == f).map(_.dataType)
-      .getOrElse(throw new IllegalArgumentException(
-        s"query filter references unknown doc column '$f'"))
-    def numAttrExpr(f: String): Column = known(f) match {
-      case _: NumericType => col(f).cast(DoubleType)
+    def numAttrExpr(f: String): Column = orderableDocType(f) match {
       case BooleanType =>
         when(col(f).isNull, lit(null).cast(DoubleType))
           .when(col(f), lit(1.0)).otherwise(lit(0.0))
       case DateType => unix_date(col(f)).cast(DoubleType)
       case TimestampType => unix_micros(col(f)).cast(DoubleType)
-      case other => throw new IllegalArgumentException(
-        s"query comparison filters need an orderable column; '$f' is $other")
+      case _ => col(f).cast(DoubleType)
     }
-    def strAttrExpr(f: String): Column = { known(f); col(f).cast(StringType) }
+    def strAttrExpr(f: String): Column = { docType(f); col(f).cast(StringType) }
     def nameMap(names: Seq[String], value: String => Column, vType: DataType): Column =
       if (names.isEmpty)
         map_from_arrays(array().cast(ArrayType(StringType)), array().cast(ArrayType(vType)))
@@ -622,17 +631,18 @@ final class SearchIndex private (
     * `GraftSearch` leaf ([[graft.plans.GraftScanSearchNode]]) carrying
     * (index, program, IDFs, k). The program and its IDFs are built
     * here, so a bad query fails at this call; the plan it runs comes
-    * from [[scanPlan]]: after the index's first search, a bound copy
-    * of one prepared plan, analyzed, optimized and planned once per
-    * index (the build-once-then-probe regime of the reference's
-    * SearchableRDD). `EXPLAIN` shows the query, k and the bound plan. */
+    * from [[scanPlan]]: a bound copy of one prepared plan, analyzed,
+    * optimized, planned and code-generated once per index (the
+    * build-once-then-probe regime of the reference's SearchableRDD).
+    * The leaf is marked analyzed, so the frame is not analyzed again.
+    * `EXPLAIN` shows the query, k and the bound plan. */
   def search(q: SearchQuery, k: Int): DataFrame =
     prepared(q, k).fold(identity, GraftSearchPlan.searchFrame)
 
   /** The physical plan that [[search]] runs for (q, k), shared with no
     * other search: the SQL `graft_search` front door. */
-  private[graft] def searchPlan(q: SearchQuery, k: Int): SparkPlan =
-    prepared(q, k).fold(_.queryExecution.executedPlan, _.plan())
+  private[graft] def searchPlan(q: SearchQuery, k: Int): BoundScan =
+    prepared(q, k).fold(df => BoundScan(df.queryExecution.executedPlan, None), _.plan())
 
   /** [[search]] as either the frame it plans the ordinary way (no
     * positions, or k <= 0, which Catalyst rejects or plans to an empty
@@ -641,8 +651,11 @@ final class SearchIndex private (
     if (!spec.storePositions) Left(postingsSearch(q, k))
     else {
       val (p, doubles) = programOf(q)
-      val scorer = scanScorer(p, doubles) // checks the doc columns the program reads
-      if (k <= 0) Left(topK(matching(scorer), k)) else Right(ScanSearch(this, q, p, doubles, k))
+      val (num, str, _) = scanInputs(p)
+      num.foreach(orderableDocType)
+      str.foreach(docType)
+      if (k <= 0) Left(topK(matching(scanScorer(p, doubles)), k))
+      else Right(ScanSearch(this, q, p, doubles, k))
     }
 
   /** Prepared scan plans ([[ScanTemplate]]), keyed by the doc-side
@@ -661,16 +674,18 @@ final class SearchIndex private (
     * shared with no other search. When a template fits (same doc-side
     * inputs, same columns, same session conf, and the docs cache it
     * scans is still the registered one), a deep copy of it with the
-    * program literals and k bound in: no analysis, optimization or
-    * physical planning. Otherwise `topK(matching(scanScorer(p,
+    * program literals and k bound in and its scan stage bound to the
+    * template's generated code: no analysis, optimization, physical
+    * planning or code generation. Otherwise `topK(matching(scanScorer(p,
     * doubles)), k)` (with its columns selected) planned from the
-    * start, which becomes the template when a bind can reproduce it.
-    * A template scanning a cache that is
+    * start, which becomes the template when a bind can reproduce it;
+    * the search then runs a bind of that new template, or the fresh
+    * plan itself where there is none. A template scanning a cache that is
     * gone (after [[unpersist]] or `spark.catalog.clearCache()`) is
     * dropped, so a search never re-pins blocks the ordinary plan would
     * not read. */
   private[graft] def scanPlan(p: QueryProgram, doubles: Seq[Double], k: Int,
-      columns: Option[Seq[String]]): SparkPlan =
+      columns: Option[Seq[String]]): BoundScan =
     GraftColumnBridge.withActive(spark) {
       val key = (scanInputs(p), columns, spark.conf.getAll)
       val cache = GraftColumnBridge.cacheOf(docs)
@@ -679,12 +694,13 @@ final class SearchIndex private (
         if (t.exists(!_.scans(cache))) scanTemplates.remove(key)
         t.filter(_.scans(cache))
       }
-      held.flatMap(_.bind(programLiterals(p, doubles), k)).getOrElse {
+      val lits = programLiterals(p, doubles)
+      held.flatMap(_.bind(lits, k)).getOrElse {
         val top = topK(matching(scanScorer(p, doubles)), k)
         val fresh = columns.fold(top)(cs => top.select(cs.map(col): _*)).queryExecution.executedPlan
-        ScanTemplate.of(fresh, cache)
-          .foreach(t => scanTemplates.synchronized(scanTemplates.put(key, t)))
-        fresh
+        val made = ScanTemplate.of(fresh, cache)
+        made.foreach(t => scanTemplates.synchronized(scanTemplates.put(key, t)))
+        made.flatMap(_.bind(lits, k)).getOrElse(BoundScan(fresh, None))
       }
     }
 
@@ -1873,30 +1889,45 @@ final class SearchIndex private (
     * Only the columnar cache of a lineage-cut frame (above the gate)
     * is dropped at once: the session's CacheManager, not a result
     * plan, holds that, and it rebuilds from the checkpoint beneath it.
-    * [[unpersist]] releases the live entries. */
+    * [[unpersist]] releases the live entries.
+    *
+    * Only the lookup and the insert hold the memo's lock; `build`
+    * runs outside it, so two cold joins on one index set up at the
+    * same time. When an equal setup was stored while this one was
+    * built, the stored entry is returned and this setup's frames are
+    * released: no result reaches them. */
   private def memoized(key: (Int, String, String, String),
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
-      build: => (DataFrame, Seq[DataFrame])): DataFrame =
-    astJoinMemo.synchronized {
-      astJoinMemo.get(key) match {
-        case Some(e @ (p, df, _)) if p.sameResult(plan) =>
-          // LRU refresh: re-insert at the tail of the access order
-          astJoinMemo.remove(key)
-          astJoinMemo(key) = e
-          df
-        case existing =>
-          val (df, frames) = build
-          def drop(old: Seq[DataFrame]): Unit = old.foreach(_.unpersist(false))
-          existing.foreach { case (_, _, old) => drop(old) }
-          astJoinMemo(key) = (plan, df, frames)
-          while (astJoinMemo.size > joinGates.memoCap) {
-            val (victim, (_, _, evicted)) = astJoinMemo.head
-            astJoinMemo.remove(victim)
-            drop(evicted)
-          }
-          df
+      build: => (DataFrame, Seq[DataFrame])): DataFrame = {
+    def hit(): Option[DataFrame] = astJoinMemo.get(key) match {
+      case Some(e @ (p, df, _)) if p.sameResult(plan) =>
+        // LRU refresh: re-insert at the tail of the access order
+        astJoinMemo.remove(key)
+        astJoinMemo(key) = e
+        Some(df)
+      case _ => None
+    }
+    def drop(old: Seq[DataFrame]): Unit = old.foreach(_.unpersist(false))
+    astJoinMemo.synchronized(hit()).getOrElse {
+      val (df, frames) = build
+      astJoinMemo.synchronized {
+        hit() match {
+          case Some(won) =>
+            frames.foreach(SearchIndex.releaseFrame(_, blocking = false))
+            won
+          case None =>
+            astJoinMemo.get(key).foreach { case (_, _, old) => drop(old) }
+            astJoinMemo(key) = (plan, df, frames)
+            while (astJoinMemo.size > joinGates.memoCap) {
+              val (victim, (_, _, evicted)) = astJoinMemo.head
+              astJoinMemo.remove(victim)
+              drop(evicted)
+            }
+            df
+        }
       }
     }
+  }
 
   // ---- the query-join skeleton ----------------------------------
   // [[buildBoolScored]] and [[buildAstScored]] run the same filter →

@@ -1,7 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 
 /** Minimal bridge into classic Spark internals that are private[sql]
   * in Spark 4: the Column <-> Expression converters, a DataFrame over
@@ -13,9 +13,14 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** A DataFrame over `plan`, analyzed now. */
-  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** A DataFrame over `leaf`, a resolved leaf: it is marked analyzed
+    * first, so the analyzer returns it as it is instead of running its
+    * rules over a plan they cannot change. */
+  def frame(spark: SparkSession, leaf: LeafNode): DataFrame = {
+    require(leaf.resolved, s"unresolved leaf $leaf")
+    leaf.setAnalyzed()
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], leaf)
+  }
 
   /** `body` with `spark` as the thread's active session, as Spark's
     * own planning runs: a physical node captures the active session

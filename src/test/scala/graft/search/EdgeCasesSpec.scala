@@ -74,6 +74,30 @@ class EdgeCasesSpec extends AnyFunSuite {
     } finally idx.unpersist()
   }
 
+  test("a filter on a column the docs lack, or a range on a string column, fails at the search call") {
+    val docs = Seq((1L, "alpha beta", "en", "t1"), (2L, "alpha", "fr", "t2"))
+      .toDF("doc_id", "text", "lang", "tag")
+    val idx = SearchIndex.build(docs, IndexSpec("doc_id", Seq("text"), Seq("lang")))
+    try {
+      def refused(): Unit = {
+        val unknown = intercept[IllegalArgumentException] {
+          idx.search(graft.dsl.And("text" matchTerm "alpha", graft.dsl.EqFilter("nope", "x")), 5)
+        }
+        assert(unknown.getMessage == "query filter references unknown doc column 'nope'",
+          unknown.getMessage)
+        val unordered = intercept[IllegalArgumentException] {
+          idx.search(graft.dsl.And("text" matchTerm "alpha", graft.dsl.RangeFilter("tag", 1, 5)), 5)
+        }
+        assert(unordered.getMessage ==
+          "query comparison filters need an orderable column; 'tag' is StringType",
+          unordered.getMessage)
+      }
+      refused() // before the index has a prepared scan plan
+      assert(idx.search("text" matchTerm "alpha", 5).count() == 2)
+      refused() // and after
+    } finally idx.unpersist()
+  }
+
   test("getElements with no matching keys is empty, not an error") {
     val docs = Seq((1L, "x")).toDF("doc_id", "text")
     val idx = SearchIndex.build(docs, IndexSpec("doc_id", Seq("text")))

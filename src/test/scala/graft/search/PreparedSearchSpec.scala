@@ -195,20 +195,15 @@ class PreparedSearchSpec extends AnyFunSuite {
     SearchQueries.clearCache()
   }
 
-  /** The indylambda closures Spark's ClosureCleaner cleans on this
-    * thread while `body` runs, by implementation method name. A logger
-    * config of its own (DEBUG, not additive, so nothing reaches the
-    * console) is in place only for the block. */
-  private def cleaned(body: => Unit): Seq[String] = {
-    val name = "org.apache.spark.util.ClosureCleaner"
-    val prefix = "Cleaning indylambda closure: "
+  /** The messages `logger` logs on this thread while `body` runs. A
+    * logger config of its own (DEBUG, not additive, so nothing reaches
+    * the console) is in place only for the block. */
+  private def logged(name: String)(body: => Unit): Seq[String] = {
     val thread = Thread.currentThread.getName
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("closure-cleans", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        val m = e.getMessage.getFormattedMessage
-        if (e.getThreadName == thread && m.startsWith(prefix)) seen.add(m.stripPrefix(prefix))
-      }
+    val appender = new AbstractAppender("test-records", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getThreadName == thread) seen.add(e.getMessage.getFormattedMessage)
     }
     val ctx = LoggerContext.getContext(false)
     val config = ctx.getConfiguration
@@ -227,20 +222,46 @@ class PreparedSearchSpec extends AnyFunSuite {
     seen.toArray(new Array[String](0)).toSeq
   }
 
-  test("a bound search's collect cleans at most two closures, none from takeOrdered or runJob") {
+  /** The indylambda closures Spark's ClosureCleaner cleans on this
+    * thread while `body` runs, by implementation method name. */
+  private def cleaned(body: => Unit): Seq[String] = {
+    val prefix = "Cleaning indylambda closure: "
+    logged("org.apache.spark.util.ClosureCleaner")(body)
+      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+  }
+
+  /** The whole-stage sources generated on this thread while `body`
+    * runs: `WholeStageCodegenExec.doCodeGen` logs each at DEBUG. */
+  private def generated(body: => Unit): Seq[String] =
+    logged("org.apache.spark.sql.execution.WholeStageCodegenExec")(body)
+      .filter(_.contains("generate(Object[] references)"))
+
+  test("a bound search generates no stage source, runs no analyzer rule and cleans one closure") {
     val dir = corpusDir()
     val idx = SearchQueries.indexFor(spark, dir)
     def sql(raw: String) = spark.sql(s"SELECT * FROM graft_search('$dir', '$raw', 10)")
+    // the first search of a template generates its stage once
+    val first = generated(idx.search(MatchAnyTerms("text", Seq("w4")), 10).collect()).length
+    assert(first == 1, s"$first sources; is the counting appender attached?")
     shapes.foreach(q => idx.search(q, 10).collect())
     sql("w4 w5").collect()
-    val perSearch = shapes.map(q => s"search $q" -> cleaned(idx.search(q, 10).collect())) ++
-      rawShapes.map(raw => s"SQL '$raw'" -> cleaned(sql(raw).collect()))
-    perSearch.foreach { case (what, names) =>
-      assert(names.nonEmpty, s"$what: no clean logged; is the counting appender attached?")
-      assert(names.length <= 2, s"$what cleaned ${names.mkString(", ")}")
-      assert(!names.exists(n => n.contains("takeOrdered") || n.contains("runJob")),
-        s"$what cleaned ${names.mkString(", ")}")
+    def counted(what: String, run: => Unit): Unit = {
+      var closures = Seq.empty[String]
+      val sources = generated { closures = cleaned(run) }
+      assert(sources.isEmpty, s"$what generated ${sources.length} stage sources")
+      assert(closures.length == 1 && !closures.exists(n => n.contains("takeOrdered") ||
+        n.contains("runJob") || n.contains("doExecute")), s"$what cleaned ${closures.mkString(", ")}")
     }
+    shapes.foreach { q =>
+      counted(s"search $q", {
+        val df = idx.search(q, 10)
+        val rules = df.queryExecution.tracker.rules.keys
+          .filter(_.startsWith("org.apache.spark.sql.catalyst.analysis"))
+        assert(rules.isEmpty, s"search $q analyzed its frame: ${rules.mkString(", ")}")
+        df.collect()
+      })
+    }
+    rawShapes.foreach(raw => counted(s"SQL '$raw'", sql(raw).collect()))
     SearchQueries.clearCache()
   }
 
