@@ -51,17 +51,18 @@ private[graft] final class BoundStage(stage: WholeStageCodegenExec,
 /** The executed plan of one scan-path search, kept to be re-bound by
   * later searches of the same index: two searches' plans differ only
   * in the `dsl_query_score` program literals and the limit, so a bound
-  * copy skips analysis, optimization and physical planning. The scan
-  * stage's Java source is generated once, here: codegen emits the
-  * program literals as reference objects, so every bound copy's stage
-  * is this `code` with a references array of its own, laid out by
-  * `slots`. `cache` is the docs cache the plan scans (by identity;
-  * None for none): the template is used only while that is still the
-  * docs cache. Never executed itself; every bind executes a deep copy
-  * of its own. */
+  * copy skips analysis, optimization and physical planning. Where
+  * Spark runs the plan's scan stage from generated code, its Java
+  * source is generated once, here: codegen emits the program literals
+  * as reference objects, so every bound copy's stage is this `code`
+  * with a references array of its own, laid out by `slots` (`stage`;
+  * None where the stage is not generated code a bind can reuse, and a
+  * bound copy then runs its own stage). `cache` is the docs cache the
+  * plan scans (by identity; None for none): the template is used only
+  * while that is still the docs cache. Never executed itself; every
+  * bind executes a deep copy of its own. */
 private[search] final class ScanTemplate private (plan: TakeOrderedAndProjectExec,
-    cache: Option[AnyRef], code: CodeAndComment,
-    slots: Seq[ScanTemplate.Slot]) {
+    cache: Option[AnyRef], stage: Option[(CodeAndComment, Seq[ScanTemplate.Slot])]) {
   import ScanTemplate._
 
   /** Does the template scan `current`, the registered docs cache? */
@@ -72,23 +73,26 @@ private[search] final class ScanTemplate private (plan: TakeOrderedAndProjectExe
 
   /** A fresh copy of the plan with `lits` (ops, terms, doubles) as its
     * scorer's program and `k` as its limit, with its scan stage bound
-    * to the template's code, or None when a fresh plan of `k` would
-    * not end in TakeOrderedAndProject. Call with the index's session
-    * active. */
+    * to the template's code when there is one, or None when a fresh
+    * plan of `k` would not end in TakeOrderedAndProject. Call with the
+    * index's session active. */
   def bind(lits: Seq[Literal], k: Int): Option[BoundScan] =
     if (k >= SQLConf.get.topKSortFallbackThreshold) None
     else plan.clone().transformAllExpressions {
       case d: DslQueryScore => d.copy(ops = lits(0), terms = lits(1), doubles = lits(2))
     } match {
       case t: TakeOrderedAndProjectExec =>
-        val stage = t.child.asInstanceOf[WholeStageCodegenExec]
-        val nodes = stage.collect { case p => p }
-        val refs = slots.map {
-          case Program(i) => lits(i).value
-          case Metric(node, name) => nodes(node).metrics(name)
-          case Fixed(v) => v
+        val bound = stage.map { case (code, slots) =>
+          val s = t.child.asInstanceOf[WholeStageCodegenExec]
+          val nodes = s.collect { case p => p }
+          val refs = slots.map {
+            case Program(i) => lits(i).value
+            case Metric(node, name) => nodes(node).metrics(name)
+            case Fixed(v) => v
+          }
+          new BoundStage(s, code, refs.toArray[Any])
         }
-        Some(BoundScan(t.copy(limit = k), Some(new BoundStage(stage, code, refs.toArray[Any]))))
+        Some(BoundScan(t.copy(limit = k), bound))
       case _ => None
     }
 }
@@ -110,58 +114,56 @@ private[search] object ScanTemplate {
 
   /** A template of `plan` if a bind can reproduce it: the root is a
     * TakeOrderedAndProject without offset (an adaptive root, for one,
-    * is not) over one whole-stage-codegen stage with one input,
-    * exactly one `dsl_query_score` carries the program as literals,
-    * every cache it scans is `cache`, and the stage runs from
-    * generated code ([[stageCode]]). The template keeps a deep copy,
-    * so `plan` itself may still run. */
+    * is not), exactly one `dsl_query_score` carries the program as
+    * literals, and every cache it scans is `cache`. The template keeps
+    * a deep copy, so `plan` itself may still run, and its
+    * [[stageCode]]. */
   def of(plan: SparkPlan, cache: Option[AnyRef]): Option[ScanTemplate] = plan match {
     case t: TakeOrderedAndProjectExec if t.offset == 0 =>
       val literal = scorers(t).forall(d =>
         Seq(d.ops, d.terms, d.doubles).forall(_.isInstanceOf[Literal]))
       val caches = t.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
-      val oneInput = t.child match {
-        case s: WholeStageCodegenExec => !s.exists(_.children.length > 1)
-        case _ => false
-      }
-      if (scorers(t).length == 1 && literal && oneInput && caches.forall(c => cache.exists(_ eq c))) {
+      if (scorers(t).length == 1 && literal && caches.forall(c => cache.exists(_ eq c))) {
         val copy = t.clone().asInstanceOf[TakeOrderedAndProjectExec]
-        stageCode(copy).map { case (code, slots) => new ScanTemplate(copy, cache, code, slots) }
+        Some(new ScanTemplate(copy, cache, stageCode(copy)))
       } else None
     case _ => None
   }
 
-  /** The stage's code, generated once, and its references' slots; None
-    * where Spark would not run the stage from generated code (it does
-    * not compile, or a method exceeds `hugeMethodLimit`) or would ship
+  /** The code of the plan's scan stage, generated once, and its
+    * references' slots; None where the root's child is not one
+    * whole-stage-codegen stage with one input, where Spark would not
+    * run the stage from generated code (it does not compile, or a
+    * method exceeds `hugeMethodLimit`) or would ship
     * the source as a broadcast (a `broadcastCleanedSourceThreshold` is
     * set), where a reference is neither a program value nor a metric
     * of the stage and may be written by a task, or where a program
     * value is not a reference (the code would hold that search's
     * program). */
   private def stageCode(t: TakeOrderedAndProjectExec)
-      : Option[(CodeAndComment, Seq[Slot])] = {
-    val stage = t.child.asInstanceOf[WholeStageCodegenExec]
-    val (ctx, source) = stage.doCodeGen()
-    val conf = SQLConf.get
-    val runs = conf.broadcastCleanedSourceThreshold < 0 &&
-      (try CodeGenerator.compile(source)._2.maxMethodCodeSize <= conf.hugeMethodLimit
-      catch { case NonFatal(_) => false })
-    val program = scorers(stage).flatMap(d => Seq(d.ops, d.terms, d.doubles))
-      .map(_.asInstanceOf[Literal].value.asInstanceOf[AnyRef])
-    val nodes = stage.collect { case p => p }
-    val refs = ctx.references.toSeq.map(_.asInstanceOf[AnyRef])
-    val slots = refs.map { r =>
-      val i = program.indexWhere(_ eq r)
-      if (i >= 0) Some(Program(i))
-      else nodes.indices.flatMap(n => nodes(n).metrics.collectFirst {
-        case (name, m) if m eq r => Metric(n, name)
-      }).headOption.orElse(Some(Fixed(r)).filter(_ => readOnly(r)))
-    }
-    val bound = program.length == 3 && program.forall(v => refs.exists(_ eq v))
-    if (runs && bound && slots.forall(_.isDefined))
-      Some((source, slots.flatten))
-    else None
+      : Option[(CodeAndComment, Seq[Slot])] = t.child match {
+    case stage: WholeStageCodegenExec if !stage.exists(_.children.length > 1) =>
+      val (ctx, source) = stage.doCodeGen()
+      val conf = SQLConf.get
+      val runs = conf.broadcastCleanedSourceThreshold < 0 &&
+        (try CodeGenerator.compile(source)._2.maxMethodCodeSize <= conf.hugeMethodLimit
+        catch { case NonFatal(_) => false })
+      val program = scorers(stage).flatMap(d => Seq(d.ops, d.terms, d.doubles))
+        .map(_.asInstanceOf[Literal].value.asInstanceOf[AnyRef])
+      val nodes = stage.collect { case p => p }
+      val refs = ctx.references.toSeq.map(_.asInstanceOf[AnyRef])
+      val slots = refs.map { r =>
+        val i = program.indexWhere(_ eq r)
+        if (i >= 0) Some(Program(i))
+        else nodes.indices.flatMap(n => nodes(n).metrics.collectFirst {
+          case (name, m) if m eq r => Metric(n, name)
+        }).headOption.orElse(Some(Fixed(r)).filter(_ => readOnly(r)))
+      }
+      val bound = program.length == 3 && program.forall(v => refs.exists(_ eq v))
+      if (runs && bound && slots.forall(_.isDefined))
+        Some((source, slots.flatten))
+      else None
+    case _ => None
   }
 
   private def scorers(plan: SparkPlan): Seq[DslQueryScore] =

@@ -674,9 +674,9 @@ final class SearchIndex private (
     * shared with no other search. When a template fits (same doc-side
     * inputs, same columns, same session conf, and the docs cache it
     * scans is still the registered one), a deep copy of it with the
-    * program literals and k bound in and its scan stage bound to the
-    * template's generated code: no analysis, optimization, physical
-    * planning or code generation. Otherwise `topK(matching(scanScorer(p,
+    * program literals and k bound in and, where the template has
+    * one, its scan stage bound to the template's generated code: no
+    * analysis, optimization, physical planning or code generation. Otherwise `topK(matching(scanScorer(p,
     * doubles)), k)` (with its columns selected) planned from the
     * start, which becomes the template when a bind can reproduce it;
     * the search then runs a bind of that new template, or the fresh
@@ -703,6 +703,9 @@ final class SearchIndex private (
         made.flatMap(_.bind(lits, k)).getOrElse(BoundScan(fresh, None))
       }
     }
+
+  /** Test hook: the prepared scan plans held now. */
+  private[search] def scanTemplateEntries: Int = scanTemplates.synchronized(scanTemplates.size)
 
   /** Test hook: the scan-path [[search]] frame planned from the start. */
   private[search] def plannedSearch(q: SearchQuery, k: Int): DataFrame =
@@ -1889,45 +1892,30 @@ final class SearchIndex private (
     * Only the columnar cache of a lineage-cut frame (above the gate)
     * is dropped at once: the session's CacheManager, not a result
     * plan, holds that, and it rebuilds from the checkpoint beneath it.
-    * [[unpersist]] releases the live entries.
-    *
-    * Only the lookup and the insert hold the memo's lock; `build`
-    * runs outside it, so two cold joins on one index set up at the
-    * same time. When an equal setup was stored while this one was
-    * built, the stored entry is returned and this setup's frames are
-    * released: no result reaches them. */
+    * [[unpersist]] releases the live entries. */
   private def memoized(key: (Int, String, String, String),
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
-      build: => (DataFrame, Seq[DataFrame])): DataFrame = {
-    def hit(): Option[DataFrame] = astJoinMemo.get(key) match {
-      case Some(e @ (p, df, _)) if p.sameResult(plan) =>
-        // LRU refresh: re-insert at the tail of the access order
-        astJoinMemo.remove(key)
-        astJoinMemo(key) = e
-        Some(df)
-      case _ => None
-    }
-    def drop(old: Seq[DataFrame]): Unit = old.foreach(_.unpersist(false))
-    astJoinMemo.synchronized(hit()).getOrElse {
-      val (df, frames) = build
-      astJoinMemo.synchronized {
-        hit() match {
-          case Some(won) =>
-            frames.foreach(SearchIndex.releaseFrame(_, blocking = false))
-            won
-          case None =>
-            astJoinMemo.get(key).foreach { case (_, _, old) => drop(old) }
-            astJoinMemo(key) = (plan, df, frames)
-            while (astJoinMemo.size > joinGates.memoCap) {
-              val (victim, (_, _, evicted)) = astJoinMemo.head
-              astJoinMemo.remove(victim)
-              drop(evicted)
-            }
-            df
-        }
+      build: => (DataFrame, Seq[DataFrame])): DataFrame =
+    astJoinMemo.synchronized {
+      astJoinMemo.get(key) match {
+        case Some(e @ (p, df, _)) if p.sameResult(plan) =>
+          // LRU refresh: re-insert at the tail of the access order
+          astJoinMemo.remove(key)
+          astJoinMemo(key) = e
+          df
+        case existing =>
+          val (df, frames) = build
+          def drop(old: Seq[DataFrame]): Unit = old.foreach(_.unpersist(false))
+          existing.foreach { case (_, _, old) => drop(old) }
+          astJoinMemo(key) = (plan, df, frames)
+          while (astJoinMemo.size > joinGates.memoCap) {
+            val (victim, (_, _, evicted)) = astJoinMemo.head
+            astJoinMemo.remove(victim)
+            drop(evicted)
+          }
+          df
       }
     }
-  }
 
   // ---- the query-join skeleton ----------------------------------
   // [[buildBoolScored]] and [[buildAstScored]] run the same filter →

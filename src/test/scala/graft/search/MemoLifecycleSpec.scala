@@ -70,53 +70,6 @@ class MemoLifecycleSpec extends AnyFunSuite {
     } finally base.unpersist()
   }
 
-  test("a cold join on one index does not wait for another's setup") {
-    val idx = SearchIndex.build(corpus, IndexSpec("doc_id", Seq("text")))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      // A's generator runs in a single task that waits on the latch
-      val leftA = corpus.select(col("doc_id"), col("text")).coalesce(1)
-      val leftB = corpus.where(col("doc_id") > 2L).select(col("doc_id"), col("text"))
-      val genA: Row => SearchQuery = r => {
-        MemoLatches.entered.countDown()
-        MemoLatches.open.await(120, java.util.concurrent.TimeUnit.SECONDS)
-        MatchAnyTerms("text", r.getAs[String]("text").split(" ").take(2).toSeq)
-      }
-      val genB: Row => SearchQuery =
-        r => MatchAnyTerms("text", r.getAs[String]("text").split(" ").slice(1, 3).toSeq)
-      def join(left: org.apache.spark.sql.DataFrame, gen: Row => SearchQuery)
-          : java.util.concurrent.Future[Set[(Long, Int, Long, Double)]] =
-        pool.submit(new java.util.concurrent.Callable[Set[(Long, Int, Long, Double)]] {
-          def call(): Set[(Long, Int, Long, Double)] = norm(idx.queryJoinAst(left, "doc_id", gen, "text", 3))
-        })
-      MemoLatches.open = new java.util.concurrent.CountDownLatch(1)
-      MemoLatches.entered = new java.util.concurrent.CountDownLatch(1)
-      val (a, b) = try {
-        val a = join(leftA, genA)
-        assert(MemoLatches.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
-          "A's generator never ran")
-        val b = join(leftB, genB)
-        val gotB = try b.get(90, java.util.concurrent.TimeUnit.SECONDS) catch {
-          case _: java.util.concurrent.TimeoutException =>
-            fail("a cold join waited for another join's setup")
-        }
-        assert(!a.isDone, "A finished before its latch opened")
-        (a, gotB)
-      } finally MemoLatches.open.countDown()
-      def reference(left: org.apache.spark.sql.DataFrame, gen: Row => SearchQuery) =
-        ScanJoinReference(idx, left, "doc_id", gen, k = 3)
-          .select(col("doc_id").cast("long"), col("rank").cast("int"),
-            col("key").cast("long"), round(col("score"), 6))
-          .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(b.nonEmpty && b == reference(leftB, genB))
-      assert(a.get(120, java.util.concurrent.TimeUnit.SECONDS) == reference(leftA, genA))
-      assert(idx.astJoinMemoEntries == 2)
-    } finally {
-      pool.shutdown()
-      idx.unpersist()
-    }
-  }
-
   test("displaced memo entries are freed once no result reaches them") {
     // ADVICE medium: a long-lived index serving many distinct joins
     // must not pin one canon checkpoint per join it ever ran. Six
@@ -293,11 +246,4 @@ class MemoLifecycleSpec extends AnyFunSuite {
       assert(exact.nonEmpty)
     } finally idx.unpersist()
   }
-}
-
-/** Latches a query generator waits on from inside a task: tasks run in
-  * the test JVM, and a generator reads them without capturing them. */
-object MemoLatches {
-  @volatile var open = new java.util.concurrent.CountDownLatch(0)
-  @volatile var entered = new java.util.concurrent.CountDownLatch(0)
 }

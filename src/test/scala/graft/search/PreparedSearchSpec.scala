@@ -143,12 +143,16 @@ class PreparedSearchSpec extends AnyFunSuite {
     def codegen(df: DataFrame) = boundOf(df).collect { case w: WholeStageCodegenExec => w }.nonEmpty
     idx.search(q, 10).collect()
     assert(codegen(idx.search(q, 10)))
+    val held = idx.scanTemplateEntries
     try {
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
       (1 to 2).foreach { _ =>
         val df = idx.search(q, 10)
         assert(!codegen(df), boundOf(df).toString)
         assert(df.collect().toSeq == expect)
+        // a plan with no generated stage is still a template: the
+        // second search binds it
+        assert(idx.scanTemplateEntries == held + 1)
       }
     } finally spark.conf.unset("spark.sql.codegen.wholeStage")
     assert(codegen(idx.search(q, 10)))
