@@ -41,19 +41,16 @@ object Bench {
     // every registry for the whole run (r4 post-mortem: the pinned-
     // registry hypothesis for the mid-run slowdown didn't reproduce —
     // it was host noise — but bounding peak memory is still the right
-    // shape for any heap size). SPARK_GRAFT_CLEAR_CACHES=0 restores
-    // the flat alphabetical order with no clearing.
-    val sectioned = sys.env.get("SPARK_GRAFT_CLEAR_CACHES").forall(_ != "0")
+    // shape for any heap size).
     def section(n: String): Int =
-      if (!sectioned) 0
-      else if (n.startsWith("ann_") || n.startsWith("dedup_") ||
+      if (n.startsWith("ann_") || n.startsWith("dedup_") ||
         n.startsWith("emb_") || // emb_quantize shares the Similarity cohort
         n == "decontaminate_fuzzy" || // shares the MinHash shingle/band caches
         n.startsWith("simhash")) 0 // Dedup + Similarity registries
       else if (n.matches("^(lang_|quality_|repetition_|token_|fingerprint|multimodal_|source_|stream_|decontaminate|sample_|pack_|vocab_|keywords_|unigram_|bigram_|pii_|distinct_|bpe_|split_|chunk_|curate_|ccnet_|mix_|select_|topk_).*")) 1 // cache-free
       else if (n.matches("^(q\\d|asof_|range_join).*")) 2 // relational, cache-free
       else 3 // search-index cohort (search_*, batch, query_join, stats)
-    def clearSection(s: Int): Unit = if (sectioned) s match {
+    def clearSection(s: Int): Unit = s match {
       case 0 =>
         graft.pipeline.Dedup.clearCaches()
         graft.pipeline.Similarity.clearCaches()

@@ -2669,13 +2669,12 @@ final class SearchIndex private (
     * engine's analog of the reference's index-merge fan-in
     * (BroadcastIndexLuceneRDD.scala:646-663, treeReduce of
     * IndexWriter.addIndexes; ours is metadata-light: postings/docs
-    * union, term stats re-summed, field stats weighted). Keys must be
+    * union, statistics combined as in [[addDocuments]]). Keys must be
     * disjoint (same contract as indexing a partitioned corpus).
     *
-    * Scores on the merged index equal a from-scratch build up to
-    * float summation order (avgdl is a weighted mean): global IDF is
-    * recomputed from the merged df, so the partition-invariance
-    * property survives incremental growth.
+    * The merged index scores identically to a from-scratch build of
+    * the union: global IDF is recomputed from the merged df, so the
+    * partition-invariance property survives incremental growth.
     *
     * The inputs stay persisted (caller-owned); unpersist them once
     * the merged index has materialized if they are no longer queried.
@@ -2688,54 +2687,45 @@ final class SearchIndex private (
     *   ingest with non-overlapping key ranges at 100 TB). */
   def merge(other: SearchIndex, checkDisjoint: Boolean = true): SearchIndex = {
     require(other.spec == spec, s"index specs differ: $spec vs ${other.spec}")
-    if (checkDisjoint) {
-      val dup = docs.select(key).intersect(other.docs.select(key)).limit(1).collect()
-      require(dup.isEmpty,
-        s"merge requires disjoint ${spec.keyCol} sets; found shared key ${dup.headOption.map(_.get(0))}")
-    }
+    if (checkDisjoint) requireDisjoint(other)
     val mDocs = docs.unionByName(other.docs)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val mPostings = postings.unionByName(other.postings)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val mStats = stats.unionByName(other.stats)
-      .groupBy(col("field"), col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val mFieldStats = (fieldStats.keySet ++ other.fieldStats.keySet).iterator.map { f =>
-      val a = fieldStats.getOrElse(f, FieldStats(0L, 0.0))
-      val b = other.fieldStats.getOrElse(f, FieldStats(0L, 0.0))
-      val n = a.numDocs + b.numDocs
-      val avg = if (n == 0) 0.0 else (a.numDocs * a.avgDl + b.numDocs * b.avgDl) / n
-      f -> FieldStats(n, avg)
-    }.toMap
+    val (mStats, mFieldStats) = combinedStats(other, StorageLevel.MEMORY_AND_DISK)
     new SearchIndex(spark, spec, mDocs, mPostings, mStats, mFieldStats)
   }
 
-  /** Incremental indexing: tokenize + index `df` and merge it in
-    * (reference analog: there is none — SearchableRDDs are immutable;
-    * this is the batch face of the streaming index maintenance in
-    * [[graft.streaming.EventStreams.incrementalTermStats]]).
-    *
-    * Lifecycle (ADVICE r16): the temporary index built for `df` is
-    * tied to the returned index's parent chain and released by its
-    * `unpersist()` — NOT released eagerly, because the merged unions
-    * materialize lazily from tmp's checkpointed frames and a
-    * localCheckpoint'd block cannot recompute once unpersisted. A
-    * LOOP of addDocuments calls therefore pins every intermediate
-    * delta until the final unpersist; loops that must stay bounded
-    * should batch their additions (one addDocuments per batch) or
-    * periodically save+load the index, which roots the frames in
-    * parquet and frees the chain. */
-  def addDocuments(df: DataFrame): SearchIndex = {
-    val tmp = SearchIndex.build(df, spec)
-    val merged = merge(tmp)
-    // the merged unions materialize LAZILY from tmp's checkpointed
-    // frames — releasing tmp here would destroy blocks the merged
-    // plans still read (with the old bare persist that was a silent
-    // recompute; behind the lineage barrier it is fatal). Tie tmp to
-    // the merged index's lifecycle instead: unpersist() cascades.
-    merged.parents = merged.parents :+ tmp
-    merged
+  /** One intersection probe (`limit(1)` job) over the two key columns. */
+  private def requireDisjoint(other: SearchIndex): Unit = {
+    val dup = docs.select(key).intersect(other.docs.select(key)).limit(1).collect()
+    require(dup.isEmpty, s"merge requires disjoint ${spec.keyCol} sets; " +
+      s"found shared key ${dup.headOption.map(_.get(0))}")
+  }
+
+  /** Term and field statistics of this index plus `other` (disjoint
+    * keys): df/cf merge with one vocab-sized aggregation, and the
+    * per-field numDocs/avgdl update from exact integer token-count
+    * sums — doc lengths are integers, so every partial sum is exact in
+    * a double below 2^52 tokens and the reconstructed corpus totals
+    * are bit-equal to a fresh aggregation. */
+  private def combinedStats(other: SearchIndex,
+      storageLevel: StorageLevel): (DataFrame, Map[String, FieldStats]) = {
+    val mStats = stats.unionByName(other.stats)
+      .groupBy(col("field"), col("term"))
+      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+      .persist(storageLevel)
+    val mFieldStats = (fieldStats.keySet ++ other.fieldStats.keySet).iterator.map { f =>
+      val FieldStats(n1, a1) = fieldStats.getOrElse(f, FieldStats(0L, 0.0))
+      val FieldStats(n2, a2) = other.fieldStats.getOrElse(f, FieldStats(0L, 0.0))
+      val n = n1 + n2
+      val avg =
+        if (!spec.textFields.contains(f)) 1.0
+        else if (n == 0) 0.0
+        else (math.rint(a1 * n1) + math.rint(a2 * n2)) / n
+      f -> FieldStats(n, avg)
+    }.toMap
+    (mStats, mFieldStats)
   }
 
   /** Asserts the [[IndexSpec.keyCol]] uniqueness contract (one
@@ -2795,35 +2785,28 @@ final class SearchIndex private (
     * lacks: its RDD layouts rebuild per corpus,
     * SearchableRDD.scala:94-120; Lucene itself supports segment
     * appends, which this mirrors at the DataFrame level). Only the
-    * NEW documents are analyzed (one delta build); the merged corpus
-    * and postings are unions of persisted frames, term statistics
-    * merge with one vocab-sized aggregation, and the per-field
-    * numDocs/avgdl update from exact integer token-count sums — the
-    * merged index scores IDENTICALLY to a from-scratch build of the
-    * union (doc lengths are integers, so every partial sum is exact
-    * in a double below 2^52 tokens and the reconstructed corpus
-    * totals are bit-equal to a fresh aggregation).
+    * NEW documents are analyzed (one delta build), whose keys must be
+    * disjoint from the index's (one intersection probe, as in
+    * [[merge]]); the merged corpus and postings are unions of
+    * persisted frames and the statistics combine as in [[merge]], so
+    * the merged index scores IDENTICALLY to a from-scratch build of
+    * the union.
     *
     * The caller owns the lifecycle: the delta's frames and the merged
     * stats are persisted like [[SearchIndex.build]]'s; `unpersist()`
     * on the returned index cascades to the base index and every
-    * intermediate frame. */
+    * intermediate frame. A LOOP of addDocuments calls therefore pins
+    * every intermediate delta until the final unpersist; loops that
+    * must stay bounded should batch their additions or periodically
+    * save+load the index, which roots the frames in parquet and frees
+    * the chain. */
   def addDocuments(newDocs: DataFrame,
       storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): SearchIndex = {
     val delta = SearchIndex.build(newDocs, spec, storageLevel)
-    val mergedStats = stats.unionByName(delta.stats)
-      .groupBy(col("field"), col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-      .persist(storageLevel)
-    val mergedFs = fieldStats.map { case (f, FieldStats(n1, a1)) =>
-      val FieldStats(n2, a2) = delta.fieldStats(f)
-      val n = n1 + n2
-      val avg =
-        if (!spec.textFields.contains(f)) 1.0
-        else if (n == 0) 0.0
-        else (math.rint(a1 * n1) + math.rint(a2 * n2)) / n
-      f -> FieldStats(n, avg)
+    try requireDisjoint(delta) catch {
+      case e: IllegalArgumentException => delta.unpersist(); throw e
     }
+    val (mergedStats, mergedFs) = combinedStats(delta, storageLevel)
     val merged = new SearchIndex(spark, spec, docs.unionByName(delta.docs),
       postings.unionByName(delta.postings), mergedStats, mergedFs)
     merged.parents = Seq(this, delta)

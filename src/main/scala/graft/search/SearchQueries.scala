@@ -77,18 +77,18 @@ object SearchQueries {
     * day's crawl and re-tokenizing the archive on every INSERT.
     * Returns true when the in-place merge happened; false falls back
     * to the ordinary evict-and-rebuild staleness path (no index yet,
-    * or an external mutation intervened — then a full rebuild is the
-    * only safe answer). */
+    * appended keys the index already holds, which addDocuments
+    * refuses and a fresh build accepts, or an external mutation
+    * intervened — then a full rebuild is the only safe answer). */
   def appendedToCorpus(spark: SparkSession, dir: String, preTag: String,
       newFiles: Seq[String]): Boolean =
-    newFiles.nonEmpty && cache.refreshIfCurrent(dir, "", preTag,
+    newFiles.nonEmpty && (try cache.refreshIfCurrent(dir, "", preTag,
         graft.sources.CorpusRegistry.signature(dir)) { idx =>
-      // the lineage-tracking overload: the delta stays persisted and
-      // the merged index records (base, delta) as parents, so the
-      // registry's eventual evict cascades the unpersist correctly
-      idx.addDocuments(spark.read.parquet(newFiles: _*),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+      // the delta stays persisted and the merged index records (base,
+      // delta) as parents, so the registry's eventual evict cascades
+      // the unpersist correctly
+      idx.addDocuments(spark.read.parquet(newFiles: _*))
+    } catch { case _: IllegalArgumentException => false })
 
   /** Two-text-field index (text + source as TEXT) for the
     * cross-field query-join entry: "source" is analyzed like any

@@ -369,6 +369,63 @@ class GraftSqlSpec extends AnyFunSuite {
       s"non-literal arg error unhelpful: ${e2.getMessage.take(120)}")
   }
 
+  test("each call form plans into its own node and size estimate, building no index") {
+    // no corpus lives here: planning must not look an index up
+    val none = "/no/such/graft/corpus"
+    spark.range(1).selectExpr("id AS qid", "'a b' AS qtext", "array(1.0D) AS qv")
+      .createOrReplaceTempView("call_form_spec")
+    val table = BigInt(Long.MaxValue) >> 8
+    for ((call, line, size) <- Seq(
+      (s"graft_search('$none', 'spark join', 10)",
+        s"GraftSearch dir=$none, query='spark join', k=10", BigInt(10 * 24)),
+      (s"graft_query_join('$none', 20, 5, 3)",
+        s"GraftQueryJoin dir=$none, maxQid=20, nTerms=5, k=3", BigInt(20 * 3 * 32)),
+      (s"graft_query_join('$none', 'call_form_spec', 'qid', 'qtext', 4, 3, 'text', 0, 1)",
+        s"GraftQueryJoinTable dir=$none, left=call_form_spec, qid=qid, text=qtext, " +
+          "nTerms=4, k=3, field=text, minMatch=0, impactPruning", table),
+      (s"graft_batch_search('$none', 'a b; c', 5)",
+        s"GraftBatchSearch dir=$none, queries='a b; c', k=5, minMatch=1", BigInt(2 * 5 * 32)),
+      (s"graft_batch_search('$none', 'call_form_spec', 'qid', 'qtext', 4)",
+        s"GraftBatchSearchTable dir=$none, queries=call_form_spec, qid=qid, query=qtext, " +
+          "k=4, minMatch=1", table),
+      (s"graft_ann('$none', 3, 5)", s"GraftAnn dir=$none, nQueries=3, k=5", BigInt(3 * 5 * 32)),
+      (s"graft_ann('$none', 'call_form_spec', 'qid', 'qv', 6)",
+        s"GraftAnnTable dir=$none, queries=call_form_spec, qid=qid, vec=qv, k=6, nProbe=4", table),
+      (s"graft_ann_store('$none', '/no/such/store', 3, 5)",
+        s"GraftAnnStore dir=$none, store=/no/such/store, nQueries=3, k=5", BigInt(3 * 5 * 32)),
+      (s"graft_term_stats('$none', 'text')", s"GraftTermStats dir=$none, field=text",
+        BigInt(1L) << 40))) {
+      val df = spark.sql(s"SELECT * FROM $call")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.map(_.replaceFirst("^[^A-Za-z]*", "")).contains(line),
+        s"$call: no line '$line' in\n$plan")
+      val leaves = df.queryExecution.analyzed.collectLeaves()
+      assert(leaves.map(_.stats.sizeInBytes) == Seq(size), s"$call: ${leaves.map(_.stats)}")
+    }
+  }
+
+  test("integer arguments are integral literals that fit an int") {
+    // a bigint literal was narrowed: max_qid 3000000000 wrapped to a
+    // negative bound and the join answered with no rows
+    val e1 = intercept[Exception] {
+      spark.sql(s"SELECT * FROM graft_query_join('$dir', 3000000000, 5, 3)").collect()
+    }
+    assert(e1.getMessage.contains("graft_query_join(dir, max_qid") &&
+      e1.getMessage.contains("max_qid 3000000000"), e1.getMessage.take(300))
+    // a DATE is an int inside Spark: it was read as k = 18262
+    val e2 = intercept[Exception] {
+      spark.sql(s"SELECT * FROM graft_search('$dir', 'spark', DATE'2020-01-01')").collect()
+    }
+    assert(e2.getMessage.contains("graft_search(dir, raw_query, k)") &&
+      e2.getMessage.contains("k must be an integer literal"), e2.getMessage.take(300))
+    // tinyint, smallint and an in-range bigint are integers
+    for (k <- Seq("7Y", "7S", "7L")) {
+      val plan = spark.sql(s"SELECT * FROM graft_search('$dir', 'spark', $k)")
+        .queryExecution.executedPlan.toString
+      assert(plan.contains(s"GraftSearch dir=$dir, query='spark', k=7"), s"$k:\n$plan")
+    }
+  }
+
   test("graft_batch_search rejects a quoted k with a targeted message") {
     // 5-arg literal-form call with k as a STRING: the arity overlaps
     // the TABLE form, which keys on the third argument's type — this

@@ -307,6 +307,8 @@ class IndexVariantsSpec extends AnyFunSuite {
     val sf = full.stats.select("term", "df", "cf").as[(String, Long, Long)].collect().toSet
     val sm = merged.stats.select("term", "df", "cf").as[(String, Long, Long)].collect().toSet
     assert(sf == sm)
+    // exact integer token totals: avgdl is bit-equal to the full build's
+    assert(merged.fieldStats == full.fieldStats)
     Seq(full, left, right, merged).foreach(_.unpersist())
   }
 
@@ -316,6 +318,9 @@ class IndexVariantsSpec extends AnyFunSuite {
     val b = SearchIndex.build(corpus.where($"doc_id" >= 2), spec) // doc 2 overlaps
     val e = intercept[IllegalArgumentException](a.merge(b))
     assert(e.getMessage.contains("disjoint"))
+    // addDocuments keeps the guard
+    val e2 = intercept[IllegalArgumentException](a.addDocuments(corpus.where($"doc_id" >= 2)))
+    assert(e2.getMessage.contains("disjoint"))
     a.unpersist(); b.unpersist()
   }
 
